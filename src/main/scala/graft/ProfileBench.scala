@@ -26,7 +26,8 @@ object ProfileBench {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = if (args.length > 1) args(1).split(",").toSeq
                 else SparkEntry.registry.map(_.name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = GraftSession.get(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // diagnostic knobs: GRAFT_PROF_CONF="k1=v1;k2=v2" sets session confs

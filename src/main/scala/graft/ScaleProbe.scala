@@ -164,7 +164,8 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outRoot = if (args.length > 1) args(1) else "/tmp/graft_scale"
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.get(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors))
     spark.sparkContext.setLogLevel("ERROR")
 
     // SPARK_GRAFT_PROBE=skew: the adversarial-occupancy probe — the 10×
