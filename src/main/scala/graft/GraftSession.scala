@@ -48,12 +48,6 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // SPARK_GRAFT_DOT=fold asks for the interpreted higher-order fold
-      // (A/B vs the native DotProduct); NativeDotRewrite would silently
-      // rewrite that exact shape back to the native expression, so the
-      // rule must be off for the env var to mean anything
-      .config("spark.graft.nativeDotRewrite",
-        (!sys.env.get("SPARK_GRAFT_DOT").contains("fold")).toString)
       // the reference's Trino/Iceberg catalog name, served by the
       // read-only metadata catalog so query-examples #8's literal
       // `iceberg.db."bid_requests$snapshots"` resolves (see MetaCatalog)

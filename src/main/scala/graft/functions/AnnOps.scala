@@ -57,25 +57,15 @@ object AnnOps {
   private[functions] val projPlanes: Array[Array[Double]] = planeFill(ProjPlanes)
 
   /** dot(a, b) in double, sequential fold from 0.0 (== DuckDB
-    * list_reduce, since 0.0 + x == x in IEEE754). The default is the
-    * native codegen'd [[DotProduct]] expression (one primitive loop,
-    * stays inside WholeStageCodegen); `SPARK_GRAFT_DOT=fold` keeps the
-    * built-in higher-order fold for in-JVM A/B. Both are bit-identical.
-    * NB the session-installed [[graft.plans.NativeDotRewrite]] rule
-    * rewrites this exact fold shape back into [[DotProduct]], so the
-    * env var alone would measure nothing — [[graft.GraftSession]]
-    * therefore sets `spark.graft.nativeDotRewrite=false` whenever the
-    * env var selects the fold, keeping the A/B honest.
+    * list_reduce, since 0.0 + x == x in IEEE754): the native codegen'd
+    * [[DotProduct]] expression (one primitive loop, stays inside
+    * WholeStageCodegen), bit-identical to the built-in higher-order
+    * fold that DotProductSpec compares it against.
     */
   private[graft] def dot(a: Column, b: Column): Column =
-    if (sys.env.get("SPARK_GRAFT_DOT").contains("fold"))
-      aggregate(
-        zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), (acc, x) => acc + x)
-    else
-      org.apache.spark.sql.GraftSqlBridge.column(DotProduct(
-        org.apache.spark.sql.GraftSqlBridge.expression(a),
-        org.apache.spark.sql.GraftSqlBridge.expression(b)))
+    org.apache.spark.sql.GraftSqlBridge.column(DotProduct(
+      org.apache.spark.sql.GraftSqlBridge.expression(a),
+      org.apache.spark.sql.GraftSqlBridge.expression(b)))
 
   private[functions] def dotLit(v: Column, w: Array[Double]): Column =
     dot(v, array(w.map(lit): _*))
@@ -268,25 +258,14 @@ object AnnOps {
 
   /** Cell assignment over a `cents` column (plus `embedding`/`nrm` from
     * the row): best cosine by strict >, cid order — the lowest cid wins
-    * ties, matching the oracle's ORDER BY csim DESC, cid. The default
-    * is the native codegen'd [[NearestCell]] kernel;
-    * `SPARK_GRAFT_ANN=fold` keeps the aggregate fold for in-JVM A/B —
-    * NearestCellSpec pins the two bit-identical.
+    * ties, matching the oracle's ORDER BY csim DESC, cid. The native
+    * codegen'd [[NearestCell]] kernel; NearestCellSpec pins it
+    * bit-identical to the aggregate fold.
     */
   private[graft] def cellFold: Column =
-    if (sys.env.get("SPARK_GRAFT_ANN").contains("fold"))
-      aggregate(col("cents"),
-        struct(lit(Double.NegativeInfinity).as("cs"), lit(-1L).as("cell")),
-        (acc, c) => {
-          val cs = dot(col("embedding"), c.getField("c_emb")) /
-            (col("nrm") * c.getField("c_nrm"))
-          when(cs > acc.getField("cs"),
-            struct(cs.as("cs"), c.getField("cid").as("cell"))).otherwise(acc)
-        }).getField("cell")
-    else
-      org.apache.spark.sql.GraftSqlBridge.column(NearestCell(
-        org.apache.spark.sql.GraftSqlBridge.expression(col("embedding")),
-        org.apache.spark.sql.GraftSqlBridge.expression(col("cents"))))
+    org.apache.spark.sql.GraftSqlBridge.column(NearestCell(
+      org.apache.spark.sql.GraftSqlBridge.expression(col("embedding")),
+      org.apache.spark.sql.GraftSqlBridge.expression(col("cents"))))
 
   /** Cell assignment as a PURE MAP: each row folds over the broadcast
     * centroid row. The previous form materialized N×C scored rows and
@@ -523,43 +502,21 @@ object AnnOps {
     * exploded N×M×K intermediate, no argmin shuffle: the earlier
     * join+window form materialized and sort-shuffled 64 scored rows per
     * (vector, subspace), which at corpus scale dwarfed the actual
-    * distance arithmetic. The default is the native codegen'd
-    * [[PqCodes]] expression (one primitive loop per row);
-    * `SPARK_GRAFT_PQ=fold` keeps the zip_with/aggregate higher-order
-    * form for in-JVM A/B — PqCodesSpec pins the two bit-identical.
+    * distance arithmetic. The codes come from [[pqCodesCol]].
     */
   private[functions] def pqCodes(e: DataFrame, cbArr: DataFrame): DataFrame =
     e.crossJoin(broadcast(cbArr)).select(col("vec_id"), pqCodesCol.as("codes"))
 
-  /** The codes column over in-scope `embedding` and `cball` columns —
-    * native [[PqCodes]] by default, the higher-order fold under
-    * `SPARK_GRAFT_PQ=fold`. The single selection point for the A/B
-    * switch, shared by [[pqCodes]] and the fused IVF-PQ scan so the
-    * switch (and any future change to the codes computation) covers
-    * both paths.
+  /** The codes column over in-scope `embedding` and `cball` columns:
+    * the native codegen'd [[PqCodes]] expression (one primitive loop per
+    * row), which PqCodesSpec pins bit-identical to the zip_with/aggregate
+    * higher-order form. Shared by [[pqCodes]] and the fused IVF-PQ scan,
+    * so any change to the codes computation covers both paths.
     */
   private[functions] def pqCodesCol: Column =
-    if (sys.env.get("SPARK_GRAFT_PQ").contains("fold")) {
-      val nrm = sqrt(dot(col("embedding"), col("embedding")))
-      val msubs = transform(
-        transform(sequence(lit(0), lit(PqM - 1)), m =>
-          transform(slice(col("embedding"), m * PqSub + 1, lit(PqSub)),
-            x => x.cast("double") / nrm)),
-        sv => struct(sv.as("sv"), dot(sv, sv).as("s2")))
-      zip_with(msubs, col("cball"), (s, cands) =>
-        aggregate(cands,
-          struct(lit(Double.MaxValue).as("d2"), lit(0).as("cid")),
-          (acc, c) => {
-            val d2 = s.getField("s2") + c.getField("c2") -
-              lit(2.0) * dot(s.getField("sv"), c.getField("cvec"))
-            when(d2 < acc.getField("d2"),
-              struct(d2.as("d2"), c.getField("cid").as("cid")))
-              .otherwise(acc)
-          }).getField("cid"))
-    } else
-      org.apache.spark.sql.GraftSqlBridge.column(PqCodes(
-        org.apache.spark.sql.GraftSqlBridge.expression(col("embedding")),
-        org.apache.spark.sql.GraftSqlBridge.expression(col("cball"))))
+    org.apache.spark.sql.GraftSqlBridge.column(PqCodes(
+      org.apache.spark.sql.GraftSqlBridge.expression(col("embedding")),
+      org.apache.spark.sql.GraftSqlBridge.expression(col("cball"))))
 
   /** Per-query LUT (query_id, lut[PqM*PqK]): all query-subvector →
     * centroid distances, ordered by m*PqK+cid-1.
@@ -779,16 +736,12 @@ object AnnOps {
     val qv = element_at(transform(array(lit(127.0) / absMax), s =>
       transform(col("embedding"),
         x => greatest(lit(-127L), floor(x.cast("double") * s)))), 1)
-    // native kernel on the hot path (SPARK_GRAFT_DOT=fold keeps the
-    // interpreted fold for in-JVM A/B, same convention as [[dot]]);
-    // integer addition is order-free, so the two are trivially identical
+    // native kernel on the hot path (integer addition is order-free, so
+    // it matches the oracle's fold exactly)
     val intDot = (a: Column, b: Column) =>
-      if (sys.env.get("SPARK_GRAFT_DOT").contains("fold"))
-        aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
-      else
-        org.apache.spark.sql.GraftSqlBridge.column(IntDotProduct(
-          org.apache.spark.sql.GraftSqlBridge.expression(a),
-          org.apache.spark.sql.GraftSqlBridge.expression(b)))
+      org.apache.spark.sql.GraftSqlBridge.column(IntDotProduct(
+        org.apache.spark.sql.GraftSqlBridge.expression(a),
+        org.apache.spark.sql.GraftSqlBridge.expression(b)))
     val n = t.embeddings
       .filter(absMax > 0)
       .select(col("vec_id"), qv.as("qv"))

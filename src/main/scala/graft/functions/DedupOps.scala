@@ -128,12 +128,11 @@ object DedupOps {
        |         FROM bands a JOIN bands c
        |           ON a.band = c.band AND a.key = c.key AND a.doc_id < c.doc_id)""".stripMargin
 
-  /** K-minima signature column: the default is the native codegen'd
+  /** K-minima signature column: the native codegen'd
     * [[MinhashSignature]] expression (one pass, primitive accumulator,
-    * stays inside WholeStageCodegen); `SPARK_GRAFT_MINHASH=fold` keeps
-    * the built-in higher-order fold for A/B measurement in one JVM.
-    * Both are bit-identical to the oracle's SQL fold. Shapes previously
-    * measured and rejected: per-permutation `array_min(transform(hv,…))`
+    * stays inside WholeStageCodegen), bit-identical to the oracle's SQL
+    * fold (MinhashSignatureSpec pins it against the built-in
+    * higher-order fold). Shapes previously measured and rejected: per-permutation `array_min(transform(hv,…))`
     * re-evaluates the md5 chain once PER PERMUTATION after Catalyst
     * collapses the projection (K× the hashing cost); explode + K
     * parallel `min` aggregates is 3× slower at sf0.1 (3.9 s vs 1.2 s) —
@@ -141,16 +140,9 @@ object DedupOps {
     * fold that never leaves the operator.
     */
   private def sigCol: Column =
-    if (sys.env.get("SPARK_GRAFT_MINHASH").contains("fold"))
-      aggregate(transform(col("shingles"), s => h64(s) % P),
-        array_repeat(lit(P), K),
-        (acc, h) => transform(sequence(lit(0), lit(K - 1)),
-          k => least(element_at(acc, k + 1),
-            ((lit(2L) * k + 1L) * h + k * lit(912367L) + 341L) % P)))
-    else
-      org.apache.spark.sql.GraftSqlBridge.column(
-        MinhashSignature(
-          org.apache.spark.sql.GraftSqlBridge.expression(col("shingles")), K, P))
+    org.apache.spark.sql.GraftSqlBridge.column(
+      MinhashSignature(
+        org.apache.spark.sql.GraftSqlBridge.expression(col("shingles")), K, P))
 
   /** Per-bucket pair-generation cap: a bucket with more than this many
     * documents expands pairs only among its [[BucketCap]] smallest
@@ -164,8 +156,7 @@ object DedupOps {
     * bands that hit the cap in practice are collapsed to one
     * representative before banding in the cluster path (dedupClusters).
     */
-  private[graft] val BucketCap =
-    sys.env.get("SPARK_GRAFT_LSH_BUCKET_CAP").map(_.toInt).getOrElse(1024)
+  private[graft] val BucketCap = 1024
 
   /** (doc_id, band, key) band-bucket rows of a (doc_id, sig) signature
     * frame — the unit both the batch pair expansion and the streamed
@@ -277,36 +268,22 @@ object DedupOps {
 
   /** (doc_id, simhash) signatures — bit j set iff the (+1/−1) majority
     * vote of bit j across all word hashes is positive (60 bits — the
-    * full entropy of [[SharedHash.h64]]). The default is the native
-    * [[SimhashSignature]] expression: the whole vote folds
-    * into an int[60] inside the scan projection — a pure map, where the
-    * aggregation form shuffles one row PER WORD and carries 32 agg
-    * buffers per document. `SPARK_GRAFT_SIMHASH=agg` keeps the
-    * explode+groupBy form for in-JVM A/B; both are bit-identical (and
-    * match the DuckDB oracle's unnest+GROUP BY).
+    * full entropy of [[SharedHash.h64]]), from the native
+    * [[SimhashSignature]] expression: the whole vote folds into an
+    * int[60] inside the scan projection — a pure map, where an
+    * explode+groupBy form shuffles one row PER WORD and carries 32 agg
+    * buffers per document. Bit-identical to the DuckDB oracle's
+    * unnest+GROUP BY.
     */
-  private[functions] def simhashSigs(docs: DataFrame): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SIMHASH").contains("agg")) {
-      val hashed = docs
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .withColumn("h", h64(col("w")))
-      val bitAggs = (0 until SimBits).map(j =>
-        sum(when(shiftright(col("h"), j).bitwiseAND(1L) === 1L, 1L).otherwise(-1L)).as(s"b$j"))
-      val agg = hashed.groupBy(col("doc_id")).agg(bitAggs.head, bitAggs.tail: _*)
-      agg.select(col("doc_id"),
-        (0 until SimBits).map(j =>
-          when(col(s"b$j") > 0, shiftleft(lit(1L), j)).otherwise(0L): Column)
-          .reduce(_ + _).as("simhash"))
-    } else
-      // NULL-text parity with the agg form: explode(split(NULL)) drops
-      // the row there (and DuckDB's unnest likewise), so the native path
-      // must filter rather than emit a (doc_id, NULL) signature
-      docs.filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          org.apache.spark.sql.GraftSqlBridge.column(SimhashSignature(
-            org.apache.spark.sql.GraftSqlBridge.expression(
-              split(col("text"), " ")))).as("simhash"))
-  }
+  private[functions] def simhashSigs(docs: DataFrame): DataFrame =
+    // NULL-text parity with the oracle: DuckDB's unnest(string_split(NULL))
+    // drops the row, so this must filter rather than emit a
+    // (doc_id, NULL) signature
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"),
+        org.apache.spark.sql.GraftSqlBridge.column(SimhashSignature(
+          org.apache.spark.sql.GraftSqlBridge.expression(
+            split(col("text"), " ")))).as("simhash"))
 
   /** SimHash: pure map + one aggregation; near-dup detection = Hamming
     * distance on the result (see [[dedupSimhashPairs]]).
@@ -345,33 +322,20 @@ object DedupOps {
       .withColumn("key",
         expr(s"shiftright(simhash, k * $SimBandBits) & ${(1 << SimBandBits) - 1}"))
     // shape choice follows key cardinality (same rule as lshCandidates):
-    // with the old 8-bit bands (4×256 buckets) buckets were large and
-    // bucket-local expansion concentrated the quadratic pair blow-up in
-    // one task — self-join measured 2× faster (4.8 s vs 10.6 s, sf0.1).
-    // With 15-bit bands the keys are FINE (4×32768 buckets, occupancy
-    // ~1), and the A/B flips: bucket-local 0.95/1.81 s vs self-join
-    // 1.03/2.88 s over two sf0.1 runs — one (k, key, doc, simhash)
-    // shuffle instead of scanning the signature map twice. Bucket-local
-    // is now the default; `SPARK_GRAFT_SIMHASH_PAIRS=selfjoin` keeps the
-    // join form for re-measurement.
-    val expanded =
-      if (sys.env.get("SPARK_GRAFT_SIMHASH_PAIRS").contains("selfjoin")) {
-        val a = bands.select(col("doc_id").as("doc_a"), col("simhash").as("sh_a"),
-          col("k"), col("key"))
-        val b = bands.select(col("doc_id").as("doc_b"), col("simhash").as("sh_b"),
-          col("k"), col("key"))
-        a.join(b, Seq("k", "key")).filter(col("doc_a") < col("doc_b"))
-      } else {
-        bands.groupBy(col("k"), col("key"))
-          .agg(sort_array(collect_set(struct(col("doc_id"), col("simhash")))).as("ids"))
-          .filter(size(col("ids")) > 1)
-          .select(posexplode(col("ids")).as(Seq("i", "a")), col("ids"))
-          .select(col("a.doc_id").as("doc_a"), col("a.simhash").as("sh_a"),
-            explode(slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("b"))
-          .select(col("doc_a"), col("b.doc_id").as("doc_b"),
-            col("sh_a"), col("b.simhash").as("sh_b"))
-      }
-    expanded
+    // 15-bit bands make the keys FINE (4×32768 buckets, occupancy ~1),
+    // where bucket-local expansion measured 0.95/1.81 s against a
+    // self-join's 1.03/2.88 s over two sf0.1 runs — one (k, key, doc,
+    // simhash) shuffle instead of scanning the signature map twice
+    // (with the old 8-bit bands the self-join won, 4.8 s vs 10.6 s:
+    // large buckets concentrated the quadratic expansion in one task)
+    bands.groupBy(col("k"), col("key"))
+      .agg(sort_array(collect_set(struct(col("doc_id"), col("simhash")))).as("ids"))
+      .filter(size(col("ids")) > 1)
+      .select(posexplode(col("ids")).as(Seq("i", "a")), col("ids"))
+      .select(col("a.doc_id").as("doc_a"), col("a.simhash").as("sh_a"),
+        explode(slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("b"))
+      .select(col("doc_a"), col("b.doc_id").as("doc_b"),
+        col("sh_a"), col("b.simhash").as("sh_b"))
       .select(col("doc_a"), col("doc_b"),
         expr("bit_count(sh_a ^ sh_b)").as("hamming"))
       .distinct()
@@ -409,33 +373,22 @@ object DedupOps {
     // hashes in one primitive pass, never materializing the shingle
     // strings (their construction was an interpreted concat_ws lambda
     // per shingle, and the hashing an interpreted md5 Column chain —
-    // together they dominated the verify pipeline at 100× corpus).
-    // `SPARK_GRAFT_SHINGLEHASH=fold` keeps the Column form for in-JVM
-    // A/B (ShingleHashesSpec pins bit-identity of both kernel modes)
-    if (sys.env.get("SPARK_GRAFT_SHINGLEHASH").contains("fold"))
-      withShingles(docs).select(col("doc_id"),
-        array_distinct(transform(col("shingles"), s => h64(s) % P)).as("hv"))
-    else
-      docs.withColumn("words", split(col("text"), " "))
-        .filter(size(col("words")) >= 3)
-        .select(col("doc_id"),
-          org.apache.spark.sql.GraftSqlBridge.column(ShingleHashes(
-            org.apache.spark.sql.GraftSqlBridge.expression(col("words")), P,
-            gram = 3)).as("hv"))
+    // together they dominated the verify pipeline at 100× corpus;
+    // ShingleHashesSpec pins bit-identity against that Column form)
+    docs.withColumn("words", split(col("text"), " "))
+      .filter(size(col("words")) >= 3)
+      .select(col("doc_id"),
+        org.apache.spark.sql.GraftSqlBridge.column(ShingleHashes(
+          org.apache.spark.sql.GraftSqlBridge.expression(col("words")), P,
+          gram = 3)).as("hv"))
 
   /** [[sigCol]] over the pre-hashed shingle set — same permutation
     * family, md5 already paid by [[hashedShingles]].
     */
   private[functions] def sigColHv: Column =
-    if (sys.env.get("SPARK_GRAFT_MINHASH").contains("fold"))
-      aggregate(col("hv"), array_repeat(lit(P), K),
-        (acc, h) => transform(sequence(lit(0), lit(K - 1)),
-          k => least(element_at(acc, k + 1),
-            ((lit(2L) * k + 1L) * h + k * lit(912367L) + 341L) % P)))
-    else
-      org.apache.spark.sql.GraftSqlBridge.column(
-        MinhashSignature(
-          org.apache.spark.sql.GraftSqlBridge.expression(col("hv")), K, P))
+    org.apache.spark.sql.GraftSqlBridge.column(
+      MinhashSignature(
+        org.apache.spark.sql.GraftSqlBridge.expression(col("hv")), K, P))
 
   /** LSH candidates verified by exact Jaccard ≥ 0.5 over the hash sets —
     * the edge set of the near-duplicate graph. Cost is O(candidates),

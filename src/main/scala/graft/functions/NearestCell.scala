@@ -7,10 +7,10 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StructType}
 
 /** Native Catalyst expression assigning a vector to its nearest IVF
-  * centroid cell (argmax cosine) in ONE primitive loop — the codegen'd
-  * replacement for the aggregate-fold in [[AnnOps.cellFold]], which
-  * dispatches an interpreted lambda step (wrapping a [[DotProduct]]
-  * eval) per centroid per row.
+  * centroid cell (argmax cosine) in ONE primitive loop
+  * ([[AnnOps.cellFold]]) — the codegen'd replacement for an aggregate
+  * fold over the centroids, which dispatches an interpreted lambda step
+  * (wrapping a [[DotProduct]] eval) per centroid per row.
   *
   * Semantics are BIT-identical to the fold (NearestCellSpec A/Bs them):
   * nrm = sqrt(sequential Σe_i²), per candidate cs = (sequential

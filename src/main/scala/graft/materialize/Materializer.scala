@@ -179,16 +179,13 @@ final class Materializer(
     readWatermarkRow().map(_._1)
 
   /** (watermark, source snapshot version at the last run) — the version
-    * is what turns repair detection into an incremental FILE scan; None
-    * (pre-upgrade rows) falls back to signature detection for one run.
+    * is what turns repair detection into an incremental FILE scan.
     */
-  private def readWatermarkRow(): Option[(Timestamp, Option[Long])] =
+  private def readWatermarkRow(): Option[(Timestamp, Long)] =
     watermarks.readLogical()
       .filter(col("view_name") === view.name)
       .collect().headOption.map { r =>
-        val v = r.fieldIndex("source_version")
-        (r.getAs[Timestamp]("watermark_ts"),
-          if (r.isNullAt(v)) None else Some(r.getLong(v)))
+        (r.getAs[Timestamp]("watermark_ts"), r.getLong(r.fieldIndex("source_version")))
       }
 
   private def advanceWatermark(srcVersion: Long): Unit = {
@@ -555,8 +552,7 @@ final class Materializer(
         val addedFiles: Option[Seq[String]] =
           for {
             _ <- view.factBound
-            v0 <- lastVersion
-            added <- sourceAppendsSince(v0)
+            added <- sourceAppendsSince(lastVersion)
           } yield added
         // "no new facts" must come from the FILE delta, not the candidate
         // days: appends entirely past the watermark yield zero candidate

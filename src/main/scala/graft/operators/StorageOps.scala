@@ -857,7 +857,7 @@ object StorageOps {
     val live = tbl.readLogical().withColumn("leg", lit("live"))
     require(tbl.needsCompaction(), "pending position deletes flag compaction")
     tbl.compact()                                                 // v4 materializes
-    require(tbl.commits.last.posDeleteFilesOrEmpty.isEmpty,
+    require(tbl.commits.last.posDeleteFiles.isEmpty,
       "compaction must clear the tombstone map")
     val compacted = tbl.readLogical().withColumn("leg", lit("compacted"))
     live.unionByName(compacted)
@@ -921,7 +921,7 @@ object StorageOps {
     val entries = tbl.manifestEntries
     require(entries.map(_._1).distinct.size >= 2,
       "expected the live set to span multiple manifest chunks")
-    val bounds = entries.flatMap(_._2.boundsOrNone).flatten.filter(_.c == "ts")
+    val bounds = entries.flatMap(_._2.b).filter(_.c == "ts")
     require(bounds.nonEmpty, "manifest entries carry no ts bounds")
     require(GraftTable.footerProbeCount.get() == probes,
       "manifest reconstruction paid data-file footer IO")

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.collection.parallel.CollectionConverters._
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -21,9 +21,74 @@ import org.apache.spark.sql.types._
   * cost stays flat as the live file count grows (Iceberg's
   * manifest-list design; the reference's tables are all Iceberg
   * format-version 2). [[GraftTable.commits]] resolves chunk references
-  * back into the full in-memory view once per handle. Pre-manifest
-  * commit jsons (inline `files`/`fileRows`/`fileSpecs`, no `manifests`)
-  * still read; the next commit migrates their entries into chunks.
+  * back into the full in-memory view once per handle. Every field is
+  * required on disk: a json missing one, or holding null where a value
+  * is required, is rejected on read (see [[GraftTable.commits]]).
+  *
+  *  - `sinkBatches` — streaming sink id → last micro-batch committed
+  *    into the table ([[GraftTable.withSinkMark]]); carried forward on
+  *    every commit, so the latest commit is authoritative.
+  *  - `fileRows` — per-file row counts (Iceberg's manifest
+  *    `record_count` analog), carried commit to commit so a
+  *    replace/compact commit re-reads footers only for files it ADDED:
+  *    commit metadata cost stays O(new files), not O(table).
+  *  - `changeFiles` — for a copy-on-write upsert commit: the subset of
+  *    this commit's files holding EXACTLY the upserted batch (the
+  *    survivors were rewritten into separate files), i.e. the commit's
+  *    logical change set — Iceberg's changelog scan derives the same
+  *    rows from the equality-delete files a v2 MERGE writes. Empty on
+  *    every other op and on untracked upserts (whose change set is
+  *    unknowable — readChanges refuses those, see fileDeltasSince).
+  *  - `deleteFiles` — for a change-tracked replace commit
+  *    (`replace-cdc`): files holding EXACTLY the rows the commit
+  *    removed — the engine's analog of Iceberg v2's delete files,
+  *    written only when the caller opted into change tracking (the
+  *    extra O(deleted) write is a real cost the default repair path
+  *    must not pay). NOT part of the live file set; referenced by the
+  *    commit so orphan cleanup spares them until the commit expires.
+  *  - `schemaDdl` — the table's LOGICAL schema as of this commit
+  *    (Iceberg pins a schema-id per snapshot the same way). Carried
+  *    forward on every commit once an evolve-schema commit sets it, so
+  *    expiring the evolve commit itself never loses the schema; None on
+  *    never-evolved tables, whose schema is the declared TableDef one.
+  *  - `morDeleteFiles` — PENDING equality-delete files of a
+  *    merge-on-read table (Iceberg v2's delete files): key-tuple
+  *    tombstones → the version that wrote each, killing matching rows
+  *    from OLDER sequences until a later upsert resurrects the key.
+  *    Carried forward commit to commit (like sinkBatches) so the latest
+  *    commit always knows the active tombstone set; compaction
+  *    materializes them away and clears the map. Distinct from
+  *    `deleteFiles`, which is a change-tracked repair's one-shot
+  *    changelog payload, never carried.
+  *  - `partSpecDdl` — the PARTITION spec in effect as of this commit
+  *    (serialized transform list, see [[PartitionTransform.specDdl]]) —
+  *    carried like schemaDdl; None on never-evolved tables (declared
+  *    spec applies).
+  *  - `fileSpecs` — file → the spec it was WRITTEN under. Recorded (for
+  *    every live file) only once the table has ever evolved its
+  *    partitioning; an empty map means every file is on the declared
+  *    spec. Explicit per-file provenance — a derived first-seen lookup
+  *    would silently mis-group files after snapshot expiry, and a
+  *    mis-grouped file reads the wrong directory layout.
+  *  - `renames` — column-RENAME log as of this commit, carried forward
+  *    like schemaDdl: each entry `"<version>|<old>|<new>"` records that
+  *    the evolve commit at `version` renamed `old` to `new`. Files
+  *    written BEFORE that version store the old name; the read path
+  *    derives each file's stored names from its first-seen version
+  *    against this log — the engine's stand-in for Iceberg's field ids,
+  *    which is what makes RENAME a metadata-only commit on a
+  *    name-resolved parquet format (zero footers rewritten).
+  *  - `posDeleteFiles` — PENDING position-delete files (Iceberg v2's
+  *    `(file, pos)` delete kind — the shape `DELETE FROM ... WHERE
+  *    <non-key predicate>` writes): parquet files of (data-file relative
+  *    path, row index) tombstones → the version that wrote each,
+  *    anti-joined away by every logical read until
+  *    [[GraftTable.compact]] materializes them. Carried forward like
+  *    morDeleteFiles; never part of the live file set. Only
+  *    non-merge-on-read tables carry these (a MOR predicate delete
+  *    delegates to equality deletes — see deleteWhere).
+  *  - `manifests` — names of the manifest chunks whose entries form
+  *    this snapshot's live file set.
   */
 final case class CommitMeta(
     version: Int,
@@ -37,114 +102,19 @@ final case class CommitMeta(
     fileRows: Map[String, Long] = Map.empty,
     changeFiles: Seq[String] = Nil,
     deleteFiles: Seq[String] = Nil,
-    schemaDdl: String = null,
+    schemaDdl: Option[String] = None,
     @JsonDeserialize(contentAs = classOf[java.lang.Integer])
     morDeleteFiles: Map[String, Int] = Map.empty,
-    partSpecDdl: String = null,
+    partSpecDdl: Option[String] = None,
     fileSpecs: Map[String, String] = Map.empty,
     renames: Seq[String] = Nil,
     @JsonDeserialize(contentAs = classOf[java.lang.Integer])
     posDeleteFiles: Map[String, Int] = Map.empty,
     manifests: Seq[String] = Nil) {
-  /** Jackson leaves a missing field null on old commit jsons. */
-  def sinkBatchesOrEmpty: Map[String, Long] =
-    Option(sinkBatches).getOrElse(Map.empty)
-
-  /** The table's LOGICAL schema as of this commit (Iceberg pins a
-    * schema-id per snapshot the same way). Carried forward on every
-    * commit once an evolve-schema commit sets it, so expiring the
-    * evolve commit itself never loses the schema; absent (None) on
-    * never-evolved tables, whose schema is the declared TableDef one.
+  /** Alias of `sinkBatches`, the name the pipeline benchmark
+    * (`pipebench/`) reads it by.
     */
-  def schemaDdlOrNone: Option[String] = Option(schemaDdl)
-
-  /** For a copy-on-write upsert commit: the subset of this commit's
-    * files holding EXACTLY the upserted batch (the survivors were
-    * rewritten into separate files), i.e. the commit's logical change
-    * set — Iceberg's changelog scan derives the same rows from the
-    * equality-delete files a v2 MERGE writes. Empty on every other op
-    * and on pre-upgrade upsert jsons (whose change set is unknowable —
-    * readChanges refuses those, see fileDeltasSince).
-    */
-  def changeFilesOrEmpty: Seq[String] =
-    Option(changeFiles).getOrElse(Nil)
-
-  /** For a change-tracked replace commit (`replace-cdc`): files holding
-    * EXACTLY the rows the commit removed — the engine's analog of
-    * Iceberg v2's delete files, written only when the caller opted into
-    * change tracking (the extra O(deleted) write is a real cost the
-    * default repair path must not pay). NOT part of the live file set;
-    * referenced by the commit so orphan cleanup spares them until the
-    * commit itself expires.
-    */
-  def deleteFilesOrEmpty: Seq[String] =
-    Option(deleteFiles).getOrElse(Nil)
-
-  /** Per-file row counts (Iceberg's manifest `record_count` analog) —
-    * carried commit to commit so a replace/compact commit re-reads
-    * footers only for files it ADDED, never the carried-over live set:
-    * commit metadata cost stays O(new files), not O(table). Missing on
-    * pre-upgrade commit jsons → the next commit rebuilds it once.
-    */
-  def fileRowsOrEmpty: Map[String, Long] =
-    Option(fileRows).getOrElse(Map.empty)
-
-  /** PENDING equality-delete files of a merge-on-read table (Iceberg
-    * v2's delete files): key-tuple tombstones → the version that wrote
-    * each, killing matching rows from OLDER sequences until a later
-    * upsert resurrects the key. Carried forward commit to commit (like
-    * sinkBatches) so the latest commit always knows the active
-    * tombstone set; compaction materializes them away and clears the
-    * map. Distinct from `deleteFiles`, which is a change-tracked
-    * repair's one-shot changelog payload, never carried.
-    */
-  def morDeleteFilesOrEmpty: Map[String, Int] =
-    Option(morDeleteFiles).getOrElse(Map.empty)
-
-  /** The PARTITION spec in effect as of this commit (serialized
-    * transform list, see [[PartitionTransform.specDdl]]) — carried like
-    * schemaDdl; absent on never-evolved tables (declared spec applies).
-    */
-  def partSpecDdlOrNone: Option[String] = Option(partSpecDdl)
-
-  /** file → the spec it was WRITTEN under. Recorded (for every live
-    * file) only once the table has ever evolved its partitioning; an
-    * empty map means every file is on the declared spec. Explicit
-    * per-file provenance — a derived first-seen lookup would silently
-    * mis-group files after snapshot expiry, and a mis-grouped file
-    * reads the wrong directory layout.
-    */
-  def fileSpecsOrEmpty: Map[String, String] =
-    Option(fileSpecs).getOrElse(Map.empty)
-
-  /** Column-RENAME log as of this commit, carried forward like
-    * schemaDdl: each entry `"<version>|<old>|<new>"` records that the
-    * evolve commit at `version` renamed `old` to `new`. Files written
-    * BEFORE that version store the old name; the read path derives
-    * each file's stored names from its first-seen version against this
-    * log — the engine's stand-in for Iceberg's field ids, which is
-    * what makes RENAME a metadata-only commit on a name-resolved
-    * parquet format (zero footers rewritten).
-    */
-  def renamesOrEmpty: Seq[String] = Option(renames).getOrElse(Nil)
-
-  /** PENDING position-delete files (Iceberg v2's `(file, pos)` delete
-    * kind — the shape `DELETE FROM ... WHERE <non-key predicate>`
-    * writes): parquet files of (data-file relative path, row index)
-    * tombstones → the version that wrote each, anti-joined away by
-    * every logical read until [[GraftTable.compact]] materializes them.
-    * Carried forward like morDeleteFiles; never part of the live file
-    * set. Only non-merge-on-read tables carry these (a MOR predicate
-    * delete delegates to equality deletes — see deleteWhere).
-    */
-  def posDeleteFilesOrEmpty: Map[String, Int] =
-    Option(posDeleteFiles).getOrElse(Map.empty)
-
-  /** Names of the manifest chunks whose entries form this snapshot's
-    * live file set. Empty on pre-manifest commit jsons (which carry
-    * the file list inline) — see the class doc.
-    */
-  def manifestsOrEmpty: Seq[String] = Option(manifests).getOrElse(Nil)
+  def sinkBatchesOrEmpty: Map[String, Long] = sinkBatches
 }
 
 /** A concurrent commit landed that this operation cannot be replayed
@@ -256,11 +226,11 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   Files.createDirectories(Paths.get(dataDir))
   Files.createDirectories(Paths.get(commitsDir))
 
-  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+  private val mapper = GraftTable.mapper
 
   // manifest chunks are shared by main and every branch (branch commits
   // reference the same chunk files; fast-forward moves only jsons)
-  private val manifestStore = new ManifestStore(s"$tableDir/_manifests", mapper)
+  private val manifestStore = new ManifestStore(defn.name, s"$tableDir/_manifests")
 
   private def timed[A](label: String)(body: => A): A =
     graft.Timing.timed(defn.name, label)(body)
@@ -278,7 +248,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   /** Partition spec as of a snapshot (latest when None): the commit's
     * carried partSpecDdl, else the declared TableDef spec. New writes
     * always use the CURRENT spec; existing files keep the layout they
-    * were written under ([[CommitMeta.fileSpecsOrEmpty]]).
+    * were written under ([[CommitMeta.fileSpecs]]).
     */
   def partitionsAt(version: Option[Int]): Seq[PartitionTransform] = {
     val cs = commits
@@ -286,7 +256,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       case Some(v) => cs.find(_.version == v)
       case None => cs.lastOption
     }
-    snap.flatMap(_.partSpecDdlOrNone).map(PartitionTransform.parseSpec)
+    snap.flatMap(_.partSpecDdl).map(PartitionTransform.parseSpec)
       .getOrElse(defn.partitions)
   }
 
@@ -300,7 +270,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
 
   /** The spec each of a snapshot's files was written under. */
   private def specsByFile(snap: CommitMeta): Map[String, Seq[PartitionTransform]] = {
-    val m = snap.fileSpecsOrEmpty
+    val m = snap.fileSpecs
     if (m.isEmpty) Map.empty.withDefaultValue(defn.partitions)
     else m.view.mapValues(PartitionTransform.parseSpec).toMap
       .withDefaultValue(defn.partitions)
@@ -319,7 +289,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     *    snapshot expiry so a later re-add is detected as prone.
     */
   private def renameLogOf(snap: Option[CommitMeta]): Seq[(Int, String, String)] =
-    snap.map(_.renamesOrEmpty).getOrElse(Nil).map { s =>
+    snap.map(_.renames).getOrElse(Nil).map { s =>
       val parts = s.split("\\|", -1)
       require(parts.length == 3, s"${defn.name}: bad rename log entry '$s'")
       (parts(0).toInt, parts(1), parts(2))
@@ -361,7 +331,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val log = renameLogOf(cs.lastOption)
     log.exists(e => e._2.equalsIgnoreCase(name) || e._3.equalsIgnoreCase(name)) ||
       defn.schema.fieldNames.exists(_.equalsIgnoreCase(name)) ||
-      cs.flatMap(_.schemaDdlOrNone).exists(ddl =>
+      cs.flatMap(_.schemaDdl).exists(ddl =>
         StructType.fromDDL(ddl).fieldNames.exists(_.equalsIgnoreCase(name)))
   }
 
@@ -436,9 +406,22 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         val bytes = Files.readAllBytes(f.toPath)
         commitCache.getOrElseUpdate(
           (f.getName, bytes.length.toLong, contentKey(bytes)),
-          resolveManifests(mapper.readValue(bytes, classOf[CommitMeta])))
+          resolveManifests(parseCommit(f.getName, bytes)))
       }
       .sortBy(_.version).toSeq
+  }
+
+  /** Parse one persisted commit json. The persisted form carries the
+    * live file list only through `manifests`, so a json with the list
+    * inline is no commit this table format writes: it throws, like one
+    * that lacks a field ([[GraftTable.readJson]]).
+    */
+  private def parseCommit(name: String, bytes: Array[Byte]): CommitMeta = {
+    val c = GraftTable.readJson(defn.name, s"_commits/$name", bytes, classOf[CommitMeta])
+    if (c.files.nonEmpty || c.fileRows.nonEmpty || c.fileSpecs.nonEmpty)
+      throw new IllegalStateException(s"${defn.name}: _commits/$name lists its " +
+        "files inline — not a commit of this table format (files live in manifest chunks)")
+    c
   }
 
   /** Rebuild the in-memory full-file-list view from a persisted
@@ -448,21 +431,15 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * parses themselves cache in the [[ManifestStore]].
     */
   private def resolveManifests(c: CommitMeta): CommitMeta = {
-    val ms = c.manifestsOrEmpty
-    if (ms.isEmpty) c
-    else {
-      val entries = ms.flatMap(manifestStore.read)
-      c.copy(files = entries.map(_.p),
-        fileRows = entries.map(e => e.p -> e.r).toMap,
-        fileSpecs = entries.flatMap(e => e.specOrNone.map(e.p -> _)).toMap)
-    }
+    val entries = c.manifests.flatMap(manifestStore.read)
+    c.copy(files = entries.map(_.p),
+      fileRows = entries.map(e => e.p -> e.r).toMap,
+      fileSpecs = entries.flatMap(e => e.s.map(e.p -> _)).toMap)
   }
 
   /** file → write-time column bounds, from a snapshot's manifest
     * entries — the metadata-log replacement for per-file footer probes
-    * on the range-pruning and watermark paths. Files from pre-manifest
-    * commits (or migrated entries with unknown bounds) are absent;
-    * callers fall back to a footer read for exactly those.
+    * on the range-pruning and watermark paths.
     */
   // single-entry memo, NOT a map: every caller queries the latest
   // snapshot, and a per-snapshot map would retain one O(live files)
@@ -473,15 +450,14 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       (Seq[String], Map[String, Map[String, (Long, Long)]]) = (null, null)
 
   private def manifestBoundsOf(snap: CommitMeta): Map[String, Map[String, (Long, Long)]] = {
-    val key = snap.manifestsOrEmpty
+    val key = snap.manifests
     val memo = boundsMemo
     if (memo._1 == key) memo._2
     else {
       // rebuilding an O(live files) map per pruned read would turn
       // every range query into O(table) driver CPU
       val v = key.flatMap(manifestStore.read)
-        .flatMap(e => e.boundsOrNone.map(bs =>
-          e.p -> bs.map(cb => cb.c -> (cb.lo, cb.hi)).toMap)).toMap
+        .map(e => e.p -> e.b.map(cb => cb.c -> (cb.lo, cb.hi)).toMap).toMap
       boundsMemo = (key, v)
       v
     }
@@ -547,10 +523,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // them on read — abort rather than mis-read (the op re-runs
     // cheaply against the new metadata)
     def writeEpochGuards(): Unit = {
-      if (head.map(_.renamesOrEmpty).getOrElse(Nil) !=
-          base.map(_.renamesOrEmpty).getOrElse(Nil))
+      if (head.map(_.renames).getOrElse(Nil) !=
+          base.map(_.renames).getOrElse(Nil))
         conflict("a column rename/re-add landed concurrently")
-      if (head.flatMap(_.partSpecDdlOrNone) != base.flatMap(_.partSpecDdlOrNone))
+      if (head.flatMap(_.partSpecDdl) != base.flatMap(_.partSpecDdl))
         conflict("a partition-spec evolution landed concurrently")
     }
     intent match {
@@ -559,10 +535,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         writeEpochGuards()
         if (!removed.subsetOf(headFiles))
           conflict("a concurrent commit removed files this rewrite read")
-        if (head.map(_.morDeleteFilesOrEmpty).getOrElse(Map.empty) !=
-            base.map(_.morDeleteFilesOrEmpty).getOrElse(Map.empty) ||
-            head.map(_.posDeleteFilesOrEmpty).getOrElse(Map.empty) !=
-            base.map(_.posDeleteFilesOrEmpty).getOrElse(Map.empty))
+        if (head.map(_.morDeleteFiles).getOrElse(Map.empty) !=
+            base.map(_.morDeleteFiles).getOrElse(Map.empty) ||
+            head.map(_.posDeleteFiles).getOrElse(Map.empty) !=
+            base.map(_.posDeleteFiles).getOrElse(Map.empty))
           conflict("tombstones landed concurrently — this rewrite read the " +
             "base state and would silently clear them")
         if (defn.mergeOnRead &&
@@ -654,7 +630,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         // same discipline for the chunk-parse cache: a long-lived
         // poll/cron writer otherwise accumulates one parsed chunk per
         // chunk ever rewritten (see ManifestStore.prune)
-        manifestStore.prune(meta._1.manifestsOrEmpty.toSet)
+        manifestStore.prune(meta._1.manifests.toSet)
         return meta._1
       }
       attempt += 1
@@ -685,9 +661,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * at a thousand (Iceberg's fast-append). Rewrites (compact, zorder,
     * replace, rollback) keep the full O(live) assembly: their intent
     * already touches the live set wholesale, and they run on the
-    * maintenance cadence, not the ingest cadence. The one-time
-    * migration of a pre-manifest predecessor also takes the full pass
-    * (its row map must be rebuilt from footers once).
+    * maintenance cadence, not the ingest cadence.
     */
   private def assembleCommit(op: String, intent: CommitIntent,
       prevMeta: Option[CommitMeta],
@@ -701,8 +675,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       newRenames: Option[Seq[String]],
       posDeletes: (Map[String, Int], Int) => Map[String, Int]): (CommitMeta, CommitMeta) = {
     val newVersion = prevMeta.map(_.version).getOrElse(0) + 1
-    val prevSpecDdl = prevMeta.flatMap(_.partSpecDdlOrNone)
-    val prevFileSpecs = prevMeta.map(_.fileSpecsOrEmpty).getOrElse(Map.empty)
+    val prevSpecDdl = prevMeta.flatMap(_.partSpecDdl)
+    val prevFileSpecs = prevMeta.map(_.fileSpecs).getOrElse(Map.empty)
     val writeSpecDdl = prevSpecDdl.getOrElse(PartitionTransform.specDdl(defn.partitions))
     // ---- O(delta) fast path (see the method doc) ----
     val fastAdds: Option[Seq[String]] = intent match {
@@ -711,11 +685,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       case TombstoneEq | TombstonePos => Some(Nil)
       case _ => None
     }
-    // a pre-manifest predecessor (inline file list, possibly no row
-    // map) must migrate through the full pass once
-    val fast = fastAdds.isDefined &&
-      prevMeta.forall(p => p.manifestsOrEmpty.nonEmpty || p.files.isEmpty)
-    if (fast) {
+    if (fastAdds.isDefined) {
       val added = fastAdds.get
       // one footer open per added file: rows + bounds (cached — the
       // caller's zero-row check already primed it)
@@ -724,45 +694,43 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       val addedRows: Map[String, Long] =
         added.map(f => f -> knownRows.getOrElse(f, addedStats(f)._1)).toMap
       val files = prevMeta.map(_.files).getOrElse(Nil) ++ added
-      val fileRows = prevMeta.map(_.fileRowsOrEmpty).getOrElse(Map.empty) ++ addedRows
+      val fileRows = prevMeta.map(_.fileRows).getOrElse(Map.empty) ++ addedRows
       val rowCount = prevMeta.map(_.rowCount).getOrElse(0L) + addedRows.values.sum
-      val carriedSpecDdl = prevSpecDdl.orNull
       val fileSpecs =
-        if (carriedSpecDdl == null) Map.empty[String, String]
+        if (prevSpecDdl.isEmpty) Map.empty[String, String]
         else prevFileSpecs ++ added.map(_ -> writeSpecDdl)
       // every carried file keeps identical rows/spec, so EVERY prior
       // chunk carries by reference — no chunk is read, let alone
       // scanned. Only the fold-undersized merge (amortized logarithmic)
       // ever opens carried chunks here.
-      val prevChunks = prevMeta.map(_.manifestsOrEmpty).getOrElse(Nil)
+      val prevChunks = prevMeta.map(_.manifests).getOrElse(Nil)
       val (carried, merged) = foldChunks(prevChunks)
       val pool = merged.flatMap(manifestStore.read)
       val fresh = added.map(f => ManifestEntry(
-        f, addedRows(f), fileSpecs.get(f).orNull, addedStats(f)._2))
+        f, addedRows(f), fileSpecs.get(f), addedStats(f)._2))
       val newChunks = (pool ++ fresh).grouped(ChunkTargetEntries)
         .map(manifestStore.write).toSeq
       return finishCommit(op, newVersion, rowCount, files, fileRows, fileSpecs,
-        carriedSpecDdl, carried ++ newChunks, prevMeta, changeFiles, deleteFiles,
+        prevSpecDdl, carried ++ newChunks, prevMeta, changeFiles, deleteFiles,
         newSchemaDdl, morDeletes, newRenames, posDeletes)
     }
-    // ---- full assembly: rewrites, replaces, metadata ops, migration ----
+    // ---- full assembly: rewrites, replaces, metadata ops ----
     val files = filesUnder(intent, prevMeta)
     val prevFiles = prevMeta.map(_.files.toSet).getOrElse(Set.empty)
-    val prevRows = prevMeta.map(_.fileRowsOrEmpty).getOrElse(Map.empty) ++ knownRows
+    val prevRows = prevMeta.map(_.fileRows).getOrElse(Map.empty) ++ knownRows
     // one footer open per ADDED file harvests rows + INT64 bounds for
     // the manifest entry (parallel, cached per handle — append's own
     // zero-row check already primed it)
     val addedStats: Map[String, (Long, Seq[ColumnBound])] =
       files.filterNot(prevFiles).par.map(f => f -> footerStats(f)).seq.toMap
-    val fileRows = files.par.map(f => f -> prevRows.getOrElse(f,
-      addedStats.get(f).map(_._1).getOrElse(footerStats(f)._1))).seq.toMap
+    val fileRows = files.map(f => f -> prevRows.getOrElse(f, addedStats(f)._1)).toMap
     // partition-spec bookkeeping: the carried spec, plus (once the table
     // has ever evolved) per-file write-spec provenance. New files were
     // written under the spec in effect BEFORE this commit (an evolve
     // commit adds no files, so the distinction only matters there).
-    val carriedSpecDdl = newPartSpecDdl.orElse(prevSpecDdl).orNull
+    val carriedSpecDdl = newPartSpecDdl.orElse(prevSpecDdl)
     val fileSpecs: Map[String, String] =
-      if (carriedSpecDdl == null) Map.empty // never evolved: declared spec everywhere
+      if (carriedSpecDdl.isEmpty) Map.empty // never evolved: declared spec everywhere
       else fileSpecsOverride match {
         // rollback restores the TARGET snapshot's provenance — a file the
         // head had dropped isn't in the head's map, and stamping it with
@@ -787,10 +755,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // commit's own chunk write with their (immutable) bounds kept.
     // Spec restamps (first partition evolution, rollback overrides)
     // and removals are what break the carry.
-    val (carriedOk, toSpill) = prevMeta.map(_.manifestsOrEmpty).getOrElse(Nil)
+    val (carriedOk, toSpill) = prevMeta.map(_.manifests).getOrElse(Nil)
       .partition(n => manifestStore.read(n).forall(e =>
         fileSet.contains(e.p) && e.r == fileRows(e.p) &&
-          e.specOrNone == fileSpecs.get(e.p)))
+          e.s == fileSpecs.get(e.p)))
     // bound ref growth: once the json would reference too many chunks,
     // fold the undersized ones into this commit's write (amortized: a
     // chunk is re-merged O(log files) times over the table's life;
@@ -798,15 +766,13 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val (carried, merged) = foldChunks(carriedOk)
     val pool = (toSpill ++ merged).flatMap(manifestStore.read)
       .filter(e => fileSet.contains(e.p))
-      .map(e => e.copy(r = fileRows(e.p), s = fileSpecs.get(e.p).orNull))
+      .map(e => e.copy(r = fileRows(e.p), s = fileSpecs.get(e.p)))
     val covered = carried.flatMap(n => manifestStore.read(n).map(_.p)).toSet ++
       pool.map(_.p)
-    // files never chunked yet: this commit's additions (bounds from the
-    // footer harvest) and any carried-over entries of a PRE-manifest
-    // predecessor json (one-time migration; bounds unknown → null)
+    // files never chunked yet are this commit's additions (bounds from
+    // the footer harvest)
     val fresh = files.filterNot(covered).map(f => ManifestEntry(
-      f, fileRows(f), fileSpecs.get(f).orNull,
-      addedStats.get(f).map(_._2).orNull))
+      f, fileRows(f), fileSpecs.get(f), addedStats(f)._2))
     val newChunks = (pool ++ fresh).grouped(ChunkTargetEntries).map(
       manifestStore.write).toSeq
     finishCommit(op, newVersion, fileRows.values.sum, files, fileRows, fileSpecs,
@@ -820,7 +786,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     */
   private def finishCommit(op: String, newVersion: Int, rowCount: Long,
       files: Seq[String], fileRows: Map[String, Long],
-      fileSpecs: Map[String, String], carriedSpecDdl: String,
+      fileSpecs: Map[String, String], carriedSpecDdl: Option[String],
       chunkNames: Seq[String], prevMeta: Option[CommitMeta],
       changeFiles: Seq[String], deleteFiles: Seq[String],
       newSchemaDdl: Option[String],
@@ -830,23 +796,22 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // every commit carries the full per-sink batch watermark forward, so
     // the LATEST commit is always authoritative and expiring old
     // snapshots never loses a sink's mark
-    val prev = prevMeta.map(_.sinkBatchesOrEmpty).getOrElse(Map.empty)
+    val prev = prevMeta.map(_.sinkBatches).getOrElse(Map.empty)
     // the current schema rides every commit the same way (see CommitMeta)
-    val carriedSchema =
-      newSchemaDdl.orElse(prevMeta.flatMap(_.schemaDdlOrNone)).orNull
+    val carriedSchema = newSchemaDdl.orElse(prevMeta.flatMap(_.schemaDdl))
     // pending equality-delete tombstones carry too; `morDeletes`
     // transforms the carried map (add a tombstone / clear on compact) —
     // handed the ATTEMPT's version, so a retried tombstone re-sequences
     // above the interleaved commits it lost the race to
     val carriedMorDeletes =
-      morDeletes(prevMeta.map(_.morDeleteFilesOrEmpty).getOrElse(Map.empty), newVersion)
+      morDeletes(prevMeta.map(_.morDeleteFiles).getOrElse(Map.empty), newVersion)
     // the rename log carries forward like the schema; a rename commit
     // appends its entry, rollback restores the target's log
     val carriedRenames =
-      newRenames.getOrElse(prevMeta.map(_.renamesOrEmpty).getOrElse(Nil))
+      newRenames.getOrElse(prevMeta.map(_.renames).getOrElse(Nil))
     // pending position-delete tombstones carry like equality tombstones
     val carriedPosDeletes =
-      posDeletes(prevMeta.map(_.posDeleteFilesOrEmpty).getOrElse(Map.empty), newVersion)
+      posDeletes(prevMeta.map(_.posDeleteFiles).getOrElse(Map.empty), newVersion)
     val meta = CommitMeta(newVersion, System.currentTimeMillis(), op,
       rowCount, files, prev ++ pendingSinkMark.get(), fileRows, changeFiles,
       deleteFiles, carriedSchema, carriedMorDeletes, carriedSpecDdl, fileSpecs,
@@ -1037,7 +1002,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       case Some(v) => cs.find(_.version == v)
       case None => cs.lastOption
     }
-    snap.flatMap(_.schemaDdlOrNone).map(StructType.fromDDL).getOrElse(defn.schema)
+    snap.flatMap(_.schemaDdl).map(StructType.fromDDL).getOrElse(defn.schema)
   }
 
   /** The table's current logical schema (declared + applied evolutions). */
@@ -1077,7 +1042,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       case None => cs.lastOption.getOrElse(CommitMeta(0, 0L, "empty", 0L, Nil))
     }
     // a raw physical read would resurface position-deleted rows
-    require(snap.posDeleteFilesOrEmpty.isEmpty,
+    require(snap.posDeleteFiles.isEmpty,
       s"${defn.name}: physical read with pending position deletes — " +
         "use readLogical(), or compact() to materialize them")
     // a PHYSICAL read exposes one set of p_* columns, so it can only
@@ -1092,7 +1057,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       .getOrElse(partitionsAt(version))
     // the SNAPSHOT's schema: older files missing later-added columns
     // null-fill; columns dropped later still read in a pre-drop snapshot
-    val logical = snap.schemaDdlOrNone.map(StructType.fromDDL).getOrElse(defn.schema)
+    val logical = snap.schemaDdl.map(StructType.fromDDL).getOrElse(defn.schema)
     // a physical read resolves columns by the snapshot's names directly;
     // files that predate a rename store the OLD name and would silently
     // null-fill the renamed column — refuse, like the mixed-spec case
@@ -1137,7 +1102,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     if (!defn.mergeOnRead) {
       // pending position deletes (this SNAPSHOT's — time travel to a
       // pre-delete version sees the rows) anti-join away per (file, pos)
-      snap.posDeleteFilesOrEmpty.keys.toSeq.sorted match {
+      snap.posDeleteFiles.keys.toSeq.sorted match {
         case Nil => readFilesLogicalSpecAware(snap.files, logical, Some(snap))
         case ps => applyPosDeletes(
           readFilesLogicalSpecAware(snap.files, logical, Some(snap), withPos = true), ps)
@@ -1146,7 +1111,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     } else {
       val firstSeen = firstSeenByFile(cs)
       val groups = snap.files.groupBy(firstSeen).toSeq.sortBy(_._1)
-      val tombs = snap.morDeleteFilesOrEmpty
+      val tombs = snap.morDeleteFiles
       if (groups.size <= 1 && tombs.isEmpty)
         readFilesLogicalSpecAware(snap.files, logical, Some(snap))
       else {
@@ -1291,7 +1256,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       newSchemaDdl = Some(next.toDDL),
       newRenames =
         if (proneEntries.isEmpty) None
-        else Some(cs.lastOption.map(_.renamesOrEmpty).getOrElse(Nil) ++ proneEntries))
+        else Some(cs.lastOption.map(_.renames).getOrElse(Nil) ++ proneEntries))
   }
 
   /** Iceberg-style DROP COLUMN: metadata-only — the column's values stay
@@ -1332,7 +1297,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     writeCommit("evolve-schema", MetadataOnly(None),
       cs.lastOption.map(_.version).getOrElse(0),
       newSchemaDdl = Some(next.toDDL),
-      newRenames = Some(cs.lastOption.map(_.renamesOrEmpty).getOrElse(Nil) ++ dropEntries))
+      newRenames = Some(cs.lastOption.map(_.renames).getOrElse(Nil) ++ dropEntries))
   }
 
   /** Iceberg-style RENAME COLUMN: a METADATA-ONLY commit (zero data
@@ -1370,7 +1335,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     writeCommit("evolve-schema", MetadataOnly(None),
       prev.map(_.version).getOrElse(0),
       newSchemaDdl = Some(next.toDDL),
-      newRenames = Some(prev.map(_.renamesOrEmpty).getOrElse(Nil) :+
+      newRenames = Some(prev.map(_.renames).getOrElse(Nil) :+
         s"${prev.map(_.version).getOrElse(0) + 1}|$exact|$newName"))
   }
 
@@ -1423,13 +1388,13 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       s"${defn.name}: rollback target v$version is not an ancestor of v$currentVersion")
     writeCommit("rollback", MetadataOnly(Some(target.files)),
       cs.lastOption.map(_.version).getOrElse(0),
-      newSchemaDdl = Some(target.schemaDdlOrNone.getOrElse(defn.schema.toDDL)),
-      morDeletes = (_, _) => target.morDeleteFilesOrEmpty,
-      newPartSpecDdl = Some(target.partSpecDdlOrNone
+      newSchemaDdl = Some(target.schemaDdl.getOrElse(defn.schema.toDDL)),
+      morDeletes = (_, _) => target.morDeleteFiles,
+      newPartSpecDdl = Some(target.partSpecDdl
         .getOrElse(PartitionTransform.specDdl(defn.partitions))),
-      fileSpecsOverride = Some(target.fileSpecsOrEmpty),
-      newRenames = Some(target.renamesOrEmpty),
-      posDeletes = (_, _) => target.posDeleteFilesOrEmpty)
+      fileSpecsOverride = Some(target.fileSpecs),
+      newRenames = Some(target.renames),
+      posDeletes = (_, _) => target.posDeleteFiles)
   }
 
   /** Iceberg's `TIMESTAMP AS OF`: the snapshot that was current at
@@ -1484,10 +1449,9 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       writeCommit("upsert-mor", AddFiles(added), baseV)
     } else if (!trackChanges) {
       // opt-out: one merged write, NO changeFiles — the commit's change
-      // set is unknowable and readChanges refuses it (same contract as
-      // pre-upgrade upsert jsons). Measured worth: the split write
-      // reads ~1.34× on the s5 bench row — a table nobody tails is
-      // entitled to skip that premium.
+      // set is unknowable and readChanges refuses it. Measured worth:
+      // the split write reads ~1.34× on the s5 bench row — a table
+      // nobody tails is entitled to skip that premium.
       val cur = readLogical().alias("cur")
       val bb = b.alias("b")
       val sameKey = defn.keys
@@ -1590,7 +1554,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * materializes the deletes (mirroring the MOR-sequence refusals).
     */
   private def posPending: Boolean =
-    commits.lastOption.exists(_.posDeleteFilesOrEmpty.nonEmpty)
+    commits.lastOption.exists(_.posDeleteFiles.nonEmpty)
 
   /** S5c — predicate DELETE, Iceberg v2's position-delete shape (`DELETE
     * FROM ... WHERE <any predicate>`): scans the VISIBLE state with file
@@ -1634,7 +1598,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val (_, overlapping) = classifyLiveFiles(prune)
     val base = readFilesLogicalSpecAware(overlapping, logical, Some(snap),
       withPos = true)
-    val visible = snap.posDeleteFilesOrEmpty.keys.toSeq.sorted match {
+    val visible = snap.posDeleteFiles.keys.toSeq.sorted match {
       case Nil => base
       case ps => applyPosDeletes(base, ps)
     }
@@ -1781,7 +1745,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * stats, degrades to rewriting everything — never to wrong results.
     */
   private def classifyLiveFiles(prune: Option[RangePrune]): (Seq[String], Seq[String]) = {
-    val live = commits.lastOption.map(_.files).getOrElse(Nil)
+    val snap = commits.lastOption
+    val live = snap.map(_.files).getOrElse(Nil)
     prune match {
       case None => (Nil, live)
       case Some(p) =>
@@ -1790,10 +1755,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         // Manifests store bounds under the WRITE-TIME column name, so a
         // renamed pruning column is probed under each file's stored name
         // (a miss there degrades to rewrite, never to a wrong carry).
-        // Only files migrated from pre-manifest commits (no recorded
-        // bounds at all) fall back to a parallel footer probe.
         val stored = storedColumnByFile(p.column)
-        val bounds = boundsByFile(commits.lastOption, live, stored)
+        val bounds = boundsByFile(snap, live, stored)
         if (bounds.exists(_._2.isEmpty)) (Nil, live)
         else {
           val (out, in) = bounds.partition {
@@ -1805,28 +1768,22 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     }
   }
 
-  /** Per-file bounds of a (possibly renamed) column over `files`:
-    * manifest entries first — a key present is the written bounds, a
-    * key absent from a RECORDED bounds map means the stats were
-    * unusable at write time (same verdict a footer probe would reach,
-    * without the IO) — and a parquet footer probe only for files whose
-    * entry predates bounds recording entirely.
+  /** Per-file bounds of a (possibly renamed) column over `files`, from
+    * the manifest entries: a key present is the written bounds, a key
+    * absent means the stats were unusable at write time (None — the
+    * caller treats the file as "may contain anything").
     */
   private def boundsByFile(snap: Option[CommitMeta], files: Seq[String],
       stored: String => String): Seq[(String, Option[(Long, Long)])] = {
     val persisted = snap.map(manifestBoundsOf).getOrElse(Map.empty)
-    val rows = snap.map(_.fileRowsOrEmpty).getOrElse(Map.empty)
-    files.par.map { f =>
-      f -> (persisted.get(f) match {
-        // a zero-row file (Spark's schema-only artifact) has no blocks
-        // and so no recorded columns — its bounds are the empty range
-        // for EVERY column, same as a footer probe would conclude
-        case Some(_) if rows.getOrElse(f, -1L) == 0L =>
-          Some((Long.MaxValue, Long.MinValue))
-        case Some(bm) => bm.get(stored(f))
-        case None => fileBoundsMicros(f, stored(f))
-      })
-    }.seq
+    val rows = snap.map(_.fileRows).getOrElse(Map.empty)
+    files.map { f =>
+      // a zero-row file (Spark's schema-only artifact) has no blocks
+      // and so no recorded columns — its bounds are the empty range
+      // for EVERY column
+      f -> (if (rows(f) == 0L) Some((Long.MaxValue, Long.MinValue))
+        else persisted(f).get(stored(f)))
+    }
   }
 
   /** file → the name the file's FOOTER stores for the current logical
@@ -1845,51 +1802,15 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     }
   }
 
-  /** Footer min/max of an INT64 column (µs for TIMESTAMP) across a
-    * file's row groups. None ⇒ stats unusable (column missing — e.g. a
-    * partition column not stored in the data file — or not INT64, or
-    * not recorded); callers must treat None as "may contain anything".
-    * A file whose every value is null gets the empty range
-    * (MaxValue, MinValue), which intersects nothing.
-    */
-  private def fileBoundsMicros(file: String, colName: String): Option[(Long, Long)] = {
-    GraftTable.footerProbeCount.incrementAndGet() // test pin: the pruned
-    // path on manifest-format tables must never reach this fallback
-    val conf = spark.sessionState.newHadoopConf()
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(s"$dataDir/$file"), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      var lo = Long.MaxValue
-      var hi = Long.MinValue
-      var usable = true
-      r.getFooter.getBlocks.asScala.foreach { b =>
-        b.getColumns.asScala.find(_.getPath.toDotString == colName) match {
-          case Some(c) =>
-            val s = c.getStatistics
-            if (s == null) usable = false
-            else if (s.hasNonNullValue) (s.genericGetMin, s.genericGetMax) match {
-              case (mn: java.lang.Long, mx: java.lang.Long) =>
-                lo = math.min(lo, mn)
-                hi = math.max(hi, mx)
-              case _ => usable = false
-            }
-            else if (!(s.isNumNullsSet && s.getNumNulls == b.getRowCount)) usable = false
-          case None => usable = false
-        }
-      }
-      if (usable) Some((lo, hi)) else None
-    } finally r.close()
-  }
-
   /** Footer max of an INT64/timestamp column over the live snapshot — a
     * metadata-only watermark read. None ⇒ stats unusable on some file or
     * no non-null value anywhere; callers fall back to a data scan.
     */
   def columnMaxMicros(colName: String): Option[Long] = {
-    val live = commits.lastOption.map(_.files).getOrElse(Nil)
+    val snap = commits.lastOption
+    val live = snap.map(_.files).getOrElse(Nil)
     val stored = storedColumnByFile(colName)
-    val bounds = boundsByFile(commits.lastOption, live, stored).map(_._2)
+    val bounds = boundsByFile(snap, live, stored).map(_._2)
     if (bounds.exists(_.isEmpty)) None
     else bounds.flatten.map(_._2).filter(_ != Long.MinValue) match {
       case Nil => None
@@ -1942,7 +1863,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * refuse this too (compact() clears both).
     */
   private def morPending: Boolean =
-    commits.lastOption.exists(_.morDeleteFilesOrEmpty.nonEmpty)
+    commits.lastOption.exists(_.morDeleteFiles.nonEmpty)
 
   /** Raw read of specific data files, projected to the logical columns —
     * the incremental-scan primitive: the materializer reads ONLY the
@@ -2060,14 +1981,14 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * ([[classifyLiveFiles]]) and watermark reads ([[columnMaxMicros]])
     * later resolve from the metadata log with ZERO data-file footer
     * IO (Iceberg records the same bounds in its manifests from write
-    * metrics). Per-column semantics mirror [[fileBoundsMicros]]: an
-    * all-null column records the empty range (MaxValue, MinValue);
-    * unusable stats (missing, non-INT64, null-count unknown) omit the
-    * column. Cached per handle so append's zero-row check and
+    * metrics). An all-null column records the empty range (MaxValue,
+    * MinValue); unusable stats (missing, non-INT64, null-count unknown)
+    * omit the column. Cached per handle so append's zero-row check and
     * writeCommit share a single open.
     */
   private def footerStats(file: String): (Long, Seq[ColumnBound]) =
     footerStatsCache.getOrElseUpdate(file, {
+      GraftTable.footerProbeCount.incrementAndGet()
       val conf = spark.sessionState.newHadoopConf()
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromPath(new org.apache.hadoop.fs.Path(s"$dataDir/$file"), conf)
@@ -2137,7 +2058,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * foreachBatch sink must deduplicate on it (the Structured Streaming
     * contract). Authoritative source is the latest commit's embedded
     * `sinkBatches`; the side file only covers batches that committed no
-    * data (and pre-upgrade tables).
+    * data.
     */
   private def streamState: Map[String, Long] = {
     val p = Paths.get(s"$commitsDir/stream-state.json")
@@ -2148,7 +2069,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
 
   def lastCommittedBatch(sinkId: String): Long = {
     val inCommit = commits.lastOption
-      .flatMap(_.sinkBatchesOrEmpty.get(sinkId)).getOrElse(-1L)
+      .flatMap(_.sinkBatches.get(sinkId)).getOrElse(-1L)
     math.max(inCommit, streamState.getOrElse(sinkId, -1L))
   }
 
@@ -2251,7 +2172,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // files referenced by pending position deletes must rewrite (with
     // the tombstones applied) — an unreferenced file still carries by
     // name, so a small predicate delete compacts O(touched files)
-    val pendingPos = snap.map(_.posDeleteFilesOrEmpty.keys.toSeq.sorted).getOrElse(Nil)
+    val pendingPos = snap.map(_.posDeleteFiles.keys.toSeq.sorted).getOrElse(Nil)
     val posRefs: Set[String] =
       if (pendingPos.isEmpty) Set.empty
       else posPairs(pendingPos).select("__file").distinct()
@@ -2617,8 +2538,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // live BRANCH snapshots reference files main doesn't know yet —
     // those are the branch's staged payload, not orphans
     def refsOf(c: CommitMeta): Seq[String] =
-      c.files ++ c.deleteFilesOrEmpty ++ c.morDeleteFilesOrEmpty.keys ++
-        c.posDeleteFilesOrEmpty.keys
+      c.files ++ c.deleteFiles ++ c.morDeleteFiles.keys ++
+        c.posDeleteFiles.keys
     val branchViews = branches.map(branchView)
     val branchRefs = branchViews.flatMap(_.commits.flatMap(refsOf)).toSet
     val referenced = commits.flatMap(refsOf).toSet ++ branchRefs
@@ -2631,7 +2552,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // Same age gate: a racing writer's fresh chunks are unreferenced
     // until its publish lands
     manifestStore.sweep(
-      (commits ++ branchViews.flatMap(_.commits)).flatMap(_.manifestsOrEmpty).toSet,
+      (commits ++ branchViews.flatMap(_.commits)).flatMap(_.manifests).toSet,
       minAgeMs)
     // staging remnants: under concurrent writers a fresh staging dir
     // may be an IN-FLIGHT write racing this maintenance pass — only
@@ -2695,7 +2616,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         // every leg's files were WRITTEN by commit c, under c's spec
         // (covers replace-cdc delete files, which live outside `files`
         // and so outside the per-file provenance map)
-        val spec = c.partSpecDdlOrNone.map(PartitionTransform.parseSpec)
+        val spec = c.partSpecDdl.map(PartitionTransform.parseSpec)
           .getOrElse(defn.partitions)
         val stored = storedNamesAt(logical, c.version, endLog)
           .filter { case (cur, s) => s != Some(cur) }
@@ -2827,25 +2748,25 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         c.op match {
           case "append" | "upsert-mor" =>
             (c, c.files.filterNot(prevFiles), Nil: Seq[String])
-          case "upsert" if c.changeFilesOrEmpty.nonEmpty =>
-            (c, c.changeFilesOrEmpty, Nil: Seq[String])
+          case "upsert" if c.changeFiles.nonEmpty =>
+            (c, c.changeFiles, Nil: Seq[String])
           case "replace-cdc" =>
-            (c, c.changeFilesOrEmpty, c.deleteFilesOrEmpty)
+            (c, c.changeFiles, c.deleteFiles)
           case "delete-mor" =>
             // the tombstone file(s) THIS commit added (map delta vs the
             // predecessor's carried set); readChanges turns them into
             // full delete rows via the predecessor snapshot
             val prevTombs = byVersion.get(c.version - 1)
-              .map(_.morDeleteFilesOrEmpty.keySet).getOrElse(Set.empty[String])
+              .map(_.morDeleteFiles.keySet).getOrElse(Set.empty[String])
             (c, Nil: Seq[String],
-              (c.morDeleteFilesOrEmpty.keySet -- prevTombs).toSeq.sorted)
+              (c.morDeleteFiles.keySet -- prevTombs).toSeq.sorted)
           case "delete-pos" =>
             // same shape for position deletes: the pos-tombstone file(s)
             // this commit added; readChanges reads the referenced rows
             val prevPos = byVersion.get(c.version - 1)
-              .map(_.posDeleteFilesOrEmpty.keySet).getOrElse(Set.empty[String])
+              .map(_.posDeleteFiles.keySet).getOrElse(Set.empty[String])
             (c, Nil: Seq[String],
-              (c.posDeleteFilesOrEmpty.keySet -- prevPos).toSeq.sorted)
+              (c.posDeleteFiles.keySet -- prevPos).toSeq.sorted)
           case "compact" | "zorder" | "evolve-schema" | "evolve-partition" =>
             // layout-/metadata-only: no logical rows changed
             (c, Nil: Seq[String], Nil: Seq[String])
@@ -2876,7 +2797,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * the source aggregate without touching a data file).
     */
   def manifestEntries: Seq[(String, ManifestEntry)] =
-    commits.lastOption.map(_.manifestsOrEmpty).getOrElse(Nil)
+    commits.lastOption.map(_.manifests).getOrElse(Nil)
       .flatMap(n => manifestStore.read(n).map(n -> _))
 
   /** Per-chunk stats of the current snapshot, Iceberg-`$manifests`
@@ -2892,15 +2813,39 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     */
   def manifestInfo: Seq[(String, Long, Int, Int, Long)] = {
     val cs = commits
-    cs.lastOption.map(_.manifestsOrEmpty).getOrElse(Nil).map { n =>
+    cs.lastOption.map(_.manifests).getOrElse(Nil).map { n =>
       val entries = manifestStore.read(n)
-      val addedAt = cs.find(_.manifestsOrEmpty.contains(n)).map(_.version).getOrElse(0)
+      val addedAt = cs.find(_.manifests.contains(n)).map(_.version).getOrElse(0)
       (n, manifestStore.sizeBytes(n), addedAt, entries.size, entries.map(_.r).sum)
     }
   }
 }
 
 object GraftTable {
+  /** Mapper for the table's json files. The table layer reads exactly
+    * one on-disk format, so a commit or chunk json that lacks a field,
+    * or holds null where a value is required, fails the read instead of
+    * defaulting: a commit missing `sinkBatches` read as "this sink
+    * committed nothing" would make an exactly-once sink re-apply
+    * batches it already wrote.
+    */
+  private[tables] val mapper: ObjectMapper = new ObjectMapper()
+    .registerModule(DefaultScalaModule)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES,
+      DeserializationFeature.FAIL_ON_NULL_CREATOR_PROPERTIES)
+
+  /** Parse `bytes`, the json at `file` under table `table`'s dir, as a
+    * `cls`; a json of any other shape throws, naming table and file.
+    */
+  private[tables] def readJson[T](table: String, file: String, bytes: Array[Byte],
+      cls: Class[T]): T =
+    try mapper.readValue(bytes, cls)
+    catch {
+      case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        throw new IllegalStateException(
+          s"$table: $file is not in this table format — ${e.getOriginalMessage}", e)
+    }
+
   /** Dev-only write-path timing (GRAFT_WRITE_TIMING=1): one stderr line
     * per staged Spark write so a profiling run can count the commits a
     * protocol makes and what each write job costs. Read once — env never
@@ -2931,11 +2876,10 @@ object GraftTable {
     */
   val PosDeleteBroadcastBytes: Long = 32L * 1024 * 1024
 
-  /** Count of per-file parquet-footer bound probes ([[fileBoundsMicros]]
-    * calls) — the metadata-IO the manifest bounds exist to eliminate.
-    * Tests pin that pruned reads and watermark lookups on
-    * manifest-format tables leave this untouched; only files migrated
-    * from pre-manifest commit jsons may pay the fallback.
+  /** Count of parquet footers opened (`footerStats` cache misses) —
+    * one per file a commit adds. Reads resolve bounds from the manifest
+    * entries, so tests pin that pruned reads and watermark lookups
+    * leave this untouched.
     */
   val footerProbeCount = new java.util.concurrent.atomic.AtomicLong(0L)
 

@@ -2,8 +2,6 @@ package graft.tables
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 /** One data file's metadata inside a manifest chunk — the engine's
   * analog of an Iceberg manifest entry (reference tables are Iceberg
   * format-version 2, whose manifests record exactly this per file:
@@ -12,7 +10,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
   *
   *  - `p` — path relative to the table's data dir;
   *  - `r` — row count (parquet footer `record_count`);
-  *  - `s` — partition-spec DDL the file was written under (null =
+  *  - `s` — partition-spec DDL the file was written under (None =
   *    the table's declared spec, the never-evolved common case);
   *  - `b` — min/max of every INT64 column with usable footer
   *    statistics, under the WRITE-TIME (stored) column name. Captured
@@ -21,15 +19,10 @@ import com.fasterxml.jackson.databind.ObjectMapper
   *    log without ever re-opening data-file footers. A column all-null
   *    in the file records the empty range `(Long.MaxValue,
   *    Long.MinValue)` (intersects nothing); a column with unusable
-  *    stats is simply absent. `b = null` marks an entry migrated from
-  *    a pre-manifest commit json (bounds unknown — readers fall back
-  *    to a footer probe for those files only).
+  *    stats is simply absent.
   */
-final case class ManifestEntry(p: String, r: Long, s: String = null,
-    b: Seq[ColumnBound] = null) {
-  def specOrNone: Option[String] = Option(s)
-  def boundsOrNone: Option[Seq[ColumnBound]] = Option(b)
-}
+final case class ManifestEntry(p: String, r: Long, s: Option[String],
+    b: Seq[ColumnBound])
 
 /** One column's `[lo, hi]` inside a manifest entry. A dedicated case
   * class (not `Map[String, Seq[Long]]`) so Jackson deserializes the
@@ -64,22 +57,21 @@ final case class ManifestChunk(entries: Seq[ManifestEntry])
   * single-writer log: the commit json plays the manifest list, chunk
   * files play the manifests.
   */
-final class ManifestStore(dir: String, mapper: ObjectMapper) {
+final class ManifestStore(table: String, dir: String) {
   Files.createDirectories(Paths.get(dir))
 
   private val cache =
     scala.collection.concurrent.TrieMap[String, Seq[ManifestEntry]]()
 
   def read(name: String): Seq[ManifestEntry] =
-    cache.getOrElseUpdate(name, mapper.readValue(
-      Files.readAllBytes(Paths.get(s"$dir/$name")),
-      classOf[ManifestChunk]).entries)
+    cache.getOrElseUpdate(name, GraftTable.readJson(table, s"_manifests/$name",
+      Files.readAllBytes(Paths.get(s"$dir/$name")), classOf[ManifestChunk]).entries)
 
   /** Write `entries` as a new immutable chunk; returns its name. */
   def write(entries: Seq[ManifestEntry]): String = {
     val name = s"manifest-${java.util.UUID.randomUUID()}.json"
     val tmp = Paths.get(s"$dir/.tmp-$name")
-    Files.writeString(tmp, mapper.writeValueAsString(ManifestChunk(entries)))
+    Files.writeString(tmp, GraftTable.mapper.writeValueAsString(ManifestChunk(entries)))
     Files.move(tmp, Paths.get(s"$dir/$name"), StandardCopyOption.ATOMIC_MOVE)
     cache.put(name, entries)
     name

@@ -127,7 +127,7 @@ object MetaCatalog {
           if (c.version == 1) Some(Set.empty[String])
           else byVersion.get(c.version - 1).map(_.files.toSet)
         val addedRecords = prevFiles.map { pf =>
-          c.fileRowsOrEmpty.filter { case (f, _) => !pf.contains(f) }.values.sum
+          c.fileRows.filter { case (f, _) => !pf.contains(f) }.values.sum
         }
         val pairs =
           addedRecords.map(a => "added-records" -> a.toString).toSeq ++ Seq(
@@ -250,7 +250,7 @@ object MetaCatalog {
             val spark = SparkSession.active
             val tbl = new GraftTable(spark, TableDef(base, StructType(Nil)), warehouse)
             val cur = tbl.commits.lastOption
-            val rowCounts = cur.map(_.fileRowsOrEmpty).getOrElse(Map.empty)
+            val rowCounts = cur.map(_.fileRows).getOrElse(Map.empty)
             def partOf(relPath: String): String = {
               val segs = relPath.split('/').dropRight(1).filter(_.contains("="))
               segs.mkString("/")
@@ -353,17 +353,15 @@ object MetaCatalog {
             val spark = SparkSession.active
             val tbl = new GraftTable(spark, TableDef(base, StructType(Nil)), warehouse)
             tbl.manifestEntries.map { case (chunk, e) =>
-              val bounds = e.boundsOrNone.map { bs =>
-                new ArrayBasedMapData(
-                  new GenericArrayData(bs.map(cb => UTF8String.fromString(cb.c)).toArray[Any]),
-                  new GenericArrayData(bs.map(cb =>
-                    new GenericArrayData(Array[Any](cb.lo, cb.hi))).toArray[Any]))
-              }.orNull
+              val bounds = new ArrayBasedMapData(
+                new GenericArrayData(e.b.map(cb => UTF8String.fromString(cb.c)).toArray[Any]),
+                new GenericArrayData(e.b.map(cb =>
+                  new GenericArrayData(Array[Any](cb.lo, cb.hi))).toArray[Any]))
               new GenericInternalRow(Array[Any](
                 UTF8String.fromString(chunk),
                 UTF8String.fromString(e.p),
                 e.r,
-                e.specOrNone.map(UTF8String.fromString).orNull,
+                e.s.map(UTF8String.fromString).orNull,
                 bounds)): InternalRow
             }.toArray
           }
@@ -385,14 +383,14 @@ object MetaCatalog {
             val spark = SparkSession.active
             val tbl = new GraftTable(spark, TableDef(base, StructType(Nil)), warehouse)
             val cur = tbl.commits.lastOption
-            val rowCounts = cur.map(_.fileRowsOrEmpty).getOrElse(Map.empty)
+            val rowCounts = cur.map(_.fileRows).getOrElse(Map.empty)
             // content per Iceberg's enum: 0 = data, 1 = position deletes,
             // 2 = equality deletes (the two pending-tombstone kinds)
             val entries =
               cur.map(_.files).getOrElse(Nil).map(f => (0, f)) ++
-                cur.map(_.posDeleteFilesOrEmpty.keys.toSeq.sorted).getOrElse(Nil)
+                cur.map(_.posDeleteFiles.keys.toSeq.sorted).getOrElse(Nil)
                   .map(f => (1, f)) ++
-                cur.map(_.morDeleteFilesOrEmpty.keys.toSeq.sorted).getOrElse(Nil)
+                cur.map(_.morDeleteFiles.keys.toSeq.sorted).getOrElse(Nil)
                   .map(f => (2, f))
             entries.map { case (content, f) =>
               val p = java.nio.file.Paths.get(s"${tbl.dataPath}/$f")

@@ -36,7 +36,7 @@ final class TableCatalog(spark: SparkSession, val root: String, defs: Seq[TableD
         // applied evolutions); a column dropped by evolution still sits
         // in pre-drop files legitimately, so any name that appeared in
         // SOME committed schema is not drift either
-        val historical = t.commits.flatMap(_.schemaDdlOrNone)
+        val historical = t.commits.flatMap(_.schemaDdl)
           .flatMap(ddl => StructType.fromDDL(ddl).fieldNames)
           .toSet ++ defn(name).schema.fieldNames
         diffSchemas(t.currentSchema, live, historical).map(s"table $name: " + _)
@@ -49,8 +49,7 @@ final class TableCatalog(spark: SparkSession, val root: String, defs: Seq[TableD
     val lm = live.fields.map(f => f.name -> f).toMap
     // a declared column absent from live files is ADDITIVE evolution,
     // not drift: reads null-fill it (Iceberg's add-optional-column is
-    // the same compatible change — e.g. the watermark table gaining
-    // source_version must not brick pre-upgrade warehouses)
+    // the same compatible change)
     val extra = live.fieldNames.filterNot(c => dm.contains(c) || everDeclared.contains(c))
       .map(c => s"live column '$c' not declared")
     val typeDrift = declared.fields.flatMap { f =>

@@ -75,7 +75,7 @@ class CdcConsumerSpec extends AnyFunSuite {
     assert(c.poll() == 0) // replay must not double-apply
     assert(snapshot(mv) == Map("x" -> (1L, 100L)))
     // the mark is IN the merge commit, not a side effect after it
-    assert(mv.commits.last.sinkBatchesOrEmpty.get("cdc:src").contains(1L))
+    assert(mv.commits.last.sinkBatches.get("cdc:src").contains(1L))
   }
 
   test("non-foldable source commit refuses; rebuild() recovers and polling resumes") {
@@ -107,7 +107,7 @@ class CdcConsumerSpec extends AnyFunSuite {
     assert(src.readLogical().filter(col("typ") === "x")
       .collect().map(_.getDouble(2)).toSeq == Seq(9.0))
     // ...but no change set: the single merged file is the whole commit
-    assert(src.commits.last.changeFilesOrEmpty.isEmpty)
+    assert(src.commits.last.changeFiles.isEmpty)
     intercept[IllegalArgumentException] { src.readChanges(1, 2) }
     val e = intercept[IllegalArgumentException] { c.poll() }
     assert(e.getMessage.contains("not incrementally foldable"))
@@ -255,7 +255,7 @@ class CdcConsumerSpec extends AnyFunSuite {
           case _ =>
             // a replace refuses over pending position deletes (raw-file
             // rewrite) — compact first, the documented order
-            if (src.commits.lastOption.exists(_.posDeleteFilesOrEmpty.nonEmpty))
+            if (src.commits.lastOption.exists(_.posDeleteFiles.nonEmpty))
               src.compact()
             val t = types(rnd.nextInt(types.size))
             nextId += 1

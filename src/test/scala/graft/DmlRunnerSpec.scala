@@ -44,7 +44,7 @@ class DmlRunnerSpec extends AnyFunSuite {
     // the DELETE wrote tombstones, not a rewrite
     val t = cat.table("t")
     assert(t.commits.last.op == "delete-pos")
-    assert(t.commits.last.posDeleteFilesOrEmpty.nonEmpty)
+    assert(t.commits.last.posDeleteFiles.nonEmpty)
   }
 
   test("catalog-qualified names resolve; statements see predecessors' writes (read-committed)") {
@@ -139,7 +139,7 @@ class DmlRunnerSpec extends AnyFunSuite {
         |SELECT id, typ, v FROM t4
         |""".stripMargin)
     val t = cat.table("t4")
-    assert(t.commits.last.posDeleteFilesOrEmpty.isEmpty)
+    assert(t.commits.last.posDeleteFiles.isEmpty)
     assert(t.readLogical().orderBy("id").collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toSeq == Seq((1L, 1.0), (3L, 0.0)))
   }

@@ -81,28 +81,28 @@ class ManifestPropertySpec extends AnyFunSuite {
         val raw = mapper.readValue(Files.readAllBytes(f.toPath), classOf[CommitMeta])
         assert(Option(raw.files).forall(_.isEmpty),
           s"${f.getName} inlines the live file list")
-        assert(raw.fileRowsOrEmpty.isEmpty && raw.fileSpecsOrEmpty.isEmpty,
+        assert(raw.fileRows.isEmpty && raw.fileSpecs.isEmpty,
           s"${f.getName} inlines per-file maps")
-        assert(raw.manifestsOrEmpty.nonEmpty)
+        assert(raw.manifests.nonEmpty)
       }
       // 2. a FRESH handle (chunk re-parse via Jackson) resolves the
       // same snapshot the writing handle holds
       val t2 = new GraftTable(spark, TableDef(s"prop$seed", schema), root)
       val (a, b) = (t.commits.last, t2.commits.last)
       assert(a.files.sorted == b.files.sorted)
-      assert(a.fileRowsOrEmpty == b.fileRowsOrEmpty)
-      assert(a.fileSpecsOrEmpty == b.fileSpecsOrEmpty)
+      assert(a.fileRows == b.fileRows)
+      assert(a.fileSpecs == b.fileSpecs)
       assert(t.readLogical().count() == t2.readLogical().count())
       // 3. manifest row counts are footer ground truth (sum = snapshot)
-      assert(a.fileRowsOrEmpty.values.sum == a.rowCount)
+      assert(a.fileRows.values.sum == a.rowCount)
       val scanned = t2.readLogical().count()
-      val pendingDeletes = a.posDeleteFilesOrEmpty.nonEmpty
+      val pendingDeletes = a.posDeleteFiles.nonEmpty
       if (!pendingDeletes)
         assert(a.rowCount == scanned,
           "manifest row counts diverged from the logical scan")
       // 4. the watermark resolves footer-free; with no pending
       // tombstones it equals a scan (tombstoned rows still count into
-      // raw footer stats by design — same as the pre-manifest reader)
+      // the write-time footer stats by design)
       val before = GraftTable.footerProbeCount.get()
       val wm = t2.columnMaxMicros("id")
       assert(GraftTable.footerProbeCount.get() == before,

@@ -13,9 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-file rows/specs, and write-time column bounds live in immutable
   * manifest chunks — so commit cost stays flat as the table grows, and
   * the pruned-read / watermark paths resolve bounds from the metadata
-  * log with ZERO data-file footer IO. Pre-manifest commit jsons still
-  * read (inline file list), migrate into chunks on the next commit,
-  * and pay the footer fallback only until then.
+  * log with ZERO data-file footer IO. A commit or chunk json of any
+  * other shape fails the read.
   */
 class ManifestSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -72,14 +71,14 @@ class ManifestSpec extends AnyFunSuite {
     val t = new GraftTable(spark, TableDef("m2", schema), root)
     t.append(df(0 until 50, "a", 1.0)) // v1 -> chunk A
     t.append(df(50 until 100, "b", 2.0)) // v2 -> carries A, adds B
-    val v1Chunks = t.commits.find(_.version == 1).get.manifestsOrEmpty
-    val v2Chunks = t.commits.find(_.version == 2).get.manifestsOrEmpty
+    val v1Chunks = t.commits.find(_.version == 1).get.manifests
+    val v2Chunks = t.commits.find(_.version == 2).get.manifests
     assert(v1Chunks.size == 1 && v2Chunks.size == 2)
     assert(v2Chunks.contains(v1Chunks.head), "append rewrote a carried chunk")
     // a delete+compact drops v1's files: chunk A breaks, chunk B carries
     t.deleteWhere(col("grp") === "a")
     t.compact()
-    val v4Chunks = t.commits.last.manifestsOrEmpty
+    val v4Chunks = t.commits.last.manifests
     assert(!v4Chunks.contains(v1Chunks.head), "broken chunk still referenced")
     assert(t.readLogical().count() == 50)
   }
@@ -89,7 +88,7 @@ class ManifestSpec extends AnyFunSuite {
     val t = new GraftTable(spark, TableDef("m3", schema), root)
     for (i <- 0 until 40)
       t.append(df(i * 10 until (i + 1) * 10, s"g${i % 3}", i.toDouble))
-    val refs = t.commits.last.manifestsOrEmpty
+    val refs = t.commits.last.manifests
     assert(refs.size <= 24, s"chunk refs unbounded: ${refs.size}")
     assert(t.commits.last.files.size >= 40)
     assert(t.readLogical().count() == 400)
@@ -104,8 +103,11 @@ class ManifestSpec extends AnyFunSuite {
         (java.sql.Timestamp.valueOf(f"2024-02-$day%02d 0$i:00:00"), day.toDouble))
         .toDF("ts", "v")
     }
-    val t = new GraftTable(spark, TableDef("m4", tsSchema), freshRoot("m4"))
-    t.append(tsDf(1)); t.append(tsDf(15)); t.append(tsDf(28))
+    val root = freshRoot("m4")
+    val w = new GraftTable(spark, TableDef("m4", tsSchema), root)
+    w.append(tsDf(1)); w.append(tsDf(15)); w.append(tsDf(28))
+    // a fresh handle: the writer's footer cache would hide a footer open
+    val t = new GraftTable(spark, TableDef("m4", tsSchema), root)
     val micros = (d: String) => java.sql.Timestamp.valueOf(d).getTime * 1000L
     val before = GraftTable.footerProbeCount.get()
     // range prune: only day-15 files open
@@ -118,36 +120,33 @@ class ManifestSpec extends AnyFunSuite {
       "manifest-format table paid per-file footer probes on the pruned path")
   }
 
-  test("pre-manifest commit jsons read, pay the footer fallback, and migrate on the next commit") {
+  test("commit and chunk jsons of any other shape are rejected, naming table and file") {
     val root = freshRoot("m5")
     val t = new GraftTable(spark, TableDef("m5", schema), root)
-    t.append(df(0 until 30, "a", 1.0)) // v1, manifest format
-    // rewrite v1 as a LEGACY json: inline files/fileRows, no manifests
+    t.append(df(0 until 30, "a", 1.0)) // v1
+    val commitPath = Paths.get(s"$root/m5/_commits/commit-1.json")
+    val valid = Files.readString(commitPath)
     val v1 = t.commits.head
-    val legacy = Map(
-      "version" -> 1, "tsMs" -> v1.tsMs, "op" -> "append",
-      "rowCount" -> v1.rowCount, "files" -> v1.files,
-      "fileRows" -> v1.fileRowsOrEmpty)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    Files.writeString(Paths.get(s"$root/m5/_commits/commit-1.json"),
-      mapper.writeValueAsString(legacy))
-    val t2 = new GraftTable(spark, TableDef("m5", schema), root) // fresh handle
-    assert(t2.commits.head.manifestsOrEmpty.isEmpty)
-    assert(t2.readLogical().count() == 30)
-    // legacy files: watermark lookup falls back to footer probes
-    val before = GraftTable.footerProbeCount.get()
-    assert(t2.columnMaxMicros("id").contains(29L))
-    assert(GraftTable.footerProbeCount.get() > before,
-      "legacy commit should have paid the footer fallback")
-    // the next commit migrates every carried file into chunks: the
-    // resolved view covers ALL live files, none inline in the new json
-    t2.append(df(30 until 40, "b", 2.0))
-    assert(t2.commits.last.manifestsOrEmpty.nonEmpty)
-    assert(!jsonOf(root, "m5", 2).contains(".parquet"))
-    assert(t2.commits.head.files.toSet.subsetOf(t2.commits.last.files.toSet),
-      "migration dropped carried legacy files from the chunked view")
-    assert(t2.readLogical().count() == 40)
+    def rejected(file: String): Unit = {
+      val e = intercept[IllegalStateException](
+        new GraftTable(spark, TableDef("m5", schema), root).commits) // fresh handle
+      assert(e.getMessage.contains("m5") && e.getMessage.contains(file), e.getMessage)
+    }
+    // a commit json without manifests, its file list inline and the
+    // later fields (sinkBatches among them) missing
+    Files.writeString(commitPath, mapper.writeValueAsString(Map(
+      "version" -> 1, "tsMs" -> v1.tsMs, "op" -> "append",
+      "rowCount" -> v1.rowCount, "files" -> v1.files,
+      "fileRows" -> v1.fileRows)))
+    rejected("commit-1.json")
+    // a valid commit json whose chunk holds an entry without bounds
+    Files.writeString(commitPath, valid)
+    val chunk = v1.manifests.head
+    Files.writeString(Paths.get(s"$root/m5/_manifests/$chunk"), mapper.writeValueAsString(
+      Map("entries" -> Seq(Map("p" -> v1.files.head, "r" -> 30, "s" -> null)))))
+    rejected(chunk)
   }
 
   test("fresh handle deserializes chunk bounds as Longs (small and large values)") {
@@ -173,9 +172,9 @@ class ManifestSpec extends AnyFunSuite {
     t.removeOrphans()
     val left = chunkFiles(root, "m7")
     assert(left.subsetOf(allChunks))
-    assert(t.commits.last.manifestsOrEmpty.toSet.subsetOf(left))
-    assert(left == t.commits.last.manifestsOrEmpty.toSet,
-      s"unreferenced chunks survived the sweep: ${left -- t.commits.last.manifestsOrEmpty.toSet}")
+    assert(t.commits.last.manifests.toSet.subsetOf(left))
+    assert(left == t.commits.last.manifests.toSet,
+      s"unreferenced chunks survived the sweep: ${left -- t.commits.last.manifests.toSet}")
     assert(t.readLogical().count() == 40)
   }
 
@@ -184,20 +183,19 @@ class ManifestSpec extends AnyFunSuite {
     val t = new GraftTable(spark, TableDef("m8", schema), root)
     t.append(df(0 until 25, "a", 1.0))
     t.renameColumn("id", "uid")
+    val fresh = new GraftTable(spark, TableDef("m8", schema), root)
     val before = GraftTable.footerProbeCount.get()
     // the file stores `id`; the manifest entry's bounds key is `id`;
     // the probe for current-name `uid` must resolve through the log
-    assert(t.columnMaxMicros("uid").contains(24L))
+    assert(fresh.columnMaxMicros("uid").contains(24L))
     assert(GraftTable.footerProbeCount.get() == before)
   }
 
   test("chunk-parse cache is bounded on a long-lived handle (prune keeps the live set)") {
     val dir = freshRoot("m9")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    val store = new ManifestStore(dir, mapper)
+    val store = new ManifestStore("m9", dir)
     val names = (0 until 300).map(i =>
-      store.write(Seq(ManifestEntry(s"f$i.parquet", i.toLong))))
+      store.write(Seq(ManifestEntry(s"f$i.parquet", i.toLong, None, Nil))))
     assert(store.cachedChunkCount == 300)
     // below the floor nothing evicts (steady-state churn must not thrash)
     store.prune(names.takeRight(5).toSet, floor = 1000)

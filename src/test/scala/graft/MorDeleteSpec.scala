@@ -69,7 +69,7 @@ class MorDeleteSpec extends AnyFunSuite {
     val before = t.readLogical().collect().toSet
     t.compact()
     assert(!t.needsCompaction())
-    assert(t.commits.last.morDeleteFilesOrEmpty.isEmpty)
+    assert(t.commits.last.morDeleteFiles.isEmpty)
     assert(t.readLogical().collect().toSet == before, "compaction must be invisible")
   }
 

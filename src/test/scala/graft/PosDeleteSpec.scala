@@ -71,7 +71,7 @@ class PosDeleteSpec extends AnyFunSuite {
     // a tiny targetBytes makes every file "big enough", so carry vs
     // rewrite is decided ONLY by tombstone references at test scale
     t.compact(targetBytes = 1024)
-    assert(t.commits.last.posDeleteFilesOrEmpty.isEmpty)
+    assert(t.commits.last.posDeleteFiles.isEmpty)
     val after = t.commits.last.files
     val carried = before.toSet.intersect(after.toSet)
     assert(carried.nonEmpty,
@@ -219,7 +219,7 @@ class PosDeleteSpec extends AnyFunSuite {
     assert(out.count() == 10)
     assert(out.filter(col("id") < 2).count() == 0)
     t.compact() // migrates names AND materializes deletes
-    assert(t.commits.last.posDeleteFilesOrEmpty.isEmpty)
+    assert(t.commits.last.posDeleteFiles.isEmpty)
     assert(t.readLogical().count() == 10)
     assert(t.read().filter(col("p_grp") === "a").count() == 6)
   }

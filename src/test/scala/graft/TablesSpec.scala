@@ -49,7 +49,10 @@ class TablesSpec extends AnyFunSuite {
     val p = Paths.get(s"$root/cck/_commits/commit-1.json")
     def plant(rowCount: Int): Unit = {
       Files.writeString(p,
-        s"""{"version":1,"tsMs":0,"op":"append","rowCount":$rowCount,"files":[]}""")
+        s"""{"version":1,"tsMs":0,"op":"append","rowCount":$rowCount,"files":[],""" +
+          """"sinkBatches":{},"fileRows":{},"changeFiles":[],"deleteFiles":[],""" +
+          """"schemaDdl":null,"morDeleteFiles":{},"partSpecDdl":null,"fileSpecs":{},""" +
+          """"renames":[],"posDeleteFiles":{},"manifests":[]}""")
       p.toFile.setLastModified(1700000000000L) // pin mtime across rewrites
     }
     plant(5)

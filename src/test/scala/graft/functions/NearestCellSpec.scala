@@ -16,8 +16,8 @@ class NearestCellSpec extends AnyFunSuite {
     GraftSqlBridge.column(NearestCell(
       GraftSqlBridge.expression(emb), GraftSqlBridge.expression(cents)))
 
-  /** The reference fold — the expression cellFold builds under
-    * SPARK_GRAFT_ANN=fold (needs a `nrm` column on the row).
+  /** The reference fold: the higher-order form the native kernel
+    * replaces (needs a `nrm` column on the row).
     */
   private def fold(emb: Column, cents: Column, nrm: Column): Column =
     aggregate(cents,

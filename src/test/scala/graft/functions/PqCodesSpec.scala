@@ -18,8 +18,8 @@ class PqCodesSpec extends AnyFunSuite {
     GraftSqlBridge.column(PqCodes(
       GraftSqlBridge.expression(emb), GraftSqlBridge.expression(cball)))
 
-  /** The reference fold — the exact expression pqCodes builds under
-    * SPARK_GRAFT_PQ=fold, inlined so both forms run in one plan.
+  /** The reference fold: the zip_with/aggregate form the native kernel
+    * replaces, inlined so both forms run in one plan.
     */
   private def fold(emb: Column, cball: Column): Column = {
     val nrm = sqrt(AnnOps.dot(emb, emb))
