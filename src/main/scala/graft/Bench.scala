@@ -134,21 +134,12 @@ object Bench {
     // dedup flat at 0.2 s from 1x to 100x corpus). The noop sink
     // consumes every output row and column — what a real consumer pays
     // — with no write cost.
-    // SPARK_GRAFT_BENCH_ACTION=count restores the pre-r8 action for
-    // harness-attribution runs ONLY (comparing a row against a number
-    // recorded under the old harness); such a run stamps its harness
-    // field accordingly and can never promote over a noop-sink record
-    // (shouldPromote keys on the full per-query map + sf, and the
-    // attribution use narrows via SPARK_GRAFT_ONLY anyway).
-    val action = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "noop-sink")
     val results = defs.map { q =>
       drainState()
       val t0 = System.nanoTime()
       val ok =
         try {
-          val df = q.fn(spark, sfDir)
-          if (action == "count") df.count()
-          else df.write.format("noop").mode("overwrite").save()
+          q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           true
         }
         catch {
@@ -193,7 +184,7 @@ object Bench {
       .getOrElse("unknown")
     val runTs = java.time.Instant.now().toString
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","harness":"$action","queries":$qs,"sf":"$sfDir","n_queries":${results.size},"failed":$failed,"commit":"$commit","ts":"$runTs"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","harness":"noop-sink","queries":$qs,"sf":"$sfDir","n_queries":${results.size},"failed":$failed,"commit":"$commit","ts":"$runTs"}"""
     println(json)
     // Also write the full record to a COMMITTED artifact: the driver's
     // stdout scrape truncates long tails (round 5 lost the first

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Single place where the engine's SparkSession is configured, so every
-  * entry point (Verify, Bench, DevCheck, tests) agrees on semantics:
+  * entry point (Verify, Bench, ProfileBench, pipebench, tests) agrees on semantics:
   *
   *  - UTC session time zone (oracle parity with DuckDB);
   *  - `spark.sql.shuffle.partitions` sized to the executor core count,

@@ -241,8 +241,7 @@ object AnnOps {
   private[functions] def centroids(e: DataFrame): DataFrame = centroids(e, NCentroids)
 
   /** Variable-count codebook — the oracle queries pin [[NCentroids]];
-    * scale probes grow the cell count with the corpus so per-cell
-    * occupancy (and with it within-cell pair volume) stays bounded.
+    * [[kmeansTrain]] seeds a codebook of any requested size from it.
     */
   private[graft] def centroids(e: DataFrame, n: Int): DataFrame =
     e.orderBy(h64(col("vec_id").cast("string")), col("vec_id"))

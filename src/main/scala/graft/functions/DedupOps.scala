@@ -457,10 +457,7 @@ object DedupOps {
     // persist still computes the full candidate+verify pipeline upstream
     // of `edges` twice (measured 2× the whole query's scan cost)
     val e = edges.persist()
-    val tEdges = System.nanoTime()
     e.count()
-    if (sys.env.contains("GRAFT_TIMING"))
-      println(f"TIMING cc/edges ${(System.nanoTime() - tEdges) / 1e9}%.2f s")
     val sym = e.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(e.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .persist()
@@ -470,14 +467,9 @@ object DedupOps {
     var labels = sym.groupBy(col("dst"))
       .agg(least(col("dst"), min(col("src"))).as("cluster_id"))
       .withColumnRenamed("dst", "doc_id").persist()
-    def labelSum(l: DataFrame): Long = {
-      val t0 = System.nanoTime()
-      val r = Option(l.agg(sum(col("cluster_id"))).first().get(0))
+    def labelSum(l: DataFrame): Long =
+      Option(l.agg(sum(col("cluster_id"))).first().get(0))
         .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-      if (sys.env.contains("GRAFT_TIMING"))
-        println(f"TIMING cc/labelSum ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     var prev = Long.MinValue
     var cur = labelSum(labels)
     var rounds = 0
@@ -510,13 +502,10 @@ object DedupOps {
         .select(col("a.doc_id").as("doc_id"), col("b.cluster_id").as("cluster_id"))
         .persist()
       prev = cur
-      val tRound = System.nanoTime()
       cur = labelSum(next)
       labels.unpersist()
       labels = next
       rounds += 1
-      if (sys.env.contains("GRAFT_TIMING"))
-        println(f"TIMING cc/round $rounds labelSum=$cur took ${(System.nanoTime() - tRound) / 1e9}%.2f s")
     }
     require(cur == prev, s"label propagation did not converge in $rounds rounds")
     // the label table is small (only vertices of the near-dup graph);
@@ -575,7 +564,7 @@ object DedupOps {
   }
 
   /** The cluster pipeline body, on any (doc_id, text) corpus — shared by
-    * the registered query and the skew/scale probes.
+    * the registered query and DedupSkewSpec's hot corpus.
     */
   private[functions] def clusterDocs(documents: DataFrame): DataFrame = {
     // exact-dup collapse (see class doc): rep = min doc_id over the hash
@@ -593,10 +582,7 @@ object DedupOps {
     val docRep = withRep.select(col("doc_id"), col("rep_id"))
     val edges = verifiedPairsHv(reps.localCheckpoint())
       .select(col("doc_a"), col("doc_b"))
-    val t0 = System.nanoTime()
     val comp = connectedComponents(edges)
-    if (sys.env.contains("GRAFT_TIMING"))
-      println(f"TIMING cc/total ${(System.nanoTime() - t0) / 1e9}%.2f s")
     val assigned = docRep
       .join(comp.withColumnRenamed("doc_id", "rep_id"), Seq("rep_id"), "left")
       .select(col("doc_id"),
@@ -676,19 +662,16 @@ object DedupOps {
        |d AS (SELECT vb AS vec_id, min(va) AS dup_of FROM p WHERE sim >= 0.4 GROUP BY vb)
        |SELECT assign.vec_id, assign.cell, d.vec_id IS NULL AS is_kept, d.dup_of
        |FROM assign LEFT JOIN d ON d.vec_id = assign.vec_id""".stripMargin) { t =>
-    semanticDedup(t.embeddings, AnnOps.NCentroids, 0.4)
+    semanticDedup(t.embeddings)
   }
 
-  /** Parameterized SemDeDup core — the oracle row pins
-    * `nCells = AnnOps.NCentroids`; [[graft.ScaleProbe]] grows `nCells`
-    * with the corpus (the real deployment's k ∝ N/target-cell-size),
-    * which is what keeps within-cell pair volume bounded as N grows.
+  /** SemDeDup core over any (vec_id, embedding) frame, with the oracle
+    * row's k = [[AnnOps.NCentroids]] cells and τ = 0.4.
     */
-  private[graft] def semanticDedup(embeddings: DataFrame, nCells: Int,
-      tau: Double): DataFrame = {
+  private[graft] def semanticDedup(embeddings: DataFrame): DataFrame = {
     val e = embeddings
       .withColumn("nrm", sqrt(AnnOps.dot(col("embedding"), col("embedding"))))
-    val cent = AnnOps.centroids(e, nCells)
+    val cent = AnnOps.centroids(e, AnnOps.NCentroids)
     val cells = e.crossJoin(broadcast(AnnOps.centroidArr(cent)))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         AnnOps.cellFold.as("cell"))
@@ -700,7 +683,7 @@ object DedupOps {
       .filter(col("va") < col("vb"))
       .withColumn("sim",
         AnnOps.dot(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("sim") >= tau)
+      .filter(col("sim") >= 0.4)
       .groupBy(col("vb").as("vec_id")).agg(min(col("va")).as("dup_of"))
     cells.select(col("vec_id"), col("cell"))
       .join(dups, Seq("vec_id"), "left")

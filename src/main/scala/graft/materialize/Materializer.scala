@@ -77,9 +77,6 @@ final class Materializer(
 
   private def ts: Column = col(view.tsCol)
 
-  private def timed[A](label: String)(body: => A): A =
-    graft.Timing.timed(view.name, label)(body)
-
   /** The freshly computed view over ALL source facts. Cached for the
     * duration of one `run()` — the repair passes each slice it, and
     * recomputing the aggregation per pass would multiply the source
@@ -143,7 +140,7 @@ final class Materializer(
       case None => viewDf
     }
 
-  // ---- per-run instrumentation (read by MaterializeSpec/GRAFT_TIMING) ----
+  // ---- per-run instrumentation (read by MaterializeSpec and pipebench) ----
 
   private var viewComputeCounter = 0
   private var boundedComputeCounter = 0
@@ -361,7 +358,7 @@ final class Materializer(
         // no signature scan. An empty set means the window provably has
         // no late data and the pass costs zero jobs.
         if (days.nonEmpty)
-          timed("lookback/candidateRewrite")(rewriteDays(days, windowCond, wmMicros))
+          rewriteDays(days, windowCond, wmMicros)
       case None =>
         // signature path (no usable file history): recompute the whole
         // window, compare per-day signatures, rewrite the drifted days.
@@ -373,10 +370,9 @@ final class Materializer(
           // file-pruned read: the signature and any rewrite only ever
           // touch files overlapping the lookback window
           val current = mat.readRangeLogical(view.tsCol, loMicros, wmMicros).filter(windowCond)
-          val days = timed("lookback/driftCheck")(driftedDays(fresh, current))
+          val days = driftedDays(fresh, current)
           if (days.nonEmpty)
-            timed("lookback/replaceWhere")(
-              rewriteDays(days, windowCond, wmMicros, freshSlice = Some(fresh)))
+            rewriteDays(days, windowCond, wmMicros, freshSlice = Some(fresh))
         } finally fresh.unpersist()
     }
   }
@@ -470,8 +466,7 @@ final class Materializer(
         // clipped to beyond-lookback ∩ detection window by run()). Rows
         // past the watermark belong to the append pass that just ran.
         if (days.nonEmpty)
-          timed("stale/candidateRewrite")(rewriteDays(days,
-            cond && ts <= lit(wm), DateTimeUtils.fromJavaTimestamp(wm)))
+          rewriteDays(days, cond && ts <= lit(wm), DateTimeUtils.fromJavaTimestamp(wm))
       case None =>
         // signature path: persisted because the signature, the
         // symmetric diff, and the replacement semi-join all consume
@@ -488,7 +483,7 @@ final class Materializer(
     val current = mat.readRangeLogical(view.tsCol, loMicros, Long.MaxValue).filter(cond)
     // signature fast path: a clean detection window (the common case for
     // steady-state runs) costs one both-sides scan, never a row shuffle
-    if (timed("stale/signature")(multisetEqual(fresh, current))) return
+    if (multisetEqual(fresh, current)) return
     // symmetric multiset diff in ONE shuffle: tag each side ±1, group by
     // the full row — any row whose per-side counts differ marks its key
     // stale. Two exceptAll calls would shuffle both sides twice for the
@@ -516,9 +511,8 @@ final class Materializer(
         if (view.keyCols.contains(view.tsCol))
           Some(RangePrune(view.tsCol, loMicros, Long.MaxValue))
         else None
-      timed("stale/replaceKeys")(
-        mat.replaceKeys(staleKeys, view.keyCols, replacement, prune,
-          knownKeyCount = Some(nStale)))
+      mat.replaceKeys(staleKeys, view.keyCols, replacement, prune,
+        knownKeyCount = Some(nStale))
     } finally staleKeys.unpersist()
   }
 
@@ -540,7 +534,7 @@ final class Materializer(
     }
     spark.sparkContext.addSparkListener(listener)
     try readWatermarkRow() match {
-      case None => timed("fullMaterialize")(fullMaterialize())
+      case None => fullMaterialize()
       case Some((wm, lastVersion)) => withCachedView {
         val srcVersion = source.currentVersion.toLong
         val wmMicros = DateTimeUtils.fromJavaTimestamp(wm)
@@ -559,8 +553,7 @@ final class Materializer(
         // repair days but absolutely require the append pass
         val noNewFacts = addedFiles.exists(_.isEmpty)
         val candidates: Option[Seq[java.sql.Date]] =
-          addedFiles.map(a =>
-            timed("candidateScan")(candidateDays(a, view.factBound.get, wm)))
+          addedFiles.map(a => candidateDays(a, view.factBound.get, wm))
         if (noNewFacts && changedDimKeys.isEmpty) {
           // true no-op: no new source facts, no dim change — zero jobs,
           // zero commits (the watermark and version are unchanged too)
@@ -579,18 +572,18 @@ final class Materializer(
           val lbDays = candidates.map(_.filter(d =>
             dayHi(d) > lbLo && dayLo(d) <= wmMicros &&
               !(straddleToStale && dayLo(d) < lbLo)))
-          timed("lookbackRepair")(lookbackRepair(wm, lookback, lbDays))
-          changedDimKeys.foreach(k => timed("dimensionRepair")(dimensionRepair(wm, k)))
-          if (!noNewFacts) timed("appendNew")(appendNew(wm))
+          lookbackRepair(wm, lookback, lbDays)
+          changedDimKeys.foreach(k => dimensionRepair(wm, k))
+          if (!noNewFacts) appendNew(wm)
           staleDetectionWindow.foreach { w =>
             // beyond-lookback days (including the boundary straddler),
             // clipped to the detection window — the caller's bound on
             // how far back stale repair may reach
             val detLo = minusIntervalMicros(wmMicros, w)
             val stDays = candidates.map(_.filter(d => dayHi(d) > detLo && dayLo(d) < lbLo))
-            timed("staleRepair")(staleRepair(wm, w, stDays))
+            staleRepair(wm, w, stDays)
           }
-          timed("advanceWatermark")(advanceWatermark(srcVersion))
+          advanceWatermark(srcVersion)
         }
       }
     } finally {
@@ -598,9 +591,6 @@ final class Materializer(
       lastRunJobs = jobCounter.get()
       lastRunViewComputes = viewComputeCounter
       lastRunBoundedComputes = boundedComputeCounter
-      if (sys.env.contains("GRAFT_TIMING"))
-        println(s"TIMING ${view.name}/run jobs=$lastRunJobs " +
-          s"viewComputes=$lastRunViewComputes boundedComputes=$lastRunBoundedComputes")
     }
   }
 }

@@ -28,9 +28,6 @@ object MaterializeOps {
     p.toString
   }
 
-  /** Shared with ScaleProbe's materializer probe — one definition of
-    * the hourly fixture so probe and oracle measure the same view.
-    */
   private[graft] val eventsSchema = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", TimestampType),
@@ -38,13 +35,13 @@ object MaterializeOps {
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
-  private[graft] val matSchema = StructType(Seq(
+  private val matSchema = StructType(Seq(
     StructField("window_start", TimestampType),
     StructField("event_type", StringType),
     StructField("n", LongType),
     StructField("total_value", DoubleType)))
 
-  private[graft] def hourlyView: MatView = MatView(
+  private def hourlyView: MatView = MatView(
     name = "hourly_events",
     tsCol = "window_start",
     keyCols = Seq("window_start", "event_type"),

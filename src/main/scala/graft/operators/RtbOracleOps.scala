@@ -916,14 +916,10 @@ object RtbOracleOps {
     fullFunnelEnriched(t.spark)
   }
 
-  /** Spark side of [[vFullFunnel]], reusable by PlanSpec. */
-  def fullFunnelEnriched(spark: org.apache.spark.sql.SparkSession,
-      dataRoot: String = root): org.apache.spark.sql.DataFrame = {
-    // dataRoot ≠ root is the SCALE-PROBE path (ScaleProbe rtb mode runs
-    // this view over k× generated fixtures); the oracle row always runs
-    // on the shared fixture, which is generated on demand here
-    if (dataRoot == root) ensureData(spark)
-    val req = RtbIngest.flattenRequests(spark.read.parquet(s"$dataRoot/requests"))
+  /** Spark side of [[vFullFunnel]]. */
+  private def fullFunnelEnriched(
+      spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
+    val req = RtbIngest.flattenRequests(spark.read.parquet(s"$root/requests"))
       .select(col("request_id"), col("imp_id"), col("banner_w"), col("banner_h"),
         col("imp_bidfloor"), col("property_domain"), col("publisher_id"),
         col("devicetype"), col("device_os"),
@@ -931,19 +927,19 @@ object RtbOracleOps {
         col("currency"), col("auction_type"), col("is_coppa"), col("is_gdpr"),
         col("event_ts").as("request_ts"))
       .distinct()
-    val bids = RtbIngest.flattenBids(spark.read.parquet(s"$dataRoot/responses"))
+    val bids = RtbIngest.flattenBids(spark.read.parquet(s"$root/responses"))
       .select(col("request_id"), col("imp_id"), col("response_id"), col("bid_id"),
         col("bidder_id"), col("bid_price"), col("creative_id"), col("strategy_id"),
         col("line_item_id"), col("campaign_id"), col("advertiser_id"),
         col("agency_id"), col("deal_id"), col("ad_domain"),
         col("event_ts").as("response_ts"))
       .distinct()
-    val imp = spark.read.parquet(s"$dataRoot/impressions")
+    val imp = spark.read.parquet(s"$root/impressions")
       .select(col("impression_id"), col("response_id"), col("imp_id"),
         col("win_price"), col("win_currency"),
         RtbIngest.parseTs(col("event_timestamp")).as("impression_ts"))
       .distinct()
-    val cl = spark.read.parquet(s"$dataRoot/clicks")
+    val cl = spark.read.parquet(s"$root/clicks")
       .select(col("click_id"), col("impression_id"), col("click_url"),
         RtbIngest.parseTs(col("event_timestamp")).as("click_ts"))
       .distinct()

@@ -23,8 +23,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Scale shape: per micro-batch, the append is O(batch) and the poll is
   * O(batch delta) + a group-cardinality-sized target rewrite — the
-  * stream never touches the accumulated table (the CDC probe pins the
-  * flat poll curve to 100×).
+  * stream never touches the accumulated table (SCALING.md's CDC section
+  * records the flat poll curve to 100×).
   */
 object CdcIngest {
 

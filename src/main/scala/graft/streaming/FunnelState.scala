@@ -52,11 +52,8 @@ object FunnelState {
   private[streaming] val ClickWindowMs = 30L * 60 * 1000
   private[streaming] val PurchaseWindowMs = 2L * 3600 * 1000
 
-  /** A view's funnel output is final once this horizon passes.
-    * (graft-visible: ScaleProbe's streamed-funnel leg sizes its
-    * watermark-flush sentinel from it.)
-    */
-  private[graft] val HorizonMs = ClickWindowMs + PurchaseWindowMs
+  /** A view's funnel output is final once this horizon passes. */
+  private[streaming] val HorizonMs = ClickWindowMs + PurchaseWindowMs
 
   /** Stage lists prepared for range matching: ts-ascending and indexed,
     * so every per-view match is two binary searches plus the matched

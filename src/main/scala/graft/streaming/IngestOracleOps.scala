@@ -99,7 +99,7 @@ object IngestOracleOps {
 
   /** All staging dirs created this JVM, reclaimed by ONE shutdown hook:
     * the rows' returned DataFrames lazily read the staged tables, so the
-    * dirs must outlive their queries — but bench/verify/probe runs would
+    * dirs must outlive their queries — but bench/verify runs would
     * otherwise each leave a full corpus copy + index + checkpoint in
     * /tmp forever. One hook, not one per call (ADVICE r9 #2): a long
     * bench/suite JVM invokes the twin rows dozens of times, and a

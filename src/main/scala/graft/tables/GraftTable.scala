@@ -232,9 +232,6 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   // reference the same chunk files; fast-forward moves only jsons)
   private val manifestStore = new ManifestStore(defn.name, s"$tableDir/_manifests")
 
-  private def timed[A](label: String)(body: => A): A =
-    graft.Timing.timed(defn.name, label)(body)
-
   /** Directory the data files live under — the mount point for a file
     * STREAM tailing this table (Spark's file source lists new files per
     * micro-batch, so a downstream job consumes appends continuously; the
@@ -835,19 +832,6 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   private def withPartitionCols(df: DataFrame): DataFrame =
     currentPartitions.foldLeft(df)((d, p) => d.withColumn(p.name, p.expr))
 
-  /** Write `df`'s rows as NEW files under the data dir; return the
-    * relative paths added. Spark append mode never rewrites existing
-    * files, so concurrent snapshots stay valid.
-    *
-    * Timestamps go out as INT64 TIMESTAMP(MICROS): the table layer
-    * depends on ordered footer min/max for range pruning and metadata
-    * watermark reads, and legacy INT96 stats are unusable. Scoped to
-    * the set of in-flight graft writes on this session
-    * ([[GraftTable.withMicrosTimestamps]] — reference-counted so one
-    * concurrent writer's exit can't hand another the INT96 default
-    * mid-plan), restoring the prior conf when the last write exits so
-    * result dumps elsewhere in the session keep the default format.
-    */
   /** Driver-local fast path: a commit whose rows are a tiny
     * LocalRelation (a watermark row, a bookkeeping upsert, a VALUES
     * insert) pays the full distributed-write floor — analyze/optimize,
@@ -882,6 +866,19 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     }
   }
 
+  /** Write `df`'s rows as NEW files under the data dir; return the
+    * relative paths added. Spark append mode never rewrites existing
+    * files, so concurrent snapshots stay valid.
+    *
+    * Timestamps go out as INT64 TIMESTAMP(MICROS): the table layer
+    * depends on ordered footer min/max for range pruning and metadata
+    * watermark reads, and legacy INT96 stats are unusable. Scoped to
+    * the set of in-flight graft writes on this session
+    * ([[GraftTable.withMicrosTimestamps]] — reference-counted so one
+    * concurrent writer's exit can't hand another the INT96 default
+    * mid-plan), restoring the prior conf when the last write exits so
+    * result dumps elsewhere in the session keep the default format.
+    */
   private def writeFiles(df: DataFrame, numPartitions: Option[Int] = None): Seq[String] = {
     if (numPartitions.isEmpty && partCols.isEmpty && defn.sortOrder.isEmpty) {
       localRelationRows(df) match {
@@ -949,12 +946,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   private def writeStaged(write: String => Unit): Seq[String] = {
     val staging = Paths.get(
       s"$tableDir/_staging/${java.util.UUID.randomUUID()}")
-    val writeT0 =
-      if (GraftTable.writeTiming) System.nanoTime() else 0L
     GraftTable.withMicrosTimestamps(spark)(write(staging.toString))
-    if (GraftTable.writeTiming)
-      System.err.println(f"[write-timing] ${defn.name} spark-write " +
-        f"${(System.nanoTime() - writeT0) / 1e9}%.3f s")
     def walk(f: File): Seq[File] =
       if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
       else Seq(f)
@@ -1712,7 +1704,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
           s"${defn.name}: replaceKeys with zero keys but a non-empty replacement — use append")
         return commits.lastOption.getOrElse(CommitMeta(0, 0L, "empty", 0L, Nil))
       }
-      val (untouched, toRewrite) = timed("replaceKeys/classify")(classifyLiveFiles(prune))
+      val (untouched, toRewrite) = classifyLiveFiles(prune)
       val hinted =
         if (nKeys <= GraftTable.BroadcastKeyLimit)
           org.apache.spark.sql.functions.broadcast(keys)
@@ -1726,16 +1718,15 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         // materialized as delete files
         val deleted = readFilesLogicalSpecAware(toRewrite, currentSchema, commits.lastOption)
           .join(hinted, keyCols, "left_semi")
-        val keepFiles = timed("replaceKeys/write")(writeFiles(keep))
+        val keepFiles = writeFiles(keep)
         val replFiles = writeFiles(repl)
         val delFiles = writeFiles(deleted)
-        timed("replaceKeys/commit")(writeCommit("replace-cdc",
+        writeCommit("replace-cdc",
           ReplaceContent(untouched, keepFiles ++ replFiles), baseV,
-          changeFiles = replFiles, deleteFiles = delFiles))
+          changeFiles = replFiles, deleteFiles = delFiles)
       } else {
-        val added = timed("replaceKeys/write")(writeFiles(keep.unionByName(repl)))
-        timed("replaceKeys/commit")(
-          writeCommit("replace", ReplaceContent(untouched, added), baseV))
+        val added = writeFiles(keep.unionByName(repl))
+        writeCommit("replace", ReplaceContent(untouched, added), baseV)
       }
     } finally if (ownedCache) keys.unpersist()
   }
@@ -2846,14 +2837,6 @@ object GraftTable {
           s"$table: $file is not in this table format — ${e.getOriginalMessage}", e)
     }
 
-  /** Dev-only write-path timing (GRAFT_WRITE_TIMING=1): one stderr line
-    * per staged Spark write so a profiling run can count the commits a
-    * protocol makes and what each write job costs. Read once — env never
-    * changes within a JVM and the flag sits on the hot write path.
-    */
-  private[tables] val writeTiming: Boolean =
-    sys.env.contains("GRAFT_WRITE_TIMING")
-
   /** Row bound for the driver-local write fast path (writeFiles):
     * enough for any bookkeeping/marker commit, far below anything a
     * distributed write exists for. One file either way — a 10k-row
@@ -2924,9 +2907,8 @@ object GraftTable {
     }
   }
 
-  /** Lost-CAS retry count across all tables (diagnostic — the
-    * contention probe samples it around racing-writer runs to report
-    * measured retry cost, SCALING.md's concurrency section).
+  /** Lost-CAS retry count across all tables (diagnostic — pipebench
+    * reports it per run as `tables.cas_retries`).
     */
   val commitRetryCount = new java.util.concurrent.atomic.AtomicLong(0L)
 

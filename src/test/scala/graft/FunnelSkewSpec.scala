@@ -13,9 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * The shipped j3/j7 rows must (a) stay row-identical to the literal
   * chained-join semantics on this data and (b) keep their left-semi
   * plan shape, whose per-key work is linear in the key's rows. The
-  * timing claim at volume lives in ScaleProbe's rtb mode (hot vs
-  * benign side by side, SCALING.md); this spec pins the semantics and
-  * the shape, which is what makes that timing hold.
+  * timing at volume (hot vs benign side by side) is a dated record in
+  * SCALING.md's rtb section; this spec pins the semantics and the
+  * shape, which is what makes that timing hold.
   *
   * (v_event_enriched_full_funnel has no analogous trap: its funnel
   * keys are per-event UNIQUE ids — fan-out is bounded by the 3%

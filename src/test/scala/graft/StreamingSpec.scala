@@ -443,61 +443,6 @@ class StreamingSpec extends AnyFunSuite {
       .filter(col("window_start") < lit(at(180)))
   }
 
-  test("transformWithState funnel summaries equal the flatMapGroupsWithState form") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val events = mkEvents()
-    def flush(k: Long) = Ev(-100 - k, at(200 + 25 * k), -1L, "view", 0.0)
-
-    def run(name: String)(mk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
-      val src = MemoryStream[Ev]
-      val q = graft.streaming.FunnelTws.withRocksDb(spark) {
-        mk(src.toDF()).writeStream.format("memory").queryName(name)
-          .outputMode("append").option("checkpointLocation", ckpt(name)).start()
-      }
-      src.addData(events)
-      q.processAllAvailable()
-      for (k <- 0L to 9L) { src.addData(flush(k)); q.processAllAvailable() }
-      q.stop()
-      spark.table(name).filter(col("user_id") >= 0)
-    }
-    val tws = run("tws_sum")(e => graft.streaming.FunnelTws.funnelViewSummary(e).toDF())
-    val fmgws = run("fmgws_sum")(e => graft.streaming.FunnelState.funnelViewSummary(e).toDF())
-    assert(tws.count() > 0, "transformWithState emitted no summaries")
-    assertSameRows(tws, fmgws, "state-v2 vs FMGWS funnel summaries")
-  }
-
-  test("tws chunk-key collision (duplicate re-delivery) merges, never overwrites") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // batch 1: click 10 (the chunk's min id) + click 11; batch 2 re-
-    // delivers click 10 ALONE — its chunk key collides with batch 1's.
-    // Pre-merge, the second updateValue would overwrite the entry and
-    // lose click 11; the view summary then undercounts n_clicks.
-    val view = Ev(1L, at(0), 7L, "view", 0.0)
-    val c10 = Ev(10L, at(5), 7L, "click", 0.0)
-    val c11 = Ev(11L, at(6), 7L, "click", 0.0)
-    val flush = Ev(-999L, at(400), -1L, "view", 0.0)
-    def run(name: String)(mk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
-      val src = MemoryStream[Ev]
-      val q = graft.streaming.FunnelTws.withRocksDb(spark) {
-        mk(src.toDF()).writeStream.format("memory").queryName(name)
-          .outputMode("append").option("checkpointLocation", ckpt(name)).start()
-      }
-      src.addData(Seq(view, c10, c11)); q.processAllAvailable()
-      src.addData(Seq(c10)); q.processAllAvailable() // duplicate delivery
-      src.addData(Seq(flush)); q.processAllAvailable()
-      q.stop()
-      spark.table(name).filter(col("user_id") >= 0)
-    }
-    val tws = run("tws_dup")(e => graft.streaming.FunnelTws.funnelViewSummary(e).toDF())
-    val fmgws = run("fmgws_dup")(e => graft.streaming.FunnelState.funnelViewSummary(e).toDF())
-    val rows = tws.select("view_id", "n_clicks").collect()
-    assert(rows.length == 1 && rows(0).getLong(1) == 2L,
-      s"duplicate re-delivery must not lose the colliding chunk's other events: ${rows.mkString}")
-    assertSameRows(tws, fmgws, "collision-merge vs FMGWS")
-  }
-
   test("sink replay of the same micro-batch id commits exactly once") {
     import spark.implicits._
     val schema = StructType(Seq(

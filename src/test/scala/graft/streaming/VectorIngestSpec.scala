@@ -59,7 +59,7 @@ class VectorIngestSpec extends AnyFunSuite {
     // exactly the input, assigned exactly as the batch path assigns
     assert(table.readLogical().count() == vecs.size)
     val streamedCells = table.readLogical().select("vec_id", "cell")
-    val batchCells = DedupOps.semanticDedup(base, AnnOps.NCentroids, 0.4)
+    val batchCells = DedupOps.semanticDedup(base)
       .select(col("vec_id"), col("cell"))
     assert(streamedCells.exceptAll(batchCells).count() == 0 &&
       batchCells.exceptAll(streamedCells).count() == 0,

@@ -249,9 +249,9 @@ def main():
     # one-sided multi-x spikes on identical code (observed: text_quality
     # 12.96s in one rep vs 0.28-0.33s in the other three), and with few
     # reps a median is contaminated by a single burst while the min is
-    # the honest warm-cost estimate — the same reasoning ScaleProbe
-    # documents for its min-of-two timing. Medians are kept alongside
-    # for inspection.
+    # the honest warm-cost estimate (SCALING.md's method notes make the
+    # same case for min-of-two timing). Medians are kept alongside for
+    # inspection.
     def agg(side, f):
         qs = {}
         for rec in runs[side]:
