@@ -28,11 +28,11 @@ import org.apache.spark.sql.SparkSession
   *    so it must be set on the session before any query runs.
   *
   * Timestamp OUTPUT format stays the session default (INT96) so ad-hoc
-  * result dumps (Verify) read back naive, matching the DuckDB oracle;
-  * GraftTable.writeFiles opts into INT64 TIMESTAMP(MICROS) per-write
-  * because the table layer needs usable footer min/max for file-level
-  * range pruning and metadata watermark reads (INT96 has no ordered
-  * stats).
+  * result dumps (Verify) read back naive, matching the DuckDB oracle.
+  * Table files never see that default: the table writer
+  * (GraftParquetBridge) sets INT64 TIMESTAMP(MICROS) per file, because
+  * the table layer needs usable footer min/max for file-level range
+  * pruning and metadata watermark reads (INT96 has no ordered stats).
   */
 object GraftSession {
   /** `spark.sql.codegen.cache.maxEntries`: above the measured working

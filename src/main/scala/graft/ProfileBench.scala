@@ -86,8 +86,8 @@ object ProfileBench {
               case f if f.getClassName.contains("RuleExecutor") => "optimize(RuleExecutor)"
               case f if f.getClassName.contains("CodeGenerator") || f.getClassName.contains("janino") => "codegen"
               case f if f.getClassName.contains("CheckAnalysis") || f.getClassName.contains("Analyzer") => "analyze"
-              case f if f.getClassName.contains("FileFormatWriter") => "writeJobWait"
-              case f if f.getClassName.contains("HadoopMapReduceCommitProtocol") || f.getClassName.contains("FileOutputCommitter") => "writeCommit"
+              case f if f.getClassName.contains("GraftParquetBridge") => "tableWrite"
+              case f if f.getClassName.contains("GraftTable") && f.getMethodName == "writeStaged" => "writeCommit"
               case f if f.getClassName.contains("AdaptiveSparkPlanExec") => "aqe-drive"
               case f if f.getClassName.contains("DAGScheduler") && f.getMethodName == "runJob" => "jobWait"
               case f if f.getClassName.contains("awaitResult") || (f.getClassName.contains("ThreadUtils") && f.getMethodName.contains("await")) => "await"
@@ -114,7 +114,8 @@ object ProfileBench {
                 case f if f.getClassName.contains("RuleExecutor") => "sx:optimize"
                 case f if f.getClassName.contains("CodeGenerator") || f.getClassName.contains("janino") => "sx:codegen"
                 case f if f.getClassName.contains("Analyzer") => "sx:analyze"
-                case f if f.getClassName.contains("FileFormatWriter") => "sx:writeJobWait"
+                case f if f.getClassName.contains("GraftParquetBridge") ||
+                  (f.getClassName.contains("GraftTable") && f.getMethodName == "writeStaged") => "sx:tableWrite"
                 case f if f.getClassName.contains("StateStore") || f.getClassName.contains("HDFSBackedStateStore") => "sx:stateStore"
                 case f if f.getClassName.contains("OffsetSeqLog") || f.getClassName.contains("CommitLog") || f.getClassName.contains("HDFSMetadataLog") => "sx:checkpointLog"
                 case f if f.getClassName.contains("FileStreamSource") => "sx:fileSource"

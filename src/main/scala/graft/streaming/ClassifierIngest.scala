@@ -37,8 +37,8 @@ object ClassifierIngest {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         // skip empty micro-batches at the source (Sinks.scala
-        // discipline): an unguarded append still runs a write job and
-        // leaves a schema-only orphan file per idle batch
+        // discipline): an unguarded append still runs a write job per
+        // idle batch
         if (!batch.isEmpty)
           Sinks.exactlyOnce(dict, "clfDictAppend", batchId) {
             dict.append(ClassifierScoring.dictionary(batch.toDF()))

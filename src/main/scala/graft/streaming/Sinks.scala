@@ -37,6 +37,21 @@ object Sinks {
     if (batchId > table.lastCommittedBatch(sinkId))
       table.withSinkMark(sinkId, batchId)(commit)
 
+  /** The foreachBatch body of the single-table sinks: persist the batch
+    * (the emptiness guard and the write are two actions, and each would
+    * otherwise re-execute the upstream plan from scratch — stateful
+    * aggregation and state-store reads included), then make the
+    * exactly-once `write` unless the batch is empty.
+    */
+  private def guardedWrite(table: SinkTable, sinkId: String)(
+      write: DataFrame => Unit): (Dataset[Row], Long) => Unit =
+    (batch, batchId) => {
+      batch.persist()
+      try exactlyOnce(table, sinkId, batchId) {
+        if (!batch.isEmpty) write(batch)
+      } finally { batch.unpersist(); () }
+    }
+
   /** Continuous hourly aggregation → keyed upsert table. The table MUST
     * be keyed by (window_start, event_type); every micro-batch re-emits
     * revised rows for windows still inside the watermark, and the upsert
@@ -53,16 +68,7 @@ object Sinks {
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // persist: the emptiness guard and the upsert are two actions,
-        // and each would otherwise re-execute the stateful aggregation
-        // (state-store reads included) from scratch
-        batch.persist()
-        try exactlyOnce(table, "hourlyUpsert", batchId) {
-          if (!batch.isEmpty) table.upsert(batch)
-        } finally { batch.unpersist(); () }
-        ()
-      }
+      .foreachBatch(guardedWrite(table, "hourlyUpsert")(b => table.upsert(b)))
       .start()
 
   /** Continuous SLIDING-window aggregation (W1: 1 h size / 15 min hop)
@@ -79,13 +85,7 @@ object Sinks {
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.persist() // see hourlyUpsert: guard + upsert are two actions
-        try exactlyOnce(table, "slidingUpsert", batchId) {
-          if (!batch.isEmpty) table.upsert(batch)
-        } finally { batch.unpersist(); () }
-        ()
-      }
+      .foreachBatch(guardedWrite(table, "slidingUpsert")(b => table.upsert(b)))
       .start()
 
   /** Funnel stage 1: per-view summaries → append table. Summary rows
@@ -98,13 +98,7 @@ object Sinks {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.persist() // see hourlyUpsert: guard + append are two actions
-        try exactlyOnce(table, "funnelSummaryAppend", batchId) {
-          if (!batch.isEmpty) table.append(batch)
-        } finally { batch.unpersist(); () }
-        ()
-      }
+      .foreachBatch(guardedWrite(table, "funnelSummaryAppend")(b => table.append(b)))
       .start()
 
   /** Funnel stage 2: tail the summary table as a file stream and roll it
@@ -126,13 +120,8 @@ object Sinks {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.persist() // see hourlyUpsert: guard + append are two actions
-        try exactlyOnce(rollupTable, "funnelRollupFromTable", batchId) {
-          if (!batch.isEmpty) rollupTable.append(batch)
-        } finally { batch.unpersist(); () }
-        ()
-      }
+      .foreachBatch(guardedWrite(rollupTable, "funnelRollupFromTable")(
+        b => rollupTable.append(b)))
       .start()
   }
 
@@ -142,13 +131,7 @@ object Sinks {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.persist() // see hourlyUpsert: guard + append are two actions
-        try exactlyOnce(table, "dedupAppend", batchId) {
-          if (!batch.isEmpty) table.append(batch)
-        } finally { batch.unpersist(); () }
-        ()
-      }
+      .foreachBatch(guardedWrite(table, "dedupAppend")(b => table.append(b)))
       .start()
 
   /** Streaming twin of the histogram quantile sketch

@@ -31,7 +31,7 @@ object TemperatureIngest {
   /** `(doc_id, lang, …)` stream → per-batch count partials. Empty
     * micro-batches are skipped at the SOURCE (the Sinks.scala
     * discipline) — an unguarded append would still run a write job
-    * and leave a schema-only orphan file per idle batch.
+    * per idle batch.
     */
   def countsAppend(docs: DataFrame, counts: GraftTable,
       checkpoint: String): StreamingQuery =

@@ -2,13 +2,14 @@ package graft.tables
 
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import scala.collection.parallel.CollectionConverters._
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge.WrittenFile
 import org.apache.spark.sql.types._
 
 /** One committed snapshot of a table. IN MEMORY, `files` is the FULL
@@ -29,16 +30,16 @@ import org.apache.spark.sql.types._
   *    into the table ([[GraftTable.withSinkMark]]); carried forward on
   *    every commit, so the latest commit is authoritative.
   *  - `fileRows` — per-file row counts (Iceberg's manifest
-  *    `record_count` analog), carried commit to commit so a
-  *    replace/compact commit re-reads footers only for files it ADDED:
+  *    `record_count` analog), carried commit to commit; only files a
+  *    commit ADDED take theirs from the writer that wrote them, so
   *    commit metadata cost stays O(new files), not O(table).
   *  - `changeFiles` — for a copy-on-write upsert commit: the subset of
   *    this commit's files holding EXACTLY the upserted batch (the
   *    survivors were rewritten into separate files), i.e. the commit's
   *    logical change set — Iceberg's changelog scan derives the same
   *    rows from the equality-delete files a v2 MERGE writes. Empty on
-  *    every other op and on untracked upserts (whose change set is
-  *    unknowable — readChanges refuses those, see fileDeltasSince).
+  *    every other op (and on an upsert of zero rows, whose change set
+  *    is empty).
   *  - `deleteFiles` — for a change-tracked replace commit
   *    (`replace-cdc`): files holding EXACTLY the rows the commit
   *    removed — the engine's analog of Iceberg v2's delete files,
@@ -383,14 +384,6 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     else (prevChunks.filterNot(undersized.toSet), undersized)
   }
 
-  /** Footer stats of freshly written (immutable) files, one open each:
-    * row count + per-INT64-column min/max — keyed by relative path,
-    * shared between append's zero-row check and writeCommit's manifest
-    * entry build so each new file's footer opens exactly once.
-    */
-  private val footerStatsCache =
-    scala.collection.concurrent.TrieMap[String, (Long, Seq[ColumnBound])]()
-
   private def contentKey(bytes: Array[Byte]): Long = {
     val d = java.security.MessageDigest.getInstance("MD5").digest(bytes)
     java.nio.ByteBuffer.wrap(d, 0, 8).getLong
@@ -588,11 +581,12 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * a lost commit, the way Iceberg's optimistic commits absorb it.
     *
     * Row counts AND column bounds come from the previous commit's
-    * manifest entries where a file is carried over; only files NOT in
-    * the previous commit (the ones this operation wrote) have their
-    * footers read (once — the same open harvests rows + bounds) —
-    * commit cost is O(new files) regardless of how many live files are
-    * carried. The persisted json stores manifest chunk NAMES, never
+    * manifest entries where a file is carried over; files NOT in the
+    * previous commit take theirs from `written` — the table writer's
+    * report for the files this operation wrote (rollback passes its
+    * target's manifest entries instead) — so commit cost is O(new
+    * files) regardless of how many live files are carried, and no
+    * data file is opened. The persisted json stores manifest chunk NAMES, never
     * the file list: an append-shaped commit writes one new chunk and
     * carries prior chunks by reference; a commit that removes files
     * (or restamps specs) rewrites only the touched chunks. Chunk-
@@ -602,7 +596,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * Iceberg's `rewrite_manifests` folded into the commit.
     */
   private def writeCommit(op: String, intent: CommitIntent, baseVersion: Int,
-      knownRows: Map[String, Long] = Map.empty,
+      written: Seq[WrittenFile] = Nil,
       changeFiles: Seq[String] = Nil,
       deleteFiles: Seq[String] = Nil,
       newSchemaDdl: Option[String] = None,
@@ -615,18 +609,13 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     while (attempt < GraftTable.MaxCommitRetries) {
       val prevMeta = commits.lastOption
       validateIntent(op, intent, baseVersion, prevMeta)
-      val meta = assembleCommit(op, intent, prevMeta, knownRows, changeFiles,
+      val meta = assembleCommit(op, intent, prevMeta, written, changeFiles,
         deleteFiles, newSchemaDdl, morDeletes, newPartSpecDdl,
         fileSpecsOverride, newRenames, posDeletes)
       if (publish(meta._1, meta._2)) {
-        // bound the footer-stats cache (it exists for files being
-        // committed, not for history): entries for files this commit
-        // removed from the live set can never be asked for again
-        val gone = prevMeta.map(_.files.toSet).getOrElse(Set.empty) -- meta._1.files.toSet
-        if (gone.nonEmpty) footerStatsCache --= gone
-        // same discipline for the chunk-parse cache: a long-lived
-        // poll/cron writer otherwise accumulates one parsed chunk per
-        // chunk ever rewritten (see ManifestStore.prune)
+        // bound the chunk-parse cache: a long-lived poll/cron writer
+        // otherwise accumulates one parsed chunk per chunk ever
+        // rewritten (see ManifestStore.prune)
         manifestStore.prune(meta._1.manifests.toSet)
         return meta._1
       }
@@ -652,8 +641,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * map, spec map, and row-count total derive INCREMENTALLY from the
     * predecessor's in-memory view (immutable-map structural sharing),
     * every prior manifest chunk carries by reference without being
-    * scanned, and the only per-file work is the added files' footer
-    * harvest. Driver CPU per commit is then independent of the live
+    * scanned, and the only per-file work is one manifest entry per
+    * added file. Driver CPU per commit is then independent of the live
     * file count — at millions of files an append costs what it costs
     * at a thousand (Iceberg's fast-append). Rewrites (compact, zorder,
     * replace, rollback) keep the full O(live) assembly: their intent
@@ -662,7 +651,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     */
   private def assembleCommit(op: String, intent: CommitIntent,
       prevMeta: Option[CommitMeta],
-      knownRows: Map[String, Long],
+      written: Seq[WrittenFile],
       changeFiles: Seq[String],
       deleteFiles: Seq[String],
       newSchemaDdl: Option[String],
@@ -675,6 +664,9 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val prevSpecDdl = prevMeta.flatMap(_.partSpecDdl)
     val prevFileSpecs = prevMeta.map(_.fileSpecs).getOrElse(Map.empty)
     val writeSpecDdl = prevSpecDdl.getOrElse(PartitionTransform.specDdl(defn.partitions))
+    // rows + bounds of every file this commit adds, as its writer
+    // reported them
+    val addedStats = written.map(w => w.path -> w).toMap
     // ---- O(delta) fast path (see the method doc) ----
     val fastAdds: Option[Seq[String]] = intent match {
       case AddFiles(a)
@@ -684,12 +676,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     }
     if (fastAdds.isDefined) {
       val added = fastAdds.get
-      // one footer open per added file: rows + bounds (cached — the
-      // caller's zero-row check already primed it)
-      val addedStats: Map[String, (Long, Seq[ColumnBound])] =
-        added.par.map(f => f -> footerStats(f)).seq.toMap
-      val addedRows: Map[String, Long] =
-        added.map(f => f -> knownRows.getOrElse(f, addedStats(f)._1)).toMap
+      val addedRows: Map[String, Long] = added.map(f => f -> addedStats(f).rows).toMap
       val files = prevMeta.map(_.files).getOrElse(Nil) ++ added
       val fileRows = prevMeta.map(_.fileRows).getOrElse(Map.empty) ++ addedRows
       val rowCount = prevMeta.map(_.rowCount).getOrElse(0L) + addedRows.values.sum
@@ -704,7 +691,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       val (carried, merged) = foldChunks(prevChunks)
       val pool = merged.flatMap(manifestStore.read)
       val fresh = added.map(f => ManifestEntry(
-        f, addedRows(f), fileSpecs.get(f), addedStats(f)._2))
+        f, addedRows(f), fileSpecs.get(f), addedStats(f).bounds))
       val newChunks = (pool ++ fresh).grouped(ChunkTargetEntries)
         .map(manifestStore.write).toSeq
       return finishCommit(op, newVersion, rowCount, files, fileRows, fileSpecs,
@@ -713,14 +700,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     }
     // ---- full assembly: rewrites, replaces, metadata ops ----
     val files = filesUnder(intent, prevMeta)
-    val prevFiles = prevMeta.map(_.files.toSet).getOrElse(Set.empty)
-    val prevRows = prevMeta.map(_.fileRows).getOrElse(Map.empty) ++ knownRows
-    // one footer open per ADDED file harvests rows + INT64 bounds for
-    // the manifest entry (parallel, cached per handle — append's own
-    // zero-row check already primed it)
-    val addedStats: Map[String, (Long, Seq[ColumnBound])] =
-      files.filterNot(prevFiles).par.map(f => f -> footerStats(f)).seq.toMap
-    val fileRows = files.map(f => f -> prevRows.getOrElse(f, addedStats(f)._1)).toMap
+    val prevRows = prevMeta.map(_.fileRows).getOrElse(Map.empty)
+    val fileRows = files.map(f => f -> prevRows.getOrElse(f, addedStats(f).rows)).toMap
     // partition-spec bookkeeping: the carried spec, plus (once the table
     // has ever evolved) per-file write-spec provenance. New files were
     // written under the spec in effect BEFORE this commit (an evolve
@@ -767,9 +748,9 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val covered = carried.flatMap(n => manifestStore.read(n).map(_.p)).toSet ++
       pool.map(_.p)
     // files never chunked yet are this commit's additions (bounds from
-    // the footer harvest)
+    // the writer's report)
     val fresh = files.filterNot(covered).map(f => ManifestEntry(
-      f, fileRows(f), fileSpecs.get(f), addedStats(f)._2))
+      f, fileRows(f), fileSpecs.get(f), addedStats(f).bounds))
     val newChunks = (pool ++ fresh).grouped(ChunkTargetEntries).map(
       manifestStore.write).toSeq
     finishCommit(op, newVersion, fileRows.values.sum, files, fileRows, fileSpecs,
@@ -835,10 +816,9 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   /** Driver-local fast path: a commit whose rows are a tiny
     * LocalRelation (a watermark row, a bookkeeping upsert, a VALUES
     * insert) pays the full distributed-write floor — analyze/optimize,
-    * a scheduled task, the Hadoop commit protocol — to move a few
-    * hundred bytes that never left the driver. Write them directly
-    * through Spark's own ParquetWriteSupport instead (identical on-disk
-    * conventions, footer stats included — see GraftParquetBridge).
+    * a scheduled task — to move a few hundred bytes that never left the
+    * driver. The table writer runs on the driver instead (the same
+    * function the write tasks run, so the files are identical).
     * Gated to: no explicit partition-count request, unpartitioned
     * unsorted layout (partition/sort distribution is the distributed
     * writer's job), and an ANALYZED plan that is just projections over
@@ -866,30 +846,17 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     }
   }
 
-  /** Write `df`'s rows as NEW files under the data dir; return the
-    * relative paths added. Spark append mode never rewrites existing
-    * files, so concurrent snapshots stay valid.
-    *
-    * Timestamps go out as INT64 TIMESTAMP(MICROS): the table layer
-    * depends on ordered footer min/max for range pruning and metadata
-    * watermark reads, and legacy INT96 stats are unusable. Scoped to
-    * the set of in-flight graft writes on this session
-    * ([[GraftTable.withMicrosTimestamps]] — reference-counted so one
-    * concurrent writer's exit can't hand another the INT96 default
-    * mid-plan), restoring the prior conf when the last write exits so
-    * result dumps elsewhere in the session keep the default format.
+  /** Write `df`'s rows as NEW files under the data dir, laid out by the
+    * current partition spec and declared sort order; return each file
+    * with the rows and bounds its writer reported. New files never
+    * replace existing ones, so concurrent snapshots stay valid.
     */
-  private def writeFiles(df: DataFrame, numPartitions: Option[Int] = None): Seq[String] = {
+  private def writeFiles(df: DataFrame, numPartitions: Option[Int] = None): Seq[WrittenFile] = {
     if (numPartitions.isEmpty && partCols.isEmpty && defn.sortOrder.isEmpty) {
       localRelationRows(df) match {
         case Some((schema, rows)) =>
-          return writeStaged { dir =>
-            org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
-              .writeLocalFile(
-                s"$dir/part-00000-${java.util.UUID.randomUUID()}.parquet",
-                schema, rows.iterator, spark.sessionState.newHadoopConf(),
-                spark.conf.get("spark.sql.parquet.compression.codec", "snappy"))
-          }
+          return writeStaged((dir, settings) =>
+            GraftParquetBridge.write(dir, schema, Nil, settings, rows.iterator))
         case None => ()
       }
     }
@@ -922,64 +889,61 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         clustered.repartitionByRange(scols: _*)
       case (None, false) => clustered
     }
+    // the partition values lead the within-task sort, so each task's
+    // rows reach the writer one partition value at a time (one file
+    // per value and task)
     val ordered =
-      if (scols.isEmpty) physical
+      if (pcols.isEmpty && scols.isEmpty) physical
       else physical.sortWithinPartitions((pcols ++ scols): _*)
-    writePhysical(ordered)
+    writeRows(ordered, partCols)
   }
 
-  /** Run one Spark write into a fresh STAGING dir, then move the
-    * written files into the data dir preserving their (partition)
-    * relative paths. The post-write walk touches only THIS write's
-    * files — never the table — so write-side file discovery is O(new
-    * files), where the previous append-to-dataDir before/after diff
-    * paid TWO full-table directory listings per commit (the last
-    * O(live-files) IO on the write path; at object-store scale that
-    * LIST volume dominates the commit — Iceberg writers avoid it the
-    * same way, collecting task-written paths through the commit
-    * protocol instead of listing). Crash story: files move one atomic
-    * rename at a time (same filesystem — staging lives beside the data
-    * dir); a crash mid-move leaves unreferenced data files and a
-    * staging remnant, both reclaimed by [[removeOrphans]] — no
-    * snapshot ever references a file that is not fully in place.
+  /** Run the table writer in Spark tasks over `df`'s rows — the logical
+    * columns, then the `parts` partition columns, arranged as the files
+    * should be (distribution and within-task order are the caller's).
+    * Each partition value is cast to string here, in the plan, so the
+    * directory names use the session time zone as Spark's writer does.
+    * Shared by [[writeFiles]], the partitioned z-order rewrite (which
+    * arranges its own distribution and must not have it re-shuffled)
+    * and the tombstone writes (`parts` empty).
     */
-  private def writeStaged(write: String => Unit): Seq[String] = {
-    val staging = Paths.get(
-      s"$tableDir/_staging/${java.util.UUID.randomUUID()}")
-    GraftTable.withMicrosTimestamps(spark)(write(staging.toString))
-    def walk(f: File): Seq[File] =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
-      else Seq(f)
-    val rels = walk(staging.toFile)
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-      .map { f =>
-        val rel = staging.relativize(f.toPath)
-        val dest = Paths.get(dataDir).resolve(rel)
-        Files.createDirectories(dest.getParent)
-        Files.move(f.toPath, dest, StandardCopyOption.ATOMIC_MOVE)
-        rel.toString
-      }
-    graft.FsUtil.deleteRecursively(staging) // _SUCCESS + empty dirs
-    rels.sorted
+  private def writeRows(df: DataFrame, parts: Seq[String]): Seq[WrittenFile] = {
+    import org.apache.spark.sql.functions.col
+    val data = df.columns.filterNot(parts.contains)
+    val rows =
+      if (parts.isEmpty) df
+      else df.select(data.map(col) ++ parts.map(p => col(p).cast(StringType)): _*)
+    writeStaged((dir, settings) => GraftParquetBridge.writeQuery(
+      spark, rows.queryExecution.logical, dir, parts, settings))
   }
 
-  /** The raw write step shared by [[writeFiles]] and the partitioned
-    * z-order rewrite (which arranges its own distribution and must not
-    * have it re-shuffled): timestamp discipline + partitionBy, staged.
+  /** Run one table write into a fresh STAGING dir, then move exactly
+    * the files the writer reported into the data dir, preserving their
+    * (partition) relative paths. A file stream tailing the data dir
+    * (Jobs' and Sinks' chained jobs) must never list a file of a write
+    * that failed, so files appear there only once every task has
+    * succeeded; a failed write deletes its staging dir. Crash story:
+    * files move one atomic rename at a time (same filesystem — staging
+    * lives beside the data dir); a crash mid-move leaves unreferenced
+    * data files and a staging remnant, both reclaimed by
+    * [[removeOrphans]] — no snapshot ever references a file that is
+    * not fully in place.
     */
-  private def writePhysical(ordered: DataFrame): Seq[String] =
-    writeStaged { dir =>
-      val writer = ordered.write.mode("append")
-      (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer).parquet(dir)
+  private def writeStaged(
+      write: (String, GraftParquetBridge.WriteSettings) => Seq[WrittenFile]): Seq[WrittenFile] = {
+    val staging = Paths.get(s"$tableDir/_staging/${java.util.UUID.randomUUID()}")
+    val written =
+      try write(staging.toString, GraftParquetBridge.settings(spark))
+      catch { case t: Throwable => graft.FsUtil.deleteRecursively(staging); throw t }
+    written.foreach { w =>
+      val dest = Paths.get(dataDir).resolve(w.path)
+      Files.createDirectories(dest.getParent)
+      Files.move(staging.resolve(w.path), dest, StandardCopyOption.ATOMIC_MOVE)
     }
-
-  /** Write rows OUTSIDE the partition layout (equality-delete tombstone
-    * files — key tuples only, so partition sources may be absent).
-    * Same timestamp discipline as [[writeFiles]]; never listed in a
-    * commit's `files`, so no data read ever sees them by accident.
-    */
-  private def writeRawFiles(df: DataFrame): Seq[String] =
-    writeStaged(dir => df.write.mode("append").parquet(dir))
+    graft.FsUtil.deleteRecursively(staging) // the writer's .crc files + empty dirs
+    GraftTable.footerProbeCount.addAndGet(written.size)
+    written.sortBy(_.path)
+  }
 
   // ---- reads ----
 
@@ -1020,7 +984,15 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   private def physicalSchemaOf(logical: StructType): StructType =
     physicalSchemaOf(logical, currentPartitions)
 
-  private def physicalSchema: StructType = physicalSchemaOf(currentSchema)
+  /** Snapshot `version` of `cs` (latest when None; an empty table's is
+    * the empty snapshot). A version not in the log throws.
+    */
+  private def snapshotAt(cs: Seq[CommitMeta], version: Option[Int]): CommitMeta =
+    version match {
+      case Some(v) => cs.find(_.version == v)
+        .getOrElse(throw new IllegalArgumentException(s"${defn.name}: no snapshot v$v"))
+      case None => cs.lastOption.getOrElse(CommitMeta(0, 0L, "empty", 0L, Nil))
+    }
 
   /** Read a snapshot (default: latest). Returns the physical schema —
     * logical columns plus derived `p_*` partition columns, so callers
@@ -1028,11 +1000,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     */
   def read(version: Option[Int] = None): DataFrame = {
     val cs = commits
-    val snap = version match {
-      case Some(v) => cs.find(_.version == v)
-        .getOrElse(throw new IllegalArgumentException(s"${defn.name}: no snapshot v$v"))
-      case None => cs.lastOption.getOrElse(CommitMeta(0, 0L, "empty", 0L, Nil))
-    }
+    val snap = snapshotAt(cs, version)
     // a raw physical read would resurface position-deleted rows
     require(snap.posDeleteFiles.isEmpty,
       s"${defn.name}: physical read with pending position deletes — " +
@@ -1086,11 +1054,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val logical = schemaAt(version)
     val logicalCols = logical.fieldNames.map(org.apache.spark.sql.functions.col)
     val cs = commits
-    val snap = version match {
-      case Some(v) => cs.find(_.version == v)
-        .getOrElse(throw new IllegalArgumentException(s"${defn.name}: no snapshot v$v"))
-      case None => cs.lastOption.getOrElse(CommitMeta(0, 0L, "empty", 0L, Nil))
-    }
+    val snap = snapshotAt(cs, version)
     if (!defn.mergeOnRead) {
       // pending position deletes (this SNAPSHOT's — time travel to a
       // pre-delete version sees the rows) anti-join away per (file, pos)
@@ -1184,29 +1148,19 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
 
   // ---- writes ----
 
-  /** S4 — partitioned append. Row count = previous count + count of the
-    * NEW files only — an append commit must never re-scan the table.
-    * Appending zero rows to a non-empty table writes no files and no
-    * commit (callers then skip the did-I-have-rows pre-check, which
-    * would evaluate the input twice).
+  /** S4 — partitioned append. Row count = previous count + the rows the
+    * writer reported for the NEW files — an append commit must never
+    * re-scan the table. Appending zero rows writes no file, and to a
+    * table that has a commit makes no commit either (callers then skip
+    * the did-I-have-rows pre-check, which would evaluate the input
+    * twice).
     */
   def append(df: DataFrame): CommitMeta = {
     val baseV = currentVersion
     val added = writeFiles(df.select(currentSchema.fieldNames.map(df.col): _*))
-    val prev = commits.lastOption
-    val addedRowsByFile = added.par.map(f => f -> footerRowCount(Seq(f))).seq.toMap
-    val addedRows = addedRowsByFile.values.sum
-    prev match {
-      case Some(p) if addedRows == 0 =>
-        // a zero-row write leaves at most one schema-only file behind
-        // (Spark writes it when the plan collapses to an empty relation).
-        // LEFT IN PLACE, unreferenced: a tailing file stream may already
-        // have listed it (it reads as 0 rows — harmless), where deleting
-        // it here would crash that reader; removeOrphans reclaims it on
-        // the maintenance cadence like any other unreferenced file
-        p
-      case _ =>
-        writeCommit("append", AddFiles(added), baseV, addedRowsByFile)
+    commits.lastOption match {
+      case Some(p) if added.isEmpty => p
+      case _ => writeCommit("append", AddFiles(added.map(_.path)), baseV, added)
     }
   }
 
@@ -1378,8 +1332,12 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       throw new IllegalArgumentException(s"${defn.name}: no snapshot v$version to roll back to"))
     require(version < currentVersion,
       s"${defn.name}: rollback target v$version is not an ancestor of v$currentVersion")
+    // files the head dropped come back with the rows and bounds the
+    // target's manifest entries recorded for them
+    val targetStats = target.manifests.flatMap(manifestStore.read)
+      .map(e => WrittenFile(e.p, e.r, e.b))
     writeCommit("rollback", MetadataOnly(Some(target.files)),
-      cs.lastOption.map(_.version).getOrElse(0),
+      cs.lastOption.map(_.version).getOrElse(0), targetStats,
       newSchemaDdl = Some(target.schemaDdl.getOrElse(defn.schema.toDDL)),
       morDeletes = (_, _) => target.morDeleteFiles,
       newPartSpecDdl = Some(target.partSpecDdl
@@ -1406,7 +1364,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val baseV = currentVersion
     val added = writeFiles(df.select(currentSchema.fieldNames.map(df.col): _*))
     // a full rewrite supersedes any pending position deletes
-    writeCommit("overwrite", ReplaceContent(Nil, added), baseV,
+    writeCommit("overwrite", ReplaceContent(Nil, added.map(_.path)), baseV, added,
       posDeletes = (_, _) => Map.empty)
   }
 
@@ -1427,9 +1385,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     *    compaction cadence bounds read cost. Commit rowCount records
     *    PHYSICAL rows (logical count would force the merge at commit).
     */
-  def upsert(batch: DataFrame): CommitMeta = upsert(batch, trackChanges = true)
-
-  def upsert(batch: DataFrame, trackChanges: Boolean): CommitMeta = {
+  def upsert(batch: DataFrame): CommitMeta = {
     require(defn.isUpsert, s"${defn.name} has no identifier keys")
     val baseV = currentVersion
     val cols = currentSchema.fieldNames.map(batch.col)
@@ -1438,25 +1394,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       // O(batch) addition — latest-wins resolution happens at read, so
       // the commit commutes with interleaved writers like an append
       val added = writeFiles(b)
-      writeCommit("upsert-mor", AddFiles(added), baseV)
-    } else if (!trackChanges) {
-      // opt-out: one merged write, NO changeFiles — the commit's change
-      // set is unknowable and readChanges refuses it. Measured worth:
-      // the split write reads ~1.34× on the s5 bench row — a table
-      // nobody tails is entitled to skip that premium.
-      val cur = readLogical().alias("cur")
-      val bb = b.alias("b")
-      val sameKey = defn.keys
-        .map(k => org.apache.spark.sql.functions.col(s"cur.$k") <=>
-          org.apache.spark.sql.functions.col(s"b.$k"))
-        .reduce(_ && _)
-      val survivors = cur.join(bb, sameKey, "left_anti")
-        .select(currentSchema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
-      // the COW rewrite reads the visible state (pos deletes applied)
-      // and replaces every file — pending tombstones are materialized
-      writeCommit("upsert",
-        ReplaceContent(Nil, writeFiles(survivors.unionByName(b))), baseV,
-        posDeletes = (_, _) => Map.empty)
+      writeCommit("upsert-mor", AddFiles(added.map(_.path)), baseV, added)
     } else {
       // null-safe key match (<=>): a name-list join compares with =, so a
       // NULL key tuple never matches and the old null-key row would
@@ -1476,12 +1414,15 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       // is what lets readChanges serve CDC rows for a COW upsert
       // instead of refusing (Iceberg's changelog scan reads the same
       // facts from a MERGE's equality-delete files). Same total write
-      // volume as the former single merged write; one extra file per
-      // touched partition until the next compact.
+      // volume as one merged write; one extra file per touched
+      // partition until the next compact. The COW rewrite reads the
+      // visible state (pos deletes applied) and replaces every file —
+      // pending tombstones are materialized.
       val batchFiles = writeFiles(b)
       val survivorFiles = writeFiles(survivors)
-      writeCommit("upsert", ReplaceContent(Nil, survivorFiles ++ batchFiles),
-        baseV, changeFiles = batchFiles,
+      val added = survivorFiles ++ batchFiles
+      writeCommit("upsert", ReplaceContent(Nil, added.map(_.path)), baseV, added,
+        changeFiles = batchFiles.map(_.path),
         posDeletes = (_, _) => Map.empty)
     }
   }
@@ -1506,12 +1447,12 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         "copy-on-write tables use replaceWhere/replaceKeys")
     val k = staleKeys.select(defn.keys.map(staleKeys.col): _*)
       .distinct().repartition(1)
-    val added = writeRawFiles(k)
+    val added = writeRows(k, Nil)
     val prev = commits.lastOption
-    if (added.isEmpty) // zero keys → a schema-only stub at most; no commit
+    if (added.isEmpty) // zero keys → no file, no commit
       return prev.getOrElse(CommitMeta(0, 0L, "empty", 0L, Nil))
     writeCommit("delete-mor", TombstoneEq, prev.map(_.version).getOrElse(0),
-      morDeletes = (m, v) => m ++ added.map(_ -> v))
+      morDeletes = (m, v) => m ++ added.map(_.path -> v))
   }
 
   /** Schema of a position-delete tombstone file. */
@@ -1598,12 +1539,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       .select(org.apache.spark.sql.functions.col("__file"),
         org.apache.spark.sql.functions.col("__pos"))
       .repartition(1)
-    val added = writeRawFiles(matches)
-    // zero matches → no commit (a schema-only stub stays unreferenced
-    // for removeOrphans, the append() convention)
-    if (added.isEmpty || footerRowCount(added) == 0) return snap
+    val added = writeRows(matches, Nil)
+    if (added.isEmpty) return snap // zero matches → no file, no commit
     writeCommit("delete-pos", TombstonePos, snap.version,
-      posDeletes = (m, v) => m ++ added.map(_ -> v))
+      posDeletes = (m, v) => m ++ added.map(_.path -> v))
   }
 
   /** Targeted delete+re-insert for the materializer repair passes
@@ -1641,17 +1580,19 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       val keepFiles = writeFiles(keep)
       val replFiles = writeFiles(repl)
       val delFiles = writeFiles(deleted)
-      writeCommit("replace-cdc", ReplaceContent(untouched, keepFiles ++ replFiles),
-        baseV, changeFiles = replFiles, deleteFiles = delFiles)
+      writeCommit("replace-cdc",
+        ReplaceContent(untouched, (keepFiles ++ replFiles).map(_.path)), baseV,
+        keepFiles ++ replFiles, changeFiles = replFiles.map(_.path),
+        deleteFiles = delFiles.map(_.path))
     } else {
       val added = writeFiles(keep.unionByName(repl))
       // nothing deleted (no file overlapped the condition) and nothing
       // inserted ⇒ a no-op: skip the commit, mirroring append()'s
-      // zero-row skip (any schema-only stub file stays unreferenced for
-      // removeOrphans, same as there)
+      // zero-row skip
       prev match {
-        case Some(p) if toRewrite.isEmpty && footerRowCount(added) == 0 => p
-        case _ => writeCommit("replace", ReplaceContent(untouched, added), baseV)
+        case Some(p) if toRewrite.isEmpty && added.isEmpty => p
+        case _ =>
+          writeCommit("replace", ReplaceContent(untouched, added.map(_.path)), baseV, added)
       }
     }
   }
@@ -1722,11 +1663,12 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         val replFiles = writeFiles(repl)
         val delFiles = writeFiles(deleted)
         writeCommit("replace-cdc",
-          ReplaceContent(untouched, keepFiles ++ replFiles), baseV,
-          changeFiles = replFiles, deleteFiles = delFiles)
+          ReplaceContent(untouched, (keepFiles ++ replFiles).map(_.path)), baseV,
+          keepFiles ++ replFiles, changeFiles = replFiles.map(_.path),
+          deleteFiles = delFiles.map(_.path))
       } else {
         val added = writeFiles(keep.unionByName(repl))
-        writeCommit("replace", ReplaceContent(untouched, added), baseV)
+        writeCommit("replace", ReplaceContent(untouched, added.map(_.path)), baseV, added)
       }
     } finally if (ownedCache) keys.unpersist()
   }
@@ -1769,9 +1711,9 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val persisted = snap.map(manifestBoundsOf).getOrElse(Map.empty)
     val rows = snap.map(_.fileRows).getOrElse(Map.empty)
     files.map { f =>
-      // a zero-row file (Spark's schema-only artifact) has no blocks
-      // and so no recorded columns — its bounds are the empty range
-      // for EVERY column
+      // a zero-row file (the schema-only file Spark's writer left for
+      // an empty write) has no blocks and so no recorded columns — its
+      // bounds are the empty range for EVERY column
       f -> (if (rows(f) == 0L) Some((Long.MaxValue, Long.MinValue))
         else persisted(f).get(stored(f)))
     }
@@ -1875,15 +1817,6 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       .parquet(files.map(f => s"$dataDir/$f"): _*)
   }
 
-  /** Logical projection over arbitrary live files, PARTITION-SPEC- and
-    * RENAME-aware: files are grouped by the spec they were written
-    * under AND by their stored-name epoch (which renames they predate),
-    * each group is read with its own directory layout and its own
-    * stored column names, aliased to the current logical names, then
-    * unioned — how every logical-level consumer survives a partition
-    * evolution or a column rename (a never-evolved table is one group
-    * and takes the plain path).
-    */
   /** Relative-to-dataDir path of the row's source file, from the
     * parquet `_metadata` hidden column — the provenance half of a
     * position delete's (file, pos) identity.
@@ -1894,6 +1827,15 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       java.util.regex.Pattern.quote(s"$dataDir/")), 2)
   }
 
+  /** Logical projection over arbitrary live files, PARTITION-SPEC- and
+    * RENAME-aware: files are grouped by the spec they were written
+    * under AND by their stored-name epoch (which renames they predate),
+    * each group is read with its own directory layout and its own
+    * stored column names, aliased to the current logical names, then
+    * unioned — how every logical-level consumer survives a partition
+    * evolution or a column rename (a never-evolved table is one group
+    * and takes the plain path).
+    */
   private def readFilesLogicalSpecAware(files: Seq[String], logical: StructType,
       snap: Option[CommitMeta], withPos: Boolean = false,
       renameLog: Option[Seq[(Int, String, String)]] = None): DataFrame = {
@@ -1957,60 +1899,6 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       }
       .reduce(_.unionByName(_))
   }
-
-  /** Row count of freshly written files from the parquet footers — a
-    * metadata read, never a data scan. This is what keeps a commit O(1)
-    * in table size: Iceberg records the same per-file counts in its
-    * manifests from write metrics rather than re-reading the data.
-    */
-  private def footerRowCount(files: Seq[String]): Long =
-    files.map(footerStats(_)._1).sum
-
-  /** One footer open per (immutable) file: row count + `[min, max]` of
-    * every column whose statistics decode as INT64 — the write-time
-    * harvest that feeds the manifest entries, so range pruning
-    * ([[classifyLiveFiles]]) and watermark reads ([[columnMaxMicros]])
-    * later resolve from the metadata log with ZERO data-file footer
-    * IO (Iceberg records the same bounds in its manifests from write
-    * metrics). An all-null column records the empty range (MaxValue,
-    * MinValue); unusable stats (missing, non-INT64, null-count unknown)
-    * omit the column. Cached per handle so append's zero-row check and
-    * writeCommit share a single open.
-    */
-  private def footerStats(file: String): (Long, Seq[ColumnBound]) =
-    footerStatsCache.getOrElseUpdate(file, {
-      GraftTable.footerProbeCount.incrementAndGet()
-      val conf = spark.sessionState.newHadoopConf()
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(s"$dataDir/$file"), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        var rows = 0L
-        val lo = scala.collection.mutable.Map[String, Long]()
-        val hi = scala.collection.mutable.Map[String, Long]()
-        val seen = scala.collection.mutable.Set[String]()
-        val bad = scala.collection.mutable.Set[String]()
-        r.getFooter.getBlocks.asScala.foreach { b =>
-          rows += b.getRowCount
-          b.getColumns.asScala.foreach { c =>
-            val name = c.getPath.toDotString
-            seen += name
-            val s = c.getStatistics
-            if (s == null) bad += name
-            else if (s.hasNonNullValue) (s.genericGetMin, s.genericGetMax) match {
-              case (mn: java.lang.Long, mx: java.lang.Long) =>
-                lo(name) = math.min(lo.getOrElse(name, Long.MaxValue), mn)
-                hi(name) = math.max(hi.getOrElse(name, Long.MinValue), mx)
-              case _ => bad += name // non-INT64: no orderable bounds kept
-            }
-            else if (!(s.isNumNullsSet && s.getNumNulls == b.getRowCount)) bad += name
-          }
-        }
-        val bounds = seen.diff(bad).toSeq.sorted.map(n => ColumnBound(n,
-          lo.getOrElse(n, Long.MaxValue), hi.getOrElse(n, Long.MinValue)))
-        (rows, bounds)
-      } finally r.close()
-    })
 
   // ---- streaming sink bookkeeping ----
 
@@ -2081,30 +1969,6 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
 
   // ---- maintenance ----
 
-  /** M7 — binpack compaction: files already near `targetBytes` carry
-    * into the new commit BY NAME; only under-sized files are read,
-    * merged, and rewritten (reference threshold 128 MB,
-    * maintenance.sh:66-67; Iceberg's rewrite_data_files binpack makes
-    * the same split). At 100 TB this is what keeps a maintenance pass
-    * O(small files), not O(table). Partition layout is preserved —
-    * the rewrite repartitions by partition value before writing.
-    *
-    * Exception: merge-on-read tables compact EVERYTHING — compaction
-    * doubles as the merge materializer there, and carrying a file by
-    * name would leave it on an older sequence than the rewrite,
-    * manufacturing a bogus latest-wins ordering.
-    */
-  /** True iff a compaction at `targetBytes` would actually IMPROVE the
-    * table — the gate must converge, so it asks "would compacting
-    * reduce anything", not "are files small":
-    *  - merge-on-read: >1 SEQUENCE GROUP among live files (compaction
-    *    materializes the latest-wins merge; a multi-file single-group
-    *    table is already merged and stays untouched);
-    *  - copy-on-write: merging the under-sized files would yield FEWER
-    *    files than they currently occupy (3×100 MB at a 128 MB target
-    *    can't improve and must not re-flag forever).
-    * A maintenance sweep uses this to skip clean tables.
-    */
   /** Live files storing pre-rename column names (under the CURRENT
     * schema and log) — compaction migrates them like stale-spec files.
     */
@@ -2127,6 +1991,41 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     }
   }
 
+  /** Live files of an unpartitioned sorted table whose ranges of the
+    * leading sort column overlap another live file's. The writer gives
+    * each such file a disjoint slice of that column (see [[writeFiles]])
+    * so a range read opens O(window) files; appends written apart
+    * overlap, and compaction re-sorts them. Files without usable
+    * bounds on the column are left out.
+    */
+  private def overlappingSortedFiles(snap: CommitMeta): Set[String] =
+    if (currentPartitions.nonEmpty || defn.sortOrder.isEmpty) Set.empty
+    else {
+      val ranges = boundsByFile(Some(snap), snap.files, storedColumnByFile(defn.sortOrder.head))
+        .collect { case (f, Some((lo, hi))) if lo <= hi => (f, lo, hi) }
+        .sortBy(_._2)
+      // runs of transitively overlapping ranges, swept in `lo` order
+      val runs = ranges.foldLeft(List.empty[(Long, List[String])]) {
+        case ((runHi, fs) :: rest, (f, lo, hi)) if lo <= runHi =>
+          (math.max(runHi, hi), f :: fs) :: rest
+        case (acc, (f, _, hi)) => (hi, List(f)) :: acc
+      }
+      runs.flatMap { case (_, fs) => if (fs.size > 1) fs else Nil }.toSet
+    }
+
+  /** True iff a compaction at `targetBytes` would actually IMPROVE the
+    * table — the gate must converge, so it asks "would compacting
+    * reduce anything", not "are files small":
+    *  - merge-on-read: >1 SEQUENCE GROUP among live files (compaction
+    *    materializes the latest-wins merge; a multi-file single-group
+    *    table is already merged and stays untouched);
+    *  - copy-on-write: merging the under-sized files would yield FEWER
+    *    files than they currently occupy (3×100 MB at a 128 MB target
+    *    can't improve and must not re-flag forever), or an unpartitioned
+    *    sorted table has files whose sorted slices overlap (the
+    *    range-distributed rewrite leaves them disjoint).
+    * A maintenance sweep uses this to skip clean tables.
+    */
   def needsCompaction(targetBytes: Long = 128L * 1024 * 1024): Boolean = {
     val cs = commits
     val live = cs.lastOption.map(_.files).getOrElse(Nil)
@@ -2144,6 +2043,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       // pending tombstones also compact away (readLogical folds them in)
       live.map(firstSeenByFile(cs)).distinct.size > 1 || morPending
     } else if (posPending) true // pending position deletes materialize away
+    else if (cs.lastOption.exists(overlappingSortedFiles(_).nonEmpty)) true
     else {
       val small = live.filter(f => new File(s"$dataDir/$f").length() < targetBytes * 9 / 10)
       val smallBytes = small.map(f => new File(s"$dataDir/$f").length()).sum
@@ -2152,6 +2052,19 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     }
   }
 
+  /** M7 — binpack compaction: files already near `targetBytes` carry
+    * into the new commit BY NAME; only under-sized files are read,
+    * merged, and rewritten (reference threshold 128 MB,
+    * maintenance.sh:66-67; Iceberg's rewrite_data_files binpack makes
+    * the same split). At 100 TB this is what keeps a maintenance pass
+    * O(small files), not O(table). Partition layout is preserved —
+    * the rewrite repartitions by partition value before writing.
+    *
+    * Exception: merge-on-read tables compact EVERYTHING — compaction
+    * doubles as the merge materializer there, and carrying a file by
+    * name would leave it on an older sequence than the rewrite,
+    * manufacturing a bogus latest-wins ordering.
+    */
   def compact(targetBytes: Long = 128L * 1024 * 1024): CommitMeta = {
     val snap = commits.lastOption
     val live = snap.map(_.files).getOrElse(Nil)
@@ -2160,6 +2073,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       .getOrElse(Map.empty[String, Seq[PartitionTransform]]
         .withDefaultValue(defn.partitions))
     val staleNames = snap.map(staleNamedFiles).getOrElse(Set.empty)
+    val overlapping = snap.map(overlappingSortedFiles).getOrElse(Set.empty)
     // files referenced by pending position deletes must rewrite (with
     // the tombstones applied) — an unreferenced file still carries by
     // name, so a small predicate delete compacts O(touched files)
@@ -2172,12 +2086,13 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       if (defn.mergeOnRead) (Nil, live)
       // a file carries by name only if it is big enough AND on the
       // current partition spec AND stores the current column names AND
-      // holds no position-deleted rows — compaction doubles as the
-      // layout/name/delete migrator after an evolution, rename, or
-      // predicate delete
+      // holds no position-deleted rows AND keeps its sorted slice
+      // disjoint — compaction doubles as the layout/name/delete/sort
+      // migrator after an evolution, rename, predicate delete, or
+      // overlapping sorted appends
       else live.partition(f => new File(s"$dataDir/$f").length() >= targetBytes * 9 / 10 &&
         PartitionTransform.specDdl(byFile(f)) == curSpec &&
-        !staleNames.contains(f) && !posRefs.contains(f))
+        !staleNames.contains(f) && !posRefs.contains(f) && !overlapping.contains(f))
     val smallBytes = small.map(f => new File(s"$dataDir/$f").length()).sum
     val nFiles = math.max(1, math.ceil(smallBytes.toDouble / targetBytes).toInt)
     val df =
@@ -2196,8 +2111,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // position) into the rewrite; a content-preserving rewrite, so it
     // replays over interleaved appends (validateIntent re-checks its
     // inputs are still live)
-    writeCommit("compact", RewriteFiles(small.toSet, added),
-      snap.map(_.version).getOrElse(0),
+    writeCommit("compact", RewriteFiles(small.toSet, added.map(_.path)),
+      snap.map(_.version).getOrElse(0), added,
       morDeletes = (_, _) => Map.empty, posDeletes = (_, _) => Map.empty)
   }
 
@@ -2286,12 +2201,12 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
           .repartitionByRange(math.max(nFiles, 2), (pcols :+ col("__z")): _*)
           .sortWithinPartitions((pcols :+ col("__z")): _*)
           .select(currentSchema.fieldNames.map(col) ++ pcols: _*)
-        writePhysical(shaped)
+        writeRows(shaped, partCols)
       }
     // the clustering rewrite reads the visible state and replaces every
     // file — pending tombstones (either kind) are materialized
-    writeCommit("zorder", RewriteFiles(live.toSet, added),
-      zbase.map(_.version).getOrElse(0),
+    writeCommit("zorder", RewriteFiles(live.toSet, added.map(_.path)),
+      zbase.map(_.version).getOrElse(0), added,
       morDeletes = (_, _) => Map.empty, posDeletes = (_, _) => Map.empty)
   }
 
@@ -2563,7 +2478,6 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     orphans.size
   }
 
-  /** S10 — the `$snapshots` metadata table. */
   /** Incremental changelog scan — the Iceberg incremental-append /
     * changelog-scan analog (the reference's iceberg/tables YAMLs are
     * consumed downstream exactly this way by its materialization
@@ -2583,8 +2497,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * or re-read), so a consumer tailing the table pays O(new data) per
     * poll — never O(table). Pure layout rewrites (`compact`, `zorder`)
     * change nothing logical and are skipped. Blind rewrites
-    * (`overwrite`, COW `upsert`, `replace`) THROW: their file delta is
-    * the merged result, not the change set, and emitting it would be
+    * (`overwrite`, `replace`) THROW: their file delta is the merged
+    * result, not the change set, and emitting it would be
     * silently wrong — the same reason Iceberg's incremental append
     * scan refuses non-append snapshots. Changelog consumers pair with
     * merge-on-read tables, where every commit's delta IS its batch.
@@ -2697,14 +2611,13 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     *
     * Per-op delta `(commit, addedFiles, deletedFiles)`:
     * `append`/`upsert-mor` commits added exactly `files − predecessor's
-    * files` (no deletes); a copy-on-write `upsert` that recorded its
-    * batch's files names them (`changeFiles` — the survivors' rewritten
-    * files are NOT changes); a change-tracked repair (`replace-cdc`)
-    * names its replacement files AND its delete files; layout-only
-    * rewrites (`compact`, `zorder`) change nothing logical and
-    * contribute an empty delta. Everything else refuses: a blind
-    * rewrite's file delta is the merged result, not the change set,
-    * and a pre-changeFiles upsert json no longer knows its batch.
+    * files` (no deletes); a copy-on-write `upsert` names its batch's
+    * files (`changeFiles` — the survivors' rewritten files are NOT
+    * changes); a change-tracked repair (`replace-cdc`) names its
+    * replacement files AND its delete files; layout-only rewrites
+    * (`compact`, `zorder`) change nothing logical and contribute an
+    * empty delta. Everything else refuses: a blind rewrite's file
+    * delta is the merged result, not the change set.
     *
     * Gap rule: every version in the range AND each one's predecessor
     * must still be in the log (the delta is files-minus-predecessor).
@@ -2739,7 +2652,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         c.op match {
           case "append" | "upsert-mor" =>
             (c, c.files.filterNot(prevFiles), Nil: Seq[String])
-          case "upsert" if c.changeFiles.nonEmpty =>
+          case "upsert" =>
             (c, c.changeFiles, Nil: Seq[String])
           case "replace-cdc" =>
             (c, c.changeFiles, c.deleteFiles)
@@ -2770,6 +2683,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     Right(deltas)
   }
 
+  /** S10 — the `$snapshots` metadata table. */
   def snapshots: DataFrame = {
     val schema = StructType(Seq(
       StructField("version", IntegerType, nullable = false),
@@ -2859,53 +2773,13 @@ object GraftTable {
     */
   val PosDeleteBroadcastBytes: Long = 32L * 1024 * 1024
 
-  /** Count of parquet footers opened (`footerStats` cache misses) —
-    * one per file a commit adds. Reads resolve bounds from the manifest
-    * entries, so tests pin that pruned reads and watermark lookups
-    * leave this untouched.
+  /** Count of file-stats harvests: one per file the table writer
+    * writes (its rows and bounds come from the footer it just wrote),
+    * none on any read. Reads resolve bounds from the manifest entries,
+    * so tests pin that pruned reads and watermark lookups leave this
+    * untouched.
     */
   val footerProbeCount = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Per-session depth of in-flight graft writes, guarding the
-    * `spark.sql.parquet.outputTimestampType = TIMESTAMP_MICROS` scope
-    * (the table layer depends on ordered INT64 footer min/max for its
-    * manifest bounds; the INT96 session default has no usable stats).
-    * The conf is SESSION state, so with concurrent writers a naive
-    * per-write set/restore races: writer A's restore can land between
-    * writer B's set and B's write-job conf capture, handing B INT96
-    * and silently stripping B's files of their write-time bounds.
-    * Reference-counted instead: set on the first concurrent write in
-    * a session, restore only when the last one exits. Keyed per
-    * session (cloned sessions — the DML runner's — have their own
-    * SQLConf).
-    */
-  private val microsDepth =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, Integer]()
-  private val microsPrior =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, Option[String]]()
-  private val MicrosKey = "spark.sql.parquet.outputTimestampType"
-  private[tables] def withMicrosTimestamps[T](spark: SparkSession)(f: => T): T = {
-    microsDepth.synchronized {
-      val d: Int = Option(microsDepth.get(spark)).fold(0)(_.intValue)
-      if (d == 0) {
-        microsPrior.put(spark, spark.conf.getOption(MicrosKey))
-        spark.conf.set(MicrosKey, "TIMESTAMP_MICROS")
-      }
-      microsDepth.put(spark, d + 1)
-    }
-    try f
-    finally microsDepth.synchronized {
-      val d: Int = microsDepth.get(spark).intValue - 1
-      if (d == 0) {
-        microsDepth.remove(spark)
-        microsPrior.remove(spark) match {
-          case Some(v) => spark.conf.set(MicrosKey, v)
-          case None => spark.conf.unset(MicrosKey)
-          case null => ()
-        }
-      } else microsDepth.put(spark, d)
-    }
-  }
 
   /** Lost-CAS retry count across all tables (diagnostic — pipebench
     * reports it per run as `tables.cas_retries`).

@@ -92,29 +92,6 @@ class CdcConsumerSpec extends AnyFunSuite {
     assert(snapshot(mv) == Map("x" -> (1L, 900L), "y" -> (2L, 500L)))
   }
 
-  test("untracked COW upsert: one merged write, changelog refuses that commit") {
-    // a KEYED source this time — upsert needs identifier keys
-    val cat = new TableCatalog(spark, freshRoot("untracked"), Seq(
-      TableDef("src", srcSchema, keys = Seq("id")),
-      TableDef("agg", aggSchema, keys = Seq("typ"))))
-    val src = cat.table("src")
-    val mv = cat.table("agg")
-    val c = new CdcAggConsumer(spark, src, mv, Seq("typ"), "value")
-    src.append(rows((1, "x", 1.0), (2, "y", 2.0)))
-    c.poll()
-    src.upsert(rows((1, "x", 9.0)), trackChanges = false)
-    // same logical result as the tracked form...
-    assert(src.readLogical().filter(col("typ") === "x")
-      .collect().map(_.getDouble(2)).toSeq == Seq(9.0))
-    // ...but no change set: the single merged file is the whole commit
-    assert(src.commits.last.changeFiles.isEmpty)
-    intercept[IllegalArgumentException] { src.readChanges(1, 2) }
-    val e = intercept[IllegalArgumentException] { c.poll() }
-    assert(e.getMessage.contains("not incrementally foldable"))
-    c.rebuild()
-    assert(snapshot(mv) == Map("x" -> (1L, 900L), "y" -> (1L, 200L)))
-  }
-
   test("changelog gap refuses loudly; rebuild() is the resync") {
     val (src, mv, c) = rig("gap")
     src.append(rows((1, "x", 1.0)))
