@@ -512,7 +512,7 @@ object StorageOps {
     val cut = lit("2024-01-16").cast("timestamp")
     tbl.append(src.filter(col("ts") < cut))
     tbl.append(src.filter(col("ts") >= cut))
-    tbl.compact(targetBytes = 64L * 1024) // v3: layout-only
+    tbl.compact() // v3: layout-only (both appends merge into one file)
     def leg(n: Int, from: Int, to: Int) =
       tbl.readChanges(from, to).withColumn("leg", lit(n))
     leg(1, 0, 1).unionByName(leg(2, 1, 2)).unionByName(leg(3, 2, 3))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.materialize.CdcAggConsumer
 import graft.tables.GraftTable
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streamed producer→changelog→consumer loop: each micro-batch APPENDS
@@ -30,9 +30,10 @@ object CdcIngest {
 
   val SinkId = "cdc_ingest"
 
-  /** `pollEvery`: consumer poll cadence in micro-batches. The consumer
-    * folds ALL commits since its mark in one changelog window, so the
-    * poll cadence decouples from the ingest cadence — exactly how a
+  /** `pollEvery`: consumer poll cadence in micro-batch ids (a batch with
+    * no rows runs no body, so it skips its poll). The consumer folds
+    * ALL commits since its mark in one changelog window, so the poll
+    * cadence decouples from the ingest cadence — exactly how a
     * production changelog consumer runs on its own schedule. Each poll
     * pays a fixed join+commit floor on top of its O(delta) read, so
     * polling every batch doubles the twin's commit count for no extra
@@ -41,11 +42,8 @@ object CdcIngest {
     */
   def run(events: DataFrame, src: GraftTable, consumer: CdcAggConsumer,
       checkpoint: String, pollEvery: Int = 2): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        Sinks.exactlyOnce(src, SinkId, batchId)(src.append(batch))
-        if (batchId % pollEvery == pollEvery - 1) consumer.poll(): Unit
-      }
-      .start()
+    Sinks.start(events, checkpoint) { (batch, batchId) =>
+      Sinks.exactlyOnce(src, SinkId, batchId)(src.append(batch))
+      if (batchId % pollEvery == pollEvery - 1) consumer.poll(): Unit
+    }
 }

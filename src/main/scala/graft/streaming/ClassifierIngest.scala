@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.ClassifierScoring
 import graft.tables.{GraftTable, TableDef}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -32,19 +32,8 @@ object ClassifierIngest {
     */
   def dictionaryAppend(docs: DataFrame, dict: GraftTable,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // skip empty micro-batches at the source (Sinks.scala
-        // discipline): an unguarded append still runs a write job per
-        // idle batch
-        if (!batch.isEmpty)
-          Sinks.exactlyOnce(dict, "clfDictAppend", batchId) {
-            dict.append(ClassifierScoring.dictionary(batch.toDF()))
-          }
-      }
-      .start()
+    Sinks.into(docs, dict, "clfDictAppend", checkpoint)(b =>
+      dict.append(ClassifierScoring.dictionary(b)))
 
   /** The merged dictionary (sum over the per-batch partials). */
   def mergedDictionary(dict: GraftTable): DataFrame =

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.{SharedHash, SimhashSignature}
 import graft.tables.GraftTable
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -65,23 +65,15 @@ object CorpusIngest {
       clean: GraftTable,
       rejected: GraftTable,
       checkpoint: String): StreamingQuery =
-    dedupedEnrich(docs).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.persist()
-        try {
-          val isReject = col("reject_reason").isNotNull
-          // one guard per table: a crash mid-fan-out replays only the
-          // sinks that missed this batch
-          Sinks.exactlyOnce(clean, "corpusIngest", batchId) {
-            clean.append(batch.filter(!isReject).drop("reject_reason"))
-          }
-          Sinks.exactlyOnce(rejected, "corpusIngest", batchId) {
-            rejected.append(batch.filter(isReject))
-          }
-        } finally batch.unpersist()
-        ()
+    Sinks.start(dedupedEnrich(docs), checkpoint) { (batch, batchId) =>
+      val isReject = col("reject_reason").isNotNull
+      // one guard per table: a crash mid-fan-out replays only the
+      // sinks that missed this batch
+      Sinks.exactlyOnce(clean, "corpusIngest", batchId) {
+        clean.append(batch.filter(!isReject).drop("reject_reason"))
       }
-      .start()
+      Sinks.exactlyOnce(rejected, "corpusIngest", batchId) {
+        rejected.append(batch.filter(isReject))
+      }
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.DsirScoring
 import graft.tables.{GraftTable, TableDef}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
@@ -35,17 +35,8 @@ object DsirIngest {
     */
   def countsAppend(docs: DataFrame, counts: GraftTable,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (batch.isEmpty) ()
-        else Sinks.exactlyOnce(counts, "dsirCountsAppend", batchId) {
-          counts.append(
-            DsirScoring.bucketCounts(DsirScoring.featureBuckets(batch.toDF())))
-        }
-      }
-      .start()
+    Sinks.into(docs, counts, "dsirCountsAppend", checkpoint)(b =>
+      counts.append(DsirScoring.bucketCounts(DsirScoring.featureBuckets(b))))
 
   /** The merged statistics (sum over the per-batch partials). */
   def mergedCounts(counts: GraftTable): DataFrame =

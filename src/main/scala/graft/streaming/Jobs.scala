@@ -3,7 +3,7 @@ package graft.streaming
 import graft.model.OpenRtb._
 import graft.rtb.RtbIngest
 import graft.tables.{DayTransform, GraftTable, TableCatalog, TableDef}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -102,40 +102,23 @@ object Jobs {
     val imps = cat.table(impressionsTable)
     val clks = cat.table(clicksTable)
 
-    val requestsQ = requests
+    val flatRequests = RtbIngest.flattenRequests(requests
       .withColumn("event_ts", RtbIngest.parseTs(col("event_timestamp")))
       .withWatermark("event_ts", "30 seconds") // S2 (create_tables.sql:73)
-      .drop("event_ts")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/requests")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val flat = RtbIngest.flattenRequests(batch).persist()
-        try {
-          Sinks.exactlyOnce(clean, "ingest", batchId) {
-            clean.append(RtbIngest.cleanRequests(flat))
-          }
-          Sinks.exactlyOnce(rejected, "ingest", batchId) {
-            rejected.append(RtbIngest.rejectedRequests(flat))
-          }
-        } finally flat.unpersist()
-        ()
+      .drop("event_ts"))
+    val requestsQ = Sinks.start(flatRequests, s"$checkpointRoot/requests") { (flat, batchId) =>
+      Sinks.exactlyOnce(clean, "ingest", batchId) {
+        clean.append(RtbIngest.cleanRequests(flat))
       }
-      .start()
+      Sinks.exactlyOnce(rejected, "ingest", batchId) {
+        rejected.append(RtbIngest.rejectedRequests(flat))
+      }
+    }
 
     def appendQ(src: DataFrame, table: GraftTable, name: String,
         transform: DataFrame => DataFrame): StreamingQuery =
-      src
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$checkpointRoot/$name")
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          Sinks.exactlyOnce(table, "ingest", batchId) {
-            table.append(transform(batch))
-          }
-          ()
-        }
-        .start()
+      Sinks.into(src, table, "ingest", s"$checkpointRoot/$name")(b =>
+        table.append(transform(b)))
 
     IngestionPipeline(Seq(
       requestsQ,
@@ -260,19 +243,12 @@ object Jobs {
     val geo = cat.table(geoTable)
     val spark = clean.spark
 
-    // tail a stored table as a file stream (recursive lookup: partition
-    // dirs hold the files; every logical column lives in the data files)
-    def tail(t: GraftTable): DataFrame = spark.readStream
-      .schema(t.defn.schema)
-      .option("recursiveFileLookup", "true")
-      .parquet(t.dataPath)
-
-    val r = tail(clean)
+    val r = Sinks.tail(clean)
       .select(col("request_id"), col("device_geo_country").as("country"), col("event_ts"))
       .withWatermark("event_ts", "30 seconds")
       .dropDuplicatesWithinWatermark("request_id") // per-imp rows + injected dups
       .alias("r")
-    val i = tail(imps)
+    val i = Sinks.tail(imps)
       .select(col("impression_id"), col("request_id"), col("win_price"), col("event_ts"))
       .withWatermark("event_ts", "30 seconds")
       .dropDuplicatesWithinWatermark("impression_id")
@@ -285,20 +261,11 @@ object Jobs {
       .select(col("i.impression_id"), col("i.request_id"), col("r.country"),
         col("i.win_price"), col("i.event_ts"))
 
-    val pairsQ = joined.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/pairs")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        Sinks.exactlyOnce(pairs, "agg", batchId) {
-          if (!batch.isEmpty) pairs.append(batch)
-        }
-        ()
-      }
-      .start()
+    val pairsQ = Sinks.into(joined, pairs, "agg", s"$checkpointRoot/pairs")(pairs.append)
 
     // cent-exact win spend: win prices are cent-denominated, so the sum
     // is order-independent as a long (a double sum's rounding would not be)
-    val aggQ = tail(pairs)
+    val hourly = Sinks.tail(pairs)
       .withWatermark("event_ts", "30 seconds")
       // window() grouping, not a derived date_trunc column — the
       // streaming agg's state schema only resolves the blessed window
@@ -309,23 +276,13 @@ object Jobs {
         sum(round(col("win_price") * 100).cast("long")).as("total_win_cents"))
       .select(col("window.start").as("hour"), col("country"),
         col("n_impressions"), col("total_win_cents"))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$checkpointRoot/geo")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // detach from the streaming plan before the upsert: the COW
-        // upsert joins the batch against the table AND unions it, and
-        // the doubly-referenced micro-batch agg plan trips AQE exchange
-        // reuse (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND binding the partial
-        // agg output); an RDD boundary gives the reused subtree stable
-        // attributes
-        val stable = spark.createDataFrame(batch.rdd, batch.schema)
-        Sinks.exactlyOnce(geo, "agg", batchId) {
-          if (!stable.isEmpty) geo.upsert(stable)
-        }
-        ()
-      }
-      .start()
+    // detach from the streaming plan before the upsert: the COW upsert
+    // joins the batch against the table AND unions it, and the
+    // doubly-referenced micro-batch agg plan trips AQE exchange reuse
+    // (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND binding the partial agg
+    // output); an RDD boundary gives the reused subtree stable attributes
+    val aggQ = Sinks.into(hourly, geo, "agg", s"$checkpointRoot/geo", "update")(b =>
+      geo.upsert(spark.createDataFrame(b.rdd, b.schema)))
 
     IngestionPipeline(Seq(pairsQ, aggQ))
   }
@@ -370,26 +327,13 @@ object Jobs {
       checkpointRoot: String): IngestionPipeline = {
     val summary = cat.table(funnelSummaryTable)
     val rollup = cat.table(funnelRollupTable)
-    val spark = summary.spark
 
-    val summaryQ = RtbFunnel.funnelSummaries(
-      RtbFunnel.stageEvents(requests, responses, impressions, clicks))
-      .toDF()
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/funnel_summary")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        Sinks.exactlyOnce(summary, "funnel", batchId) {
-          if (!batch.isEmpty) summary.append(batch)
-        }
-        ()
-      }
-      .start()
+    val summaryQ = Sinks.into(
+      RtbFunnel.funnelSummaries(
+        RtbFunnel.stageEvents(requests, responses, impressions, clicks)).toDF(),
+      summary, "funnel", s"$checkpointRoot/funnel_summary")(summary.append)
 
-    val rollupQ = spark.readStream
-      .schema(summary.defn.schema)
-      .option("recursiveFileLookup", "true")
-      .parquet(summary.dataPath)
+    val rollups = Sinks.tail(summary)
       .withWatermark("r_ts", FunnelState.RollupDelay)
       .groupBy(window(col("r_ts"), "1 hour"))
       .agg(count(lit(1)).as("n_requests"),
@@ -398,16 +342,8 @@ object Jobs {
         sum(col("n_clicks")).as("n_clicks"))
       .select(col("window.start").as("hour"), col("n_requests"),
         col("n_responses"), col("n_impressions"), col("n_clicks"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/funnel_rollup")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        Sinks.exactlyOnce(rollup, "funnel", batchId) {
-          if (!batch.isEmpty) rollup.append(batch)
-        }
-        ()
-      }
-      .start()
+    val rollupQ = Sinks.into(rollups, rollup, "funnel",
+      s"$checkpointRoot/funnel_rollup")(rollup.append)
 
     IngestionPipeline(Seq(summaryQ, rollupQ))
   }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.tables.{GraftTable, TableDef}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -43,16 +43,8 @@ object KeepBestIngest {
 
   /** `(doc_id, source, text)` stream → exactly-once partial appends. */
   def run(docs: DataFrame, partials: GraftTable, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        Sinks.exactlyOnce(partials, "keepBestAppend", batchId) {
-          if (!batch.isEmpty) partials.append(partialsOf(batch.toDF()))
-        }
-        ()
-      }
-      .start()
+    Sinks.into(docs, partials, "keepBestAppend", checkpoint)(b =>
+      partials.append(partialsOf(b)))
 
   /** The batch operator's exact output from the streamed partials:
     * winner = min over per-source bests under (src_rank, doc_id),

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.LmScoring
 import graft.tables.{GraftTable, TableDef}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -46,26 +46,17 @@ object LmIngest {
     */
   def dictionaryAppend(docs: DataFrame, uni: GraftTable, big: GraftTable,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // skip empty micro-batches at the source (Sinks.scala
-        // discipline) — see TemperatureIngest.countsAppend
-        if (batch.isEmpty) ()
-        else {
-        val tok = LmScoring.trainSlice(LmScoring.tokenize(batch.toDF())).cache()
-        try {
-          Sinks.exactlyOnce(uni, "lmUniAppend", batchId) {
-            uni.append(LmScoring.unigramCounts(tok))
-          }
-          Sinks.exactlyOnce(big, "lmBigAppend", batchId) {
-            big.append(LmScoring.bigramCounts(tok))
-          }
-        } finally { tok.unpersist(); () }
+    Sinks.start(docs, checkpoint) { (batch, batchId) =>
+      val tok = LmScoring.trainSlice(LmScoring.tokenize(batch)).cache()
+      try {
+        Sinks.exactlyOnce(uni, "lmUniAppend", batchId) {
+          uni.append(LmScoring.unigramCounts(tok))
         }
-      }
-      .start()
+        Sinks.exactlyOnce(big, "lmBigAppend", batchId) {
+          big.append(LmScoring.bigramCounts(tok))
+        }
+      } finally { tok.unpersist(); () }
+    }
 
   /** The merged dictionaries (sum over the per-batch partials). */
   def mergedUnigrams(uni: GraftTable): DataFrame =

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.DedupOps
 import graft.tables.{GraftTable, IdentityTransform, TableDef}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -51,17 +51,8 @@ object NearDupIngest {
     */
   def bandAppend(docs: DataFrame, table: GraftTable,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        Sinks.exactlyOnce(table, "lshBandAppend", batchId) {
-          if (!batch.isEmpty)
-            table.append(DedupOps.bandKeys(batch.toDF()))
-        }
-        ()
-      }
-      .start()
+    Sinks.into(docs, table, "lshBandAppend", checkpoint)(b =>
+      table.append(DedupOps.bandKeys(b)))
 
   /** Near-dup candidates for `newDocs` against everything indexed so
     * far: band the probes with the same shared body, equi-join on

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.SearchOps
 import graft.tables.{BucketTransform, GraftTable, TableDef}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -101,26 +101,19 @@ object PostingsIngest {
     */
   def indexAppend(docs: DataFrame, postings: GraftTable, docStats: GraftTable,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // two tables, one marker each: a retry after a crash between the
-        // two commits skips the already-marked table and lands the other
-        Sinks.exactlyOnce(postings, "postingsAppend", batchId) {
-          if (!batch.isEmpty)
-            postings.append(
-              SearchOps.tokenize(batch.toDF())
-                .groupBy(col("term"), col("doc_id"))
-                .agg(count(lit(1)).as("tf")))
-        }
-        Sinks.exactlyOnce(docStats, "docStatsAppend", batchId) {
-          if (!batch.isEmpty)
-            docStats.append(batch.toDF().select(col("doc_id"), dlCol))
-        }
-        ()
+    Sinks.start(docs, checkpoint) { (batch, batchId) =>
+      // two tables, one marker each: a retry after a crash between the
+      // two commits skips the already-marked table and lands the other
+      Sinks.exactlyOnce(postings, "postingsAppend", batchId) {
+        postings.append(
+          SearchOps.tokenize(batch)
+            .groupBy(col("term"), col("doc_id"))
+            .agg(count(lit(1)).as("tf")))
       }
-      .start()
+      Sinks.exactlyOnce(docStats, "docStatsAppend", batchId) {
+        docStats.append(batch.select(col("doc_id"), dlCol))
+      }
+    }
 
   /** The corpus statement-set: ONE streamed pass over arriving
     * documents maintains ALL the lexical corpus indexes — postings,
@@ -144,32 +137,24 @@ object PostingsIngest {
   def corpusIndexFanout(docs: DataFrame, postings: GraftTable,
       docStats: GraftTable, cmTable: GraftTable,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.persist()
-        val tfB = SearchOps.tokenize(batch.toDF())
-          .groupBy(col("term"), col("doc_id"))
-          .agg(count(lit(1)).as("tf"))
-          .persist()
-        try {
-          Sinks.exactlyOnce(postings, "fanout.postings", batchId) {
-            if (!batch.isEmpty) postings.append(tfB)
-          }
-          Sinks.exactlyOnce(cmTable, "fanout.cm", batchId) {
-            if (!batch.isEmpty)
-              cmTable.append(graft.functions.SketchOps.cmCellsOfTermCounts(
-                tfB.groupBy(col("term")).agg(sum(col("tf")).as("n"))))
-          }
-          Sinks.exactlyOnce(docStats, "fanout.docStats", batchId) {
-            if (!batch.isEmpty)
-              docStats.append(batch.toDF().select(col("doc_id"), dlCol))
-          }
-        } finally { tfB.unpersist(); batch.unpersist() }
-        ()
-      }
-      .start()
+    Sinks.start(docs, checkpoint) { (batch, batchId) =>
+      val tfB = SearchOps.tokenize(batch)
+        .groupBy(col("term"), col("doc_id"))
+        .agg(count(lit(1)).as("tf"))
+        .persist()
+      try {
+        Sinks.exactlyOnce(postings, "fanout.postings", batchId) {
+          postings.append(tfB)
+        }
+        Sinks.exactlyOnce(cmTable, "fanout.cm", batchId) {
+          cmTable.append(graft.functions.SketchOps.cmCellsOfTermCounts(
+            tfB.groupBy(col("term")).agg(sum(col("tf")).as("n"))))
+        }
+        Sinks.exactlyOnce(docStats, "fanout.docStats", batchId) {
+          docStats.append(batch.select(col("doc_id"), dlCol))
+        }
+      } finally { tfB.unpersist(); () }
+    }
 
   /** BM25 top-k over the maintained index: the query terms' buckets
     * (computed driver-side — no Spark job) prune the postings read to

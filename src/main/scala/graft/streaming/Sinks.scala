@@ -1,12 +1,15 @@
 package graft.streaming
 
-import graft.tables.{GraftTable, SinkTable}
+import graft.tables.GraftTable
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming sinks into the snapshot-log table layer.
   *
+  *  - [[start]] and its one-table form [[into]] — the one micro-batch
+  *    protocol every streaming write to a table runs through, and
+  *    [[tail]] — the one file stream over a table's data;
   *  - [[hourlyUpsert]] — S5/A7: update-mode aggregation committed per
   *    micro-batch as a keyed upsert (the reference's continuously-revised
   *    Iceberg upsert tables, hourly_impressions_by_geo.yml:17-21);
@@ -33,24 +36,54 @@ object Sinks {
     * replay-protected independently); every sink below commits once.
     */
   private[graft] def exactlyOnce(
-      table: SinkTable, sinkId: String, batchId: Long)(commit: => Unit): Unit =
+      table: GraftTable, sinkId: String, batchId: Long)(commit: => Unit): Unit =
     if (batchId > table.lastCommittedBatch(sinkId))
       table.withSinkMark(sinkId, batchId)(commit)
 
-  /** The foreachBatch body of the single-table sinks: persist the batch
-    * (the emptiness guard and the write are two actions, and each would
-    * otherwise re-execute the upstream plan from scratch — stateful
-    * aggregation and state-store reads included), then make the
-    * exactly-once `write` unless the batch is empty.
+  /** The one micro-batch protocol every streaming write to a table runs
+    * through (the Structured Streaming sink contract: a replayable
+    * batch, keyed by its epoch, into idempotent sinks). Each batch is
+    * persisted in at most one partition per core, probed for rows ONCE,
+    * handed to `body` only when it has rows, and unpersisted whatever
+    * `body` does. The persist is what keeps the probe and the writes
+    * from each re-executing the upstream plan — stateful operators and
+    * state-store reads included. An empty batch commits nothing and
+    * marks nothing: its replay carries the same offsets, so it is empty
+    * again. `body` makes its own
+    * [[exactlyOnce]] commits and owns any frame it derives and pins.
     */
-  private def guardedWrite(table: SinkTable, sinkId: String)(
-      write: DataFrame => Unit): (Dataset[Row], Long) => Unit =
-    (batch, batchId) => {
-      batch.persist()
-      try exactlyOnce(table, sinkId, batchId) {
-        if (!batch.isEmpty) write(batch)
-      } finally { batch.unpersist(); () }
-    }
+  def start(stream: DataFrame, checkpoint: String, mode: String = "append")(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        // a batch arrives in as many partitions as its source or its
+        // last shuffle has, often many tiny ones, and building the cache
+        // is one more stage of them: pin it in at most one per core
+        val pinned = batch.coalesce(batch.sparkSession.sparkContext.defaultParallelism)
+          .persist()
+        try if (!pinned.isEmpty) body(pinned, batchId)
+        finally { pinned.unpersist(); () }
+      }
+      .start()
+
+  /** [[start]] into one table: `write` lands the batch under
+    * [[exactlyOnce]] for `sinkId`.
+    */
+  def into(stream: DataFrame, table: GraftTable, sinkId: String, checkpoint: String,
+      mode: String = "append")(write: DataFrame => Unit): StreamingQuery =
+    start(stream, checkpoint, mode)((b, batchId) =>
+      exactlyOnce(table, sinkId, batchId)(write(b)))
+
+  /** A stored table tailed as a file stream — how jobs chain through
+    * storage. Recursive lookup: partition dirs hold the files, and every
+    * logical column lives in the data files.
+    */
+  def tail(t: GraftTable): DataFrame = t.spark.readStream
+    .schema(t.defn.schema)
+    .option("recursiveFileLookup", "true")
+    .parquet(t.dataPath)
 
   /** Continuous hourly aggregation → keyed upsert table. The table MUST
     * be keyed by (window_start, event_type); every micro-batch re-emits
@@ -63,13 +96,9 @@ object Sinks {
     * maintenance cadence). Both strategies are latest-wins-identical —
     * TablesSpec and the s5 oracle pair prove it.
     */
-  def hourlyUpsert(events: DataFrame, table: SinkTable, checkpoint: String): StreamingQuery =
-    EventStreams.tumblingHourly(events)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(guardedWrite(table, "hourlyUpsert")(b => table.upsert(b)))
-      .start()
+  def hourlyUpsert(events: DataFrame, table: GraftTable, checkpoint: String): StreamingQuery =
+    into(EventStreams.tumblingHourly(events), table, "hourlyUpsert", checkpoint, "update")(
+      table.upsert)
 
   /** Continuous SLIDING-window aggregation (W1: 1 h size / 15 min hop)
     * → keyed upsert table — the `rolling_metrics_by_bidder` analog of
@@ -80,26 +109,18 @@ object Sinks {
     * hop multiplies the ROW count (4 windows per event), not the state
     * or commit cost per key.
     */
-  def slidingUpsert(events: DataFrame, table: SinkTable, checkpoint: String): StreamingQuery =
-    EventStreams.sliding(events)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(guardedWrite(table, "slidingUpsert")(b => table.upsert(b)))
-      .start()
+  def slidingUpsert(events: DataFrame, table: GraftTable, checkpoint: String): StreamingQuery =
+    into(EventStreams.sliding(events), table, "slidingUpsert", checkpoint, "update")(
+      table.upsert)
 
   /** Funnel stage 1: per-view summaries → append table. Summary rows
     * are final when emitted (the funnel state only finalizes a view once
     * the watermark proves its match set complete), so append semantics
     * are exact.
     */
-  def funnelSummaryAppend(events: DataFrame, table: SinkTable, checkpoint: String): StreamingQuery =
-    FunnelState.funnelViewSummary(events).toDF()
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(guardedWrite(table, "funnelSummaryAppend")(b => table.append(b)))
-      .start()
+  def funnelSummaryAppend(events: DataFrame, table: GraftTable, checkpoint: String): StreamingQuery =
+    into(FunnelState.funnelViewSummary(events).toDF(), table, "funnelSummaryAppend",
+      checkpoint)(table.append)
 
   /** Funnel stage 2: tail the summary table as a file stream and roll it
     * up hourly (funnel_jobs.sql:66-99) into a FINAL row per window —
@@ -110,29 +131,11 @@ object Sinks {
     * emitted.
     */
   def funnelRollupFromTable(
-      summaryTable: SinkTable,
-      rollupTable: SinkTable,
-      checkpoint: String): StreamingQuery = {
-    val summaries = summaryTable.spark.readStream
-      .schema(summaryTable.defn.schema)
-      .parquet(summaryTable.dataPath)
-    FunnelState.funnelHourly(summaries)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(guardedWrite(rollupTable, "funnelRollupFromTable")(
-        b => rollupTable.append(b)))
-      .start()
-  }
-
-  /** Streaming dedup → append table (A3 + S4 composed). */
-  def dedupAppend(events: DataFrame, table: SinkTable, checkpoint: String): StreamingQuery =
-    EventStreams.dedup(events)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(guardedWrite(table, "dedupAppend")(b => table.append(b)))
-      .start()
+      summaryTable: GraftTable,
+      rollupTable: GraftTable,
+      checkpoint: String): StreamingQuery =
+    into(FunnelState.funnelHourly(tail(summaryTable)), rollupTable,
+      "funnelRollupFromTable", checkpoint)(rollupTable.append)
 
   /** Streaming twin of the histogram quantile sketch
     * ([[graft.functions.SketchOps.approxPercentile]]): every micro-batch
@@ -147,22 +150,10 @@ object Sinks {
     * append is at most groups × occupied-bins rows, and the estimate
     * stage only ever walks the tiny bin table.
     */
-  def quantileSketchAppend(events: DataFrame, table: SinkTable,
+  def quantileSketchAppend(events: DataFrame, table: GraftTable,
       checkpoint: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        exactlyOnce(table, "quantileSketchAppend", batchId) {
-          // guard on the SOURCE batch: bins.isEmpty would run the full
-          // bin aggregation once for the check and again for the append
-          if (!batch.isEmpty)
-            table.append(graft.functions.SketchOps.quantileBins(
-              batch.toDF(), "value", "event_type"))
-        }
-        ()
-      }
-      .start()
+    into(events, table, "quantileSketchAppend", checkpoint)(b =>
+      table.append(graft.functions.SketchOps.quantileBins(b, "value", "event_type")))
 
   /** Streaming twin of the count-min heavy-hitter sketch
     * ([[graft.functions.SketchOps.cmHeavyHitters]]): every micro-batch
@@ -175,27 +166,17 @@ object Sinks {
     * firehose is exactly this: 4096 cells of state total, vs a
     * vocabulary-sized keyed aggregation.
     */
-  def cmSketchAppend(docs: DataFrame, table: SinkTable,
+  def cmSketchAppend(docs: DataFrame, table: GraftTable,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        exactlyOnce(table, "cmSketchAppend", batchId) {
-          // guard on the SOURCE batch (see quantileSketchAppend)
-          if (!batch.isEmpty)
-            table.append(graft.functions.SketchOps.cmCells(batch.toDF()))
-        }
-        ()
-      }
-      .start()
+    into(docs, table, "cmSketchAppend", checkpoint)(b =>
+      table.append(graft.functions.SketchOps.cmCells(b)))
 
   /** Point-query the streamed CM sketch: merge the appended partials
     * (sum per (i, cell)) and take the min over the d probe rows for
     * each queried term — the classic CM estimate, with the same
     * one-sided n_cm ≥ n_exact guarantee the batch query pins.
     */
-  def cmEstimate(table: SinkTable, terms: Seq[String]): DataFrame = {
+  def cmEstimate(table: GraftTable, terms: Seq[String]): DataFrame = {
     import graft.functions.SketchOps.{cmCellOf, CmD}
     val spark = table.spark
     import spark.implicits._
@@ -214,7 +195,7 @@ object Sinks {
     * run the shared CDF-walk estimate — bit-identical to binning the
     * full history in one batch pass, which StreamingSpec pins.
     */
-  def quantilesFromSketchTable(table: SinkTable): DataFrame =
+  def quantilesFromSketchTable(table: GraftTable): DataFrame =
     graft.functions.SketchOps.quantileFromBins(
       table.readLogical()
         .groupBy(col("event_type"), col("bin"))
@@ -228,37 +209,29 @@ object Sinks {
     */
   def multiSinkFanout(
       events: DataFrame,
-      clean: SinkTable,
-      rejected: SinkTable,
-      quality: SinkTable,
+      clean: GraftTable,
+      rejected: GraftTable,
+      quality: GraftTable,
       checkpoint: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.persist()
-        try {
-          val isReject = col("value") < 0 || col("user_id") < 0
-          // one guard PER table: a crash mid-fan-out may leave some
-          // sinks committed and others not; the replay fills only the
-          // gaps instead of double-appending the finished ones
-          exactlyOnce(clean, "fanout", batchId) {
-            clean.append(batch.filter(!isReject))
-          }
-          exactlyOnce(rejected, "fanout", batchId) {
-            rejected.append(
-              batch.filter(isReject).withColumn("reject_reason",
-                when(col("user_id") < 0, "TEST_USER").otherwise("NEGATIVE_VALUE")))
-          }
-          exactlyOnce(quality, "fanout", batchId) {
-            quality.upsert(
-              batch.groupBy(col("event_type"))
-                .agg(count(lit(1)).as("n_total"),
-                  count(when(isReject, 1)).as("n_rejected"))
-                .withColumn("batch_id", lit(batchId)))
-          }
-        } finally batch.unpersist()
-        ()
+    start(events, checkpoint) { (batch, batchId) =>
+      val isReject = col("value") < 0 || col("user_id") < 0
+      // one guard PER table: a crash mid-fan-out may leave some
+      // sinks committed and others not; the replay fills only the
+      // gaps instead of double-appending the finished ones
+      exactlyOnce(clean, "fanout", batchId) {
+        clean.append(batch.filter(!isReject))
       }
-      .start()
+      exactlyOnce(rejected, "fanout", batchId) {
+        rejected.append(
+          batch.filter(isReject).withColumn("reject_reason",
+            when(col("user_id") < 0, "TEST_USER").otherwise("NEGATIVE_VALUE")))
+      }
+      exactlyOnce(quality, "fanout", batchId) {
+        quality.upsert(
+          batch.groupBy(col("event_type"))
+            .agg(count(lit(1)).as("n_total"),
+              count(when(isReject, 1)).as("n_rejected"))
+            .withColumn("batch_id", lit(batchId)))
+      }
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.DedupOps
 import graft.tables.{GraftTable, IdentityTransform, TableDef}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -161,33 +161,22 @@ object SubstringIngest {
     */
   def run(docs: DataFrame, index: GraftTable, stats: GraftTable,
       checkpoint: String, w: Int = DedupOps.SubstringW): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.persist()
-        // gate() runs an eager action (the histHit checkpoint), so it
-        // must sit INSIDE the try: a transient failure there would
-        // otherwise skip the finally and strand the persisted batch
-        // (and a partially-cached marked frame) for the session's life
-        var pinned: DataFrame = null
-        try {
-          val (statsDf, newRows, p) = gate(batch.toDF(), index, w)
-          pinned = p
-          Sinks.exactlyOnce(stats, "substr.stats", batchId) {
-            if (!batch.isEmpty) stats.append(statsDf)
-          }
-          Sinks.exactlyOnce(index, "substr.index", batchId) {
-            if (!batch.isEmpty) index.append(newRows)
-          }
-        } finally {
-          // the gate's marked frame is batch-scoped: without the drop a
-          // long-running stream accumulates one pinned occurrence set
-          // per micro-batch
-          if (pinned != null) pinned.unpersist()
-          batch.unpersist()
+    Sinks.start(docs, checkpoint) { (batch, batchId) =>
+      // gate() unpersists its own marked frame if its eager action
+      // fails; once it returns, the frame is this body's to drop
+      val (statsDf, newRows, pinned) = gate(batch, index, w)
+      try {
+        Sinks.exactlyOnce(stats, "substr.stats", batchId) {
+          stats.append(statsDf)
         }
-        ()
+        Sinks.exactlyOnce(index, "substr.index", batchId) {
+          index.append(newRows)
+        }
+      } finally {
+        // the gate's marked frame is batch-scoped: without the drop a
+        // long-running stream accumulates one pinned occurrence set
+        // per micro-batch
+        pinned.unpersist(); ()
       }
-      .start()
+    }
 }

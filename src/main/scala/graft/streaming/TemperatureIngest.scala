@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.TemperatureSampling
 import graft.tables.{GraftTable, TableDef}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -28,24 +28,11 @@ object TemperatureIngest {
       StructField("lang", StringType),
       StructField("n_lang", LongType))))
 
-  /** `(doc_id, lang, …)` stream → per-batch count partials. Empty
-    * micro-batches are skipped at the SOURCE (the Sinks.scala
-    * discipline) — an unguarded append would still run a write job
-    * per idle batch.
-    */
+  /** `(doc_id, lang, …)` stream → per-batch count partials. */
   def countsAppend(docs: DataFrame, counts: GraftTable,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          Sinks.exactlyOnce(counts, "tempCountsAppend", batchId) {
-            counts.append(
-              batch.groupBy(col("lang")).agg(count(lit(1)).as("n_lang")))
-          }
-      }
-      .start()
+    Sinks.into(docs, counts, "tempCountsAppend", checkpoint)(b =>
+      counts.append(b.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))))
 
   /** The merged counts (sum over the per-batch partials). */
   def mergedCounts(counts: GraftTable): DataFrame =

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.{DedupOps, SearchOps, SketchOps}
 import graft.tables.GraftTable
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -83,42 +83,34 @@ object TrainingIngest {
   def run(docs: DataFrame, bands: GraftTable, fingerprints: GraftTable,
       postings: GraftTable, docStats: GraftTable, cmTable: GraftTable,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.persist()
-        // survivors pinned BEFORE any append commits: the gates read
-        // the band/fingerprint tables, so the later sinks must not
-        // re-evaluate them against a post-append snapshot
-        val (keptLazy, keptHvLazy) = surviving(batch.toDF(), bands, fingerprints)
-        val kept = keptLazy.localCheckpoint()
-        val keptHv = keptHvLazy.localCheckpoint()
-        val tfB = SearchOps.tokenize(kept)
-          .groupBy(col("term"), col("doc_id"))
-          .agg(count(lit(1)).as("tf"))
-          .persist()
-        try {
-          Sinks.exactlyOnce(bands, "ingest.bands", batchId) {
-            if (!batch.isEmpty) bands.append(DedupOps.bandKeysOfHv(keptHv))
-          }
-          Sinks.exactlyOnce(fingerprints, "ingest.fingerprints", batchId) {
-            if (!batch.isEmpty) fingerprints.append(keptHv)
-          }
-          Sinks.exactlyOnce(postings, "ingest.postings", batchId) {
-            if (!batch.isEmpty) postings.append(tfB)
-          }
-          Sinks.exactlyOnce(cmTable, "ingest.cm", batchId) {
-            if (!batch.isEmpty)
-              cmTable.append(SketchOps.cmCellsOfTermCounts(
-                tfB.groupBy(col("term")).agg(sum(col("tf")).as("n"))))
-          }
-          Sinks.exactlyOnce(docStats, "ingest.docStats", batchId) {
-            if (!batch.isEmpty)
-              docStats.append(kept.select(col("doc_id"), PostingsIngest.dlCol))
-          }
-        } finally { tfB.unpersist(); batch.unpersist() }
-        ()
-      }
-      .start()
+    Sinks.start(docs, checkpoint) { (batch, batchId) =>
+      // survivors pinned BEFORE any append commits: the gates read
+      // the band/fingerprint tables, so the later sinks must not
+      // re-evaluate them against a post-append snapshot
+      val (keptLazy, keptHvLazy) = surviving(batch, bands, fingerprints)
+      val kept = keptLazy.localCheckpoint()
+      val keptHv = keptHvLazy.localCheckpoint()
+      val tfB = SearchOps.tokenize(kept)
+        .groupBy(col("term"), col("doc_id"))
+        .agg(count(lit(1)).as("tf"))
+        .persist()
+      try {
+        Sinks.exactlyOnce(bands, "ingest.bands", batchId) {
+          bands.append(DedupOps.bandKeysOfHv(keptHv))
+        }
+        Sinks.exactlyOnce(fingerprints, "ingest.fingerprints", batchId) {
+          fingerprints.append(keptHv)
+        }
+        Sinks.exactlyOnce(postings, "ingest.postings", batchId) {
+          postings.append(tfB)
+        }
+        Sinks.exactlyOnce(cmTable, "ingest.cm", batchId) {
+          cmTable.append(SketchOps.cmCellsOfTermCounts(
+            tfB.groupBy(col("term")).agg(sum(col("tf")).as("n"))))
+        }
+        Sinks.exactlyOnce(docStats, "ingest.docStats", batchId) {
+          docStats.append(kept.select(col("doc_id"), PostingsIngest.dlCol))
+        }
+      } finally { tfB.unpersist(); () }
+    }
 }

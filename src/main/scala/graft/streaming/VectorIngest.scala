@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.AnnOps
 import graft.tables.GraftTable
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -49,23 +49,11 @@ object VectorIngest {
     // single-row broadcast form is materialized ONCE here — not
     // re-aggregated as a fresh Spark job inside every micro-batch
     val centArr = AnnOps.centroidArr(codebook).localCheckpoint()
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        Sinks.exactlyOnce(table, "vectorCellAppend", batchId) {
-          if (!batch.isEmpty) {
-            val e = batch.toDF()
-              .withColumn("nrm", sqrt(AnnOps.dot(col("embedding"), col("embedding"))))
-            val assigned = e.crossJoin(broadcast(centArr))
-              .select(col("vec_id"), col("embedding"), col("nrm"),
-                AnnOps.cellFold.as("cell"))
-            table.append(assigned)
-          }
-        }
-        ()
-      }
-      .start()
+    Sinks.into(vectors, table, "vectorCellAppend", checkpoint) { b =>
+      val e = b.withColumn("nrm", sqrt(AnnOps.dot(col("embedding"), col("embedding"))))
+      table.append(e.crossJoin(broadcast(centArr))
+        .select(col("vec_id"), col("embedding"), col("nrm"), AnnOps.cellFold.as("cell")))
+    }
   }
 
   /** Cosine top-k over the streamed index: score queries against the

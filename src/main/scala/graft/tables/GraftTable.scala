@@ -209,8 +209,7 @@ final case class RangePrune(column: String, loMicros: Long, hiMicros: Long)
   * always resolve the latest complete commit.
   */
 final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String,
-    branch: Option[String] = None)
-    extends SinkTable {
+    branch: Option[String] = None) {
 
   private val tableDir = s"$root/${defn.name}"
   private val dataDir = s"$tableDir/data"
@@ -2064,6 +2063,9 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * doubles as the merge materializer there, and carrying a file by
     * name would leave it on an older sequence than the rewrite,
     * manufacturing a bogus latest-wins ordering.
+    *
+    * When no file needs a rewrite and no tombstone is pending, the head
+    * is returned unchanged and nothing is written.
     */
   def compact(targetBytes: Long = 128L * 1024 * 1024): CommitMeta = {
     val snap = commits.lastOption
@@ -2093,6 +2095,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       else live.partition(f => new File(s"$dataDir/$f").length() >= targetBytes * 9 / 10 &&
         PartitionTransform.specDdl(byFile(f)) == curSpec &&
         !staleNames.contains(f) && !posRefs.contains(f) && !overlapping.contains(f))
+    // nothing to rewrite and no tombstone to materialize: the head is
+    // already compact, and, as for an append of no rows, no commit lands
+    if (small.isEmpty && pendingPos.isEmpty && snap.exists(_.morDeleteFiles.isEmpty))
+      return snap.get
     val smallBytes = small.map(f => new File(s"$dataDir/$f").length()).sum
     val nFiles = math.max(1, math.ceil(smallBytes.toDouble / targetBytes).toInt)
     val df =

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import scala.jdk.CollectionConverters._
+
 import graft.tables._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -91,6 +93,36 @@ class SortOrderSpec extends AnyFunSuite {
     assert(total > 2 && opened < total,
       s"post-compact pruning must still bite ($opened of $total)")
     assert(t.readLogical().count() == 4000)
+  }
+
+  test("compaction with nothing to rewrite commits nothing") {
+    import spark.implicits._
+    val root = freshRoot("so5")
+    val t = new GraftTable(spark, TableDef("so5", schema, sortOrder = Seq("ts")), root)
+    // two appends over disjoint day ranges: two files whose sorted
+    // slices do not overlap
+    def days(first: Int) = (0 until 1000).map { i =>
+      (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-${first + i % 14}%02d 12:00:00"), i * 1.0)
+    }.toDF("id", "ts", "v")
+    t.append(days(1))
+    t.append(days(15))
+    val files = t.commits.last.files
+    assert(files.size == 2, s"expected one file per append, got $files")
+    def listing(dir: String): Seq[String] = {
+      val s = Files.list(Paths.get(root, "so5", dir))
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
+    }
+    val version = t.currentVersion
+    val commitFiles = listing("_commits")
+    val manifests = listing("_manifests")
+    // every file sits at the target: nothing is small, stale or overlapping
+    val target = files.map(f => Files.size(Paths.get(root, "so5", "data", f))).min
+    assert(!t.needsCompaction(target))
+    assert(t.compact(target).version == version)
+    assert(t.currentVersion == version)
+    assert(listing("_commits") == commitFiles)
+    assert(listing("_manifests") == manifests)
+    assert(t.commits.last.files == files)
   }
 
   test("partitioned table with sort order: rows sorted within each partition file") {
