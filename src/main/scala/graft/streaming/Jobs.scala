@@ -317,6 +317,12 @@ object Jobs {
     * flatMapGroupsWithState operator (min-of-watermarks deadlock; the
     * reference chains its Flink jobs through Iceberg for the same
     * reason, see [[FunnelState.funnelHourly]]).
+    *
+    * The width rule ([[Sinks.perCore]]) applies to the unioned stage
+    * events, upstream of the state shuffle: there a source with a
+    * partition per append would run one task per chunk of all four
+    * topics. `summarize` dedups by event id, so the order of events
+    * within a group does not matter.
     */
   def funnel(
       requests: DataFrame,
@@ -329,8 +335,8 @@ object Jobs {
     val rollup = cat.table(funnelRollupTable)
 
     val summaryQ = Sinks.into(
-      RtbFunnel.funnelSummaries(
-        RtbFunnel.stageEvents(requests, responses, impressions, clicks)).toDF(),
+      RtbFunnel.funnelSummaries(Sinks.perCore(
+        RtbFunnel.stageEvents(requests, responses, impressions, clicks))).toDF(),
       summary, "funnel", s"$checkpointRoot/funnel_summary")(summary.append)
 
     val rollups = Sinks.tail(summary)

@@ -40,6 +40,18 @@ object Sinks {
     if (batchId > table.lastCommittedBatch(sinkId))
       table.withSinkMark(sinkId, batchId)(commit)
 
+  /** The width rule for streaming plans: a micro-batch stage runs at
+    * most one task per core. A source that gives a partition per append
+    * (`MemoryStream`, small-file tails) hands a trigger as many tiny
+    * partitions as chunks arrived, and a stage of them holds every core
+    * for task launches while other queries' stages queue behind it
+    * (the local scheduler is FIFO). Narrow: the rows and any downstream
+    * exchange, state-store partitioning included, are unchanged, and a
+    * frame already at or under the core count passes as it is.
+    */
+  def perCore(df: DataFrame): DataFrame =
+    df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+
   /** The one micro-batch protocol every streaming write to a table runs
     * through (the Structured Streaming sink contract: a replayable
     * batch, keyed by its epoch, into idempotent sinks). Each batch is
@@ -51,6 +63,12 @@ object Sinks {
     * marks nothing: its replay carries the same offsets, so it is empty
     * again. `body` makes its own
     * [[exactlyOnce]] commits and owns any frame it derives and pins.
+    *
+    * The pin applies the width rule ([[perCore]]). For a stateless query
+    * it sets the width of the whole plan, source stage included. For a
+    * stateful query it sits after the state shuffle, so the query must
+    * apply [[perCore]] to its source itself, upstream of the stateful
+    * operator, as [[Jobs.funnel]] does.
     */
   def start(stream: DataFrame, checkpoint: String, mode: String = "append")(
       body: (DataFrame, Long) => Unit): StreamingQuery =
@@ -58,11 +76,9 @@ object Sinks {
       .outputMode(mode)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // a batch arrives in as many partitions as its source or its
-        // last shuffle has, often many tiny ones, and building the cache
-        // is one more stage of them: pin it in at most one per core
-        val pinned = batch.coalesce(batch.sparkSession.sparkContext.defaultParallelism)
-          .persist()
+        // building the cache is one more stage over the batch's
+        // partitions, often many tiny ones: pin it one per core
+        val pinned = perCore(batch).persist()
         try if (!pinned.isEmpty) body(pinned, batchId)
         finally { pinned.unpersist(); () }
       }
