@@ -118,6 +118,13 @@ final case class CommitMeta(
   def sinkBatchesOrEmpty: Map[String, Long] = sinkBatches
 }
 
+object CommitMeta {
+  /** The snapshot of a table with no commits: version 0, no files,
+    * the declared schema and spec. Never persisted.
+    */
+  val Empty: CommitMeta = CommitMeta(0, 0L, "empty", 0L, Nil)
+}
+
 /** A concurrent commit landed that this operation cannot be replayed
   * over — the loud half of the optimistic-concurrency protocol (the
   * quiet half is the bounded retry for commutative shapes). The
@@ -157,7 +164,9 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   *    fine.
   *  - [[MetadataOnly]] (schema/spec evolution, rollback): computed
   *    against one exact head; any interleaved commit aborts (the
-  *    operation is cheap to re-run).
+  *    operation is cheap to re-run). It carries the inputs that change
+  *    the commit's file assembly: a new partition spec, and rollback's
+  *    target file list and per-file spec provenance.
   */
 private[tables] sealed trait CommitIntent
 private[tables] final case class AddFiles(added: Seq[String]) extends CommitIntent
@@ -167,8 +176,10 @@ private[tables] final case class ReplaceContent(untouched: Seq[String],
     added: Seq[String]) extends CommitIntent
 private[tables] case object TombstoneEq extends CommitIntent
 private[tables] case object TombstonePos extends CommitIntent
-private[tables] final case class MetadataOnly(filesOverride: Option[Seq[String]])
-    extends CommitIntent
+private[tables] final case class MetadataOnly(
+    files: Option[Seq[String]] = None,
+    partSpecDdl: Option[String] = None,
+    fileSpecs: Option[Map[String, String]] = None) extends CommitIntent
 
 /** Conservative file-pruning hint for replace commits: every row the
   * delete-condition can match is guaranteed to lie within
@@ -242,28 +253,24 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     */
   def dataPath: String = dataDir
 
-  /** Partition spec as of a snapshot (latest when None): the commit's
-    * carried partSpecDdl, else the declared TableDef spec. New writes
-    * always use the CURRENT spec; existing files keep the layout they
-    * were written under ([[CommitMeta.fileSpecs]]).
+  /** Partition spec of a snapshot: the commit's carried partSpecDdl,
+    * else the declared TableDef spec. New writes always use the head's
+    * spec; existing files keep the layout they were written under
+    * ([[CommitMeta.fileSpecs]]).
     */
-  def partitionsAt(version: Option[Int]): Seq[PartitionTransform] = {
-    val cs = commits
-    val snap = version match {
-      case Some(v) => cs.find(_.version == v)
-      case None => cs.lastOption
-    }
-    snap.flatMap(_.partSpecDdl).map(PartitionTransform.parseSpec)
-      .getOrElse(defn.partitions)
-  }
+  private def specOf(snap: CommitMeta): Seq[PartitionTransform] =
+    snap.partSpecDdl.map(PartitionTransform.parseSpec).getOrElse(defn.partitions)
+
+  /** Partition spec as of snapshot `version` (latest when None). */
+  def partitionsAt(version: Option[Int]): Seq[PartitionTransform] = specOf(snapshot(version))
 
   /** The current partition spec (declared + applied evolutions). */
-  def currentPartitions: Seq[PartitionTransform] = partitionsAt(None)
+  def currentPartitions: Seq[PartitionTransform] = specOf(head)
 
   /** Physical schema = logical schema + derived partition columns
-    * (current spec).
+    * (the snapshot's spec).
     */
-  private def partCols: Seq[String] = currentPartitions.map(_.name)
+  private def partCols(snap: CommitMeta): Seq[String] = specOf(snap).map(_.name)
 
   /** The spec each of a snapshot's files was written under. */
   private def specsByFile(snap: CommitMeta): Map[String, Seq[PartitionTransform]] = {
@@ -285,8 +292,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     *    the permanent record that `name` once existed, surviving
     *    snapshot expiry so a later re-add is detected as prone.
     */
-  private def renameLogOf(snap: Option[CommitMeta]): Seq[(Int, String, String)] =
-    snap.map(_.renames).getOrElse(Nil).map { s =>
+  private def renameLogOf(snap: CommitMeta): Seq[(Int, String, String)] =
+    snap.renames.map { s =>
       val parts = s.split("\\|", -1)
       require(parts.length == 3, s"${defn.name}: bad rename log entry '$s'")
       (parts(0).toInt, parts(1), parts(2))
@@ -317,20 +324,18 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       log: Seq[(Int, String, String)]): Map[String, Option[String]] =
     logical.fieldNames.map(c => c -> storedNameOf(c, fileVersion, log)).toMap
 
-  /** True iff adding `name` now could RESURRECT dead data: the name was
-    * ever a column (any committed schema, the declared one, or either
-    * side of a log entry), so a live file may physically store an
-    * identically-named dead column. Such adds get a log entry; ordinary
-    * adds (the overwhelmingly common case) record nothing and behave
-    * exactly as before.
+  /** Every column name (lower-cased) that ever existed: any committed
+    * schema, the declared one, or either side of `base`'s log entries.
+    * Adding one of these could RESURRECT dead data — a live file may
+    * physically store an identically-named dead column — so such adds
+    * get a log entry; ordinary adds (the overwhelmingly common case)
+    * record nothing. Reads the whole log, as the answer is a property
+    * of the log.
     */
-  private def resurrectionProne(name: String, cs: Seq[CommitMeta]): Boolean = {
-    val log = renameLogOf(cs.lastOption)
-    log.exists(e => e._2.equalsIgnoreCase(name) || e._3.equalsIgnoreCase(name)) ||
-      defn.schema.fieldNames.exists(_.equalsIgnoreCase(name)) ||
-      cs.flatMap(_.schemaDdl).exists(ddl =>
-        StructType.fromDDL(ddl).fieldNames.exists(_.equalsIgnoreCase(name)))
-  }
+  private def everNamed(base: CommitMeta): Set[String] =
+    (renameLogOf(base).flatMap(e => Seq(e._2, e._3)) ++ defn.schema.fieldNames ++
+      commits.flatMap(_.schemaDdl).flatMap(StructType.fromDDL(_).fieldNames))
+      .filter(_.nonEmpty).map(_.toLowerCase).toSet
 
   // ---- commit log ----
 
@@ -400,6 +405,24 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       .sortBy(_.version).toSeq
   }
 
+  /** The latest snapshot, [[CommitMeta.Empty]] for a table with no
+    * commits. An operation reads it ONCE and derives its version,
+    * schema, spec, live files and tombstones from that one value (its
+    * BASE, as an Iceberg operation works against
+    * `TableOperations.current()`); only a lost commit race reads the
+    * log again ([[writeCommit]]).
+    */
+  def head: CommitMeta = commits.lastOption.getOrElse(CommitMeta.Empty)
+
+  /** Snapshot `version`, the head when None. A version not in the log
+    * throws.
+    */
+  def snapshot(version: Option[Int]): CommitMeta = version match {
+    case None => head
+    case Some(v) => commits.find(_.version == v)
+      .getOrElse(throw new IllegalArgumentException(s"${defn.name}: no snapshot v$v"))
+  }
+
   /** Parse one persisted commit json. The persisted form carries the
     * live file list only through `manifests`, so a json with the list
     * inline is no commit this table format writes: it throws, like one
@@ -452,30 +475,33 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     }
   }
 
-  def currentVersion: Int = commits.lastOption.map(_.version).getOrElse(0)
+  def currentVersion: Int = head.version
 
-  /** Atomically claim version `persisted.version`: hard-link a fully
-    * written tmp json onto the versioned commit path — link(2) fails
-    * when the target exists, which IS the compare-and-swap on the
-    * table head (atomic across threads AND processes on any POSIX
-    * filesystem; an object-store deployment swaps this one primitive
-    * for a conditional PUT or a catalog pointer CAS — exactly the
-    * pluggable commit seam Iceberg's TableOperations defines). False =
-    * another writer claimed the version first; the caller re-reads the
-    * head, re-validates, and retries.
+  /** Atomically claim version `meta.version`: hard-link a fully written
+    * tmp json (the STRIPPED form — the chunk references are the durable
+    * file list; the full in-memory view rebuilds via resolveManifests)
+    * onto the versioned commit path — link(2) fails when the target
+    * exists, which IS the compare-and-swap on the table head (atomic
+    * across threads AND processes on any POSIX filesystem; an
+    * object-store deployment swaps this one primitive for a conditional
+    * PUT or a catalog pointer CAS — exactly the pluggable commit seam
+    * Iceberg's TableOperations defines). False = another writer claimed
+    * the version first; the caller re-reads the head, re-validates, and
+    * retries.
     */
-  private def publish(meta: CommitMeta, persisted: CommitMeta): Boolean = {
+  private def publish(meta: CommitMeta): Boolean = {
+    val persisted = meta.copy(files = Nil, fileRows = Map.empty, fileSpecs = Map.empty)
     val bytes = mapper.writeValueAsString(persisted)
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val tmp = Paths.get(s"$commitsDir/.tmp-${java.util.UUID.randomUUID()}.json")
     Files.write(tmp, bytes)
     try {
-      Files.createLink(commitPath(persisted.version), tmp)
+      Files.createLink(commitPath(meta.version), tmp)
       // prime the parsed-commit cache with the ASSEMBLED in-memory view:
       // this handle's next commits() serves its own commit without
       // re-resolving manifest chunks — the predecessor-carry that keeps
       // a long-lived writer's assembly O(delta) end to end
-      commitCache.put((s"commit-${persisted.version}.json",
+      commitCache.put((s"commit-${meta.version}.json",
         bytes.length.toLong, contentKey(bytes)), meta)
       true
     }
@@ -483,39 +509,34 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     finally Files.delete(tmp)
   }
 
-  /** Decide whether `intent`, computed against snapshot `baseVersion`,
-    * may be replayed over the current `head` (no-op when nothing
-    * interleaved — the uncontended fast path). Throws
-    * [[CommitConflictException]] when replay would be unsound; see
-    * [[CommitIntent]] for the per-shape rules. This is the conflict-
-    * validation half of optimistic concurrency (Iceberg's
-    * validateNoNewDeletesForDataFiles / validateAddedFilesMatchFilter
-    * family, reduced to this format's five commit shapes).
+  /** Decide whether `intent`, computed against snapshot `base`, may be
+    * replayed over `head`, the latest of the log `cs` (no-op when
+    * nothing interleaved). Throws [[CommitConflictException]] when
+    * replay would be unsound; see [[CommitIntent]] for the per-shape
+    * rules. This is the conflict-validation half of optimistic
+    * concurrency (Iceberg's validateNoNewDeletesForDataFiles /
+    * validateAddedFilesMatchFilter family, reduced to this format's
+    * five commit shapes).
     */
-  private def validateIntent(op: String, intent: CommitIntent, baseVersion: Int,
-      head: Option[CommitMeta]): Unit = {
-    val headV = head.map(_.version).getOrElse(0)
-    if (headV == baseVersion) return
+  private def validateIntent(op: String, intent: CommitIntent, base: CommitMeta,
+      head: CommitMeta, cs: Seq[CommitMeta]): Unit = {
+    if (head.version == base.version) return
     def conflict(why: String): Nothing = throw new CommitConflictException(
-      s"${defn.name}: $op derived from snapshot v$baseVersion but the head " +
-        s"is v$headV — $why; re-run the operation against the current snapshot")
-    if (headV < baseVersion) conflict("the head moved backwards (rolled-back log?)")
-    val cs = commits
-    val base = cs.find(_.version == baseVersion)
-    if (baseVersion > 0 && base.isEmpty)
+      s"${defn.name}: $op derived from snapshot v${base.version} but the head " +
+        s"is v${head.version} — $why; re-run the operation against the current snapshot")
+    if (head.version < base.version) conflict("the head moved backwards (rolled-back log?)")
+    if (base.version > 0 && !cs.exists(_.version == base.version))
       conflict("the base snapshot expired mid-operation")
-    val intervening = cs.filter(_.version > baseVersion)
-    val headFiles = head.map(_.files.toSet).getOrElse(Set.empty)
+    val headFiles = head.files.toSet
     // files this operation wrote are stamped under the BASE's
     // column-name epoch and partition spec; an interleaved rename /
     // resurrection-prone re-add / spec evolution would mis-resolve
     // them on read — abort rather than mis-read (the op re-runs
     // cheaply against the new metadata)
     def writeEpochGuards(): Unit = {
-      if (head.map(_.renames).getOrElse(Nil) !=
-          base.map(_.renames).getOrElse(Nil))
+      if (head.renames != base.renames)
         conflict("a column rename/re-add landed concurrently")
-      if (head.flatMap(_.partSpecDdl) != base.flatMap(_.partSpecDdl))
+      if (head.partSpecDdl != base.partSpecDdl)
         conflict("a partition-spec evolution landed concurrently")
     }
     intent match {
@@ -524,20 +545,17 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         writeEpochGuards()
         if (!removed.subsetOf(headFiles))
           conflict("a concurrent commit removed files this rewrite read")
-        if (head.map(_.morDeleteFiles).getOrElse(Map.empty) !=
-            base.map(_.morDeleteFiles).getOrElse(Map.empty) ||
-            head.map(_.posDeleteFiles).getOrElse(Map.empty) !=
-            base.map(_.posDeleteFiles).getOrElse(Map.empty))
+        if (head.morDeleteFiles != base.morDeleteFiles ||
+            head.posDeleteFiles != base.posDeleteFiles)
           conflict("tombstones landed concurrently — this rewrite read the " +
             "base state and would silently clear them")
-        if (defn.mergeOnRead &&
-            headFiles != base.map(_.files.toSet).getOrElse(Set.empty))
+        if (defn.mergeOnRead && headFiles != base.files.toSet)
           conflict("a data commit interleaved with a merge-on-read rewrite — " +
             "the rewrite's output would re-sequence above it")
       case ReplaceContent(untouched, _) =>
         writeEpochGuards()
-        intervening.find(c => c.op != "compact" && c.op != "zorder").foreach(c =>
-          conflict(s"concurrent '${c.op}' commit v${c.version} changed the " +
+        cs.find(c => c.version > base.version && c.op != "compact" && c.op != "zorder")
+          .foreach(c => conflict(s"concurrent '${c.op}' commit v${c.version} changed the " +
             "logical content this operation's rows were derived from"))
         if (!untouched.forall(headFiles))
           conflict("a concurrent rewrite removed files this operation " +
@@ -546,10 +564,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         // latest-delete-wins over interleaved upserts of the same keys,
         // Iceberg v2 sequence semantics
       case TombstonePos =>
-        if (!base.map(_.files.toSet).getOrElse(Set.empty).subsetOf(headFiles))
+        if (!base.files.toSet.subsetOf(headFiles))
           conflict("a concurrent commit removed files these position " +
             "deletes reference by (file, pos)")
-      case MetadataOnly(_) =>
+      case _: MetadataOnly =>
         conflict("metadata operations replay against one exact snapshot")
     }
   }
@@ -557,81 +575,88 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   /** The live file set `intent` produces over `head` — evaluated per
     * retry attempt, which is what makes commutative shapes replayable.
     */
-  private def filesUnder(intent: CommitIntent, head: Option[CommitMeta]): Seq[String] = {
-    val headFiles = head.map(_.files).getOrElse(Nil)
+  private def filesUnder(intent: CommitIntent, head: CommitMeta): Seq[String] =
     intent match {
-      case AddFiles(a) => headFiles ++ a
-      case RewriteFiles(rm, a) => headFiles.filterNot(rm) ++ a
+      case AddFiles(a) => head.files ++ a
+      case RewriteFiles(rm, a) => head.files.filterNot(rm) ++ a
       case ReplaceContent(u, a) => u ++ a
-      case TombstoneEq | TombstonePos => headFiles
-      case MetadataOnly(o) => o.getOrElse(headFiles)
+      case TombstoneEq | TombstonePos => head.files
+      case MetadataOnly(o, _, _) => o.getOrElse(head.files)
     }
-  }
 
-  /** Commit `intent`'s file delta as the new live set, under OPTIMISTIC
-    * CONCURRENCY: the new snapshot is assembled against the current
-    * head, published with an atomic version CAS ([[publish]]), and on
-    * a lost race re-validated ([[validateIntent]]) and re-assembled
-    * against the winner — bounded retries, then a loud error. A
-    * non-replayable interleaving throws [[CommitConflictException]]
-    * with nothing committed. This is what lets the reference's
-    * deployment shape — streaming writers committing every 60 s WHILE
-    * a maintenance cron compacts/expires the same tables — run without
-    * a lost commit, the way Iceberg's optimistic commits absorb it.
+  /** Commit `intent`'s file delta over `base`, the snapshot the
+    * operation read, under OPTIMISTIC CONCURRENCY: the new snapshot is
+    * `base` plus the operation's edits, published with an atomic
+    * version CAS ([[publish]]). The first attempt assembles against
+    * `base` and lets the CAS tell whether another writer got there
+    * first; only a lost race re-reads the log, re-validates the intent
+    * against the winner ([[validateIntent]]) and re-assembles over it —
+    * bounded retries, then a loud error. A non-replayable interleaving
+    * throws [[CommitConflictException]] with nothing committed. This is
+    * what lets the reference's deployment shape — streaming writers
+    * committing every 60 s WHILE a maintenance cron compacts/expires
+    * the same tables — run without a lost commit, the way Iceberg's
+    * optimistic commits absorb it.
     *
-    * Row counts AND column bounds come from the previous commit's
-    * manifest entries where a file is carried over; files NOT in the
-    * previous commit take theirs from `written` — the table writer's
-    * report for the files this operation wrote (rollback passes its
-    * target's manifest entries instead) — so commit cost is O(new
-    * files) regardless of how many live files are carried, and no
-    * data file is opened. The persisted json stores manifest chunk NAMES, never
-    * the file list: an append-shaped commit writes one new chunk and
-    * carries prior chunks by reference; a commit that removes files
-    * (or restamps specs) rewrites only the touched chunks. Chunk-
-    * reference growth is bounded by merging the smallest chunks into
-    * the commit's own write once the ref count exceeds
-    * [[GraftTable.MaxChunkRefs]] — logarithmic amortized rewrite,
-    * Iceberg's `rewrite_manifests` folded into the commit.
+    * Each attempt's draft is its predecessor with the new version,
+    * timestamp, op, file list, row counts, specs and manifests; the sink
+    * marks carried plus this thread's pending mark; and no change or
+    * delete files. Schema, rename log and tombstone maps carry over
+    * as they are. `edit` then applies the operation's own metadata
+    * changes to the draft — it sees the attempt's version as
+    * `draft.version`, so a retried tombstone re-sequences above the
+    * commits it lost the race to.
     */
-  private def writeCommit(op: String, intent: CommitIntent, baseVersion: Int,
+  private def writeCommit(op: String, intent: CommitIntent, base: CommitMeta,
       written: Seq[WrittenFile] = Nil,
-      changeFiles: Seq[String] = Nil,
-      deleteFiles: Seq[String] = Nil,
-      newSchemaDdl: Option[String] = None,
-      morDeletes: (Map[String, Int], Int) => Map[String, Int] = (m, _) => m,
-      newPartSpecDdl: Option[String] = None,
-      fileSpecsOverride: Option[Map[String, String]] = None,
-      newRenames: Option[Seq[String]] = None,
-      posDeletes: (Map[String, Int], Int) => Map[String, Int] = (m, _) => m): CommitMeta = {
-    var attempt = 0
-    while (attempt < GraftTable.MaxCommitRetries) {
-      val prevMeta = commits.lastOption
-      validateIntent(op, intent, baseVersion, prevMeta)
-      val meta = assembleCommit(op, intent, prevMeta, written, changeFiles,
-        deleteFiles, newSchemaDdl, morDeletes, newPartSpecDdl,
-        fileSpecsOverride, newRenames, posDeletes)
-      if (publish(meta._1, meta._2)) {
+      edit: CommitMeta => CommitMeta = identity): CommitMeta = {
+    @scala.annotation.tailrec
+    def attempt(prev: CommitMeta, lost: Int): CommitMeta = {
+      val meta = edit(assembleCommit(intent, prev, written).copy(
+        version = prev.version + 1, tsMs = System.currentTimeMillis(), op = op,
+        sinkBatches = prev.sinkBatches ++ pendingSinkMark.get(),
+        changeFiles = Nil, deleteFiles = Nil))
+      if (publish(meta)) {
         // bound the chunk-parse cache: a long-lived poll/cron writer
         // otherwise accumulates one parsed chunk per chunk ever
         // rewritten (see ManifestStore.prune)
-        manifestStore.prune(meta._1.manifests.toSet)
-        return meta._1
+        manifestStore.prune(meta.manifests.toSet)
+        meta
+      } else {
+        GraftTable.commitRetryCount.incrementAndGet()
+        if (lost + 1 == GraftTable.MaxCommitRetries) throw new CommitConflictException(
+          s"${defn.name}: $op lost the commit race ${GraftTable.MaxCommitRetries} " +
+            "times — writer contention too high; re-run the operation")
+        // back off briefly (jittered so N writers don't re-collide in
+        // lockstep), re-read the winner, try again
+        Thread.sleep(1L + java.util.concurrent.ThreadLocalRandom.current()
+          .nextLong(2L << math.min(lost + 1, 6)))
+        val cs = commits
+        val winner = cs.lastOption.getOrElse(CommitMeta.Empty)
+        validateIntent(op, intent, base, winner, cs)
+        attempt(winner, lost + 1)
       }
-      attempt += 1
-      GraftTable.commitRetryCount.incrementAndGet()
-      // lost the version CAS — back off briefly (jittered so N writers
-      // don't re-collide in lockstep), re-read the winner, try again
-      Thread.sleep(1L +
-        java.util.concurrent.ThreadLocalRandom.current().nextLong(2L << math.min(attempt, 6)))
     }
-    throw new CommitConflictException(
-      s"${defn.name}: $op lost the commit race ${GraftTable.MaxCommitRetries} " +
-        "times — writer contention too high; re-run the operation")
+    attempt(base, 0)
   }
 
-  /** One assembly pass of [[writeCommit]] against a specific head:
-    * (in-memory meta, stripped persisted form).
+  /** The file side of one commit attempt against `prev`: `prev` with
+    * the live file list, row counts, per-file specs, carried spec and
+    * manifest chunks that `intent` produces over it.
+    *
+    * Row counts AND column bounds come from `prev`'s manifest entries
+    * where a file is carried over; files NOT in `prev` take theirs from
+    * `written` — the table writer's report for the files this operation
+    * wrote (rollback passes its target's manifest entries instead) — so
+    * commit cost is O(new files) regardless of how many live files are
+    * carried, and no data file is opened. The persisted json stores
+    * manifest chunk NAMES, never the file list: an append-shaped commit
+    * writes one new chunk and carries prior chunks by reference; a
+    * commit that removes files (or restamps specs) rewrites only the
+    * touched chunks. Chunk-reference growth is bounded by merging the
+    * undersized chunks into the commit's own write once the ref count
+    * exceeds [[MaxChunkRefs]] — logarithmic amortized rewrite, Iceberg's
+    * `rewrite_manifests` folded into the commit.
     *
     * COST SHAPE: the steady-state commit kinds — pure additions
     * (append, MOR upsert) and tombstone commits (equality/position
@@ -648,82 +673,75 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * already touches the live set wholesale, and they run on the
     * maintenance cadence, not the ingest cadence.
     */
-  private def assembleCommit(op: String, intent: CommitIntent,
-      prevMeta: Option[CommitMeta],
-      written: Seq[WrittenFile],
-      changeFiles: Seq[String],
-      deleteFiles: Seq[String],
-      newSchemaDdl: Option[String],
-      morDeletes: (Map[String, Int], Int) => Map[String, Int],
-      newPartSpecDdl: Option[String],
-      fileSpecsOverride: Option[Map[String, String]],
-      newRenames: Option[Seq[String]],
-      posDeletes: (Map[String, Int], Int) => Map[String, Int]): (CommitMeta, CommitMeta) = {
-    val newVersion = prevMeta.map(_.version).getOrElse(0) + 1
-    val prevSpecDdl = prevMeta.flatMap(_.partSpecDdl)
-    val prevFileSpecs = prevMeta.map(_.fileSpecs).getOrElse(Map.empty)
-    val writeSpecDdl = prevSpecDdl.getOrElse(PartitionTransform.specDdl(defn.partitions))
+  private def assembleCommit(intent: CommitIntent, prev: CommitMeta,
+      written: Seq[WrittenFile]): CommitMeta = {
+    val writeSpecDdl = prev.partSpecDdl.getOrElse(PartitionTransform.specDdl(defn.partitions))
     // rows + bounds of every file this commit adds, as its writer
     // reported them
     val addedStats = written.map(w => w.path -> w).toMap
     // ---- O(delta) fast path (see the method doc) ----
     val fastAdds: Option[Seq[String]] = intent match {
-      case AddFiles(a)
-          if fileSpecsOverride.isEmpty && newPartSpecDdl.isEmpty => Some(a)
+      case AddFiles(a) => Some(a)
       case TombstoneEq | TombstonePos => Some(Nil)
       case _ => None
     }
-    if (fastAdds.isDefined) {
-      val added = fastAdds.get
-      val addedRows: Map[String, Long] = added.map(f => f -> addedStats(f).rows).toMap
-      val files = prevMeta.map(_.files).getOrElse(Nil) ++ added
-      val fileRows = prevMeta.map(_.fileRows).getOrElse(Map.empty) ++ addedRows
-      val rowCount = prevMeta.map(_.rowCount).getOrElse(0L) + addedRows.values.sum
-      val fileSpecs =
-        if (prevSpecDdl.isEmpty) Map.empty[String, String]
-        else prevFileSpecs ++ added.map(_ -> writeSpecDdl)
-      // every carried file keeps identical rows/spec, so EVERY prior
-      // chunk carries by reference — no chunk is read, let alone
-      // scanned. Only the fold-undersized merge (amortized logarithmic)
-      // ever opens carried chunks here.
-      val prevChunks = prevMeta.map(_.manifests).getOrElse(Nil)
-      val (carried, merged) = foldChunks(prevChunks)
-      val pool = merged.flatMap(manifestStore.read)
-      val fresh = added.map(f => ManifestEntry(
-        f, addedRows(f), fileSpecs.get(f), addedStats(f).bounds))
-      val newChunks = (pool ++ fresh).grouped(ChunkTargetEntries)
-        .map(manifestStore.write).toSeq
-      return finishCommit(op, newVersion, rowCount, files, fileRows, fileSpecs,
-        prevSpecDdl, carried ++ newChunks, prevMeta, changeFiles, deleteFiles,
-        newSchemaDdl, morDeletes, newRenames, posDeletes)
+    fastAdds match {
+      case Some(added) =>
+        val addedRows: Map[String, Long] = added.map(f => f -> addedStats(f).rows).toMap
+        val fileSpecs =
+          if (prev.partSpecDdl.isEmpty) Map.empty[String, String]
+          else prev.fileSpecs ++ added.map(_ -> writeSpecDdl)
+        // every carried file keeps identical rows/spec, so EVERY prior
+        // chunk carries by reference — no chunk is read, let alone
+        // scanned. Only the fold-undersized merge (amortized logarithmic)
+        // ever opens carried chunks here.
+        val (carried, merged) = foldChunks(prev.manifests)
+        val pool = merged.flatMap(manifestStore.read)
+        val fresh = added.map(f => ManifestEntry(
+          f, addedRows(f), fileSpecs.get(f), addedStats(f).bounds))
+        val newChunks = (pool ++ fresh).grouped(ChunkTargetEntries)
+          .map(manifestStore.write).toSeq
+        prev.copy(rowCount = prev.rowCount + addedRows.values.sum,
+          files = prev.files ++ added, fileRows = prev.fileRows ++ addedRows,
+          fileSpecs = fileSpecs, manifests = carried ++ newChunks)
+      case None => assembleRewrite(intent, prev, writeSpecDdl, addedStats)
     }
-    // ---- full assembly: rewrites, replaces, metadata ops ----
-    val files = filesUnder(intent, prevMeta)
-    val prevRows = prevMeta.map(_.fileRows).getOrElse(Map.empty)
-    val fileRows = files.map(f => f -> prevRows.getOrElse(f, addedStats(f).rows)).toMap
+  }
+
+  /** [[assembleCommit]]'s full O(live) assembly: rewrites, replaces,
+    * metadata ops.
+    */
+  private def assembleRewrite(intent: CommitIntent, prev: CommitMeta,
+      writeSpecDdl: String, addedStats: Map[String, WrittenFile]): CommitMeta = {
+    val files = filesUnder(intent, prev)
+    val fileRows = files.map(f => f -> prev.fileRows.getOrElse(f, addedStats(f).rows)).toMap
+    val (newSpecDdl, specsOverride) = intent match {
+      case MetadataOnly(_, spec, specs) => (spec, specs)
+      case _ => (None, None)
+    }
     // partition-spec bookkeeping: the carried spec, plus (once the table
     // has ever evolved) per-file write-spec provenance. New files were
     // written under the spec in effect BEFORE this commit (an evolve
     // commit adds no files, so the distinction only matters there).
-    val carriedSpecDdl = newPartSpecDdl.orElse(prevSpecDdl)
+    val carriedSpecDdl = newSpecDdl.orElse(prev.partSpecDdl)
     val fileSpecs: Map[String, String] =
       if (carriedSpecDdl.isEmpty) Map.empty // never evolved: declared spec everywhere
-      else fileSpecsOverride match {
+      else specsOverride match {
         // rollback restores the TARGET snapshot's provenance — a file the
         // head had dropped isn't in the head's map, and stamping it with
         // the head's spec would mis-read its layout. A file absent from
         // the target's own map can only mean the target predates every
         // evolution (provenance is recorded for ALL live files once any
         // evolution lands), so the fallback is the TARGET's write spec
-        // (newPartSpecDdl — rollback always passes it), never the head's
-        // writeSpecDdl: after evolve → compact, the head's provenance no
-        // longer names the restored files and the head-derived spec would
-        // stamp day-layout files as hour-layout (null p_* reads,
-        // mis-grouped compaction).
+        // (rollback always passes it), never the head's writeSpecDdl:
+        // after evolve → compact, the head's provenance no longer names
+        // the restored files and the head-derived spec would stamp
+        // day-layout files as hour-layout (null p_* reads, mis-grouped
+        // compaction).
         case Some(m) =>
-          val targetSpec = newPartSpecDdl.getOrElse(writeSpecDdl)
+          val targetSpec = newSpecDdl.getOrElse(writeSpecDdl)
           files.map(f => f -> m.getOrElse(f, targetSpec)).toMap
-        case None => files.map(f => f -> prevFileSpecs.getOrElse(f, writeSpecDdl)).toMap
+        case None => files.map(f => f -> prev.fileSpecs.getOrElse(f, writeSpecDdl)).toMap
       }
     // ---- manifest chunking: persisted metadata is O(this delta) ----
     val fileSet = files.toSet
@@ -732,7 +750,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // commit's own chunk write with their (immutable) bounds kept.
     // Spec restamps (first partition evolution, rollback overrides)
     // and removals are what break the carry.
-    val (carriedOk, toSpill) = prevMeta.map(_.manifests).getOrElse(Nil)
+    val (carriedOk, toSpill) = prev.manifests
       .partition(n => manifestStore.read(n).forall(e =>
         fileSet.contains(e.p) && e.r == fileRows(e.p) &&
           e.s == fileSpecs.get(e.p)))
@@ -752,50 +770,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       f, fileRows(f), fileSpecs.get(f), addedStats(f).bounds))
     val newChunks = (pool ++ fresh).grouped(ChunkTargetEntries).map(
       manifestStore.write).toSeq
-    finishCommit(op, newVersion, fileRows.values.sum, files, fileRows, fileSpecs,
-      carriedSpecDdl, carried ++ newChunks, prevMeta, changeFiles, deleteFiles,
-      newSchemaDdl, morDeletes, newRenames, posDeletes)
-  }
-
-  /** Shared tail of both assembly paths: carry the per-commit metadata
-    * (sink marks, schema, tombstone maps, rename log) and build the
-    * (in-memory, stripped-persisted) pair.
-    */
-  private def finishCommit(op: String, newVersion: Int, rowCount: Long,
-      files: Seq[String], fileRows: Map[String, Long],
-      fileSpecs: Map[String, String], carriedSpecDdl: Option[String],
-      chunkNames: Seq[String], prevMeta: Option[CommitMeta],
-      changeFiles: Seq[String], deleteFiles: Seq[String],
-      newSchemaDdl: Option[String],
-      morDeletes: (Map[String, Int], Int) => Map[String, Int],
-      newRenames: Option[Seq[String]],
-      posDeletes: (Map[String, Int], Int) => Map[String, Int]): (CommitMeta, CommitMeta) = {
-    // every commit carries the full per-sink batch watermark forward, so
-    // the LATEST commit is always authoritative and expiring old
-    // snapshots never loses a sink's mark
-    val prev = prevMeta.map(_.sinkBatches).getOrElse(Map.empty)
-    // the current schema rides every commit the same way (see CommitMeta)
-    val carriedSchema = newSchemaDdl.orElse(prevMeta.flatMap(_.schemaDdl))
-    // pending equality-delete tombstones carry too; `morDeletes`
-    // transforms the carried map (add a tombstone / clear on compact) —
-    // handed the ATTEMPT's version, so a retried tombstone re-sequences
-    // above the interleaved commits it lost the race to
-    val carriedMorDeletes =
-      morDeletes(prevMeta.map(_.morDeleteFiles).getOrElse(Map.empty), newVersion)
-    // the rename log carries forward like the schema; a rename commit
-    // appends its entry, rollback restores the target's log
-    val carriedRenames =
-      newRenames.getOrElse(prevMeta.map(_.renames).getOrElse(Nil))
-    // pending position-delete tombstones carry like equality tombstones
-    val carriedPosDeletes =
-      posDeletes(prevMeta.map(_.posDeleteFiles).getOrElse(Map.empty), newVersion)
-    val meta = CommitMeta(newVersion, System.currentTimeMillis(), op,
-      rowCount, files, prev ++ pendingSinkMark.get(), fileRows, changeFiles,
-      deleteFiles, carriedSchema, carriedMorDeletes, carriedSpecDdl, fileSpecs,
-      carriedRenames, carriedPosDeletes, chunkNames)
-    // persist the STRIPPED form — the chunk references are the durable
-    // file list; the full in-memory view rebuilds via resolveManifests
-    (meta, meta.copy(files = Nil, fileRows = Map.empty, fileSpecs = Map.empty))
+    prev.copy(rowCount = fileRows.values.sum, files = files, fileRows = fileRows,
+      partSpecDdl = carriedSpecDdl, fileSpecs = fileSpecs, manifests = carried ++ newChunks)
   }
 
   // ---- file bookkeeping ----
@@ -809,8 +785,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       .map(f => Paths.get(dataDir).relativize(f.toPath).toString).toSet
   }
 
-  private def withPartitionCols(df: DataFrame): DataFrame =
-    currentPartitions.foldLeft(df)((d, p) => d.withColumn(p.name, p.expr))
+  private def withPartitionCols(df: DataFrame, snap: CommitMeta): DataFrame =
+    specOf(snap).foldLeft(df)((d, p) => d.withColumn(p.name, p.expr))
 
   /** Driver-local fast path: a commit whose rows are a tiny
     * LocalRelation (a watermark row, a bookkeeping upsert, a VALUES
@@ -846,12 +822,15 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   }
 
   /** Write `df`'s rows as NEW files under the data dir, laid out by the
-    * current partition spec and declared sort order; return each file
-    * with the rows and bounds its writer reported. New files never
-    * replace existing ones, so concurrent snapshots stay valid.
+    * partition spec of `base` (the operation's snapshot) and the
+    * declared sort order; return each file with the rows and bounds its
+    * writer reported. New files never replace existing ones, so
+    * concurrent snapshots stay valid.
     */
-  private def writeFiles(df: DataFrame, numPartitions: Option[Int] = None): Seq[WrittenFile] = {
-    if (numPartitions.isEmpty && partCols.isEmpty && defn.sortOrder.isEmpty) {
+  private def writeFiles(df: DataFrame, base: CommitMeta,
+      numPartitions: Option[Int] = None): Seq[WrittenFile] = {
+    val parts = partCols(base)
+    if (numPartitions.isEmpty && parts.isEmpty && defn.sortOrder.isEmpty) {
       localRelationRows(df) match {
         case Some((schema, rows)) =>
           return writeStaged((dir, settings) =>
@@ -859,7 +838,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         case None => ()
       }
     }
-    val clustered = withPartitionCols(df)
+    val clustered = withPartitionCols(df, base)
     // hash-distribute on the partition values before a partitioned write
     // (Iceberg write.distribution-mode=hash): without it every task
     // writes a sliver into every partition dir it touches — T×P small
@@ -868,7 +847,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // advisory partition size on top. `numPartitions` (compaction's
     // binpack target) must be applied HERE — a caller-side repartition
     // would be undone by this one.
-    val pcols = partCols.map(org.apache.spark.sql.functions.col)
+    val pcols = parts.map(org.apache.spark.sql.functions.col)
     val scols = defn.sortOrder.map(org.apache.spark.sql.functions.col)
     // declared sort order (Iceberg write.sort-order): an UNPARTITIONED
     // table range-distributes on the sort columns so each file covers a
@@ -878,7 +857,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // PARTITIONED table keeps its partition-value distribution (dir
     // pruning already works) and sorts within each partition file, so
     // parquet row-group stats cluster too.
-    val physical = (numPartitions, partCols.nonEmpty) match {
+    val physical = (numPartitions, parts.nonEmpty) match {
       case (Some(n), true) => clustered.repartition(n, pcols: _*)
       case (Some(n), false) if scols.nonEmpty =>
         clustered.repartitionByRange(n, scols: _*)
@@ -894,7 +873,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val ordered =
       if (pcols.isEmpty && scols.isEmpty) physical
       else physical.sortWithinPartitions((pcols ++ scols): _*)
-    writeRows(ordered, partCols)
+    writeRows(ordered, parts)
   }
 
   /** Run the table writer in Spark tasks over `df`'s rows — the logical
@@ -946,22 +925,19 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
 
   // ---- reads ----
 
-  /** Logical schema as of a snapshot (latest when None): the commit's
-    * carried schemaDdl, else the declared TableDef schema. Time-travel
-    * reads use the SNAPSHOT's schema, as Iceberg does — reading v1 of a
-    * later-evolved table returns v1's columns.
+  /** Logical schema of a snapshot: the commit's carried schemaDdl, else
+    * the declared TableDef schema. Time-travel reads use the SNAPSHOT's
+    * schema, as Iceberg does — reading v1 of a later-evolved table
+    * returns v1's columns.
     */
-  def schemaAt(version: Option[Int]): StructType = {
-    val cs = commits
-    val snap = version match {
-      case Some(v) => cs.find(_.version == v)
-      case None => cs.lastOption
-    }
-    snap.flatMap(_.schemaDdl).map(StructType.fromDDL).getOrElse(defn.schema)
-  }
+  private def schemaOf(snap: CommitMeta): StructType =
+    snap.schemaDdl.map(StructType.fromDDL).getOrElse(defn.schema)
+
+  /** Logical schema as of snapshot `version` (latest when None). */
+  def schemaAt(version: Option[Int]): StructType = schemaOf(snapshot(version))
 
   /** The table's current logical schema (declared + applied evolutions). */
-  def currentSchema: StructType = schemaAt(None)
+  def currentSchema: StructType = schemaOf(head)
 
   /** (logical ddl, spec ddl) → derived physical schema. Deriving one
     * costs an empty-frame Catalyst analysis per partition column; the
@@ -980,26 +956,12 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         withParts.schema
       })
 
-  private def physicalSchemaOf(logical: StructType): StructType =
-    physicalSchemaOf(logical, currentPartitions)
-
-  /** Snapshot `version` of `cs` (latest when None; an empty table's is
-    * the empty snapshot). A version not in the log throws.
-    */
-  private def snapshotAt(cs: Seq[CommitMeta], version: Option[Int]): CommitMeta =
-    version match {
-      case Some(v) => cs.find(_.version == v)
-        .getOrElse(throw new IllegalArgumentException(s"${defn.name}: no snapshot v$v"))
-      case None => cs.lastOption.getOrElse(CommitMeta(0, 0L, "empty", 0L, Nil))
-    }
-
   /** Read a snapshot (default: latest). Returns the physical schema —
     * logical columns plus derived `p_*` partition columns, so callers
     * can filter on partition values and get directory-level pruning.
     */
   def read(version: Option[Int] = None): DataFrame = {
-    val cs = commits
-    val snap = snapshotAt(cs, version)
+    val snap = snapshot(version)
     // a raw physical read would resurface position-deleted rows
     require(snap.posDeleteFiles.isEmpty,
       s"${defn.name}: physical read with pending position deletes — " +
@@ -1012,32 +974,18 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     require(specs.size <= 1,
       s"${defn.name}: physical read across ${specs.size} partition-spec " +
         "generations — use readLogical(), or compact() to migrate the layout")
-    val spec = specs.headOption.map(PartitionTransform.parseSpec)
-      .getOrElse(partitionsAt(version))
+    val spec = specs.headOption.map(PartitionTransform.parseSpec).getOrElse(specOf(snap))
     // the SNAPSHOT's schema: older files missing later-added columns
     // null-fill; columns dropped later still read in a pre-drop snapshot
-    val logical = snap.schemaDdl.map(StructType.fromDDL).getOrElse(defn.schema)
+    val logical = schemaOf(snap)
     // a physical read resolves columns by the snapshot's names directly;
     // files that predate a rename store the OLD name and would silently
     // null-fill the renamed column — refuse, like the mixed-spec case
     // (logical reads alias per epoch; compact() migrates the names)
-    val log = renameLogOf(Some(snap))
-    if (log.nonEmpty) {
-      val firstSeen = firstSeenByFile(cs)
-      val stale = snap.files.exists(f => storedNamesAt(logical,
-        firstSeen.getOrElse(f, Int.MaxValue), log).exists { case (c, s) => s != Some(c) })
-      require(!stale,
-        s"${defn.name}: physical read over files written before a column " +
-          "rename (or a re-added column) — use readLogical(), or compact()")
-    }
-    val phys = physicalSchemaOf(logical, spec)
-    if (snap.files.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[Row](), phys)
-    else
-      spark.read
-        .option("basePath", dataDir)
-        .schema(phys)
-        .parquet(snap.files.map(f => s"$dataDir/$f"): _*)
+    require(staleNamedFiles(snap).isEmpty,
+      s"${defn.name}: physical read over files written before a column " +
+        "rename (or a re-added column) — use readLogical(), or compact()")
+    readFilesAs(snap.files, logical, spec)
   }
 
   /** Logical read: latest snapshot without the derived partition cols.
@@ -1049,31 +997,32 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * hash-shuffle on the keys; files from a single sequence (fresh
     * table, or just compacted) skip the merge entirely.
     */
-  def readLogical(version: Option[Int] = None): DataFrame = {
-    val logical = schemaAt(version)
+  def readLogical(version: Option[Int] = None): DataFrame = readLogicalAt(snapshot(version))
+
+  /** [[readLogical]] of the snapshot `snap`. */
+  private def readLogicalAt(snap: CommitMeta): DataFrame = {
+    val logical = schemaOf(snap)
     val logicalCols = logical.fieldNames.map(org.apache.spark.sql.functions.col)
-    val cs = commits
-    val snap = snapshotAt(cs, version)
     if (!defn.mergeOnRead) {
       // pending position deletes (this SNAPSHOT's — time travel to a
       // pre-delete version sees the rows) anti-join away per (file, pos)
       snap.posDeleteFiles.keys.toSeq.sorted match {
-        case Nil => readFilesLogicalSpecAware(snap.files, logical, Some(snap))
+        case Nil => readFilesLogicalSpecAware(snap.files, logical, snap)
         case ps => applyPosDeletes(
-          readFilesLogicalSpecAware(snap.files, logical, Some(snap), withPos = true), ps)
+          readFilesLogicalSpecAware(snap.files, logical, snap, withPos = true), ps)
           .select(logicalCols: _*)
       }
     } else {
-      val firstSeen = firstSeenByFile(cs)
+      val firstSeen = firstSeenByFile()
       val groups = snap.files.groupBy(firstSeen).toSeq.sortBy(_._1)
       val tombs = snap.morDeleteFiles
       if (groups.size <= 1 && tombs.isEmpty)
-        readFilesLogicalSpecAware(snap.files, logical, Some(snap))
+        readFilesLogicalSpecAware(snap.files, logical, snap)
       else {
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.functions.{col, lit, max}
         val dataLegs = groups.map { case (seq, files) =>
-          readFilesLogicalSpecAware(files, logical, Some(snap))
+          readFilesLogicalSpecAware(files, logical, snap)
             .withColumn("__seq", lit(seq)).withColumn("__tomb", lit(0))
         }
         // equality-delete tombstones participate in the same latest-wins
@@ -1114,21 +1063,16 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * the drift check (S7) compares against the declaration.
     */
   def liveSchema: Option[StructType] =
-    commits.lastOption.filter(_.files.nonEmpty).map { snap =>
+    Some(head).filter(_.files.nonEmpty).map { snap =>
       // per spec generation AND rename epoch: mixed directory layouts
       // can't be listed in one partition-discovery pass, each group's
       // derived p_* cols are ITS spec's, and a pre-rename file's footer
       // stores the OLD column name — rendered back as the current name
       // so a rename alone never reads as drift
       val byFile = specsByFile(snap)
-      val log = renameLogOf(Some(snap))
-      val firstSeen: Map[String, Int] =
-        if (log.isEmpty) Map.empty else firstSeenByFile(commits)
-      val logical = currentSchema
+      val storedOf = storedNamesByFile(schemaOf(snap), renameLogOf(snap))
       def epoch(f: String): Map[String, String] =
-        if (log.isEmpty) Map.empty
-        else storedNamesAt(logical, firstSeen.getOrElse(f, Int.MaxValue), log)
-          .collect { case (c, Some(s)) if c != s => s -> c } // stored → current
+        storedOf(f).collect { case (c, Some(s)) => s -> c } // stored → current
       val fields = snap.files
         .groupBy(f => (PartitionTransform.specDdl(byFile(f)),
           epoch(f).toSeq.sorted.mkString(",")))
@@ -1155,12 +1099,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * twice).
     */
   def append(df: DataFrame): CommitMeta = {
-    val baseV = currentVersion
-    val added = writeFiles(df.select(currentSchema.fieldNames.map(df.col): _*))
-    commits.lastOption match {
-      case Some(p) if added.isEmpty => p
-      case _ => writeCommit("append", AddFiles(added.map(_.path)), baseV, added)
-    }
+    val base = head
+    val added = writeFiles(df.select(schemaOf(base).fieldNames.map(df.col): _*), base)
+    if (added.isEmpty && base.version > 0) base
+    else writeCommit("append", AddFiles(added.map(_.path)), base, added)
   }
 
   // ---- schema evolution ----
@@ -1169,16 +1111,17 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * zero data rewritten — the point of lakehouse schema evolution at
     * 100 TB) records the widened schema; files written before it simply
     * miss the column and every read null-fills it, so the added fields
-    * must be nullable. Name-based resolution (parquet column names, not
-    * Iceberg field ids) is what this format can do without rewriting
-    * footers — so ADD and DROP are supported and RENAME is not (a
-    * rename would silently null out history; Iceberg needs field ids
-    * for exactly this reason — documented deviation).
+    * must be nullable. Resolution is by parquet column name, so a name
+    * that ever existed before is re-added with a log entry that makes
+    * older files read it as absent, and [[renameColumn]] and
+    * [[dropColumns]] record theirs in the same log — the commit log's
+    * stand-in for Iceberg's field ids.
     */
   def addColumns(fields: StructField*): CommitMeta = {
     require(fields.nonEmpty, s"${defn.name}: addColumns with no columns")
-    val cur = currentSchema
-    val taken = (cur.fieldNames ++ partCols).map(_.toLowerCase).toSet
+    val base = head
+    val cur = schemaOf(base)
+    val taken = (cur.fieldNames ++ partCols(base)).map(_.toLowerCase).toSet
     fields.foreach { f =>
       require(!taken.contains(f.name.toLowerCase),
         s"${defn.name}: column '${f.name}' already exists")
@@ -1189,19 +1132,14 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val dup = fields.groupBy(_.name.toLowerCase).collect { case (n, fs) if fs.size > 1 => n }
     require(dup.isEmpty, s"${defn.name}: duplicate added column(s) ${dup.mkString(", ")}")
     val next = StructType(cur.fields ++ fields)
-    val cs = commits
     // a re-add of a name that ever existed gets an `add` log entry so
     // files predating it read the column as ABSENT (not as whatever
     // dead values their footers still carry under that name)
-    val v = currentVersion + 1
-    val proneEntries = fields.filter(f => resurrectionProne(f.name, cs))
-      .map(f => s"$v||${f.name}")
-    writeCommit("evolve-schema", MetadataOnly(None),
-      cs.lastOption.map(_.version).getOrElse(0),
-      newSchemaDdl = Some(next.toDDL),
-      newRenames =
-        if (proneEntries.isEmpty) None
-        else Some(cs.lastOption.map(_.renames).getOrElse(Nil) ++ proneEntries))
+    val ever = everNamed(base)
+    val prone = fields.filter(f => ever(f.name.toLowerCase))
+    writeCommit("evolve-schema", MetadataOnly(), base, edit = c => c.copy(
+      schemaDdl = Some(next.toDDL),
+      renames = c.renames ++ prone.map(f => s"${c.version}||${f.name}")))
   }
 
   /** Iceberg-style DROP COLUMN: metadata-only — the column's values stay
@@ -1213,7 +1151,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     */
   def dropColumns(names: String*): CommitMeta = {
     require(names.nonEmpty, s"${defn.name}: dropColumns with no columns")
-    val cur = currentSchema
+    val base = head
+    val cur = schemaOf(base)
     val have = cur.fieldNames.map(n => n.toLowerCase -> n).toMap
     names.foreach { n =>
       require(have.contains(n.toLowerCase), s"${defn.name}: no column '$n'")
@@ -1226,23 +1165,19 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // a partition transform that reads a dropped column would break every
     // subsequent write — probe by deriving the partition columns over the
     // narrowed schema, exactly as writeFiles will
-    try physicalSchemaOf(next)
+    try physicalSchemaOf(next, specOf(base))
     catch {
       case e: org.apache.spark.sql.AnalysisException =>
         throw new IllegalArgumentException(
           s"${defn.name}: a partition transform depends on a dropped column " +
             s"(${e.getMessage.linesIterator.next()})")
     }
-    val cs = commits
-    val v = currentVersion + 1
     // drop entries are the PERMANENT record that these names existed
     // (they survive snapshot expiry), so a later re-add is detected as
     // resurrection-prone; resolution itself never matches them
-    val dropEntries = names.map(n => s"$v|${have(n.toLowerCase)}|")
-    writeCommit("evolve-schema", MetadataOnly(None),
-      cs.lastOption.map(_.version).getOrElse(0),
-      newSchemaDdl = Some(next.toDDL),
-      newRenames = Some(cs.lastOption.map(_.renames).getOrElse(Nil) ++ dropEntries))
+    writeCommit("evolve-schema", MetadataOnly(), base, edit = c => c.copy(
+      schemaDdl = Some(next.toDDL),
+      renames = c.renames ++ names.map(n => s"${c.version}|${have(n.toLowerCase)}|")))
   }
 
   /** Iceberg-style RENAME COLUMN: a METADATA-ONLY commit (zero data
@@ -1260,28 +1195,25 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * users also treat as pinned in practice.
     */
   def renameColumn(oldName: String, newName: String): CommitMeta = {
-    val cur = currentSchema
+    val base = head
+    val cur = schemaOf(base)
     val exact = cur.fieldNames.find(_.equalsIgnoreCase(oldName)).getOrElse(
       throw new IllegalArgumentException(s"${defn.name}: no column '$oldName'"))
     require(newName.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"${defn.name}: bad column name '$newName'")
-    val taken = (cur.fieldNames ++ partCols).map(_.toLowerCase).toSet
+    val taken = (cur.fieldNames ++ partCols(base)).map(_.toLowerCase).toSet
     require(!taken.contains(newName.toLowerCase),
       s"${defn.name}: column '$newName' already exists")
     require(!defn.keys.exists(_.equalsIgnoreCase(oldName)),
       s"${defn.name}: cannot rename identifier key '$oldName'")
-    require(!currentPartitions.exists(_.source.equalsIgnoreCase(oldName)),
+    require(!specOf(base).exists(_.source.equalsIgnoreCase(oldName)),
       s"${defn.name}: cannot rename partition-transform source '$oldName'")
     require(!defn.sortOrder.exists(_.equalsIgnoreCase(oldName)),
       s"${defn.name}: cannot rename declared sort column '$oldName'")
     val next = StructType(cur.fields.map(f =>
       if (f.name == exact) f.copy(name = newName) else f))
-    val prev = commits.lastOption
-    writeCommit("evolve-schema", MetadataOnly(None),
-      prev.map(_.version).getOrElse(0),
-      newSchemaDdl = Some(next.toDDL),
-      newRenames = Some(prev.map(_.renames).getOrElse(Nil) :+
-        s"${prev.map(_.version).getOrElse(0) + 1}|$exact|$newName"))
+    writeCommit("evolve-schema", MetadataOnly(), base, edit = c => c.copy(
+      schemaDdl = Some(next.toDDL), renames = c.renames :+ s"${c.version}|$exact|$newName"))
   }
 
   /** Iceberg-style partition-spec evolution: a METADATA-ONLY commit
@@ -1295,7 +1227,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * partitioning got finer.
     */
   def evolvePartitioning(spec: Seq[PartitionTransform]): CommitMeta = {
-    val cur = currentSchema
+    val base = head
+    val cur = schemaOf(base)
     spec.foreach { p =>
       require(cur.fieldNames.exists(_.equalsIgnoreCase(p.source)),
         s"${defn.name}: partition source '${p.source}' is not a column")
@@ -1306,13 +1239,12 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     require(names.distinct.size == names.size,
       s"${defn.name}: duplicate derived partition column names")
     val ddl = PartitionTransform.specDdl(spec)
-    require(ddl != PartitionTransform.specDdl(currentPartitions),
+    require(ddl != PartitionTransform.specDdl(specOf(base)),
       s"${defn.name}: partition spec is already '$ddl'")
     require(PartitionTransform.specDdl(PartitionTransform.parseSpec(ddl)) == ddl,
       s"${defn.name}: partition spec does not round-trip: '$ddl'")
     physicalSchemaOf(cur, spec) // probe derivability against the schema
-    writeCommit("evolve-partition", MetadataOnly(None), currentVersion,
-      newPartSpecDdl = Some(ddl))
+    writeCommit("evolve-partition", MetadataOnly(partSpecDdl = Some(ddl)), base)
   }
 
   /** Iceberg's `rollback_to_snapshot`: a NEW commit whose live set (and
@@ -1326,24 +1258,20 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * the max over the whole log here).
     */
   def rollback(version: Int): CommitMeta = {
-    val cs = commits
-    val target = cs.find(_.version == version).getOrElse(
-      throw new IllegalArgumentException(s"${defn.name}: no snapshot v$version to roll back to"))
-    require(version < currentVersion,
-      s"${defn.name}: rollback target v$version is not an ancestor of v$currentVersion")
+    val base = head
+    val target = snapshot(Some(version))
+    require(version < base.version,
+      s"${defn.name}: rollback target v$version is not an ancestor of v${base.version}")
     // files the head dropped come back with the rows and bounds the
     // target's manifest entries recorded for them
     val targetStats = target.manifests.flatMap(manifestStore.read)
       .map(e => WrittenFile(e.p, e.r, e.b))
-    writeCommit("rollback", MetadataOnly(Some(target.files)),
-      cs.lastOption.map(_.version).getOrElse(0), targetStats,
-      newSchemaDdl = Some(target.schemaDdl.getOrElse(defn.schema.toDDL)),
-      morDeletes = (_, _) => target.morDeleteFiles,
-      newPartSpecDdl = Some(target.partSpecDdl
-        .getOrElse(PartitionTransform.specDdl(defn.partitions))),
-      fileSpecsOverride = Some(target.fileSpecs),
-      newRenames = Some(target.renames),
-      posDeletes = (_, _) => target.posDeleteFiles)
+    writeCommit("rollback", MetadataOnly(Some(target.files),
+        Some(target.partSpecDdl.getOrElse(PartitionTransform.specDdl(defn.partitions))),
+        Some(target.fileSpecs)),
+      base, targetStats, _.copy(schemaDdl = Some(schemaOf(target).toDDL),
+        morDeleteFiles = target.morDeleteFiles, renames = target.renames,
+        posDeleteFiles = target.posDeleteFiles))
   }
 
   /** Iceberg's `TIMESTAMP AS OF`: the snapshot that was current at
@@ -1360,11 +1288,11 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
 
   /** M1 — full overwrite (CTAS materialization). */
   def overwrite(df: DataFrame): CommitMeta = {
-    val baseV = currentVersion
-    val added = writeFiles(df.select(currentSchema.fieldNames.map(df.col): _*))
+    val base = head
+    val added = writeFiles(df.select(schemaOf(base).fieldNames.map(df.col): _*), base)
     // a full rewrite supersedes any pending position deletes
-    writeCommit("overwrite", ReplaceContent(Nil, added.map(_.path)), baseV, added,
-      posDeletes = (_, _) => Map.empty)
+    writeCommit("overwrite", ReplaceContent(Nil, added.map(_.path)), base, added,
+      _.copy(posDeleteFiles = Map.empty))
   }
 
   /** S5 — keyed upsert: rows in `batch` replace live rows with the same
@@ -1386,28 +1314,28 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     */
   def upsert(batch: DataFrame): CommitMeta = {
     require(defn.isUpsert, s"${defn.name} has no identifier keys")
-    val baseV = currentVersion
-    val cols = currentSchema.fieldNames.map(batch.col)
-    val b = batch.select(cols: _*)
+    val base = head
+    val cols = schemaOf(base).fieldNames
+    val b = batch.select(cols.map(batch.col): _*)
     if (defn.mergeOnRead) {
       // O(batch) addition — latest-wins resolution happens at read, so
       // the commit commutes with interleaved writers like an append
-      val added = writeFiles(b)
-      writeCommit("upsert-mor", AddFiles(added.map(_.path)), baseV, added)
+      val added = writeFiles(b, base)
+      writeCommit("upsert-mor", AddFiles(added.map(_.path)), base, added)
     } else {
       // null-safe key match (<=>): a name-list join compares with =, so a
       // NULL key tuple never matches and the old null-key row would
       // survive alongside the new one — while the MOR path's latest-wins
       // window groups nulls together and keeps only the newest. Both
       // strategies must stay observably identical.
-      val cur = readLogical().alias("cur")
+      val cur = readLogicalAt(base).alias("cur")
       val bb = b.alias("b")
       val sameKey = defn.keys
         .map(k => org.apache.spark.sql.functions.col(s"cur.$k") <=>
           org.apache.spark.sql.functions.col(s"b.$k"))
         .reduce(_ && _)
       val survivors = cur.join(bb, sameKey, "left_anti")
-        .select(currentSchema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
+        .select(cols.map(org.apache.spark.sql.functions.col): _*)
       // batch and survivors land in SEPARATE files so the commit can
       // name the batch's files as its change set (changeFiles) — that
       // is what lets readChanges serve CDC rows for a COW upsert
@@ -1417,12 +1345,11 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       // partition until the next compact. The COW rewrite reads the
       // visible state (pos deletes applied) and replaces every file —
       // pending tombstones are materialized.
-      val batchFiles = writeFiles(b)
-      val survivorFiles = writeFiles(survivors)
+      val batchFiles = writeFiles(b, base)
+      val survivorFiles = writeFiles(survivors, base)
       val added = survivorFiles ++ batchFiles
-      writeCommit("upsert", ReplaceContent(Nil, added.map(_.path)), baseV, added,
-        changeFiles = batchFiles.map(_.path),
-        posDeletes = (_, _) => Map.empty)
+      writeCommit("upsert", ReplaceContent(Nil, added.map(_.path)), base, added,
+        _.copy(changeFiles = batchFiles.map(_.path), posDeleteFiles = Map.empty))
     }
   }
 
@@ -1440,18 +1367,18 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * an Iceberg-scale deployment shards delete files per partition —
     * the sequence semantics are unchanged by that split.
     */
-  def deleteKeys(staleKeys: DataFrame): CommitMeta = {
+  def deleteKeys(staleKeys: DataFrame): CommitMeta = deleteKeys(staleKeys, head)
+
+  private def deleteKeys(staleKeys: DataFrame, base: CommitMeta): CommitMeta = {
     require(defn.mergeOnRead,
       s"${defn.name}: equality deletes are merge-on-read only — " +
         "copy-on-write tables use replaceWhere/replaceKeys")
     val k = staleKeys.select(defn.keys.map(staleKeys.col): _*)
       .distinct().repartition(1)
     val added = writeRows(k, Nil)
-    val prev = commits.lastOption
-    if (added.isEmpty) // zero keys → no file, no commit
-      return prev.getOrElse(CommitMeta(0, 0L, "empty", 0L, Nil))
-    writeCommit("delete-mor", TombstoneEq, prev.map(_.version).getOrElse(0),
-      morDeletes = (m, v) => m ++ added.map(_.path -> v))
+    if (added.isEmpty) base // zero keys → no file, no commit
+    else writeCommit("delete-mor", TombstoneEq, base,
+      edit = c => c.copy(morDeleteFiles = c.morDeleteFiles ++ added.map(_.path -> c.version)))
   }
 
   /** Schema of a position-delete tombstone file. */
@@ -1479,14 +1406,6 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       else dels
     data.join(hinted, Seq("__file", "__pos"), "left_anti")
   }
-
-  /** True while un-compacted position-delete tombstones are live — raw
-    * file reads (range reads, replace rewrites, physical reads) would
-    * resurface deleted rows, so those paths refuse until [[compact]]
-    * materializes the deletes (mirroring the MOR-sequence refusals).
-    */
-  private def posPending: Boolean =
-    commits.lastOption.exists(_.posDeleteFiles.nonEmpty)
 
   /** S5c — predicate DELETE, Iceberg v2's position-delete shape (`DELETE
     * FROM ... WHERE <any predicate>`): scans the VISIBLE state with file
@@ -1520,28 +1439,39 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     */
   def deleteWhere(condition: org.apache.spark.sql.Column,
       prune: Option[RangePrune]): CommitMeta = {
+    val base = head
     if (defn.mergeOnRead)
-      return deleteKeys(readLogical().filter(condition))
-    val prev = commits.lastOption
-    if (prev.forall(_.files.isEmpty))
-      return prev.getOrElse(CommitMeta(0, 0L, "empty", 0L, Nil))
-    val snap = prev.get
-    val logical = currentSchema
-    val (_, overlapping) = classifyLiveFiles(prune)
-    val base = readFilesLogicalSpecAware(overlapping, logical, Some(snap),
+      return deleteKeys(readLogicalAt(base).filter(condition), base)
+    if (base.files.isEmpty) return base
+    val (_, overlapping) = classifyLiveFiles(base, prune)
+    val scanned = readFilesLogicalSpecAware(overlapping, schemaOf(base), base,
       withPos = true)
-    val visible = snap.posDeleteFiles.keys.toSeq.sorted match {
-      case Nil => base
-      case ps => applyPosDeletes(base, ps)
+    val visible = base.posDeleteFiles.keys.toSeq.sorted match {
+      case Nil => scanned
+      case ps => applyPosDeletes(scanned, ps)
     }
     val matches = visible.filter(condition)
       .select(org.apache.spark.sql.functions.col("__file"),
         org.apache.spark.sql.functions.col("__pos"))
       .repartition(1)
     val added = writeRows(matches, Nil)
-    if (added.isEmpty) return snap // zero matches → no file, no commit
-    writeCommit("delete-pos", TombstonePos, snap.version,
-      posDeletes = (m, v) => m ++ added.map(_.path -> v))
+    if (added.isEmpty) base // zero matches → no file, no commit
+    else writeCommit("delete-pos", TombstonePos, base,
+      edit = c => c.copy(posDeleteFiles = c.posDeleteFiles ++ added.map(_.path -> c.version)))
+  }
+
+  /** Refuse a raw-file read or rewrite of `base` (range reads, replace
+    * rewrites) while it would resurface rows: un-compacted merge-on-read
+    * sequences need ALL of a key's files to resolve latest-wins, and
+    * pending tombstones of either kind are applied only by logical
+    * reads. compact() clears all three.
+    */
+  private def requireRawFiles(base: CommitMeta, what: String): Unit = {
+    require(!defn.mergeOnRead || (morSequences(base) <= 1 && base.morDeleteFiles.isEmpty),
+      s"${defn.name}: $what over un-compacted merge-on-read sequences is unsound — " +
+        "compact() first")
+    require(base.posDeleteFiles.isEmpty,
+      s"${defn.name}: $what with pending position deletes is unsound — compact() first")
   }
 
   /** Targeted delete+re-insert for the materializer repair passes
@@ -1555,45 +1485,12 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       replacement: DataFrame,
       prune: Option[RangePrune] = None,
       trackChanges: Boolean = false): CommitMeta = {
-    require(!defn.mergeOnRead || (morSequences <= 1 && !morPending),
-      s"${defn.name}: replace over un-compacted merge-on-read sequences is unsound")
-    require(!posPending,
-      s"${defn.name}: replace with pending position deletes is unsound — compact() first")
-    val baseV = currentVersion
-    val (untouched, toRewrite) = classifyLiveFiles(prune)
-    val keep = readFilesLogicalSpecAware(toRewrite, currentSchema, commits.lastOption)
-      .filter(!condition || condition.isNull)
-    val repl = replacement.select(currentSchema.fieldNames.map(replacement.col): _*)
-    val prev = commits.lastOption
-    if (trackChanges) {
-      // change-tracked form (opt-in — the CDC writes below are a real
-      // extra cost the default repair path must not pay): the
-      // replacement lands in its OWN files (the commit's change set)
-      // and the rows the condition removes are materialized as DELETE
-      // files (one extra scan of the rewritten window, O(affected
-      // window) like the rewrite itself) — Iceberg v2's delete-file
-      // scheme, which is what lets readChanges serve insert+delete
-      // rows for a repair instead of forcing a consumer full-resync.
-      val deleted = readFilesLogicalSpecAware(toRewrite, currentSchema, commits.lastOption)
-        .filter(condition)
-      val keepFiles = writeFiles(keep)
-      val replFiles = writeFiles(repl)
-      val delFiles = writeFiles(deleted)
-      writeCommit("replace-cdc",
-        ReplaceContent(untouched, (keepFiles ++ replFiles).map(_.path)), baseV,
-        keepFiles ++ replFiles, changeFiles = replFiles.map(_.path),
-        deleteFiles = delFiles.map(_.path))
-    } else {
-      val added = writeFiles(keep.unionByName(repl))
-      // nothing deleted (no file overlapped the condition) and nothing
-      // inserted ⇒ a no-op: skip the commit, mirroring append()'s
-      // zero-row skip
-      prev match {
-        case Some(p) if toRewrite.isEmpty && added.isEmpty => p
-        case _ =>
-          writeCommit("replace", ReplaceContent(untouched, added.map(_.path)), baseV, added)
-      }
-    }
+    val base = head
+    requireRawFiles(base, "replace")
+    val (untouched, toRewrite) = classifyLiveFiles(base, prune)
+    val rows = readFilesLogicalSpecAware(toRewrite, schemaOf(base), base)
+    rewrite(base, untouched, rows.filter(!condition || condition.isNull),
+      rows.filter(condition), replacement, trackChanges)
   }
 
   /** Keyed delete+re-insert: drop live rows whose `keyCols` tuple appears
@@ -1617,11 +1514,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       prune: Option[RangePrune] = None,
       knownKeyCount: Option[Long] = None,
       trackChanges: Boolean = false): CommitMeta = {
-    require(!defn.mergeOnRead || (morSequences <= 1 && !morPending),
-      s"${defn.name}: replace over un-compacted merge-on-read sequences is unsound")
-    require(!posPending,
-      s"${defn.name}: replace with pending position deletes is unsound — compact() first")
-    val baseV = currentVersion
+    val base = head
+    requireRawFiles(base, "replace")
     val keyProj = staleKeys.select(keyCols.map(staleKeys.col): _*)
     // `knownKeyCount` = the caller already distincted/persisted/counted
     // the key set (the Materializer repair passes do) — reuse it rather
@@ -1642,54 +1536,70 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         // The isEmpty probe is one limit-1 job on the rare no-op path.
         require(replacement.isEmpty,
           s"${defn.name}: replaceKeys with zero keys but a non-empty replacement — use append")
-        return commits.lastOption.getOrElse(CommitMeta(0, 0L, "empty", 0L, Nil))
+        return base
       }
-      val (untouched, toRewrite) = classifyLiveFiles(prune)
+      val (untouched, toRewrite) = classifyLiveFiles(base, prune)
       val hinted =
         if (nKeys <= GraftTable.BroadcastKeyLimit)
           org.apache.spark.sql.functions.broadcast(keys)
         else keys
-      val keep = readFilesLogicalSpecAware(toRewrite, currentSchema, commits.lastOption)
-        .join(hinted, keyCols, "left_anti")
-      val repl = replacement.select(currentSchema.fieldNames.map(replacement.col): _*)
-      if (trackChanges) {
-        // opt-in CDC form — see replaceWhere: replacement in its own
-        // files, deleted rows (the keys' SEMI-join complement of keep)
-        // materialized as delete files
-        val deleted = readFilesLogicalSpecAware(toRewrite, currentSchema, commits.lastOption)
-          .join(hinted, keyCols, "left_semi")
-        val keepFiles = writeFiles(keep)
-        val replFiles = writeFiles(repl)
-        val delFiles = writeFiles(deleted)
-        writeCommit("replace-cdc",
-          ReplaceContent(untouched, (keepFiles ++ replFiles).map(_.path)), baseV,
-          keepFiles ++ replFiles, changeFiles = replFiles.map(_.path),
-          deleteFiles = delFiles.map(_.path))
-      } else {
-        val added = writeFiles(keep.unionByName(repl))
-        writeCommit("replace", ReplaceContent(untouched, added.map(_.path)), baseV, added)
-      }
+      val rows = readFilesLogicalSpecAware(toRewrite, schemaOf(base), base)
+      // the deleted rows are the keys' SEMI-join complement of keep
+      rewrite(base, untouched, rows.join(hinted, keyCols, "left_anti"),
+        rows.join(hinted, keyCols, "left_semi"), replacement, trackChanges)
     } finally if (ownedCache) keys.unpersist()
   }
 
-  /** Split the live file set into (provably-outside-range → carry over,
-    * possibly-overlapping → rewrite). No hint, or any file with unusable
-    * stats, degrades to rewriting everything — never to wrong results.
+  /** The rewrite tail of both replace forms: `keep` (the rewritten
+    * files' surviving rows) and `replacement` land as new files beside
+    * the `untouched` ones. Nothing deleted (every live file untouched)
+    * and nothing inserted is a no-op: no commit, mirroring append()'s
+    * zero-row skip.
+    *
+    * With `trackChanges` (opt-in — the CDC writes are a real extra cost
+    * the default repair path must not pay) the replacement lands in its
+    * OWN files (the commit's change set) and `deleted`, the rows the
+    * rewrite removes, is materialized as DELETE files (one extra scan
+    * of the rewritten window, O(affected window) like the rewrite
+    * itself) — Iceberg v2's delete-file scheme, which is what lets
+    * readChanges serve insert+delete rows for a repair instead of
+    * forcing a consumer full-resync.
     */
-  private def classifyLiveFiles(prune: Option[RangePrune]): (Seq[String], Seq[String]) = {
-    val snap = commits.lastOption
-    val live = snap.map(_.files).getOrElse(Nil)
+  private def rewrite(base: CommitMeta, untouched: Seq[String], keep: DataFrame,
+      deleted: DataFrame, replacement: DataFrame, trackChanges: Boolean): CommitMeta = {
+    val repl = replacement.select(schemaOf(base).fieldNames.map(replacement.col): _*)
+    if (trackChanges) {
+      val keepFiles = writeFiles(keep, base)
+      val replFiles = writeFiles(repl, base)
+      val delFiles = writeFiles(deleted, base)
+      writeCommit("replace-cdc",
+        ReplaceContent(untouched, (keepFiles ++ replFiles).map(_.path)), base,
+        keepFiles ++ replFiles,
+        _.copy(changeFiles = replFiles.map(_.path), deleteFiles = delFiles.map(_.path)))
+    } else {
+      val added = writeFiles(keep.unionByName(repl), base)
+      if (base.version > 0 && untouched.size == base.files.size && added.isEmpty) base
+      else writeCommit("replace", ReplaceContent(untouched, added.map(_.path)), base, added)
+    }
+  }
+
+  /** Split `base`'s live files into (provably-outside-range → carry
+    * over, possibly-overlapping → rewrite). No hint, or any file with
+    * unusable stats, degrades to rewriting everything — never to wrong
+    * results.
+    */
+  private def classifyLiveFiles(base: CommitMeta,
+      prune: Option[RangePrune]): (Seq[String], Seq[String]) =
     prune match {
-      case None => (Nil, live)
+      case None => (Nil, base.files)
       case Some(p) =>
         // bounds come from the snapshot's MANIFEST entries (persisted at
         // write time) — a metadata-log lookup, zero data-file footer IO.
         // Manifests store bounds under the WRITE-TIME column name, so a
         // renamed pruning column is probed under each file's stored name
         // (a miss there degrades to rewrite, never to a wrong carry).
-        val stored = storedColumnByFile(p.column)
-        val bounds = boundsByFile(snap, live, stored)
-        if (bounds.exists(_._2.isEmpty)) (Nil, live)
+        val bounds = boundsByFile(base, base.files, storedColumnByFile(p.column, base))
+        if (bounds.exists(_._2.isEmpty)) (Nil, base.files)
         else {
           val (out, in) = bounds.partition {
             case (_, Some((lo, hi))) => hi < p.loMicros || lo > p.hiMicros
@@ -1698,35 +1608,33 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
           (out.map(_._1), in.map(_._1))
         }
     }
-  }
 
   /** Per-file bounds of a (possibly renamed) column over `files`, from
     * the manifest entries: a key present is the written bounds, a key
     * absent means the stats were unusable at write time (None — the
     * caller treats the file as "may contain anything").
     */
-  private def boundsByFile(snap: Option[CommitMeta], files: Seq[String],
+  private def boundsByFile(snap: CommitMeta, files: Seq[String],
       stored: String => String): Seq[(String, Option[(Long, Long)])] = {
-    val persisted = snap.map(manifestBoundsOf).getOrElse(Map.empty)
-    val rows = snap.map(_.fileRows).getOrElse(Map.empty)
+    val persisted = manifestBoundsOf(snap)
     files.map { f =>
       // a zero-row file (the schema-only file Spark's writer left for
       // an empty write) has no blocks and so no recorded columns — its
       // bounds are the empty range for EVERY column
-      f -> (if (rows(f) == 0L) Some((Long.MaxValue, Long.MinValue))
+      f -> (if (snap.fileRows(f) == 0L) Some((Long.MaxValue, Long.MinValue))
         else persisted(f).get(stored(f)))
     }
   }
 
   /** file → the name the file's FOOTER stores for the current logical
-    * column `cur` (identity when the table was never renamed — the
-    * common case allocates nothing per file).
+    * column `cur` of `snap` (identity when the table was never renamed
+    * — the common case allocates nothing per file).
     */
-  private def storedColumnByFile(cur: String): String => String = {
-    val log = renameLogOf(commits.lastOption)
+  private def storedColumnByFile(cur: String, snap: CommitMeta): String => String = {
+    val log = renameLogOf(snap)
     if (log.isEmpty) _ => cur
     else {
-      val firstSeen = firstSeenByFile(commits)
+      val firstSeen = firstSeenByFile()
       // absent-for-epoch → probe a name no footer has: stats come back
       // unusable and the caller degrades to reading the file (safe)
       f => storedNameOf(cur, firstSeen.getOrElse(f, Int.MaxValue), log)
@@ -1739,10 +1647,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * no non-null value anywhere; callers fall back to a data scan.
     */
   def columnMaxMicros(colName: String): Option[Long] = {
-    val snap = commits.lastOption
-    val live = snap.map(_.files).getOrElse(Nil)
-    val stored = storedColumnByFile(colName)
-    val bounds = boundsByFile(snap, live, stored).map(_._2)
+    val base = head
+    val bounds = boundsByFile(base, base.files, storedColumnByFile(colName, base)).map(_._2)
     if (bounds.exists(_.isEmpty)) None
     else bounds.flatten.map(_._2).filter(_ != Long.MinValue) match {
       case Nil => None
@@ -1762,40 +1668,29 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * the read is sound again).
     */
   def readRangeLogical(colName: String, loMicros: Long, hiMicros: Long): DataFrame = {
-    require(!defn.mergeOnRead || (morSequences <= 1 && !morPending),
-      s"${defn.name}: range read over ${morSequences} merge-on-read upsert sequences " +
-        "would skip latest-wins resolution — compact() first")
-    require(!posPending,
-      s"${defn.name}: range read with pending position deletes would " +
-        "resurface deleted rows — compact() first")
-    val (_, overlapping) = classifyLiveFiles(Some(RangePrune(colName, loMicros, hiMicros)))
-    readFilesLogicalSpecAware(overlapping, currentSchema, commits.lastOption)
+    val base = head
+    requireRawFiles(base, "range read")
+    val (_, overlapping) =
+      classifyLiveFiles(base, Some(RangePrune(colName, loMicros, hiMicros)))
+    readFilesLogicalSpecAware(overlapping, schemaOf(base), base)
   }
 
   /** file → the commit version that FIRST added it — the merge-on-read
-    * sequence number readLogical's latest-wins resolution orders by.
-    * One definition for every MOR-aware code path.
+    * sequence number readLogical's latest-wins resolution orders by, and
+    * the epoch stored-name resolution reads a file under. One definition
+    * for every MOR- and rename-aware code path; reads the whole log, as
+    * the answer is a property of the log, not of one snapshot.
     */
-  private def firstSeenByFile(cs: Seq[CommitMeta]): Map[String, Int] =
+  private def firstSeenByFile(cs: Seq[CommitMeta] = commits): Map[String, Int] =
     cs.flatMap(c => c.files.map(_ -> c.version)).groupBy(_._1)
       .view.mapValues(_.map(_._2).min).toMap
 
-  /** Distinct upsert sequences among the live files of a merge-on-read
-    * table (1 after compaction; raw-file reads are sound only then).
+  /** Distinct upsert sequences among `snap`'s live files (1 after
+    * compaction; raw-file reads of a merge-on-read table are sound only
+    * then).
     */
-  private def morSequences: Int = {
-    val cs = commits
-    cs.lastOption.map(snap =>
-      snap.files.map(firstSeenByFile(cs)).distinct.size).getOrElse(0)
-  }
-
-  /** True while un-compacted equality-delete tombstones are live — raw
-    * file reads (range reads, replace rewrites) would resurface deleted
-    * rows, so the same paths that refuse multi-sequence MOR state
-    * refuse this too (compact() clears both).
-    */
-  private def morPending: Boolean =
-    commits.lastOption.exists(_.morDeleteFiles.nonEmpty)
+  private def morSequences(snap: CommitMeta): Int =
+    if (snap.files.isEmpty) 0 else snap.files.map(firstSeenByFile()).distinct.size
 
   /** Raw read of specific data files, projected to the logical columns —
     * the incremental-scan primitive: the materializer reads ONLY the
@@ -1803,14 +1698,17 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * Append-only file sets only (a merge-on-read file does not carry its
     * shadowed rows); the caller asserts that by knowing the delta's ops.
     */
-  private[graft] def readFilesLogical(files: Seq[String]): DataFrame =
-    readFilesLogicalSpecAware(files, currentSchema, commits.lastOption)
+  private[graft] def readFilesLogical(files: Seq[String]): DataFrame = {
+    val base = head
+    readFilesLogicalSpecAware(files, schemaOf(base), base)
+  }
 
-  private def readFilesAs(files: Seq[String],
-      logical: StructType = currentSchema,
-      spec: Seq[PartitionTransform] = null): DataFrame = {
-    val phys = physicalSchemaOf(logical,
-      Option(spec).getOrElse(currentPartitions))
+  /** Plain read of `files` under `logical` laid out by `spec`: the
+    * physical schema, partition columns included.
+    */
+  private def readFilesAs(files: Seq[String], logical: StructType,
+      spec: Seq[PartitionTransform]): DataFrame = {
+    val phys = physicalSchemaOf(logical, spec)
     if (files.isEmpty) spark.createDataFrame(new java.util.ArrayList[Row](), phys)
     else spark.read.option("basePath", dataDir).schema(phys)
       .parquet(files.map(f => s"$dataDir/$f"): _*)
@@ -1826,24 +1724,62 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       java.util.regex.Pattern.quote(s"$dataDir/")), 2)
   }
 
-  /** Logical projection over arbitrary live files, PARTITION-SPEC- and
-    * RENAME-aware: files are grouped by the spec they were written
-    * under AND by their stored-name epoch (which renames they predate),
-    * each group is read with its own directory layout and its own
-    * stored column names, aliased to the current logical names, then
+  /** file → its non-identity stored names for the columns of `logical`
+    * under `log` ([[storedNamesAt]] at the file's first-seen version):
+    * Some(other) = stored under a pre-rename name; None = ABSENT for
+    * that epoch (predates a resurrection-prone re-add — must NOT read
+    * the dead same-named column the file may still carry). Empty for
+    * every file while the log is, so the first-seen index is built only
+    * once a rename exists; a file outside any commit's live set
+    * (defensive default) reads as current-named.
+    */
+  private def storedNamesByFile(logical: StructType,
+      log: Seq[(Int, String, String)]): String => Map[String, Option[String]] =
+    if (log.isEmpty) _ => Map.empty
+    else {
+      val firstSeen = firstSeenByFile()
+      f => storedNamesAt(logical, firstSeen.getOrElse(f, Int.MaxValue), log)
+        .filter { case (c, s) => s != Some(c) }
+    }
+
+  /** Read `files`, one group written under `spec` that stores the
+    * columns of `logical` under `stored` (a [[storedNamesByFile]]
+    * value), aliased to the logical names — a column absent for the
+    * group reads as null — followed by `extra` columns.
+    */
+  private def readStoredAs(files: Seq[String], logical: StructType,
+      spec: Seq[PartitionTransform], stored: Map[String, Option[String]],
+      extra: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val storedSchema = StructType(logical.fields.flatMap(f => stored.get(f.name) match {
+      case Some(None) => None // absent: never read the dead column
+      case Some(Some(s)) => Some(f.copy(name = s))
+      case None => Some(f)
+    }))
+    readFilesAs(files, storedSchema, spec).select(logical.fields.map(f =>
+      stored.get(f.name) match {
+        case Some(None) => lit(null).cast(f.dataType).as(f.name)
+        case Some(Some(s)) => col(s).as(f.name)
+        case None => col(f.name)
+      }) ++ extra: _*)
+  }
+
+  /** Logical projection over arbitrary live files of `snap`,
+    * PARTITION-SPEC- and RENAME-aware: files are grouped by the spec
+    * they were written under AND by their stored-name epoch (which
+    * renames they predate), each group is read with its own directory
+    * layout and its own stored column names ([[readStoredAs]]), then
     * unioned — how every logical-level consumer survives a partition
-    * evolution or a column rename (a never-evolved table is one group
-    * and takes the plain path).
+    * evolution or a column rename (a never-evolved table is one group).
+    * Rename resolution defaults to the snapshot's own log; a caller
+    * projecting a LATER schema (readChanges' range-end contract)
+    * passes the later log, so post-snapshot renames still map the
+    * files' stored names onto the projected ones.
     */
   private def readFilesLogicalSpecAware(files: Seq[String], logical: StructType,
-      snap: Option[CommitMeta], withPos: Boolean = false,
+      snap: CommitMeta, withPos: Boolean = false,
       renameLog: Option[Seq[(Int, String, String)]] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val posCols =
-      if (withPos) Seq(relFileCol.as("__file"),
-        col("_metadata.row_index").as("__pos"))
-      else Nil
-    val logicalCols = logical.fieldNames.map(c => col(c): org.apache.spark.sql.Column)
     if (files.isEmpty) {
       val schema =
         if (!withPos) logical
@@ -1851,51 +1787,15 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
           StructField("__file", StringType), StructField("__pos", LongType)))
       return spark.createDataFrame(new java.util.ArrayList[Row](), schema)
     }
-    val effSnap = snap.orElse(commits.lastOption)
-    val byFile = effSnap.map(specsByFile)
-      .getOrElse(Map.empty[String, Seq[PartitionTransform]]
-        .withDefaultValue(defn.partitions))
-    // rename resolution defaults to the snapshot's own log; a caller
-    // projecting a LATER schema (readChanges' range-end contract)
-    // overrides with the later log so post-snapshot renames still map
-    // the file's stored names onto the projected ones
-    val log = renameLog.getOrElse(renameLogOf(effSnap))
-    // the first-seen index is only needed once a rename exists; a file
-    // outside any commit's live set (defensive default) reads as
-    // current-named
-    val firstSeen: Map[String, Int] =
-      if (log.isEmpty) Map.empty else firstSeenByFile(commits)
-    // non-identity resolutions only: Some(other) = stored under a
-    // pre-rename name; None = ABSENT for this epoch (predates a
-    // resurrection-prone re-add — must NOT read the dead same-named
-    // column the file may still carry)
-    def storedOf(f: String): Map[String, Option[String]] =
-      if (log.isEmpty) Map.empty
-      else storedNamesAt(logical, firstSeen.getOrElse(f, Int.MaxValue), log)
-        .filter { case (c, s) => s != Some(c) }
+    val posCols =
+      if (withPos) Seq(relFileCol.as("__file"), col("_metadata.row_index").as("__pos"))
+      else Nil
+    val byFile = specsByFile(snap)
+    val storedOf = storedNamesByFile(logical, renameLog.getOrElse(renameLogOf(snap)))
     files.groupBy(f => (PartitionTransform.specDdl(byFile(f)),
         storedOf(f).toSeq.sortBy(_._1).mkString(",")))
       .toSeq.sortBy(_._1)
-      .map { case (_, fs) =>
-        val stored = storedOf(fs.head)
-        if (stored.isEmpty)
-          readFilesAs(fs, logical, byFile(fs.head)).select(logicalCols ++ posCols: _*)
-        else {
-          val storedSchema = StructType(logical.fields.flatMap(f =>
-            stored.get(f.name) match {
-              case Some(None) => None // absent: never read the dead column
-              case Some(Some(s)) => Some(f.copy(name = s))
-              case None => Some(f)
-            }))
-          readFilesAs(fs, storedSchema, byFile(fs.head))
-            .select(logical.fields.map(f => stored.get(f.name) match {
-              case Some(None) =>
-                org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name)
-              case Some(Some(s)) => col(s).as(f.name)
-              case None => col(f.name)
-            }) ++ posCols: _*)
-        }
-      }
+      .map { case (_, fs) => readStoredAs(fs, logical, byFile(fs.head), storedOf(fs.head), posCols) }
       .reduce(_.unionByName(_))
   }
 
@@ -1946,8 +1846,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   }
 
   def lastCommittedBatch(sinkId: String): Long = {
-    val inCommit = commits.lastOption
-      .flatMap(_.sinkBatches.get(sinkId)).getOrElse(-1L)
+    val inCommit = head.sinkBatches.getOrElse(sinkId, -1L)
     math.max(inCommit, streamState.getOrElse(sinkId, -1L))
   }
 
@@ -1968,26 +1867,19 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
 
   // ---- maintenance ----
 
-  /** Live files storing pre-rename column names (under the CURRENT
+  /** Live files of `snap` storing pre-rename column names (under its
     * schema and log) — compaction migrates them like stale-spec files.
+    * Any non-identity resolution flags migration: renamed-stored files
+    * AND absent-for-epoch files (pre-resurrection) — rewriting the
+    * latter materializes the nulls and drops the dead bytes, which is
+    * also what lets their first-seen commits (which the resolution
+    * depends on — see expireSnapshots) expire afterwards. A plain
+    * non-prone ADD records no entry, so it still never forces a rewrite
+    * (the metadata-only contract).
     */
   private def staleNamedFiles(snap: CommitMeta): Set[String] = {
-    val log = renameLogOf(Some(snap))
-    if (log.isEmpty) Set.empty
-    else {
-      val logical = currentSchema
-      val firstSeen = firstSeenByFile(commits)
-      // any non-identity resolution flags migration: renamed-stored
-      // files AND absent-for-epoch files (pre-resurrection) — rewriting
-      // the latter materializes the nulls and drops the dead bytes,
-      // which is also what lets their first-seen commits (which the
-      // resolution depends on — see expireSnapshots) expire afterwards.
-      // A plain non-prone ADD records no entry, so it still never
-      // forces a rewrite (the metadata-only contract).
-      snap.files.filter(f => storedNamesAt(logical,
-        firstSeen.getOrElse(f, Int.MaxValue), log)
-        .exists { case (c, s) => s != Some(c) }).toSet
-    }
+    val storedOf = storedNamesByFile(schemaOf(snap), renameLogOf(snap))
+    snap.files.filter(f => storedOf(f).nonEmpty).toSet
   }
 
   /** Live files of an unpartitioned sorted table whose ranges of the
@@ -1998,9 +1890,9 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * bounds on the column are left out.
     */
   private def overlappingSortedFiles(snap: CommitMeta): Set[String] =
-    if (currentPartitions.nonEmpty || defn.sortOrder.isEmpty) Set.empty
+    if (specOf(snap).nonEmpty || defn.sortOrder.isEmpty) Set.empty
     else {
-      val ranges = boundsByFile(Some(snap), snap.files, storedColumnByFile(defn.sortOrder.head))
+      val ranges = boundsByFile(snap, snap.files, storedColumnByFile(defn.sortOrder.head, snap))
         .collect { case (f, Some((lo, hi))) if lo <= hi => (f, lo, hi) }
         .sortBy(_._2)
       // runs of transitively overlapping ranges, swept in `lo` order
@@ -2026,23 +1918,21 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * A maintenance sweep uses this to skip clean tables.
     */
   def needsCompaction(targetBytes: Long = 128L * 1024 * 1024): Boolean = {
-    val cs = commits
-    val live = cs.lastOption.map(_.files).getOrElse(Nil)
+    val base = head
+    val live = base.files
     // files left on an old partition-spec generation (or storing
     // pre-rename column names) migrate via compaction (Iceberg:
     // rewrite_data_files after a spec evolution)
-    val staleSpec = cs.lastOption.exists { snap =>
-      val byFile = specsByFile(snap)
-      val cur = PartitionTransform.specDdl(currentPartitions)
-      snap.files.exists(f => PartitionTransform.specDdl(byFile(f)) != cur) ||
-        staleNamedFiles(snap).nonEmpty
-    }
+    val byFile = specsByFile(base)
+    val cur = PartitionTransform.specDdl(specOf(base))
+    val staleSpec = live.exists(f => PartitionTransform.specDdl(byFile(f)) != cur) ||
+      staleNamedFiles(base).nonEmpty
     if (staleSpec) true
     else if (defn.mergeOnRead) {
       // pending tombstones also compact away (readLogical folds them in)
-      live.map(firstSeenByFile(cs)).distinct.size > 1 || morPending
-    } else if (posPending) true // pending position deletes materialize away
-    else if (cs.lastOption.exists(overlappingSortedFiles(_).nonEmpty)) true
+      morSequences(base) > 1 || base.morDeleteFiles.nonEmpty
+    } else if (base.posDeleteFiles.nonEmpty) true // pending position deletes materialize away
+    else if (overlappingSortedFiles(base).nonEmpty) true
     else {
       val small = live.filter(f => new File(s"$dataDir/$f").length() < targetBytes * 9 / 10)
       val smallBytes = small.map(f => new File(s"$dataDir/$f").length()).sum
@@ -2064,22 +1954,21 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * name would leave it on an older sequence than the rewrite,
     * manufacturing a bogus latest-wins ordering.
     *
-    * When no file needs a rewrite and no tombstone is pending, the head
-    * is returned unchanged and nothing is written.
+    * When no file needs a rewrite and no tombstone is pending (an
+    * empty table included), the head is returned unchanged and nothing
+    * is written.
     */
   def compact(targetBytes: Long = 128L * 1024 * 1024): CommitMeta = {
-    val snap = commits.lastOption
-    val live = snap.map(_.files).getOrElse(Nil)
-    val curSpec = PartitionTransform.specDdl(currentPartitions)
-    val byFile = snap.map(specsByFile)
-      .getOrElse(Map.empty[String, Seq[PartitionTransform]]
-        .withDefaultValue(defn.partitions))
-    val staleNames = snap.map(staleNamedFiles).getOrElse(Set.empty)
-    val overlapping = snap.map(overlappingSortedFiles).getOrElse(Set.empty)
+    val base = head
+    val live = base.files
+    val curSpec = PartitionTransform.specDdl(specOf(base))
+    val byFile = specsByFile(base)
+    val staleNames = staleNamedFiles(base)
+    val overlapping = overlappingSortedFiles(base)
     // files referenced by pending position deletes must rewrite (with
     // the tombstones applied) — an unreferenced file still carries by
     // name, so a small predicate delete compacts O(touched files)
-    val pendingPos = snap.map(_.posDeleteFiles.keys.toSeq.sorted).getOrElse(Nil)
+    val pendingPos = base.posDeleteFiles.keys.toSeq.sorted
     val posRefs: Set[String] =
       if (pendingPos.isEmpty) Set.empty
       else posPairs(pendingPos).select("__file").distinct()
@@ -2097,30 +1986,32 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         !staleNames.contains(f) && !posRefs.contains(f) && !overlapping.contains(f))
     // nothing to rewrite and no tombstone to materialize: the head is
     // already compact, and, as for an append of no rows, no commit lands
-    if (small.isEmpty && pendingPos.isEmpty && snap.exists(_.morDeleteFiles.isEmpty))
-      return snap.get
+    if (small.isEmpty && pendingPos.isEmpty && base.morDeleteFiles.isEmpty)
+      return base
     val smallBytes = small.map(f => new File(s"$dataDir/$f").length()).sum
     val nFiles = math.max(1, math.ceil(smallBytes.toDouble / targetBytes).toInt)
+    val logical = schemaOf(base)
     val df =
-      if (defn.mergeOnRead) readLogical() // resolves latest-wins
-      else if (pendingPos.isEmpty)
-        readFilesLogicalSpecAware(small, currentSchema, commits.lastOption)
+      if (defn.mergeOnRead) readLogicalAt(base) // resolves latest-wins
+      else if (pendingPos.isEmpty) readFilesLogicalSpecAware(small, logical, base)
       else applyPosDeletes(
-        readFilesLogicalSpecAware(small, currentSchema, commits.lastOption,
-          withPos = true), pendingPos)
-        .select(currentSchema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
+        readFilesLogicalSpecAware(small, logical, base, withPos = true), pendingPos)
+        .select(logical.fieldNames.map(org.apache.spark.sql.functions.col): _*)
     // the binpack count goes through writeFiles, which owns the final
     // repartition — a pre-repartition here would be re-shuffled (and its
     // sizing discarded) by writeFiles' own partition-value distribution
-    val added = writeFiles(df, Some(nFiles))
+    val added = writeFiles(df, base, Some(nFiles))
     // a compact materialized every pending tombstone (equality AND
     // position) into the rewrite; a content-preserving rewrite, so it
     // replays over interleaved appends (validateIntent re-checks its
     // inputs are still live)
-    writeCommit("compact", RewriteFiles(small.toSet, added.map(_.path)),
-      snap.map(_.version).getOrElse(0), added,
-      morDeletes = (_, _) => Map.empty, posDeletes = (_, _) => Map.empty)
+    writeCommit("compact", RewriteFiles(small.toSet, added.map(_.path)), base, added,
+      clearTombstones)
   }
+
+  /** The edit of a rewrite that materialized every pending tombstone. */
+  private val clearTombstones: CommitMeta => CommitMeta =
+    _.copy(morDeleteFiles = Map.empty, posDeleteFiles = Map.empty)
 
   /** M7b — z-order clustering rewrite (the Delta `OPTIMIZE ZORDER BY` /
     * Iceberg sort-strategy `rewrite_data_files` analog): rewrite the
@@ -2150,13 +2041,14 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       targetBytes: Long = 128L * 1024 * 1024): CommitMeta = {
     import org.apache.spark.sql.functions._
     require(zcols.size >= 2, "z-order clustering needs at least 2 columns")
-    zcols.foreach(c => require(!currentPartitions.exists(_.source.equalsIgnoreCase(c)),
+    val base = head
+    val spec = specOf(base)
+    zcols.foreach(c => require(!spec.exists(_.source.equalsIgnoreCase(c)),
       s"${defn.name}: '$c' is a partition-transform source — the directory " +
         "layout already clusters it; z-order the residual columns"))
-    val zbase = commits.lastOption
-    val live = zbase.map(_.files).getOrElse(Nil)
+    val live = base.files
     require(live.nonEmpty, s"${defn.name}: nothing to z-order")
-    val df = readLogical()
+    val df = readLogicalAt(base)
     val totalBytes = live.map(f => new File(s"$dataDir/$f").length()).sum
     val nFiles = math.max(2, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val statCols = zcols.flatMap(c =>
@@ -2189,31 +2081,32 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         shiftleft(shiftright(bc, b).bitwiseAND(lit(1L)), b * n + i)
       }
     }.reduce(_ + _)
+    val fieldCols = schemaOf(base).fieldNames.map(col)
     val added =
-      if (currentPartitions.isEmpty) {
+      if (spec.isEmpty) {
         val ordered = df.withColumn("__z", z)
           .repartitionByRange(nFiles, col("__z"))
           .sortWithinPartitions("__z")
-          .select(currentSchema.fieldNames.map(col): _*)
-        writeFiles(ordered)
+          .select(fieldCols: _*)
+        writeFiles(ordered, base)
       } else {
         // within-partition form: range-distribute on (partition values,
         // z) so each output slice is a contiguous z-range inside one
         // partition (boundary slices split by directory at write), then
         // sort within — and write DIRECTLY (writeFiles would re-shuffle
         // to one task per partition value, collapsing the z split)
-        val pcols = partCols.map(col)
-        val shaped = withPartitionCols(df.withColumn("__z", z))
+        val parts = partCols(base)
+        val pcols = parts.map(col)
+        val shaped = withPartitionCols(df.withColumn("__z", z), base)
           .repartitionByRange(math.max(nFiles, 2), (pcols :+ col("__z")): _*)
           .sortWithinPartitions((pcols :+ col("__z")): _*)
-          .select(currentSchema.fieldNames.map(col) ++ pcols: _*)
-        writeRows(shaped, partCols)
+          .select(fieldCols ++ pcols: _*)
+        writeRows(shaped, parts)
       }
     // the clustering rewrite reads the visible state and replaces every
     // file — pending tombstones (either kind) are materialized
-    writeCommit("zorder", RewriteFiles(live.toSet, added.map(_.path)),
-      zbase.map(_.version).getOrElse(0), added,
-      morDeletes = (_, _) => Map.empty, posDeletes = (_, _) => Map.empty)
+    writeCommit("zorder", RewriteFiles(live.toSet, added.map(_.path)), base, added,
+      clearTombstones)
   }
 
   // ---- refs: tags + branches (write-audit-publish) ----
@@ -2247,8 +2140,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     requireMain("createTag")
     checkRefName(name)
     require(!Files.exists(tagPath(name)), s"${defn.name}: tag '$name' exists")
-    val v = version.getOrElse(currentVersion)
-    require(commits.exists(_.version == v), s"${defn.name}: no snapshot v$v to tag")
+    val v = snapshot(version).version
+    require(v > 0, s"${defn.name}: no snapshot v0 to tag")
     Files.createDirectories(Paths.get(refsDir))
     val tmp = Paths.get(s"$refsDir/.tmp-tag-$name.json")
     Files.writeString(tmp, mapper.writeValueAsString(Map("name" -> name, "version" -> v)))
@@ -2290,9 +2183,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     checkRefName(name)
     require(!Files.exists(branchMarkPath(name)), s"${defn.name}: branch '$name' exists")
     require(!Files.exists(tagPath(name)), s"${defn.name}: '$name' is a tag")
-    val fork = currentVersion
+    val cs = commits
+    val fork = cs.lastOption.fold(0)(_.version)
     Files.createDirectories(branchDir(name))
-    commits.foreach { c =>
+    cs.foreach { c =>
       Files.copy(commitPath(c.version),
         branchDir(name).resolve(s"commit-${c.version}.json"),
         StandardCopyOption.REPLACE_EXISTING)
@@ -2338,8 +2232,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val fork = branchForkVersion(name)
     val b = branchView(name)
     val pending = b.commits.filter(_.version > fork).sortBy(_.version)
-    val head = currentVersion
-    if (head != fork) {
+    val mainV = currentVersion
+    if (mainV != fork) {
       // drained: every staged json already lives on main and none
       // remain on the branch — either a prior publish crashed between
       // its last staged-commit move and the dropBranch, or the branch
@@ -2347,13 +2241,13 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       // only remaining work IS the dropBranch: finish it rather than
       // refuse (a refusal here forced a manual dropBranch per the old
       // error text).
-      if (head > fork && pending.isEmpty) { dropBranch(name); return 0 }
-      val resumable = head > fork &&
-        pending.head.version == head + 1 &&
-        ((fork + 1) to head).forall(v => Files.exists(commitPath(v)))
+      if (mainV > fork && pending.isEmpty) { dropBranch(name); return 0 }
+      val resumable = mainV > fork &&
+        pending.head.version == mainV + 1 &&
+        ((fork + 1) to mainV).forall(v => Files.exists(commitPath(v)))
       require(resumable,
         s"${defn.name}: main advanced past the '$name' fork " +
-          s"(fork v$fork, main v$head) and the branch's staged commits " +
+          s"(fork v$fork, main v$mainV) and the branch's staged commits " +
           s"are not a contiguous continuation — cannot fast-forward; " +
           "drop the branch and re-stage")
     }
@@ -2411,13 +2305,11 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // drop-only logs never affect resolution (a drop entry's empty NEW
     // side matches no trace), so a table that only ever dropped columns
     // keeps the unpinned retention behavior
-    val resolutionEntries = renameLogOf(cs.lastOption).exists(_._3.nonEmpty)
+    val last = cs.lastOption.getOrElse(CommitMeta.Empty)
+    val resolutionEntries = renameLogOf(last).exists(_._3.nonEmpty)
     val needed: Set[Int] =
       if (!defn.mergeOnRead && !resolutionEntries) Set.empty
-      else {
-        val live = cs.lastOption.map(_.files).getOrElse(Nil)
-        live.map(firstSeenByFile(cs)).toSet
-      }
+      else last.files.map(firstSeenByFile(cs)).toSet
     // tagged snapshots are retention-exempt until the tag is dropped
     val tagged = tags.values.toSet
     val expired = cs.dropRight(1)
@@ -2452,9 +2344,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     def refsOf(c: CommitMeta): Seq[String] =
       c.files ++ c.deleteFiles ++ c.morDeleteFiles.keys ++
         c.posDeleteFiles.keys
-    val branchViews = branches.map(branchView)
-    val branchRefs = branchViews.flatMap(_.commits.flatMap(refsOf)).toSet
-    val referenced = commits.flatMap(refsOf).toSet ++ branchRefs
+    val logs = commits ++ branches.flatMap(branchView(_).commits)
+    val referenced = logs.flatMap(refsOf).toSet
     val orphans = (listDataFiles() -- referenced)
       .filter(f => oldEnough(Paths.get(s"$dataDir/$f")))
     orphans.foreach(f => Files.deleteIfExists(Paths.get(s"$dataDir/$f")))
@@ -2463,9 +2354,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // not counted in the return value, which stays "data files removed".
     // Same age gate: a racing writer's fresh chunks are unreferenced
     // until its publish lands
-    manifestStore.sweep(
-      (commits ++ branchViews.flatMap(_.commits)).flatMap(_.manifests).toSet,
-      minAgeMs)
+    manifestStore.sweep(logs.flatMap(_.manifests).toSet, minAgeMs)
     // staging remnants: under concurrent writers a fresh staging dir
     // may be an IN-FLIGHT write racing this maintenance pass — only
     // age-gated remnants (a crash, by definition: a live write drains
@@ -2510,42 +2399,24 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * merge-on-read tables, where every commit's delta IS its batch.
     */
   def readChanges(fromVersion: Int, toVersion: Int): DataFrame = {
+    val deltas = fileDeltasSince(fromVersion, toVersion).fold(throw _, identity)
     // one schema for the whole range — the range END's schema, the same
     // contract as Iceberg's changelog scan (pre-evolution change rows
-    // null-fill later-added columns)
-    val logical = schemaAt(Some(toVersion).filter(_ > 0))
+    // null-fill later-added columns) — and the END's rename log: a
+    // leg's files were written by commit c and store version-c names
+    val end = deltas.lastOption.map(_._1).getOrElse(snapshot(Some(toVersion).filter(_ > 0)))
+    val logical = schemaOf(end)
     val logicalCols = logical.fieldNames.map(org.apache.spark.sql.functions.col)
-    val deltas = fileDeltasSince(fromVersion, toVersion).fold(throw _, identity)
-    // rename resolution against the range END's log (matching the
-    // range-end schema contract above): a leg's files were written by
-    // commit c and store version-c names
-    val endLog = renameLogOf(commits.find(_.version == toVersion)
-      .orElse(commits.lastOption))
+    val endLog = renameLogOf(end)
     def leg(c: CommitMeta, files: Seq[String], changeType: String) =
       if (files.isEmpty) None
       else {
         // every leg's files were WRITTEN by commit c, under c's spec
         // (covers replace-cdc delete files, which live outside `files`
         // and so outside the per-file provenance map)
-        val spec = c.partSpecDdl.map(PartitionTransform.parseSpec)
-          .getOrElse(defn.partitions)
         val stored = storedNamesAt(logical, c.version, endLog)
           .filter { case (cur, s) => s != Some(cur) }
-        val base =
-          if (stored.isEmpty) readFilesAs(files, logical, spec).select(logicalCols: _*)
-          else readFilesAs(files, StructType(logical.fields.flatMap(f =>
-              stored.get(f.name) match {
-                case Some(None) => None
-                case Some(Some(s)) => Some(f.copy(name = s))
-                case None => Some(f)
-              })), spec)
-            .select(logical.fields.map(f => stored.get(f.name) match {
-              case Some(None) => org.apache.spark.sql.functions.lit(null)
-                .cast(f.dataType).as(f.name)
-              case Some(Some(s)) => org.apache.spark.sql.functions.col(s).as(f.name)
-              case None => org.apache.spark.sql.functions.col(f.name)
-            }): _*)
-        Some(base
+        Some(readStoredAs(files, logical, specOf(c), stored)
           .withColumn("_change_version", org.apache.spark.sql.functions.lit(c.version))
           .withColumn("_change_type", org.apache.spark.sql.functions.lit(changeType)))
       }
@@ -2579,7 +2450,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
           val pairs = posPairs(deleted)
           val refFiles = pairs.select("__file").distinct()
             .collect().map(_.getString(0)).toSeq.sorted
-          val predecessor = commits.find(_.version == c.version - 1)
+          val predecessor = snapshot(Some(c.version - 1))
           // specs resolve via the predecessor (the referenced files'
           // writing epoch) but renames via endLog — this leg projects
           // the range-END schema like every other leg, so a rename
@@ -2708,8 +2579,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * the source aggregate without touching a data file).
     */
   def manifestEntries: Seq[(String, ManifestEntry)] =
-    commits.lastOption.map(_.manifests).getOrElse(Nil)
-      .flatMap(n => manifestStore.read(n).map(n -> _))
+    head.manifests.flatMap(n => manifestStore.read(n).map(n -> _))
 
   /** Per-chunk stats of the current snapshot, Iceberg-`$manifests`
     * shaped: (path, length bytes, added-at version, data file count,
@@ -2724,7 +2594,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     */
   def manifestInfo: Seq[(String, Long, Int, Int, Long)] = {
     val cs = commits
-    cs.lastOption.map(_.manifests).getOrElse(Nil).map { n =>
+    cs.lastOption.fold(Seq.empty[String])(_.manifests).map { n =>
       val entries = manifestStore.read(n)
       val addedAt = cs.find(_.manifests.contains(n)).map(_.version).getOrElse(0)
       (n, manifestStore.sizeBytes(n), addedAt, entries.size, entries.map(_.r).sum)

@@ -123,6 +123,10 @@ class SortOrderSpec extends AnyFunSuite {
     assert(listing("_commits") == commitFiles)
     assert(listing("_manifests") == manifests)
     assert(t.commits.last.files == files)
+    // nor does a table with no commits at all
+    val empty = new GraftTable(spark, TableDef("so5e", schema, sortOrder = Seq("ts")), root)
+    assert(empty.compact(target).version == 0)
+    assert(empty.commits.isEmpty)
   }
 
   test("partitioned table with sort order: rows sorted within each partition file") {
