@@ -884,7 +884,7 @@ object DmlRunner {
       // refuses over pending position deletes, so materialize them
       // first (the maintenance ordering a lakehouse operator runs
       // anyway; at 100 TB the compact is O(deleted-touched files))
-      if (t.commits.lastOption.exists(_.posDeleteFiles.nonEmpty)) t.compact()
+      if (t.head.posDeleteFiles.nonEmpty) t.compact()
       t.replaceWhere(cond, updated)
     }
   }

@@ -132,14 +132,14 @@ object SqlSurfaceOps {
     * #8's metadata-table read (`iceberg.db."bid_requests$$snapshots"`)
     * serves genuine commit history. Two appends (the reference's
     * checkpointed commit cadence) split on request_id parity —
-    * deterministic and idempotent (the second commit's json is the
-    * completion marker; serial-suite assumption as elsewhere).
+    * deterministic and idempotent (a second commit this build can read
+    * is the completion marker; serial-suite assumption as elsewhere).
     */
   def ensureLakehouse(spark: SparkSession): Unit = {
     import graft.tables.{GraftTable, MetaCatalog, TableDef}
     val wh = MetaCatalog.DefaultWarehouse
-    val done = java.nio.file.Paths.get(s"$wh/bid_requests/_commits/commit-2.json")
-    if (java.nio.file.Files.exists(done)) return
+    if (scala.util.Try(new GraftTable(spark, TableDef("bid_requests",
+        org.apache.spark.sql.types.StructType(Nil)), wh).head.version >= 2).getOrElse(false)) return
     // completion marker absent → wipe any partial state before building
     // (a crash between the two appends would otherwise leave a
     // permanently half-populated table in the cross-JVM /tmp warehouse;

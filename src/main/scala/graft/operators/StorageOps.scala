@@ -369,22 +369,21 @@ object StorageOps {
     *    re-reads the collapsed log and must still serve the full
     *    source.
     *  - **mor**: append + two keyed revisions on a merge-on-read
-    *    table. The FIRST expire must retire NOTHING (all three commits
-    *    are first-seen versions of still-live files — dropping one
-    *    would collapse the latest-wins sequence groups and resurface
-    *    superseded rows; Iceberg's "snapshots whose delete files are
-    *    still referenced can't expire"). After compact materializes
-    *    the merge, the same call retires all three and orphan cleanup
-    *    reclaims the superseded row files. The leg must serve the
-    *    revised latest-wins content — value₂ = base+2 where
-    *    event_id%5=0 (second revision wins), else base+1 where %3=0,
-    *    else base — which the oracle restates as a CASE over the
-    *    source.
+    *    table. The FIRST expire, before compaction, retires both older
+    *    commits — the head's manifest entries carry every file's
+    *    sequence number (Iceberg v2's data sequence numbers) — and the
+    *    re-read must still equal the source's latest-wins revision.
+    *    After compact materializes the merge, the same call retires
+    *    the pre-compact head and orphan cleanup reclaims the
+    *    superseded row files. The leg must serve the revised
+    *    latest-wins content — value₂ = base+2 where event_id%5=0
+    *    (second revision wins), else base+1 where %3=0, else base —
+    *    which the oracle restates as a CASE over the source.
     *
-    * The counts are `require`d in-query (an expiry that silently
-    * retired nothing — or retired a live-referenced commit without
-    * breaking THIS read — would still hash-match); the hash pins that
-    * reclamation never changes what the table serves.
+    * The counts and the pre-compaction read are `require`d in-query
+    * (an expiry that silently retired nothing would still
+    * hash-match); the hash pins that reclamation never changes what
+    * the table serves.
     */
   val s15ExpireOrphans: QueryDef = QueryDef(
     "s15_expire_orphans",
@@ -417,7 +416,7 @@ object StorageOps {
     require(nCowExpired == 5 && cow.commits.size == 1,
       s"cow expiry: expected 5 retired / 1 live commit, got $nCowExpired/${cow.commits.size}")
     val nCowOrphans = cow.removeOrphans()
-    require(nCowOrphans > 0 && cowFilesBefore > cow.commits.head.files.size,
+    require(nCowOrphans > 0 && cowFilesBefore > cow.head.files.size,
       s"cow orphan sweep reclaimed nothing ($nCowOrphans of $cowFilesBefore)")
 
     val mor = cat.table("expire_mor")
@@ -426,17 +425,24 @@ object StorageOps {
       .withColumn("value", col("value") + 1))
     mor.upsert(src.filter(pmod(col("event_id"), lit(5)) === 0)
       .withColumn("value", col("value") + 2))
-    // live-file protection: every commit is the first-seen version of a
-    // still-live file, so retention-0 expiry must retire NOTHING yet
+    // the head carries every live file's sequence number: expiry
+    // retires both older commits and the latest-wins read holds
     Thread.sleep(2)
     val nMorEarly = mor.expireSnapshots(0L)
-    require(nMorEarly == 0,
-      s"mor expiry retired $nMorEarly live-referenced commits before compaction")
+    require(nMorEarly == 2 && mor.commits.size == 1,
+      s"mor expiry before compact: expected 2 retired / 1 live, got $nMorEarly/${mor.commits.size}")
+    val revised = src.withColumn("value",
+      when(pmod(col("event_id"), lit(5)) === 0, col("value") + 2)
+        .when(pmod(col("event_id"), lit(3)) === 0, col("value") + 1)
+        .otherwise(col("value")))
+    val morRead = mor.readLogical()
+    require(morRead.exceptAll(revised).isEmpty && revised.exceptAll(morRead).isEmpty,
+      "mor read after expiry differs from the source's latest-wins revision")
     mor.compact()
     Thread.sleep(2)
     val nMorExpired = mor.expireSnapshots(0L)
-    require(nMorExpired == 3 && mor.commits.size == 1,
-      s"mor expiry after compact: expected 3 retired / 1 live, got $nMorExpired/${mor.commits.size}")
+    require(nMorExpired == 1 && mor.commits.size == 1,
+      s"mor expiry after compact: expected 1 retired / 1 live, got $nMorExpired/${mor.commits.size}")
     require(mor.removeOrphans() > 0, "mor orphan sweep reclaimed nothing")
 
     cow.readLogical().withColumn("leg", lit("cow"))
@@ -767,7 +773,7 @@ object StorageOps {
       case Some(v) => t.spark.conf.set(k, v)
       case None => t.spark.conf.unset(k)
     }
-    val total = tbl.commits.last.files.size
+    val total = tbl.head.files.size
     val opened = tbl.readRangeLogical("ts",
       java.sql.Timestamp.valueOf("2024-01-10 00:00:00").getTime * 1000L,
       java.sql.Timestamp.valueOf("2024-01-10 23:59:59").getTime * 1000L)
@@ -802,9 +808,9 @@ object StorageOps {
     val src = eventsSrc(t)
     val cut = lit("2024-01-16").cast("timestamp")
     tbl.append(src.filter(col("ts") < cut))                       // v1: stores 'value'
-    val filesBefore = tbl.commits.last.files.toSet
+    val filesBefore = tbl.head.files.toSet
     tbl.renameColumn("value", "amount")                           // v2: metadata-only
-    require(tbl.commits.last.files.toSet == filesBefore,
+    require(tbl.head.files.toSet == filesBefore,
       "rename must not rewrite data files")
     tbl.append(src.filter(col("ts") >= cut)                       // v3: stores 'amount'
       .withColumnRenamed("value", "amount"))
@@ -850,14 +856,14 @@ object StorageOps {
     val cut = lit("2024-01-16").cast("timestamp")
     tbl.append(src.filter(col("ts") < cut))                       // v1
     tbl.append(src.filter(col("ts") >= cut))                      // v2
-    val filesBefore = tbl.commits.last.files.toSet
+    val filesBefore = tbl.head.files.toSet
     tbl.deleteWhere(col("event_type") === "error")                // v3 (tombstone)
-    require(tbl.commits.last.files.toSet == filesBefore,
+    require(tbl.head.files.toSet == filesBefore,
       "position delete must not rewrite data files")
     val live = tbl.readLogical().withColumn("leg", lit("live"))
     require(tbl.needsCompaction(), "pending position deletes flag compaction")
     tbl.compact()                                                 // v4 materializes
-    require(tbl.commits.last.posDeleteFiles.isEmpty,
+    require(tbl.head.posDeleteFiles.isEmpty,
       "compaction must clear the tombstone map")
     val compacted = tbl.readLogical().withColumn("leg", lit("compacted"))
     live.unionByName(compacted)
@@ -889,7 +895,7 @@ object StorageOps {
     val tbl = cat.table("zorderp_t")
     tbl.append(eventsSrc(t))
     tbl.compactZOrder(Seq("user_id", "event_id"), targetBytes = 64L * 1024)
-    require(tbl.commits.last.files.forall(_.contains("p_ts_day=")),
+    require(tbl.head.files.forall(_.contains("p_ts_day=")),
       "rewrite must keep the partition directory layout")
     tbl.readLogical()
   }

@@ -21,10 +21,11 @@ import org.apache.spark.sql.types._
   * the persisted json is O(this commit's delta), so commit metadata
   * cost stays flat as the live file count grows (Iceberg's
   * manifest-list design; the reference's tables are all Iceberg
-  * format-version 2). [[GraftTable.commits]] resolves chunk references
-  * back into the full in-memory view once per handle. Every field is
-  * required on disk: a json missing one, or holding null where a value
-  * is required, is rejected on read (see [[GraftTable.commits]]).
+  * format-version 2). Reading a commit ([[GraftTable.head]],
+  * [[GraftTable.snapshot]]) resolves its chunk references back into the
+  * full in-memory view once per handle. Every field is required on
+  * disk: a json missing one, or holding null where a value is
+  * required, is rejected on read (see [[GraftTable.readJson]]).
   *
   *  - `sinkBatches` — streaming sink id → last micro-batch committed
   *    into the table ([[GraftTable.withSinkMark]]); carried forward on
@@ -68,15 +69,16 @@ import org.apache.spark.sql.types._
   *  - `fileSpecs` — file → the spec it was WRITTEN under. Recorded (for
   *    every live file) only once the table has ever evolved its
   *    partitioning; an empty map means every file is on the declared
-  *    spec. Explicit per-file provenance — a derived first-seen lookup
-  *    would silently mis-group files after snapshot expiry, and a
-  *    mis-grouped file reads the wrong directory layout.
+  *    spec. Persisted in the manifest entries (`s`), so a snapshot
+  *    knows each file's layout without any other commit; a
+  *    mis-grouped file would read the wrong directory layout.
   *  - `renames` — column-RENAME log as of this commit, carried forward
   *    like schemaDdl: each entry `"<version>|<old>|<new>"` records that
   *    the evolve commit at `version` renamed `old` to `new`. Files
   *    written BEFORE that version store the old name; the read path
-  *    derives each file's stored names from its first-seen version
-  *    against this log — the engine's stand-in for Iceberg's field ids,
+  *    derives each file's stored names from its sequence number (the
+  *    version that added it, [[ManifestEntry]] `v`) against this log —
+  *    the engine's stand-in for Iceberg's field ids,
   *    which is what makes RENAME a metadata-only commit on a
   *    name-resolved parquet format (zero footers rewritten).
   *  - `posDeleteFiles` — PENDING position-delete files (Iceberg v2's
@@ -162,11 +164,12 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   *  - [[TombstonePos]] (position delete): pins (file, row) identities,
   *    so any interleaved REMOVAL of a base file aborts; additions are
   *    fine.
-  *  - [[MetadataOnly]] (schema/spec evolution, rollback): computed
-  *    against one exact head; any interleaved commit aborts (the
-  *    operation is cheap to re-run). It carries the inputs that change
-  *    the commit's file assembly: a new partition spec, and rollback's
-  *    target file list and per-file spec provenance.
+  *  - [[MetadataOnly]] (schema/spec evolution) and [[Restore]]
+  *    (rollback): computed against one exact head; any interleaved
+  *    commit aborts (the operation is cheap to re-run). MetadataOnly
+  *    carries a new partition spec where it sets one; Restore carries
+  *    the snapshot it restores, whose files keep their manifest
+  *    entries, sequence numbers included.
   */
 private[tables] sealed trait CommitIntent
 private[tables] final case class AddFiles(added: Seq[String]) extends CommitIntent
@@ -177,9 +180,8 @@ private[tables] final case class ReplaceContent(untouched: Seq[String],
 private[tables] case object TombstoneEq extends CommitIntent
 private[tables] case object TombstonePos extends CommitIntent
 private[tables] final case class MetadataOnly(
-    files: Option[Seq[String]] = None,
-    partSpecDdl: Option[String] = None,
-    fileSpecs: Option[Map[String, String]] = None) extends CommitIntent
+    partSpecDdl: Option[String] = None) extends CommitIntent
+private[tables] final case class Restore(target: CommitMeta) extends CommitIntent
 
 /** Conservative file-pruning hint for replace commits: every row the
   * delete-condition can match is guaranteed to lie within
@@ -393,34 +395,42 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     java.nio.ByteBuffer.wrap(d, 0, 8).getLong
   }
 
-  def commits: Seq[CommitMeta] = {
-    val fs = Option(new File(commitsDir).listFiles()).getOrElse(Array.empty)
-    fs.filter(_.getName.matches("commit-\\d+\\.json"))
-      .map { f =>
-        val bytes = Files.readAllBytes(f.toPath)
-        commitCache.getOrElseUpdate(
-          (f.getName, bytes.length.toLong, contentKey(bytes)),
-          resolveManifests(parseCommit(f.getName, bytes)))
-      }
-      .sortBy(_.version).toSeq
+  private val CommitName = "commit-(\\d+)\\.json".r
+
+  /** The versions in the log, from the names in `_commits/` alone. */
+  private def logVersions: Seq[Int] =
+    Option(new File(commitsDir).list()).getOrElse(Array.empty[String]).toSeq
+      .collect { case CommitName(v) => v.toInt }
+
+  /** Commit `version`, parsed and resolved once per content ([[commitCache]]). */
+  private def load(version: Int): CommitMeta = {
+    val name = s"commit-$version.json"
+    val bytes = Files.readAllBytes(commitPath(version))
+    commitCache.getOrElseUpdate((name, bytes.length.toLong, contentKey(bytes)),
+      resolveManifests(parseCommit(name, bytes)))
   }
+
+  /** Every snapshot, oldest first; parses every commit json. */
+  def commits: Seq[CommitMeta] = logVersions.sorted.map(load)
 
   /** The latest snapshot, [[CommitMeta.Empty]] for a table with no
     * commits. An operation reads it ONCE and derives its version,
     * schema, spec, live files and tombstones from that one value (its
     * BASE, as an Iceberg operation works against
     * `TableOperations.current()`); only a lost commit race reads the
-    * log again ([[writeCommit]]).
+    * log again ([[writeCommit]]). Lists the names in `_commits/` and
+    * parses only the highest version's json: a snapshot is one commit
+    * json plus its manifest chunks.
     */
-  def head: CommitMeta = commits.lastOption.getOrElse(CommitMeta.Empty)
+  def head: CommitMeta = logVersions.maxOption.fold(CommitMeta.Empty)(load)
 
-  /** Snapshot `version`, the head when None. A version not in the log
-    * throws.
+  /** Snapshot `version`, the head when None; reads that one commit
+    * json. A version not in the log throws.
     */
   def snapshot(version: Option[Int]): CommitMeta = version match {
     case None => head
-    case Some(v) => commits.find(_.version == v)
-      .getOrElse(throw new IllegalArgumentException(s"${defn.name}: no snapshot v$v"))
+    case Some(v) if Files.exists(commitPath(v)) => load(v)
+    case Some(v) => throw new IllegalArgumentException(s"${defn.name}: no snapshot v$v")
   }
 
   /** Parse one persisted commit json. The persisted form carries the
@@ -449,30 +459,38 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       fileSpecs = entries.flatMap(e => e.s.map(e.p -> _)).toMap)
   }
 
-  /** file → write-time column bounds, from a snapshot's manifest
-    * entries — the metadata-log replacement for per-file footer probes
-    * on the range-pruning and watermark paths.
+  /** file → its manifest entry in `snap`: rows, write-time column
+    * bounds (the metadata-log replacement for per-file footer probes
+    * on the range-pruning and watermark paths) and sequence number.
     */
-  // single-entry memo, NOT a map: every caller queries the latest
-  // snapshot, and a per-snapshot map would retain one O(live files)
-  // bounds map per commit for the handle's lifetime (a poll/cron loop
-  // commits constantly). Keyed by the chunk-name list itself — UUID
-  // names are never reused, purge-rebuild included.
-  @volatile private var boundsMemo:
-      (Seq[String], Map[String, Map[String, (Long, Long)]]) = (null, null)
+  // single-entry memo, NOT a map: nearly every caller queries the
+  // latest snapshot, and a per-snapshot map would retain one O(live
+  // files) index per commit for the handle's lifetime (a poll/cron
+  // loop commits constantly). Keyed by the chunk-name list itself —
+  // UUID names are never reused, purge-rebuild included.
+  @volatile private var entriesMemo: (Seq[String], Map[String, ManifestEntry]) = (null, null)
 
-  private def manifestBoundsOf(snap: CommitMeta): Map[String, Map[String, (Long, Long)]] = {
-    val key = snap.manifests
-    val memo = boundsMemo
-    if (memo._1 == key) memo._2
+  private def entriesOf(snap: CommitMeta): Map[String, ManifestEntry] = {
+    val memo = entriesMemo
+    if (memo._1 == snap.manifests) memo._2
     else {
       // rebuilding an O(live files) map per pruned read would turn
       // every range query into O(table) driver CPU
-      val v = key.flatMap(manifestStore.read)
-        .map(e => e.p -> e.b.map(cb => cb.c -> (cb.lo, cb.hi)).toMap).toMap
-      boundsMemo = (key, v)
+      val v = snap.manifests.flatMap(manifestStore.read).map(e => e.p -> e).toMap
+      entriesMemo = (snap.manifests, v)
       v
     }
+  }
+
+  /** file → its sequence number in `snap` (the version that first
+    * added it): the order merge-on-read latest-wins resolves by, and
+    * the epoch a file's stored column names resolve at. A file with no
+    * entry (a change-tracked replace's delete files) sorts after every
+    * commit.
+    */
+  private def sequenceOf(snap: CommitMeta): String => Int = {
+    val entries = entriesOf(snap)
+    f => entries.get(f).fold(Int.MaxValue)(_.v)
   }
 
   def currentVersion: Int = head.version
@@ -567,7 +585,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         if (!base.files.toSet.subsetOf(headFiles))
           conflict("a concurrent commit removed files these position " +
             "deletes reference by (file, pos)")
-      case _: MetadataOnly =>
+      case _: MetadataOnly | _: Restore =>
         conflict("metadata operations replay against one exact snapshot")
     }
   }
@@ -581,7 +599,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       case RewriteFiles(rm, a) => head.files.filterNot(rm) ++ a
       case ReplaceContent(u, a) => u ++ a
       case TombstoneEq | TombstonePos => head.files
-      case MetadataOnly(o, _, _) => o.getOrElse(head.files)
+      case _: MetadataOnly => head.files
+      case Restore(t) => t.files
     }
 
   /** Commit `intent`'s file delta over `base`, the snapshot the
@@ -647,7 +666,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * Row counts AND column bounds come from `prev`'s manifest entries
     * where a file is carried over; files NOT in `prev` take theirs from
     * `written` — the table writer's report for the files this operation
-    * wrote (rollback passes its target's manifest entries instead) — so
+    * wrote, stamped with this attempt's version as their sequence
+    * number (a rollback restores its target's entries instead) — so
     * commit cost is O(new files) regardless of how many live files are
     * carried, and no data file is opened. The persisted json stores
     * manifest chunk NAMES, never the file list: an append-shaped commit
@@ -676,9 +696,11 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   private def assembleCommit(intent: CommitIntent, prev: CommitMeta,
       written: Seq[WrittenFile]): CommitMeta = {
     val writeSpecDdl = prev.partSpecDdl.getOrElse(PartitionTransform.specDdl(defn.partitions))
-    // rows + bounds of every file this commit adds, as its writer
-    // reported them
-    val addedStats = written.map(w => w.path -> w).toMap
+    // the entry of every file this commit adds: rows + bounds as its
+    // writer reported them, and this attempt's version as its sequence
+    // number (a lost race re-stamps it, like a tombstone)
+    val addedEntries = written.map(w =>
+      w.path -> ManifestEntry(w.path, w.rows, None, w.bounds, prev.version + 1)).toMap
     // ---- O(delta) fast path (see the method doc) ----
     val fastAdds: Option[Seq[String]] = intent match {
       case AddFiles(a) => Some(a)
@@ -687,7 +709,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     }
     fastAdds match {
       case Some(added) =>
-        val addedRows: Map[String, Long] = added.map(f => f -> addedStats(f).rows).toMap
+        val addedRows: Map[String, Long] = added.map(f => f -> addedEntries(f).r).toMap
         val fileSpecs =
           if (prev.partSpecDdl.isEmpty) Map.empty[String, String]
           else prev.fileSpecs ++ added.map(_ -> writeSpecDdl)
@@ -697,14 +719,13 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         // ever opens carried chunks here.
         val (carried, merged) = foldChunks(prev.manifests)
         val pool = merged.flatMap(manifestStore.read)
-        val fresh = added.map(f => ManifestEntry(
-          f, addedRows(f), fileSpecs.get(f), addedStats(f).bounds))
+        val fresh = added.map(f => addedEntries(f).copy(s = fileSpecs.get(f)))
         val newChunks = (pool ++ fresh).grouped(ChunkTargetEntries)
           .map(manifestStore.write).toSeq
         prev.copy(rowCount = prev.rowCount + addedRows.values.sum,
           files = prev.files ++ added, fileRows = prev.fileRows ++ addedRows,
           fileSpecs = fileSpecs, manifests = carried ++ newChunks)
-      case None => assembleRewrite(intent, prev, writeSpecDdl, addedStats)
+      case None => assembleRewrite(intent, prev, writeSpecDdl, addedEntries)
     }
   }
 
@@ -712,13 +733,17 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * metadata ops.
     */
   private def assembleRewrite(intent: CommitIntent, prev: CommitMeta,
-      writeSpecDdl: String, addedStats: Map[String, WrittenFile]): CommitMeta = {
-    val files = filesUnder(intent, prev)
-    val fileRows = files.map(f => f -> prev.fileRows.getOrElse(f, addedStats(f).rows)).toMap
-    val (newSpecDdl, specsOverride) = intent match {
-      case MetadataOnly(_, spec, specs) => (spec, specs)
-      case _ => (None, None)
+      writeSpecDdl: String, addedEntries: Map[String, ManifestEntry]): CommitMeta = {
+    val (newSpecDdl, specsOverride, newEntries) = intent match {
+      case MetadataOnly(spec) => (spec, None, addedEntries)
+      // a rollback's files come back with the entries of the snapshot it
+      // restores: rows, bounds and sequence numbers as first written
+      case Restore(t) =>
+        (Some(PartitionTransform.specDdl(specOf(t))), Some(t.fileSpecs), entriesOf(t))
+      case _ => (None, None, addedEntries)
     }
+    val files = filesUnder(intent, prev)
+    val fileRows = files.map(f => f -> prev.fileRows.getOrElse(f, newEntries(f).r)).toMap
     // partition-spec bookkeeping: the carried spec, plus (once the table
     // has ever evolved) per-file write-spec provenance. New files were
     // written under the spec in effect BEFORE this commit (an evolve
@@ -764,10 +789,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       .map(e => e.copy(r = fileRows(e.p), s = fileSpecs.get(e.p)))
     val covered = carried.flatMap(n => manifestStore.read(n).map(_.p)).toSet ++
       pool.map(_.p)
-    // files never chunked yet are this commit's additions (bounds from
-    // the writer's report)
-    val fresh = files.filterNot(covered).map(f => ManifestEntry(
-      f, fileRows(f), fileSpecs.get(f), addedStats(f).bounds))
+    // files never chunked yet are this commit's additions (or a
+    // rollback's restored files)
+    val fresh = files.filterNot(covered).map(f =>
+      newEntries(f).copy(r = fileRows(f), s = fileSpecs.get(f)))
     val newChunks = (pool ++ fresh).grouped(ChunkTargetEntries).map(
       manifestStore.write).toSeq
     prev.copy(rowCount = fileRows.values.sum, files = files, fileRows = fileRows,
@@ -991,11 +1016,11 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   /** Logical read: latest snapshot without the derived partition cols.
     * For merge-on-read tables whose live files span several upsert
     * commits, resolves latest-wins per key by commit sequence: each
-    * file carries the version that first added it, and only rows from
-    * a key's newest sequence survive (ALL of them — a batch with
-    * duplicate keys keeps its duplicates, matching copy-on-write). One
-    * hash-shuffle on the keys; files from a single sequence (fresh
-    * table, or just compacted) skip the merge entirely.
+    * file's manifest entry carries the version that first added it,
+    * and only rows from a key's newest sequence survive (ALL of them —
+    * a batch with duplicate keys keeps its duplicates, matching
+    * copy-on-write). One hash-shuffle on the keys; files from a single
+    * sequence (fresh table, or just compacted) skip the merge entirely.
     */
   def readLogical(version: Option[Int] = None): DataFrame = readLogicalAt(snapshot(version))
 
@@ -1013,8 +1038,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
           .select(logicalCols: _*)
       }
     } else {
-      val firstSeen = firstSeenByFile()
-      val groups = snap.files.groupBy(firstSeen).toSeq.sortBy(_._1)
+      val groups = snap.files.groupBy(sequenceOf(snap)).toSeq.sortBy(_._1)
       val tombs = snap.morDeleteFiles
       if (groups.size <= 1 && tombs.isEmpty)
         readFilesLogicalSpecAware(snap.files, logical, snap)
@@ -1070,7 +1094,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       // stores the OLD column name — rendered back as the current name
       // so a rename alone never reads as drift
       val byFile = specsByFile(snap)
-      val storedOf = storedNamesByFile(schemaOf(snap), renameLogOf(snap))
+      val storedOf = storedNamesByFile(snap, schemaOf(snap), renameLogOf(snap))
       def epoch(f: String): Map[String, String] =
         storedOf(f).collect { case (c, Some(s)) => s -> c } // stored → current
       val fields = snap.files
@@ -1183,7 +1207,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   /** Iceberg-style RENAME COLUMN: a METADATA-ONLY commit (zero data
     * rewritten) records the new name in the schema AND an entry in the
     * carried rename log; every read resolves each file's STORED name
-    * from its first-seen version against the log — Iceberg reaches the
+    * from its sequence number against the log — Iceberg reaches the
     * same safety through field ids, this format through versioned name
     * provenance (commit jsons are the only metadata it owns). Old
     * files keep serving their values under the new logical name
@@ -1262,16 +1286,12 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val target = snapshot(Some(version))
     require(version < base.version,
       s"${defn.name}: rollback target v$version is not an ancestor of v${base.version}")
-    // files the head dropped come back with the rows and bounds the
-    // target's manifest entries recorded for them
-    val targetStats = target.manifests.flatMap(manifestStore.read)
-      .map(e => WrittenFile(e.p, e.r, e.b))
-    writeCommit("rollback", MetadataOnly(Some(target.files),
-        Some(target.partSpecDdl.getOrElse(PartitionTransform.specDdl(defn.partitions))),
-        Some(target.fileSpecs)),
-      base, targetStats, _.copy(schemaDdl = Some(schemaOf(target).toDDL),
-        morDeleteFiles = target.morDeleteFiles, renames = target.renames,
-        posDeleteFiles = target.posDeleteFiles))
+    // files the head dropped come back with the target's manifest
+    // entries: rows, bounds and sequence numbers, so merge-on-read
+    // sequence groups stay apart
+    writeCommit("rollback", Restore(target), base, edit = _.copy(
+      schemaDdl = Some(schemaOf(target).toDDL), morDeleteFiles = target.morDeleteFiles,
+      renames = target.renames, posDeleteFiles = target.posDeleteFiles))
   }
 
   /** Iceberg's `TIMESTAMP AS OF`: the snapshot that was current at
@@ -1616,13 +1636,14 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     */
   private def boundsByFile(snap: CommitMeta, files: Seq[String],
       stored: String => String): Seq[(String, Option[(Long, Long)])] = {
-    val persisted = manifestBoundsOf(snap)
+    val entries = entriesOf(snap)
     files.map { f =>
+      val e = entries(f)
       // a zero-row file (the schema-only file Spark's writer left for
       // an empty write) has no blocks and so no recorded columns — its
       // bounds are the empty range for EVERY column
-      f -> (if (snap.fileRows(f) == 0L) Some((Long.MaxValue, Long.MinValue))
-        else persisted(f).get(stored(f)))
+      f -> (if (e.r == 0L) Some((Long.MaxValue, Long.MinValue))
+        else e.b.find(_.c == stored(f)).map(cb => (cb.lo, cb.hi)))
     }
   }
 
@@ -1634,11 +1655,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val log = renameLogOf(snap)
     if (log.isEmpty) _ => cur
     else {
-      val firstSeen = firstSeenByFile()
+      val seq = sequenceOf(snap)
       // absent-for-epoch → probe a name no footer has: stats come back
       // unusable and the caller degrades to reading the file (safe)
-      f => storedNameOf(cur, firstSeen.getOrElse(f, Int.MaxValue), log)
-        .getOrElse("\u0000absent")
+      f => storedNameOf(cur, seq(f), log).getOrElse("\u0000absent")
     }
   }
 
@@ -1675,22 +1695,12 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     readFilesLogicalSpecAware(overlapping, schemaOf(base), base)
   }
 
-  /** file → the commit version that FIRST added it — the merge-on-read
-    * sequence number readLogical's latest-wins resolution orders by, and
-    * the epoch stored-name resolution reads a file under. One definition
-    * for every MOR- and rename-aware code path; reads the whole log, as
-    * the answer is a property of the log, not of one snapshot.
-    */
-  private def firstSeenByFile(cs: Seq[CommitMeta] = commits): Map[String, Int] =
-    cs.flatMap(c => c.files.map(_ -> c.version)).groupBy(_._1)
-      .view.mapValues(_.map(_._2).min).toMap
-
   /** Distinct upsert sequences among `snap`'s live files (1 after
     * compaction; raw-file reads of a merge-on-read table are sound only
     * then).
     */
   private def morSequences(snap: CommitMeta): Int =
-    if (snap.files.isEmpty) 0 else snap.files.map(firstSeenByFile()).distinct.size
+    if (snap.files.isEmpty) 0 else snap.files.map(sequenceOf(snap)).distinct.size
 
   /** Raw read of specific data files, projected to the logical columns —
     * the incremental-scan primitive: the materializer reads ONLY the
@@ -1725,21 +1735,19 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   }
 
   /** file → its non-identity stored names for the columns of `logical`
-    * under `log` ([[storedNamesAt]] at the file's first-seen version):
-    * Some(other) = stored under a pre-rename name; None = ABSENT for
-    * that epoch (predates a resurrection-prone re-add — must NOT read
-    * the dead same-named column the file may still carry). Empty for
-    * every file while the log is, so the first-seen index is built only
-    * once a rename exists; a file outside any commit's live set
-    * (defensive default) reads as current-named.
+    * under `log` ([[storedNamesAt]] at the file's sequence number in
+    * `snap`): Some(other) = stored under a pre-rename name; None =
+    * ABSENT for that epoch (predates a resurrection-prone re-add — must
+    * NOT read the dead same-named column the file may still carry).
+    * Empty for every file while the log is; a file with no entry in
+    * `snap` (defensive default) reads as current-named.
     */
-  private def storedNamesByFile(logical: StructType,
+  private def storedNamesByFile(snap: CommitMeta, logical: StructType,
       log: Seq[(Int, String, String)]): String => Map[String, Option[String]] =
     if (log.isEmpty) _ => Map.empty
     else {
-      val firstSeen = firstSeenByFile()
-      f => storedNamesAt(logical, firstSeen.getOrElse(f, Int.MaxValue), log)
-        .filter { case (c, s) => s != Some(c) }
+      val seq = sequenceOf(snap)
+      f => storedNamesAt(logical, seq(f), log).filter { case (c, s) => s != Some(c) }
     }
 
   /** Read `files`, one group written under `spec` that stores the
@@ -1791,7 +1799,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       if (withPos) Seq(relFileCol.as("__file"), col("_metadata.row_index").as("__pos"))
       else Nil
     val byFile = specsByFile(snap)
-    val storedOf = storedNamesByFile(logical, renameLog.getOrElse(renameLogOf(snap)))
+    val storedOf = storedNamesByFile(snap, logical, renameLog.getOrElse(renameLogOf(snap)))
     files.groupBy(f => (PartitionTransform.specDdl(byFile(f)),
         storedOf(f).toSeq.sortBy(_._1).mkString(",")))
       .toSeq.sortBy(_._1)
@@ -1871,14 +1879,12 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * schema and log) — compaction migrates them like stale-spec files.
     * Any non-identity resolution flags migration: renamed-stored files
     * AND absent-for-epoch files (pre-resurrection) — rewriting the
-    * latter materializes the nulls and drops the dead bytes, which is
-    * also what lets their first-seen commits (which the resolution
-    * depends on — see expireSnapshots) expire afterwards. A plain
+    * latter materializes the nulls and drops the dead bytes. A plain
     * non-prone ADD records no entry, so it still never forces a rewrite
     * (the metadata-only contract).
     */
   private def staleNamedFiles(snap: CommitMeta): Set[String] = {
-    val storedOf = storedNamesByFile(schemaOf(snap), renameLogOf(snap))
+    val storedOf = storedNamesByFile(snap, schemaOf(snap), renameLogOf(snap))
     snap.files.filter(f => storedOf(f).nonEmpty).toSet
   }
 
@@ -2175,7 +2181,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * and [[fastForward]] publishes atomically or [[dropBranch]]
     * abandons it with main never having seen a byte. The fork copies
     * main's commit JSONS only (metadata — no data movement), keeping
-    * the full log so merge-on-read sequence ordering survives on the
+    * the full log so time travel and changelog reads work on the
     * branch.
     */
   def createBranch(name: String): GraftTable = {
@@ -2285,36 +2291,19 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
 
   /** M8a — expire snapshots older than `olderThanMs`, always keeping the
     * latest (reference: expire_snapshots(retention_threshold => '7d')).
-    * A commit that is the first-seen version of a still-live file is
-    * ALSO kept when that version is load-bearing:
-    *  - merge-on-read tables — the latest-wins merge orders files by it
-    *    (losing it would collapse sequence groups and resurface
-    *    superseded rows), and
-    *  - tables with a column-provenance log (renames / resurrection-
-    *    prone re-adds) — stored-name resolution derives each file's
-    *    epoch from it (losing it would resurrect dead columns or
-    *    mis-alias renamed ones).
-    * Iceberg's analog both times: snapshots still referenced by scan
-    * metadata can't expire — compact first (which migrates the files
-    * to the current epoch/sequence), then expire.
+    * Every snapshot is self-contained — its manifest entries carry each
+    * file's sequence number, which the merge-on-read latest-wins order
+    * and stored-name resolution read — so no read of a surviving
+    * snapshot depends on an expired one (Iceberg v2 keeps data sequence
+    * numbers in its manifest entries for the same reason).
     */
   def expireSnapshots(olderThanMs: Long): Int = {
     requireMain("expireSnapshots")
-    val cs = commits
     val cutoff = System.currentTimeMillis() - olderThanMs
-    // drop-only logs never affect resolution (a drop entry's empty NEW
-    // side matches no trace), so a table that only ever dropped columns
-    // keeps the unpinned retention behavior
-    val last = cs.lastOption.getOrElse(CommitMeta.Empty)
-    val resolutionEntries = renameLogOf(last).exists(_._3.nonEmpty)
-    val needed: Set[Int] =
-      if (!defn.mergeOnRead && !resolutionEntries) Set.empty
-      else last.files.map(firstSeenByFile(cs)).toSet
     // tagged snapshots are retention-exempt until the tag is dropped
     val tagged = tags.values.toSet
-    val expired = cs.dropRight(1)
-      .filter(c => c.tsMs < cutoff && !needed.contains(c.version) &&
-        !tagged.contains(c.version))
+    val expired = commits.dropRight(1)
+      .filter(c => c.tsMs < cutoff && !tagged.contains(c.version))
     expired.foreach(c => Files.deleteIfExists(commitPath(c.version)))
     expired.size
   }

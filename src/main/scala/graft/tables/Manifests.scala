@@ -19,10 +19,14 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *    log without ever re-opening data-file footers. A column all-null
   *    in the file records the empty range `(Long.MaxValue,
   *    Long.MinValue)` (intersects nothing); a column with unusable
-  *    stats is simply absent.
+  *    stats is simply absent;
+  *  - `v` — the version of the commit that first added the file:
+  *    Iceberg's data sequence number. Carried with the entry for as
+  *    long as the file stays live, so merge-on-read latest-wins order
+  *    and rename epochs resolve from the one snapshot being read.
   */
 final case class ManifestEntry(p: String, r: Long, s: Option[String],
-    b: Seq[ColumnBound])
+    b: Seq[ColumnBound], v: Int)
 
 /** One column's `[lo, hi]` inside a manifest entry. A dedicated case
   * class (not `Map[String, Seq[Long]]`) so Jackson deserializes the

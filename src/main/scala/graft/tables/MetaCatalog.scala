@@ -87,6 +87,10 @@ object MetaCatalog {
     */
   val DefaultWarehouse: String = s"${sys.props("java.io.tmpdir")}/graft_sql_surface_wh"
 
+  /** A handle for a metadata read, which needs no schema. */
+  private def handle(base: String, warehouse: String): GraftTable =
+    new GraftTable(SparkSession.active, TableDef(base, StructType(Nil)), warehouse)
+
   val SnapshotsSchema: StructType = StructType(Seq(
     StructField("snapshot_id", LongType, nullable = false),
     StructField("parent_id", LongType, nullable = true),
@@ -110,9 +114,7 @@ object MetaCatalog {
       extends Scan with LocalScan {
     override def readSchema(): StructType = SnapshotsSchema
     override def rows(): Array[InternalRow] = {
-      val spark = SparkSession.active
-      val commits =
-        new GraftTable(spark, TableDef(base, StructType(Nil)), warehouse).commits
+      val commits = handle(base, warehouse).commits
       val byVersion = commits.map(c => c.version -> c).toMap
       commits.map { c =>
         // Iceberg's `added-records` is the PER-SNAPSHOT delta; commit
@@ -169,16 +171,14 @@ object MetaCatalog {
         override def build(): Scan = new Scan with LocalScan {
           override def readSchema(): StructType = HistorySchema
           override def rows(): Array[InternalRow] = {
-            val spark = SparkSession.active
-            new GraftTable(spark, TableDef(base, StructType(Nil)), warehouse)
-              .commits.map { c =>
-                new GenericInternalRow(Array[Any](
-                  c.tsMs * 1000L,
-                  c.version.toLong,
-                  if (c.version > 1) java.lang.Long.valueOf((c.version - 1).toLong)
-                  else null,
-                  true)): InternalRow
-              }.toArray
+            handle(base, warehouse).commits.map { c =>
+              new GenericInternalRow(Array[Any](
+                c.tsMs * 1000L,
+                c.version.toLong,
+                if (c.version > 1) java.lang.Long.valueOf((c.version - 1).toLong)
+                else null,
+                true)): InternalRow
+            }.toArray
           }
         }
       }
@@ -205,8 +205,7 @@ object MetaCatalog {
         override def build(): Scan = new Scan with LocalScan {
           override def readSchema(): StructType = RefsSchema
           override def rows(): Array[InternalRow] = {
-            val spark = SparkSession.active
-            val tbl = new GraftTable(spark, TableDef(base, StructType(Nil)), warehouse)
+            val tbl = handle(base, warehouse)
             def row(n: String, ty: String, v: Long) =
               new GenericInternalRow(Array[Any](
                 UTF8String.fromString(n), UTF8String.fromString(ty), v)): InternalRow
@@ -247,20 +246,16 @@ object MetaCatalog {
         override def build(): Scan = new Scan with LocalScan {
           override def readSchema(): StructType = PartitionsSchema
           override def rows(): Array[InternalRow] = {
-            val spark = SparkSession.active
-            val tbl = new GraftTable(spark, TableDef(base, StructType(Nil)), warehouse)
-            val cur = tbl.commits.lastOption
-            val rowCounts = cur.map(_.fileRows).getOrElse(Map.empty)
+            val cur = handle(base, warehouse).head
             def partOf(relPath: String): String = {
               val segs = relPath.split('/').dropRight(1).filter(_.contains("="))
               segs.mkString("/")
             }
-            cur.map(_.files).getOrElse(Nil)
-              .groupBy(partOf).toSeq.sortBy(_._1)
+            cur.files.groupBy(partOf).toSeq.sortBy(_._1)
               .map { case (p, fs) =>
                 new GenericInternalRow(Array[Any](
                   UTF8String.fromString(p),
-                  fs.map(f => rowCounts.getOrElse(f, 0L)).sum,
+                  fs.map(f => cur.fileRows.getOrElse(f, 0L)).sum,
                   fs.size)): InternalRow
               }.toArray
           }
@@ -311,9 +306,7 @@ object MetaCatalog {
         override def build(): Scan = new Scan with LocalScan {
           override def readSchema(): StructType = ManifestsSchema
           override def rows(): Array[InternalRow] = {
-            val spark = SparkSession.active
-            val tbl = new GraftTable(spark, TableDef(base, StructType(Nil)), warehouse)
-            tbl.manifestInfo.map { case (path, len, added, nFiles, recs) =>
+            handle(base, warehouse).manifestInfo.map { case (path, len, added, nFiles, recs) =>
               new GenericInternalRow(Array[Any](
                 UTF8String.fromString(path), len, added.toLong, nFiles, recs)
               ): InternalRow
@@ -350,9 +343,7 @@ object MetaCatalog {
         override def build(): Scan = new Scan with LocalScan {
           override def readSchema(): StructType = EntriesSchema
           override def rows(): Array[InternalRow] = {
-            val spark = SparkSession.active
-            val tbl = new GraftTable(spark, TableDef(base, StructType(Nil)), warehouse)
-            tbl.manifestEntries.map { case (chunk, e) =>
+            handle(base, warehouse).manifestEntries.map { case (chunk, e) =>
               val bounds = new ArrayBasedMapData(
                 new GenericArrayData(e.b.map(cb => UTF8String.fromString(cb.c)).toArray[Any]),
                 new GenericArrayData(e.b.map(cb =>
@@ -380,18 +371,13 @@ object MetaCatalog {
         override def build(): Scan = new Scan with LocalScan {
           override def readSchema(): StructType = FilesSchema
           override def rows(): Array[InternalRow] = {
-            val spark = SparkSession.active
-            val tbl = new GraftTable(spark, TableDef(base, StructType(Nil)), warehouse)
-            val cur = tbl.commits.lastOption
-            val rowCounts = cur.map(_.fileRows).getOrElse(Map.empty)
+            val tbl = handle(base, warehouse)
+            val cur = tbl.head
             // content per Iceberg's enum: 0 = data, 1 = position deletes,
             // 2 = equality deletes (the two pending-tombstone kinds)
-            val entries =
-              cur.map(_.files).getOrElse(Nil).map(f => (0, f)) ++
-                cur.map(_.posDeleteFiles.keys.toSeq.sorted).getOrElse(Nil)
-                  .map(f => (1, f)) ++
-                cur.map(_.morDeleteFiles.keys.toSeq.sorted).getOrElse(Nil)
-                  .map(f => (2, f))
+            val entries = cur.files.map(f => (0, f)) ++
+              cur.posDeleteFiles.keys.toSeq.sorted.map(f => (1, f)) ++
+              cur.morDeleteFiles.keys.toSeq.sorted.map(f => (2, f))
             entries.map { case (content, f) =>
               val p = java.nio.file.Paths.get(s"${tbl.dataPath}/$f")
               val size =
@@ -400,7 +386,7 @@ object MetaCatalog {
                 content,
                 UTF8String.fromString(p.toString),
                 UTF8String.fromString("PARQUET"),
-                rowCounts.getOrElse(f, 0L),
+                cur.fileRows.getOrElse(f, 0L),
                 size)): InternalRow
             }.toArray
           }

@@ -18,7 +18,13 @@ final class TableCatalog(spark: SparkSession, val root: String, defs: Seq[TableD
   def defn(name: String): TableDef =
     byName.getOrElse(name, throw new IllegalArgumentException(s"unknown table: $name"))
 
-  def table(name: String): GraftTable = new GraftTable(spark, defn(name), root)
+  /** One handle per table (Iceberg's `CachingCatalog`), so its caches
+    * stay warm; every `head` re-lists the log, so it sees all writers.
+    */
+  private val handles = scala.collection.concurrent.TrieMap[String, GraftTable]()
+
+  def table(name: String): GraftTable =
+    handles.getOrElseUpdate(name, new GraftTable(spark, defn(name), root))
 
   def names: Seq[String] = defs.map(_.name)
 
@@ -96,5 +102,6 @@ final class TableCatalog(spark: SparkSession, val root: String, defs: Seq[TableD
     if (Files.exists(p))
       Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(f => Files.delete(f))
+    handles.remove(name) // its directories are gone; table(name) makes a new one
   }
 }

@@ -147,6 +147,11 @@ class ManifestSpec extends AnyFunSuite {
     Files.writeString(Paths.get(s"$root/m5/_manifests/$chunk"), mapper.writeValueAsString(
       Map("entries" -> Seq(Map("p" -> v1.files.head, "r" -> 30, "s" -> null)))))
     rejected(chunk)
+    // an entry with bounds but without its sequence number
+    Files.writeString(Paths.get(s"$root/m5/_manifests/$chunk"), mapper.writeValueAsString(
+      Map("entries" -> Seq(Map("p" -> v1.files.head, "r" -> 30, "s" -> null,
+        "b" -> Seq(Map("c" -> "id", "lo" -> 0, "hi" -> 29)))))))
+    rejected(chunk)
   }
 
   test("fresh handle deserializes chunk bounds as Longs (small and large values)") {
@@ -195,7 +200,7 @@ class ManifestSpec extends AnyFunSuite {
     val dir = freshRoot("m9")
     val store = new ManifestStore("m9", dir)
     val names = (0 until 300).map(i =>
-      store.write(Seq(ManifestEntry(s"f$i.parquet", i.toLong, None, Nil))))
+      store.write(Seq(ManifestEntry(s"f$i.parquet", i.toLong, None, Nil, 1))))
     assert(store.cachedChunkCount == 300)
     // below the floor nothing evicts (steady-state churn must not thrash)
     store.prune(names.takeRight(5).toSet, floor = 1000)

@@ -21,14 +21,14 @@ class OneSnapshotSpec extends AnyFunSuite {
 
   /** The methods of `GraftTable` that may read the log. */
   private val logReaders = Set(
-    // the log itself, the snapshot lookups, and the commit retry path
-    "commits", "head", "snapshot", "writeCommit",
+    // the log itself and the commit retry path
+    "commits", "writeCommit",
     // answers that are a property of the whole log, not of one
     // snapshot: metadata tables, time travel by timestamp, expiry,
-    // orphans, branches, changelog ranges, the first-seen index and
-    // the set of names that ever existed
+    // orphans, branches, changelog ranges and the set of names that
+    // ever existed
     "snapshots", "manifestInfo", "versionAsOf", "expireSnapshots", "removeOrphans",
-    "createBranch", "fastForward", "fileDeltasSince", "firstSeenByFile", "everNamed")
+    "createBranch", "fastForward", "fileDeltasSince", "everNamed")
 
   private val memberDef = """^  (?:private(?:\[\w+\])? )?(?:override )?def (\w+)""".r.unanchored
   private val logRead = """\bcommits\b""".r

@@ -186,14 +186,15 @@ class RenameSpec extends AnyFunSuite {
     assert(out2.filter(col("v").isNull).count() == 4)
     // time travel: the pre-drop snapshot still serves the ORIGINAL values
     assert(t.readLogical(Some(1)).filter(col("v") === 7.0).count() == 4)
-    // expiry must KEEP the first-seen commits epoch resolution depends
-    // on (the MOR-sequence protection, extended to provenance logs)
+    // expiry retires the older commits, and the epoch resolution must
+    // not change: each manifest entry carries its file's sequence
+    // number, so the head alone resolves it
     Thread.sleep(2)
     t.expireSnapshots(0L)
     assert(t.readLogical().filter(col("v").isNull).count() == 4,
       "expiry destroyed the first-seen versions the epoch resolution needs")
     // compact migrates the epochs (materializes the nulls, drops the
-    // dead bytes); only then can history fully expire
+    // dead bytes), and expiry then leaves the compacted head alone
     assert(t.needsCompaction(), "absent-epoch files must flag migration")
     t.compact()
     Thread.sleep(2)

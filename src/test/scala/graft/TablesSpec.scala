@@ -280,11 +280,21 @@ class TablesSpec extends AnyFunSuite {
   test("purge deletes a table's data and log (M9)") {
     val root = freshRoot("t8")
     val cat = new TableCatalog(spark, root, Seq(TableDef("t8", schema)))
+    // one handle per table per catalog, which still sees commits made
+    // through any other handle
+    assert(cat.table("t8") eq cat.table("t8"))
     cat.table("t8").append(df(0 until 5, "a", 1.0))
     assert(cat.table("t8").currentVersion == 1)
+    new GraftTable(spark, TableDef("t8", schema), root).append(df(5 until 7, "b", 2.0))
+    assert(cat.table("t8").head.version == 2)
+    assert(cat.table("t8").readLogical().count() == 7)
     cat.purge("t8")
     assert(cat.table("t8").currentVersion == 0)
     assert(cat.table("t8").readLogical().count() == 0)
+    // the purged table takes new writes through the same catalog
+    cat.table("t8").append(df(0 until 3, "c", 3.0))
+    assert(cat.table("t8").head.version == 1)
+    assert(cat.table("t8").readLogical().collect().map(_.getString(1)).toSeq == Seq("c", "c", "c"))
   }
 
   test("z-order rewrite makes footer pruning effective on BOTH clustered columns") {
