@@ -238,12 +238,13 @@ final class Materializer(
   // view DAYS can they have touched? ----
 
   /** Files the source gained since snapshot `sinceVersion`, IFF the
-    * delta is purely appends. None ⇒ unknowable — the base snapshot was
-    * expired (a changelog gap), a blind rewrite has no derivable change
-    * set, an upsert shadows an OLD row whose day the new files do not
-    * reveal (merge-on-read or change-tracked copy-on-write alike), or
-    * the source is merge-on-read — and callers fall back to signature
-    * detection, which is correct for any history. Some(Nil) ⇒ provably
+    * delta is purely appends; reads only the commit jsons past it. None
+    * ⇒ unknowable — a commit in the range expired (a changelog gap), a
+    * blind rewrite has no derivable change set, an upsert shadows an
+    * OLD row whose day the new files do not reveal (merge-on-read or
+    * change-tracked copy-on-write alike), or the source is
+    * merge-on-read — and callers fall back to signature detection,
+    * which is correct for any history. Some(Nil) ⇒ provably
     * no new facts (layout-only rewrites land here: compact/zorder
     * change no logical rows, so they no longer force the signature
     * path). Delta enumeration and gap semantics live in ONE place —

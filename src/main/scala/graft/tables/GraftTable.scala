@@ -343,22 +343,15 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
 
   private def commitPath(v: Int) = Paths.get(s"$commitsDir/commit-$v.json")
 
-  /** Parsed-commit cache: commit jsons are IMMUTABLE once renamed into
-    * place, so each (name, size, mtime) parses once per table handle —
-    * without this, every schema/spec/read/write resolution re-parses
-    * the whole log and a many-commit protocol (materializer repairs,
-    * streamed sinks) goes O(ops × commits) on driver-side Jackson work
-    * (measured: ~10% on the shared bench after the evolution threading,
-    * m4 1.43×). Keyed on a CONTENT hash, not (size, mtime): mtime has
-    * millisecond (on some filesystems, second) resolution, so a commit
-    * json deleted and rewritten with an identical byte length inside
-    * one tick — the purge-and-rebuild path (m9), where fixed-width UUID
-    * file names make equal lengths likely — would serve a stale
-    * CommitMeta under an mtime key. The bytes are read anyway to parse;
-    * hashing them is noise next to the Jackson work being saved.
+  /** The head this handle last read or published, keyed by (version,
+    * content hash): a ONE-snapshot memo like [[entriesMemo]], so a
+    * handle holds one resolved snapshot however many commits it reads;
+    * older versions load uncached. A content hash, not (size, mtime): a
+    * commit json purged and rewritten with the same length inside one
+    * mtime tick (the purge-and-rebuild path, m9) would otherwise serve a
+    * stale snapshot.
     */
-  private val commitCache =
-    scala.collection.concurrent.TrieMap[(String, Long, Long), CommitMeta]()
+  @volatile private var headMemo: (Int, Long, CommitMeta) = (0, 0L, CommitMeta.Empty)
 
   /** Manifest chunk sizing: entries per chunk (a full chunk json is a
     * few hundred KB — one metadata IO, Iceberg-manifest-sized) and the
@@ -402,35 +395,60 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     Option(new File(commitsDir).list()).getOrElse(Array.empty[String]).toSeq
       .collect { case CommitName(v) => v.toInt }
 
-  /** Commit `version`, parsed and resolved once per content ([[commitCache]]). */
-  private def load(version: Int): CommitMeta = {
-    val name = s"commit-$version.json"
+  /** Commit `version`, from [[headMemo]] when it holds that content. */
+  private def load(version: Int, remember: Boolean): CommitMeta = {
     val bytes = Files.readAllBytes(commitPath(version))
-    commitCache.getOrElseUpdate((name, bytes.length.toLong, contentKey(bytes)),
-      resolveManifests(parseCommit(name, bytes)))
+    val key = contentKey(bytes)
+    val memo = headMemo
+    if (memo._1 == version && memo._2 == key) memo._3
+    else {
+      val c = resolveManifests(parseCommit(s"commit-$version.json", bytes))
+      if (remember) headMemo = (version, key, c)
+      c
+    }
   }
 
   /** Every snapshot, oldest first; parses every commit json. */
-  def commits: Seq[CommitMeta] = logVersions.sorted.map(load)
+  def commits: Seq[CommitMeta] = logVersions.sorted.map(load(_, remember = false))
 
   /** The latest snapshot, [[CommitMeta.Empty]] for a table with no
     * commits. An operation reads it ONCE and derives its version,
     * schema, spec, live files and tombstones from that one value (its
     * BASE, as an Iceberg operation works against
-    * `TableOperations.current()`); only a lost commit race reads the
-    * log again ([[writeCommit]]). Lists the names in `_commits/` and
-    * parses only the highest version's json: a snapshot is one commit
-    * json plus its manifest chunks.
+    * `TableOperations.current()`); a lost commit race reads only the
+    * commits past its base ([[writeCommit]]). Lists the names in
+    * `_commits/` and parses only the highest version's json: a
+    * snapshot is one commit json plus its manifest chunks.
     */
-  def head: CommitMeta = logVersions.maxOption.fold(CommitMeta.Empty)(load)
+  def head: CommitMeta = logVersions.maxOption.fold(CommitMeta.Empty)(load(_, remember = true))
 
   /** Snapshot `version`, the head when None; reads that one commit
     * json. A version not in the log throws.
     */
   def snapshot(version: Option[Int]): CommitMeta = version match {
     case None => head
-    case Some(v) if Files.exists(commitPath(v)) => load(v)
+    case Some(v) if Files.exists(commitPath(v)) => load(v, remember = false)
     case Some(v) => throw new IllegalArgumentException(s"${defn.name}: no snapshot v$v")
+  }
+
+  /** Snapshots `from+1 … to`, oldest first, one commit json each: the
+    * one reader of a version range (changelog reads, a lost race's
+    * re-validation). Refuses before reading any json: a bad range, or
+    * `to` past the head, with IllegalArgumentException; a version
+    * absent inside the range (an expired commit), as a changelog GAP,
+    * with IllegalStateException.
+    */
+  private[graft] def commitsIn(from: Int, to: Int): Either[RuntimeException, Seq[CommitMeta]] = {
+    val range = (from + 1) to to
+    lazy val missing = range.filterNot(v => Files.exists(commitPath(v)))
+    if (from < 0 || from > to)
+      Left(new IllegalArgumentException(s"${defn.name}: bad changelog range ($from, $to]"))
+    else if (to > logVersions.maxOption.getOrElse(0))
+      Left(new IllegalArgumentException(s"${defn.name}: no snapshot v$to"))
+    else if (missing.nonEmpty)
+      Left(new IllegalStateException(s"${defn.name}: commit(s) v${missing.mkString(", v")} " +
+        s"expired — changelog gap in ($from, $to]; re-sync from readLogical"))
+    else Right(range.map(v => snapshot(Some(v))))
   }
 
   /** Parse one persisted commit json. The persisted form carries the
@@ -448,9 +466,9 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
 
   /** Rebuild the in-memory full-file-list view from a persisted
     * manifest-format commit (files/fileRows/fileSpecs were stripped at
-    * write time — see [[writeCommit]]). Cached with the parse, so the
-    * chunk walk happens once per commit json per handle; the chunk
-    * parses themselves cache in the [[ManifestStore]].
+    * write time — see [[writeCommit]]). The head's view is kept in
+    * [[headMemo]]; the chunk parses themselves cache in the
+    * [[ManifestStore]].
     */
   private def resolveManifests(c: CommitMeta): CommitMeta = {
     val entries = c.manifests.flatMap(manifestStore.read)
@@ -515,12 +533,11 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     Files.write(tmp, bytes)
     try {
       Files.createLink(commitPath(meta.version), tmp)
-      // prime the parsed-commit cache with the ASSEMBLED in-memory view:
-      // this handle's next commits() serves its own commit without
-      // re-resolving manifest chunks — the predecessor-carry that keeps
-      // a long-lived writer's assembly O(delta) end to end
-      commitCache.put((s"commit-${meta.version}.json",
-        bytes.length.toLong, contentKey(bytes)), meta)
+      // the ASSEMBLED in-memory view becomes the head memo: this
+      // handle's next head() serves its own commit without re-resolving
+      // manifest chunks — the carry that keeps a long-lived writer's
+      // assembly O(delta) end to end
+      headMemo = (meta.version, contentKey(bytes), meta)
       true
     }
     catch { case _: java.nio.file.FileAlreadyExistsException => false }
@@ -528,22 +545,22 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   }
 
   /** Decide whether `intent`, computed against snapshot `base`, may be
-    * replayed over `head`, the latest of the log `cs` (no-op when
-    * nothing interleaved). Throws [[CommitConflictException]] when
-    * replay would be unsound; see [[CommitIntent]] for the per-shape
-    * rules. This is the conflict-validation half of optimistic
+    * replayed over `head` (no-op when nothing interleaved), reading no
+    * commit outside `(base, head]`. Throws [[CommitConflictException]]
+    * when replay would be unsound; see [[CommitIntent]] for the
+    * per-shape rules. This is the conflict-validation half of optimistic
     * concurrency (Iceberg's validateNoNewDeletesForDataFiles /
     * validateAddedFilesMatchFilter family, reduced to this format's
     * five commit shapes).
     */
   private def validateIntent(op: String, intent: CommitIntent, base: CommitMeta,
-      head: CommitMeta, cs: Seq[CommitMeta]): Unit = {
+      head: CommitMeta): Unit = {
     if (head.version == base.version) return
     def conflict(why: String): Nothing = throw new CommitConflictException(
       s"${defn.name}: $op derived from snapshot v${base.version} but the head " +
         s"is v${head.version} — $why; re-run the operation against the current snapshot")
     if (head.version < base.version) conflict("the head moved backwards (rolled-back log?)")
-    if (base.version > 0 && !cs.exists(_.version == base.version))
+    if (base.version > 0 && !Files.exists(commitPath(base.version)))
       conflict("the base snapshot expired mid-operation")
     val headFiles = head.files.toSet
     // files this operation wrote are stamped under the BASE's
@@ -572,7 +589,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
             "the rewrite's output would re-sequence above it")
       case ReplaceContent(untouched, _) =>
         writeEpochGuards()
-        cs.find(c => c.version > base.version && c.op != "compact" && c.op != "zorder")
+        commitsIn(base.version, head.version).fold(e => conflict(e.getMessage), identity)
+          .find(c => c.op != "compact" && c.op != "zorder")
           .foreach(c => conflict(s"concurrent '${c.op}' commit v${c.version} changed the " +
             "logical content this operation's rows were derived from"))
         if (!untouched.forall(headFiles))
@@ -650,9 +668,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         // lockstep), re-read the winner, try again
         Thread.sleep(1L + java.util.concurrent.ThreadLocalRandom.current()
           .nextLong(2L << math.min(lost + 1, 6)))
-        val cs = commits
-        val winner = cs.lastOption.getOrElse(CommitMeta.Empty)
-        validateIntent(op, intent, base, winner, cs)
+        val winner = head
+        validateIntent(op, intent, base, winner)
         attempt(winner, lost + 1)
       }
     }
@@ -2318,16 +2335,18 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * data/manifest files sit unreferenced between its staging move and
     * its publish CAS, so a maintenance pass sharing the table must
     * only reclaim orphans older than any plausible write duration —
-    * the reference's scripts pass 7d. The default 0 sweeps
-    * immediately, which is only safe when the caller KNOWS no write is
-    * in flight (the engine's single-threaded tests and oracle rows).
+    * the reference's scripts pass 7d. The default 0 is no age gate (a
+    * file stamped in the sweep's own millisecond goes too), only safe
+    * when the caller KNOWS no write is in flight (single-threaded
+    * tests, oracle rows).
     */
   def removeOrphans(minAgeMs: Long = 0L): Int = {
     requireMain("removeOrphans")
     val ageCutoff = System.currentTimeMillis() - minAgeMs
     def oldEnough(p: java.nio.file.Path): Boolean =
-      try Files.getLastModifiedTime(p).toMillis < ageCutoff
-      catch { case _: Exception => false } // vanished mid-scan: not ours to sweep
+      minAgeMs <= 0 ||
+        (try Files.getLastModifiedTime(p).toMillis < ageCutoff
+        catch { case _: Exception => false }) // vanished mid-scan: not ours to sweep
     // live BRANCH snapshots reference files main doesn't know yet —
     // those are the branch's staged payload, not orphans
     def refsOf(c: CommitMeta): Seq[String] =
@@ -2376,10 +2395,11 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * multiset semantics: each delete row cancels one earlier instance,
     * Iceberg's changelog-scan DELETE rows).
     *
-    * Cost shape: each commit's delta is read from exactly the files
-    * that commit ADDED (commit metadata names them; nothing is diffed
-    * or re-read), so a consumer tailing the table pays O(new data) per
-    * poll — never O(table). Pure layout rewrites (`compact`, `zorder`)
+    * Cost shape: only the range's commit jsons are read, and each
+    * commit's delta from exactly the files that commit ADDED (its
+    * entries and tombstones carry its version), so a consumer tailing
+    * the table pays O(new data) per poll — never O(table) or O(log);
+    * only the delete legs read a predecessor. Pure layout rewrites (`compact`, `zorder`)
     * change nothing logical and are skipped. Blind rewrites
     * (`overwrite`, `replace`) THROW: their file delta is the merged
     * result, not the change set, and emitting it would be
@@ -2475,77 +2495,50 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * append detection (Materializer.sourceAppendsSince) falls back to
     * signature detection, so the two can never drift on gap handling.
     *
-    * Per-op delta `(commit, addedFiles, deletedFiles)`:
-    * `append`/`upsert-mor` commits added exactly `files − predecessor's
-    * files` (no deletes); a copy-on-write `upsert` names its batch's
-    * files (`changeFiles` — the survivors' rewritten files are NOT
-    * changes); a change-tracked repair (`replace-cdc`) names its
-    * replacement files AND its delete files; layout-only rewrites
-    * (`compact`, `zorder`) change nothing logical and contribute an
-    * empty delta. Everything else refuses: a blind rewrite's file
-    * delta is the merged result, not the change set.
+    * Each commit names its own change, so a delta reads that commit's
+    * json alone ([[commitsIn]]). Per-op `(commit, addedFiles,
+    * deletedFiles)`: `append`/`upsert-mor` added the files whose
+    * manifest entries carry its version as sequence number; a
+    * `delete-mor`/`delete-pos` added the tombstones stamped with its
+    * version; a copy-on-write `upsert` names its batch (`changeFiles`
+    * — the survivors' rewritten files are NOT changes); a
+    * change-tracked repair (`replace-cdc`) names its replacement AND
+    * delete files; layout-only rewrites (`compact`, `zorder`) give an
+    * empty delta. Everything else refuses: a blind rewrite's file delta
+    * is the merged result, not the change set.
     *
-    * Gap rule: every version in the range AND each one's predecessor
-    * must still be in the log (the delta is files-minus-predecessor).
-    * An expired commit would otherwise fail in one of two SILENT
-    * shapes — a vanished version contributing nothing, or an empty
-    * predecessor set replaying the whole carried file list as one
-    * commit's "delta" — both corrupt for a consumer. Refuse instead;
-    * the consumer re-syncs from a full snapshot read.
+    * Gap rule: every version in the range must still be in the log —
+    * an expired commit would otherwise vanish from the changelog
+    * silently. Refuse; the consumer re-syncs from a full snapshot read.
     */
   private[graft] def fileDeltasSince(fromVersion: Int, toVersion: Int)
       : Either[RuntimeException, Seq[(CommitMeta, Seq[String], Seq[String])]] = {
-    val cs = commits
-    if (fromVersion < 0 || fromVersion > toVersion)
-      return Left(new IllegalArgumentException(
-        s"${defn.name}: bad changelog range ($fromVersion, $toVersion]"))
-    if (toVersion > cs.lastOption.map(_.version).getOrElse(0))
-      return Left(new IllegalArgumentException(
-        s"${defn.name}: no snapshot v$toVersion"))
-    val byVersion = cs.map(c => c.version -> c).toMap
-    val missing = ((fromVersion + 1) to toVersion).filterNot(byVersion.contains) ++
-      ((fromVersion + 1) to toVersion)
-        .filter(v => v > 1 && !byVersion.contains(v - 1)).map(_ - 1)
-    if (missing.nonEmpty)
-      return Left(new IllegalStateException(
-        s"${defn.name}: commit(s) v${missing.distinct.sorted.mkString(", v")} " +
-          s"expired — changelog gap in ($fromVersion, $toVersion]; " +
-          "re-sync from readLogical"))
-    val deltas = cs.filter(c => c.version > fromVersion && c.version <= toVersion)
-      .map { c =>
-        val prevFiles =
-          byVersion.get(c.version - 1).map(_.files.toSet).getOrElse(Set.empty[String])
-        c.op match {
-          case "append" | "upsert-mor" =>
-            (c, c.files.filterNot(prevFiles), Nil: Seq[String])
-          case "upsert" =>
-            (c, c.changeFiles, Nil: Seq[String])
-          case "replace-cdc" =>
-            (c, c.changeFiles, c.deleteFiles)
-          case "delete-mor" =>
-            // the tombstone file(s) THIS commit added (map delta vs the
-            // predecessor's carried set); readChanges turns them into
-            // full delete rows via the predecessor snapshot
-            val prevTombs = byVersion.get(c.version - 1)
-              .map(_.morDeleteFiles.keySet).getOrElse(Set.empty[String])
-            (c, Nil: Seq[String],
-              (c.morDeleteFiles.keySet -- prevTombs).toSeq.sorted)
-          case "delete-pos" =>
-            // same shape for position deletes: the pos-tombstone file(s)
-            // this commit added; readChanges reads the referenced rows
-            val prevPos = byVersion.get(c.version - 1)
-              .map(_.posDeleteFiles.keySet).getOrElse(Set.empty[String])
-            (c, Nil: Seq[String],
-              (c.posDeleteFiles.keySet -- prevPos).toSeq.sorted)
-          case "compact" | "zorder" | "evolve-schema" | "evolve-partition" =>
-            // layout-/metadata-only: no logical rows changed
-            (c, Nil: Seq[String], Nil: Seq[String])
-          case other => return Left(new IllegalArgumentException(
-            s"${defn.name}: commit v${c.version} is '$other' — a rewrite has no " +
-              "derivable change set; changelog consumers need append/merge-on-read/" +
-              "change-tracked upsert or replace commits (see readChanges scaladoc)"))
-        }
+    val cs = commitsIn(fromVersion, toVersion).fold(e => return Left(e), identity)
+    val deltas = cs.map { c =>
+      def stamped(tombs: Map[String, Int]) = tombs.filter(_._2 == c.version).keys.toSeq.sorted
+      c.op match {
+        case "append" | "upsert-mor" =>
+          (c, c.manifests.flatMap(manifestStore.read).filter(_.v == c.version).map(_.p),
+            Nil: Seq[String])
+        case "upsert" =>
+          (c, c.changeFiles, Nil: Seq[String])
+        case "replace-cdc" =>
+          (c, c.changeFiles, c.deleteFiles)
+        // the tombstone file(s) THIS commit added; readChanges turns
+        // them into full delete rows via the predecessor snapshot
+        case "delete-mor" =>
+          (c, Nil: Seq[String], stamped(c.morDeleteFiles))
+        case "delete-pos" =>
+          (c, Nil: Seq[String], stamped(c.posDeleteFiles))
+        case "compact" | "zorder" | "evolve-schema" | "evolve-partition" =>
+          // layout-/metadata-only: no logical rows changed
+          (c, Nil: Seq[String], Nil: Seq[String])
+        case other => return Left(new IllegalArgumentException(
+          s"${defn.name}: commit v${c.version} is '$other' — a rewrite has no " +
+            "derivable change set; changelog consumers need append/merge-on-read/" +
+            "change-tracked upsert or replace commits (see readChanges scaladoc)"))
       }
+    }
     Right(deltas)
   }
 

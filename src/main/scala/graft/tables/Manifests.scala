@@ -105,14 +105,14 @@ final class ManifestStore(table: String, dir: String) {
     * removed. Dotfiles (in-flight tmp writes) are never touched, and
     * `minAgeMs` guards a CONCURRENT writer's freshly written chunks
     * (unreferenced until its publish CAS lands) the same way the data
-    * sweep does.
+    * sweep does; 0 is no age gate.
     */
   def sweep(referenced: Set[String], minAgeMs: Long = 0L): Int = {
     val cutoff = System.currentTimeMillis() - minAgeMs
     val files = Option(new java.io.File(dir).listFiles())
       .getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("manifest-") && !referenced(f.getName) &&
-        f.lastModified() < cutoff)
+        (minAgeMs <= 0 || f.lastModified() < cutoff))
     files.foreach { f => Files.deleteIfExists(f.toPath); cache.remove(f.getName) }
     files.length
   }

@@ -150,8 +150,8 @@ class ChangelogSpec extends AnyFunSuite {
     t.append(df(10 until 15, "b", 2.0)) // v2 (carries v1's files too)
     t.compact(targetBytes = 64L * 1024) // v3 — makes v1/v2 expirable
     assert(t.expireSnapshots(0L) > 0, "expiry should retire superseded commits")
-    // v2's delta is files-minus-v1, and v1's json is gone: without the
-    // gap check this would emit ALL 15 rows as v2's "delta"
+    // expiry kept only the head (v3), so v2's json is gone too: without
+    // the gap check v2's 5 rows would silently vanish from the changelog
     val e = intercept[IllegalStateException](t.readChanges(1, 2).collect())
     assert(e.getMessage.contains("changelog gap"), e.getMessage)
   }

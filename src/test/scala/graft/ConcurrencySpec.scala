@@ -317,7 +317,11 @@ class ConcurrencySpec extends AnyFunSuite {
       "retention must spare fresh unreferenced files (a racing commit in flight)")
     assert(Files.exists(inflight) && Files.exists(chunk))
     // the unguarded sweep (single-writer maintenance, the tests' shape)
-    // reclaims both immediately
+    // reclaims both immediately: minAgeMs = 0 is no age gate, so even an
+    // mtime in the sweep's own millisecond (or, on a coarse or skewed
+    // filesystem clock, past it) spares nothing
+    val stamp = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000L)
+    Seq(inflight, chunk).foreach(Files.setLastModifiedTime(_, stamp))
     assert(t.removeOrphans() == 1)
     assert(!Files.exists(inflight) && !Files.exists(chunk))
   }

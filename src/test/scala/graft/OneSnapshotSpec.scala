@@ -8,10 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** A `GraftTable` operation works against one snapshot: it reads the
   * head once and derives version, schema, spec, live files and
-  * tombstones from it, and only a lost commit race reads the log again.
-  * Every read of `commits` lists `_commits/` and reads and hashes every
-  * commit json, so a helper that reaches for it inside an operation
-  * multiplies the operation's metadata cost by the log length. The
+  * tombstones from it; a lost commit race and a changelog read load
+  * only the versions in their own range (`commitsIn`). Every read of
+  * `commits` lists `_commits/` and reads and hashes every commit json,
+  * so a helper that reaches for it inside an operation multiplies the
+  * operation's metadata cost by the log length. The
   * empty table is the one `CommitMeta.Empty` value, never an ad-hoc
   * literal.
   */
@@ -21,14 +22,13 @@ class OneSnapshotSpec extends AnyFunSuite {
 
   /** The methods of `GraftTable` that may read the log. */
   private val logReaders = Set(
-    // the log itself and the commit retry path
-    "commits", "writeCommit",
+    // the log itself
+    "commits",
     // answers that are a property of the whole log, not of one
     // snapshot: metadata tables, time travel by timestamp, expiry,
-    // orphans, branches, changelog ranges and the set of names that
-    // ever existed
+    // orphans, branches and the set of names that ever existed
     "snapshots", "manifestInfo", "versionAsOf", "expireSnapshots", "removeOrphans",
-    "createBranch", "fastForward", "fileDeltasSince", "everNamed")
+    "createBranch", "fastForward", "everNamed")
 
   private val memberDef = """^  (?:private(?:\[\w+\])? )?(?:override )?def (\w+)""".r.unanchored
   private val logRead = """\bcommits\b""".r
