@@ -1,255 +1,106 @@
 package graft
 
 import graft.tables.{GraftTable, TableCatalog, TableDef}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, lit, when}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{FieldName, RelationTimeTravel, UnresolvedAttribute,
+  UnresolvedFunction, UnresolvedIdentifier, UnresolvedProcedure, UnresolvedRelation, UnresolvedTable,
+  UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, Expression, Literal,
+  NamedArgumentExpression}
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.command.{CreateViewCommand, SetCommand}
+import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 
-/** X4 — SQL DML over the snapshot-log tables: the reference's
-  * materializer issues its repairs as SQL TEXT against Iceberg
-  * (`scripts/materialize.sh:197-216`: `DELETE FROM iceberg.db.<t> WHERE
-  * <pred incl. IN (SELECT ...)>` then `INSERT INTO iceberg.db.<t>
-  * SELECT ...`), and until now that text only replayed through the
-  * Scala table API. This runner translates the four DML verbs onto the
-  * table ops with the right 100 TB cost shape per table kind:
+/** X4 — SQL text over the snapshot-log tables: the reference drives its
+  * lakehouse with SQL (`scripts/materialize.sh:197-216`: `DELETE FROM
+  * iceberg.db.<t> WHERE <pred incl. IN (SELECT ...)>` then `INSERT INTO
+  * iceberg.db.<t> SELECT ...`; `trino/apply_views.sh`'s `CREATE VIEW`;
+  * `scripts/maintenance.sh`'s `ALTER TABLE … EXECUTE` and `CALL`). Each
+  * statement is parsed by Spark's own `sqlParser` into a typed plan, and
+  * the runner dispatches on the plan node:
   *
-  *  - `DELETE FROM t WHERE p`  → [[GraftTable.deleteWhere]] — position
-  *    deletes (O(matches) tombstones, zero rewrite) on append/COW
-  *    tables, key-granular equality deletes on merge-on-read;
-  *  - `UPDATE t SET c = e, ... [WHERE p]` → keyed tables upsert the
-  *    updated rows (O(batch), merge-on-read stays O(batch) write);
+  *  - `DeleteFromTable` → [[GraftTable.deleteWhere]] — position deletes
+  *    (O(matches) tombstones, zero rewrite) on append/COW tables,
+  *    key-granular equality deletes on merge-on-read;
+  *  - `UpdateTable` → keyed tables upsert the updated rows (O(batch));
   *    unkeyed tables [[GraftTable.replaceWhere]] (delete+re-insert,
-  *    auto-compacting first if position deletes pend — the documented
-  *    raw-rewrite ordering);
-  *  - `INSERT INTO t [(cols)] SELECT ...|VALUES ...` →
-  *    [[GraftTable.append]] (positional when no column list, like SQL);
-  *  - `MERGE INTO t USING src ON <key equalities> WHEN MATCHED THEN
-  *    UPDATE SET * WHEN NOT MATCHED THEN INSERT *` →
-  *    [[GraftTable.upsert]] — exactly the upsert-shaped MERGE; any
-  *    other ON/action shape refuses loudly rather than approximating.
+  *    auto-compacting first if position deletes pend);
+  *  - `InsertIntoStatement` → [[GraftTable.append]] / `overwrite`
+  *    (positional when no column list, like SQL);
+  *  - `MergeIntoTable` → [[GraftTable.upsert]] for the upsert shape (ON =
+  *    the identifier keys, `UPDATE SET *` / `INSERT *`), one keyed
+  *    replace commit for conditional / assignment / DELETE clauses; any
+  *    other ON shape refuses loudly rather than approximating;
+  *  - `CreateTableAsSelect` / `DropTable` → runner-created tables, their
+  *    schema in a `_ctas_schema.ddl` sidecar so a later run re-opens them;
+  *  - `CreateView` / `DropView` → PERSISTED catalog views: the body text
+  *    lands in a `_views/` sidecar and re-registers in every later run,
+  *    like Trino's catalog views;
+  *  - `ShowTables` / `DescribeRelation` → the shell layer's metadata
+  *    statements; `AddColumns` / `DropColumns` / `RenameColumn` →
+  *    metadata-only schema evolution; `Call` → the maintenance and WAP
+  *    procedures. Trino's `ALTER TABLE t EXECUTE proc(args)`, which
+  *    Spark's grammar lacks, is the one statement matched textually; its
+  *    `proc(args)` tail parses as a function call.
   *
-  * `CREATE [OR REPLACE] VIEW` / `DROP VIEW` (trino/apply_views.sh's
-  * statement shape) maintain PERSISTED catalog views: the body text
-  * lands in a `_views/` sidecar beside the table logs, registers as a
-  * scoped temp view through the same qualified-name rewrite, and
-  * re-registers in every later run — so apply_views.sh replays once and
-  * materialize.sh's `CREATE TABLE ... AS SELECT * FROM iceberg.db.<view>`
-  * works in any subsequent cron pass, like Trino's catalog views.
-  *
-  * Non-DML statements (SET / SELECT / CREATE TEMP VIEW ...) run through
-  * `spark.sql` as in [[SqlRunner]]. Every catalog table whose snapshot
-  * MOVED is (re-)published as a temp view under its name before each
-  * statement (O(changed tables) churn, not O(tables)) — a logical read
-  * pins the snapshot current at registration, so each statement (and
-  * each DML's subqueries) sees its predecessors' writes, Trino's
-  * read-committed statement semantics; catalog views re-register off
-  * their stored body whenever a dependency moved, keeping them
-  * late-bound. Catalog-qualified names (`iceberg.db.foo`) resolve by
-  * last segment, so the reference text needs no rewriting. Returns the
-  * LAST statement's result; DML statements yield a one-row (verb,
-  * table) marker frame so a DML-final script still returns something
-  * inspectable.
+  * Names resolve on the plan, never in the text ([[resolveNames]]): a
+  * catalog-qualified `iceberg.db.t` reads the table or view `t`, and `t
+  * FOR VERSION|TIMESTAMP AS OF …` reads that snapshot, in subqueries and
+  * CTE bodies too; a string literal is data by construction. Everything
+  * else (SELECT, temp views, SET) runs through Spark as in [[SqlRunner]].
+  * Every table whose snapshot MOVED is re-published as a temp view under
+  * its name before each statement, so each statement sees its
+  * predecessors' writes (Trino's read-committed statement semantics).
+  * Returns the LAST statement's result; DML yields a one-row (verb,
+  * table) marker frame.
   */
 object DmlRunner {
 
-  private val DeleteRe =
-    """(?is)^DELETE\s+FROM\s+([\w.]+)(?:\s+WHERE\s+(.+))?$""".r
-  private val UpdateRe =
-    """(?is)^UPDATE\s+([\w.]+)\s+SET\s+(.+?)(?:\s+WHERE\s+(.+))?$""".r
-  private val InsertRe =
-    """(?is)^INSERT\s+INTO\s+([\w.]+)\s*(?:\(([^)]*)\)\s*)?((?:SELECT|VALUES|WITH|TABLE)\b.+)$""".r
-  private val InsertOverwriteRe =
-    """(?is)^INSERT\s+OVERWRITE\s+(?:TABLE\s+)?([\w.]+)\s*(?:\(([^)]*)\)\s*)?((?:SELECT|VALUES|WITH|TABLE)\b.+)$""".r
-  private val CtasRe =
-    """(?is)^CREATE\s+TABLE\s+(?:(IF\s+NOT\s+EXISTS)\s+)?([\w.]+)\s+AS\s+((?:SELECT|WITH|VALUES|TABLE)\b.+)$""".r
   /** Schema DDL sidecar a CTAS table leaves beside its commit log. */
   private val CtasSchemaSidecar = "_ctas_schema.ddl"
-  private val DropTableRe =
-    """(?is)^DROP\s+TABLE\s+(?:(IF\s+EXISTS)\s+)?([\w.]+)\s*$""".r
-  // CATALOG view DDL (trino/apply_views.sh:17-27 pastes one
-  // `CREATE OR REPLACE VIEW iceberg.db.v_x AS SELECT …` per
-  // trino/sql/*.sql). TEMPORARY view DDL deliberately does NOT match —
-  // it stays session-scoped through the spark.sql fallthrough.
-  private val CreateViewRe =
-    """(?is)^CREATE\s+(?:(OR\s+REPLACE)\s+)?VIEW\s+([\w.]+)\s+AS\s+(.+)$""".r
-  private val DropViewRe =
-    """(?is)^DROP\s+VIEW\s+(?:(IF\s+EXISTS)\s+)?([\w.]+)\s*$""".r
-  // metadata inspection, the two shapes the reference's shell layer
-  // issues: scripts/setup.sh:135 polls `SHOW TABLES` to verify the
-  // catalog; scripts/maintenance.sh:57 gates every maintenance pass on
-  // `DESCRIBE ${table}` succeeding (output discarded — FAILURE is the
-  // table-does-not-exist signal that skips mat_* before first
-  // materialization)
-  private val ShowTablesRe = """(?is)^SHOW\s+TABLES$""".r
-  private val DescribeRe = """(?is)^(?:DESCRIBE|DESC)\s+([\w.]+)$""".r
-  private val MergeHead =
-    """(?is)^MERGE\s+INTO\s+([\w.]+)(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+""".r
-  private val MergeOn =
-    """(?is)^\s*(?:(?:AS\s+)?(\w+)\s+)?ON\s+(.+?)\s+(WHEN\s+.+)$""".r
 
-  /** One parsed `WHEN` clause of a MERGE. `set` is the raw assignment
-    * list text for UPDATE ("*" for `SET *`), the raw `(cols) VALUES
-    * (exprs)` text for a column-list INSERT (null for `INSERT *`),
-    * null for DELETE.
-    */
-  private final case class MergeClause(matched: Boolean, cond: Option[String],
-      verb: String, set: String = null, insertCols: Seq[String] = Nil,
-      insertValues: Seq[String] = Nil)
-
-  private val WhenUpdateRe =
-    """(?is)^MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+UPDATE\s+SET\s+(.+)$""".r
-  private val WhenDeleteRe =
-    """(?is)^MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+DELETE$""".r
-  private val WhenInsertRe =
-    """(?is)^NOT\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+INSERT\s+\*$""".r
-  private val WhenInsertValuesRe =
-    """(?is)^NOT\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+INSERT\s*\(([^)]*)\)\s*VALUES\s*\((.+)\)$""".r
-
-  /** Parsed MERGE: target, target alias, source text, source alias,
-    * ON clause, WHEN clauses in statement order.
-    */
-  private final case class MergeStmt(target: String, targetAlias: Option[String],
-      using: String, srcAlias: Option[String], on: String,
-      clauses: Seq[MergeClause])
-
-  /** Parse a MERGE statement. The USING source is consumed PAREN-AWARE
-    * (a subquery may itself contain `JOIN ... ON` — a regex splitting
-    * on the first ` ON ` would truncate it); the WHEN tail splits on
-    * top-level `WHEN` keywords, each clause matched against the three
-    * supported shapes (UPDATE SET assignments-or-*, DELETE, INSERT *).
-    * Anything else refuses loudly rather than approximating.
-    */
-  private def parseMerge(stmt: String): Option[MergeStmt] =
-    MergeHead.findFirstMatchIn(stmt).map { m =>
-      val rest = stmt.substring(m.end).trim
-      val (usingText, afterUsing) =
-        if (rest.startsWith("(")) {
-          var depth = 0; var i = 0; var inQ = false; var end = -1
-          while (i < rest.length && end < 0) {
-            rest(i) match {
-              case '\'' => inQ = !inQ
-              case '(' if !inQ => depth += 1
-              case ')' if !inQ => depth -= 1; if (depth == 0) end = i
-              case _ =>
-            }
-            i += 1
-          }
-          require(end > 0, "unbalanced parentheses in MERGE USING source")
-          (rest.substring(0, end + 1), rest.substring(end + 1))
-        } else {
-          val w = rest.takeWhile(c => c.isLetterOrDigit || c == '_' || c == '.')
-          require(w.nonEmpty, "MERGE USING needs a view name or a (subquery)")
-          (w, rest.substring(w.length))
-        }
-      val onM = MergeOn.findFirstMatchIn(afterUsing).getOrElse(
-        throw new IllegalArgumentException(
-          s"unparseable MERGE ON/WHEN tail: $afterUsing"))
-      // split the WHEN tail on top-level WHEN keywords: quote- and
-      // paren-aware, CASE…END-aware (a `CASE WHEN` inside a SET
-      // expression is NOT a clause boundary), and word-boundary-exact
-      // (a column named ts_when must not split mid-identifier)
-      val tail = onM.group(3)
-      def wordChar(c: Char) = c.isLetterOrDigit || c == '_'
-      def isWord(i: Int, w: String): Boolean =
-        tail.regionMatches(true, i, w, 0, w.length) &&
-          (i == 0 || !wordChar(tail(i - 1))) &&
-          (i + w.length == tail.length || !wordChar(tail(i + w.length)))
-      val whenStarts = {
-        var depth = 0; var inQ = false; var caseDepth = 0
-        val starts = Seq.newBuilder[Int]
-        var i = 0
-        while (i < tail.length) {
-          tail(i) match {
-            case '\'' => inQ = !inQ
-            case '(' if !inQ => depth += 1
-            case ')' if !inQ => depth -= 1
-            case _ =>
-          }
-          if (!inQ && depth == 0) {
-            if (isWord(i, "CASE")) caseDepth += 1
-            else if (isWord(i, "END")) caseDepth = math.max(0, caseDepth - 1)
-            else if (caseDepth == 0 && isWord(i, "WHEN")) starts += i
-          }
-          i += 1
-        }
-        starts.result()
-      }
-      val clauses = whenStarts.zipAll(whenStarts.drop(1).map(Some(_)), 0, None)
-        .map { case (s, e) =>
-          tail.substring(s, e.getOrElse(tail.length)).trim
-            .replaceAll("""(?is)^WHEN\s+""", "").replaceAll(";\\s*$", "").trim
-        }
-        .map {
-          case WhenUpdateRe(cond, set) =>
-            MergeClause(matched = true, Option(cond), "update", set.trim)
-          case WhenDeleteRe(cond) =>
-            MergeClause(matched = true, Option(cond), "delete")
-          case WhenInsertRe(cond) =>
-            MergeClause(matched = false, Option(cond), "insert")
-          case WhenInsertValuesRe(cond, cols, values) =>
-            MergeClause(matched = false, Option(cond), "insert",
-              insertCols = cols.split(',').map(_.trim).toSeq,
-              insertValues = splitTopLevel(values))
-          case other => throw new IllegalArgumentException(
-            s"unsupported MERGE WHEN clause '$other' — supported: " +
-              "[NOT] MATCHED [AND <cond>] THEN UPDATE SET <assignments|*> " +
-              "/ DELETE / INSERT *")
-        }
-      require(clauses.nonEmpty, "MERGE needs at least one WHEN clause")
-      MergeStmt(m.group(1), Option(m.group(2)), usingText,
-        Option(onM.group(1)), onM.group(2), clauses)
-    }
-
-  // Trino-style maintenance procedures (scripts/maintenance.sh:66-79
-  // issues exactly these) and the ALTER COLUMN DDL trio
+  // Trino's table-procedure form (scripts/maintenance.sh:66-79); the
+  // `proc(args)` tail is a function call Spark's expression parser reads
   private val AlterExecRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+EXECUTE\s+(\w+)\s*\(([^)]*)\)\s*$""".r
-  private val AlterAddRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+ADD\s+COLUMNS?\s*\((.+)\)\s*$""".r
-  private val AlterDropRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+COLUMNS?\s+([\w\s,]+)$""".r
-  private val AlterRenameRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)\s*$""".r
+    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+EXECUTE\s+(\w+\s*\(.*\))\s*$""".r
 
-  // Trino/Iceberg procedure-call style: CALL iceberg.system.<proc>(...)
-  private val CallRe =
-    """(?is)^CALL\s+[\w.]*system\.(\w+)\s*\((.*)\)\s*$""".r
+  private val ByteUnits = Map("b" -> 1L, "kb" -> (1L << 10), "mb" -> (1L << 20),
+    "gb" -> (1L << 30), "tb" -> (1L << 40))
+  private val MsUnits = Map("ms" -> 1L, "s" -> 1000L, "m" -> 60000L,
+    "h" -> 3600000L, "d" -> 86400000L)
+  private val UnitLiteral = """'?\s*(\d+(?:\.\d+)?)\s*([a-zA-Z]+)\s*'?""".r
 
-  /** `'128MB'` / `'64kB'` / `'1GB'` → bytes. */
-  private[graft] def parseBytes(s: String): Long = {
-    val m = """(?i)'?\s*(\d+)\s*(B|KB|MB|GB)?\s*'?""".r
-      .findFirstMatchIn(s.trim).getOrElse(
-        throw new IllegalArgumentException(s"bad size literal: '$s'"))
-    val n = m.group(1).toLong
-    Option(m.group(2)).map(_.toUpperCase) match {
-      case Some("KB") => n * 1024L
-      case Some("MB") => n * 1024L * 1024
-      case Some("GB") => n * 1024L * 1024 * 1024
-      case _ => n
+  /** A whole Trino unit literal (`'1.5GB'`, `'30ms'`) → base units,
+    * truncated; anything else refuses.
+    */
+  private def parseUnits(s: String, units: Map[String, Long], what: String): Long =
+    s.trim match {
+      case UnitLiteral(n, u) if units.contains(u.toLowerCase) =>
+        (BigDecimal(n) * units(u.toLowerCase)).toLong
+      case _ => throw new IllegalArgumentException(
+        s"bad $what literal: '$s' — a number with one of ${units.keys.mkString(" ")}")
     }
-  }
 
-  /** `'7d'` / `'12h'` / `'30m'` / `'45s'` → milliseconds. */
-  private[graft] def parseDurationMs(s: String): Long = {
-    val m = """(?i)'?\s*(\d+)\s*(d|h|m|s)\s*'?""".r
-      .findFirstMatchIn(s.trim).getOrElse(
-        throw new IllegalArgumentException(s"bad duration literal: '$s'"))
-    val n = m.group(1).toLong
-    m.group(2).toLowerCase match {
-      case "d" => n * 86400000L
-      case "h" => n * 3600000L
-      case "m" => n * 60000L
-      case "s" => n * 1000L
-    }
-  }
+  /** `'128MB'` / `'64kB'` / `'1.5GB'` → bytes (Trino's B kB MB GB TB). */
+  private[graft] def parseBytes(s: String): Long = parseUnits(s, ByteUnits, "size")
 
-  /** The value of a `name => 'value'` argument list entry, if present. */
-  private def namedArg(args: String, name: String): Option[String] =
-    s"""(?i)$name\\s*=>\\s*('[^']*'|\\S+)""".r
-      .findFirstMatchIn(args).map(_.group(1))
+  /** `'7d'` / `'12h'` / `'30m'` / `'45s'` / `'30ms'` → milliseconds. */
+  private[graft] def parseDurationMs(s: String): Long = parseUnits(s, MsUnits, "duration")
 
   /** Last identifier segment: `iceberg.db.foo` → `foo`. */
   private def baseName(qualified: String): String =
     qualified.split('.').last
+
+  /** The bare name a parsed table or view reference carries. */
+  private def nameOf(p: LogicalPlan): String = p match {
+    case r: UnresolvedRelation => r.multipartIdentifier.last
+    case i: UnresolvedIdentifier => i.nameParts.last
+    case t: UnresolvedTable => t.multipartIdentifier.last
+    case t: UnresolvedTableOrView => t.multipartIdentifier.last
+    case a: SubqueryAlias => nameOf(a.child)
+    case other => throw new IllegalArgumentException(s"not a table name: ${other.simpleString(1)}")
+  }
 
   // ---- persisted catalog views ----
 
@@ -293,151 +144,46 @@ object DmlRunner {
   private def dropViewDef(root: String, name: String): Unit =
     viewFileOf(root, name).foreach(_.delete())
 
-  /** Head-anchored temp-view-DDL detector: ONLY a statement that IS
-    * view DDL (not one merely carrying the words in a string literal —
-    * `INSERT ... VALUES ('CREATE VIEW')` must not match) triggers the
-    * rewrite-inventory refresh after the spark.sql fallthrough.
-    */
-  private[graft] val ViewDdlRe =
-    ("""(?is)^\s*(?:CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?""" +
-      """(?:TEMP(?:ORARY)?\s+)?VIEW|DROP\s+VIEW)\b.*""").r
+  private def isTempView(spark: SparkSession, name: String): Boolean =
+    spark.sessionState.catalog.getTempView(name).isDefined
 
-  /** Rewrite catalog-qualified table names to their bare temp-view
-    * names OUTSIDE single-quoted string literals (a literal like
-    * `'iceberg.db.foo'` must survive verbatim). Three-part names
-    * (`<catalog>.<schema>.t`) always rewrite; two-part names rewrite
-    * only under the reference's `db` schema segment (its scripts
-    * qualify every table as `iceberg.db.<t>`) — a generic two-part
-    * match would clobber `alias.column` references. Names are
-    * regex-quoted, so no metacharacter in a table name can widen the
-    * match.
+  /** Resolve a parsed statement's names on its plan, subqueries and CTE
+    * bodies included: `<catalog>.<schema>.t` → `t` when `t` is a runner
+    * table or a temp view (the reference qualifies every reference as
+    * `iceberg.db.<t>`), and `t FOR VERSION AS OF v` / `FOR TIMESTAMP AS
+    * OF ts` over a runner table → that snapshot's logical read, the
+    * timestamp cast in the session zone. Only relation nodes change, so
+    * a string literal carrying SQL is never touched.
     */
-  /** Apply `f` to the UNQUOTED runs of a statement, leaving
-    * single-quoted string literals byte-identical (a doubled `''`
-    * stays inside quotes). Shared by the qualified-name rewrite and
-    * the time-travel pin — both must never touch SQL text carried as
-    * DATA in a literal.
-    */
-  private def mapUnquoted(stmt: String)(f: String => String): String = {
-    val segs = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-    val cur = new StringBuilder
-    var inQ = false
-    stmt.foreach {
-      case '\'' if !inQ =>
-        if (cur.nonEmpty) { segs += ((cur.toString, false)); cur.clear() }
-        inQ = true; cur += '\''
-      case '\'' =>
-        cur += '\''; segs += ((cur.toString, true)); cur.clear(); inQ = false
-      case ch => cur += ch
-    }
-    if (cur.nonEmpty) segs += ((cur.toString, inQ))
-    segs.map { case (text, quoted) => if (quoted) text else f(text) }.mkString
-  }
-
-  /** `twoPartNames` additionally rewrite as bare `db.<name>` — catalog
-    * TABLES only, never temp views: the reference qualifies its views
-    * three-part, and a 2-part match over view names would clobber an
-    * alias-qualified column reference that happens to share a view's
-    * name (`WITH db AS (...) SELECT db.events`).
-    */
-  private[graft] def rewriteQualified(stmt: String, names: Iterable[String],
-      twoPartNames: Set[String] = Set.empty): String = {
-    import java.util.regex.{Matcher, Pattern}
-    val res = names.toSeq.map { n =>
-      val two = if (twoPartNames.contains(n)) """|db""" else ""
-      Pattern.compile(
-        s"""(?i)\\b(?:\\w+\\.\\w+$two)\\.${Pattern.quote(n)}\\b""") -> n
-    }
-    mapUnquoted(stmt) { text =>
-      res.foldLeft(text) { case (s, (p, n)) =>
-        p.matcher(s).replaceAll(Matcher.quoteReplacement(n)) }
-    }
-  }
-
-  private val AsOfRe =
-    """(?is)\b(\w+)\s+FOR\s+(TIMESTAMP|SYSTEM_TIME|VERSION|SYSTEM_VERSION)\s+AS\s+OF\s+(TIMESTAMP\s+'[^']*'|'[^']*'|\d+)""".r
-
-  /** Time-travel SQL (the reference showcases `SELECT * FROM t FOR
-    * TIMESTAMP AS OF …`; Trino/Iceberg accept VERSION and TIMESTAMP
-    * forms): each `t FOR … AS OF …` over a catalog table pins the
-    * resolved snapshot into a scoped temp view and substitutes the
-    * view name, so the statement replays verbatim. Non-table names
-    * (views, already-pinned reads) pass through untouched.
-    */
-  private def pinAsOf(tables: scala.collection.Map[String, GraftTable],
-      stmt: String): String = {
-    // a match STARTING inside a string literal is DATA, not a read —
-    // skip it (the legitimate form's own TIMESTAMP '…' argument
-    // extends INTO a literal, so mapUnquoted segmentation would break
-    // the pattern; only the table-name start position must be code)
-    val quoteStarts = {
-      val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-      var inQ = false; var start = -1
-      stmt.zipWithIndex.foreach { case (c, idx) =>
-        if (c == '\'') {
-          if (!inQ) { inQ = true; start = idx }
-          else { inQ = false; spans += ((start, idx + 1)) }
+  private def resolveNames(spark: SparkSession,
+      tables: scala.collection.Map[String, GraftTable], plan: LogicalPlan): LogicalPlan =
+    plan.transformUpWithSubqueries {
+      case r: UnresolvedRelation if r.multipartIdentifier.size > 1 && {
+          val n = r.multipartIdentifier.last
+          tables.contains(n) || isTempView(spark, n) } =>
+        r.copy(multipartIdentifier = Seq(r.multipartIdentifier.last))
+      case RelationTimeTravel(r: UnresolvedRelation, ts, version)
+          if tables.contains(r.multipartIdentifier.last) =>
+        val n = r.multipartIdentifier.last
+        val t = tables(n)
+        val df = version match {
+          case Some(v) =>
+            require(v.matches("\\d+"),
+              s"FOR VERSION AS OF needs a numeric snapshot version, got '$v'")
+            t.readLogical(Some(v.toInt))
+          case None =>
+            val at = Cast(ts.get, TimestampType,
+              Some(spark.sessionState.conf.sessionLocalTimeZone))
+            require(at.foldable, s"FOR TIMESTAMP AS OF needs a constant, got ${ts.get}")
+            val micros = Option(at.eval()).getOrElse(throw new IllegalArgumentException(
+              s"FOR TIMESTAMP AS OF: not a timestamp: ${ts.get}"))
+            t.readAsOfLogical(Math.floorDiv(micros.asInstanceOf[Long], 1000L))
         }
-      }
-      if (inQ) spans += ((start, stmt.length))
-      spans.toSeq
+        SubqueryAlias(n, GraftSqlBridge.plan(df))
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map { case (n, q, d) =>
+          (n, q.copy(child = resolveNames(spark, tables, q.child)), d) })
     }
-    def inLiteral(pos: Int) = quoteStarts.exists(s => pos >= s._1 && pos < s._2)
-    var i = 0
-    AsOfRe.replaceAllIn(stmt, m => {
-      import java.util.regex.Matcher
-      tables.get(m.group(1)).filter(_ => !inLiteral(m.start)) match {
-        case None => Matcher.quoteReplacement(m.matched)
-        case Some(t) =>
-          i += 1
-          val view = s"${m.group(1)}__asof_$i"
-          val kind = m.group(2).toUpperCase
-          // quoted or bare for both kinds; ISO 'T' separators accepted
-          val arg = m.group(3).replaceAll("(?i)^TIMESTAMP\\s+", "")
-            .stripPrefix("'").stripSuffix("'").trim
-          val df =
-            if (kind == "VERSION" || kind == "SYSTEM_VERSION") {
-              require(arg.matches("\\d+"),
-                s"FOR $kind AS OF needs a numeric snapshot version, got '$arg'")
-              t.readLogical(Some(arg.toInt))
-            } else {
-              // parse in the SESSION timezone (Timestamp.valueOf would
-              // use the JVM-default zone — this harness pins both to
-              // UTC, but a deployment that doesn't would see the pinned
-              // snapshot shift by the offset, and a date-only argument
-              // become JVM-local midnight)
-              val s0 = arg.replace(' ', 'T')
-              val s1 = if (s0.contains("T")) s0 else s"${s0}T00:00:00"
-              val zone = java.time.ZoneId.of(
-                t.spark.sessionState.conf.sessionLocalTimeZone)
-              t.readAsOfLogical(java.time.LocalDateTime.parse(s1)
-                .atZone(zone).toInstant.toEpochMilli)
-            }
-          df.createOrReplaceTempView(view)
-          Matcher.quoteReplacement(view)
-      }
-    })
-  }
-
-  /** Split a SET list on top-level commas (quote- and paren-aware, so
-    * `SET v = round(a, 2), w = 'x,y'` splits correctly).
-    */
-  private[graft] def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inQuote = false
-    s.foreach {
-      case '\'' => inQuote = !inQuote; cur += '\''
-      case '(' if !inQuote => depth += 1; cur += '('
-      case ')' if !inQuote => depth -= 1; cur += ')'
-      case ',' if !inQuote && depth == 0 =>
-        out += cur.toString.trim; cur.clear()
-      case ch => cur += ch
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-    out.result()
-  }
 
   private def marker(spark: SparkSession, verb: String, table: String): DataFrame = {
     import spark.implicits._
@@ -447,7 +193,9 @@ object DmlRunner {
   /** Run a script of SQL statements (DML + reads) against the catalog's
     * tables inside a scoped `newSession` (conf/view isolation, the
     * [[SqlRunner.run]] discipline — temp views are session-bound, so
-    * the table handles are re-opened ON the scoped session too).
+    * the table handles are re-opened ON the scoped session too). Each
+    * statement parses after its predecessors ran, so a `SET` of the
+    * session time zone governs a later `TIMESTAMP '…'` literal.
     * `registerExtras` publishes additional read-only views (e.g. the
     * testdata tables) into the scoped session before any statement.
     *
@@ -488,8 +236,7 @@ object DmlRunner {
         if (java.nio.file.Files.exists(sidecar)) {
           val ddl = java.nio.file.Files.readString(sidecar)
           tables(d.getName) = new GraftTable(scoped,
-            TableDef(d.getName, org.apache.spark.sql.types.StructType.fromDDL(ddl)),
-            cat.root)
+            TableDef(d.getName, StructType.fromDDL(ddl)), cat.root)
         }
       }
     // atomic mode: swap every handle for a view of a per-run WAP branch;
@@ -507,12 +254,6 @@ object DmlRunner {
     val stmts = SqlRunner.splitStatements(script)
     require(stmts.nonEmpty, "empty SQL script")
     var last: DataFrame = null
-    // temp-view inventory for the qualified-name rewrite: one catalog
-    // listing up front, refreshed only after a statement that can
-    // change it — a per-statement listTables().collect() measured
-    // ~1.3x on the multi-statement DML rows (AB_BENCH_round r15)
-    var views: Set[String] =
-      scoped.catalog.listTables().collect().map(_.name).toSet
     // persisted catalog views a PREVIOUS run (or this one) created via
     // CREATE [OR REPLACE] VIEW — re-registered whenever a dependency
     // may have moved (see below)
@@ -521,9 +262,8 @@ object DmlRunner {
     // registration trim: re-publish a table's temp view only when its
     // snapshot version moved (or the table is new) — a logical read
     // pins the snapshot at registration, so refreshing exactly the
-    // moved tables per statement gives the same statement-level
-    // read-committed as the old register-everything loop at
-    // O(changed), not O(tables), plan/catalog churn per statement
+    // moved tables per statement gives statement-level read-committed
+    // at O(changed), not O(tables), plan/catalog churn per statement
     val registeredAt = scala.collection.mutable.Map[String, Int]()
     def refreshTables(): Boolean = {
       var changed = false
@@ -541,18 +281,15 @@ object DmlRunner {
       }
       changed
     }
-    // a Spark temp view pins its ANALYZED plan at CREATE, so catalog
+    def parsed(sql: String): LogicalPlan =
+      resolveNames(scoped, tables, GraftSqlBridge.parse(scoped, sql))
+    // a registered view pins the snapshots its body read, so catalog
     // views re-register from their stored ORIGINAL body whenever a base
-    // table moved — that body re-resolves against the freshly
-    // registered snapshots, which is what makes the runner's views
-    // late-bound like Trino's (a view created before an INSERT reads
-    // the post-INSERT table in the next statement)
-    def registerView(name: String, body: String): Unit = {
-      val rewritten = rewriteQualified(body,
-        tables.keys.toSet ++ viewDefs.keys ++ views,
-        twoPartNames = tables.keys.toSet)
-      scoped.sql(s"CREATE OR REPLACE TEMPORARY VIEW $name AS $rewritten")
-    }
+    // table moved — which is what makes the runner's views late-bound
+    // like Trino's (a view created before an INSERT reads the
+    // post-INSERT table in the next statement)
+    def registerView(name: String, body: String): Unit =
+      GraftSqlBridge.ofRows(scoped, parsed(body)).createOrReplaceTempView(name)
     try {
     stmts.foreach { stmt =>
       val tablesMoved = refreshTables()
@@ -560,63 +297,57 @@ object DmlRunner {
         viewDefs.foreach { case (n, b) => registerView(n, b) }
         viewsFresh = true
       }
-      stmt match {
-        case CreateViewRe(orReplace, name, body) =>
-          val base = baseName(name)
-          require(!tables.contains(base),
-            s"$base is a table — CREATE VIEW cannot shadow it")
-          require(orReplace != null || !viewDefs.contains(base),
-            s"view $base already exists — use CREATE OR REPLACE VIEW")
-          viewDefs(base) = body
-          persistViewDef(cat.root, base, body)
-          registerView(base, body)
-          views += base
-          last = marker(scoped, "CREATE VIEW", base)
-        case DropViewRe(_, name) if viewDefs.contains(baseName(name)) =>
-          val base = baseName(name)
-          viewDefs.remove(base)
-          dropViewDef(cat.root, base)
-          scoped.catalog.dropTempView(base)
-          views -= base
-          last = marker(scoped, "DROP VIEW", base)
-        case DropViewRe(ifExists, name)
-            if ifExists != null && !views.contains(baseName(name)) =>
-          last = marker(scoped, "DROP VIEW (absent)", baseName(name))
-        case ShowTablesRe() =>
-          // Trino-shaped (one `Table` column, name-ordered); catalog
-          // views list alongside tables, as information_schema does
-          import scoped.implicits._
-          last = (tables.keys ++ viewDefs.keys).toSeq.sorted.toDF("Table")
-        case DescribeRe(name) =>
-          // resolve throws for a missing table exactly like Trino
-          // errors — maintenance.sh's gate relies on the failure
-          import scoped.implicits._
-          val base = baseName(name)
-          val sch =
-            if (tables.contains(base)) tables(base).currentSchema
-            else if (viewDefs.contains(base)) scoped.table(base).schema
-            else throw new IllegalArgumentException(
-              s"DESCRIBE $base: table does not exist")
-          last = sch.fields.toSeq
-            .map(f => (f.name, f.dataType.sql.toLowerCase, "", ""))
-            .toDF("Column", "Type", "Extra", "Comment")
-        case _ =>
-          // catalog-qualified names (`iceberg.db.foo`, `db.foo`) resolve
-          // to the temp views by LAST segment — applied to the whole
-          // statement so qualified names inside subqueries and plain
-          // SELECTs replay verbatim too (the reference's scripts qualify
-          // every reference). Temp views count: materialize.sh qualifies
-          // its VIEW reads (`CREATE TABLE ... AS SELECT * FROM
-          // iceberg.db.v_x`) the same way it qualifies tables.
-          val rewritten = pinAsOf(tables,
-            rewriteQualified(stmt, tables.keys.toSet ++ viewDefs.keys ++ views,
-              twoPartNames = tables.keys.toSet))
-          val r = runStatement(scoped, tables, declared, cat.root, rewritten,
-            staging, mains)
-          if (r != null) last = r
-          if (ViewDdlRe.pattern.matcher(stmt).matches())
-            views = scoped.catalog.listTables().collect().map(_.name).toSet
+      val r = stmt match {
+        case AlterExecRe(name, call) =>
+          scoped.sessionState.sqlParser.parseExpression(call) match {
+            case f: UnresolvedFunction =>
+              runProcedure(scoped, tables, staging, f.nameParts.last, Literal(name) +: f.arguments)
+            case other => throw new IllegalArgumentException(s"not a procedure call: $other")
+          }
+        case _ => parsed(stmt) match {
+          case c: CreateView =>
+            val base = nameOf(c.child)
+            require(!tables.contains(base), s"$base is a table — CREATE VIEW cannot shadow it")
+            require(c.replace || !viewDefs.contains(base),
+              s"view $base already exists — use CREATE OR REPLACE VIEW")
+            viewDefs(base) = c.originalText.get
+            persistViewDef(cat.root, base, viewDefs(base))
+            registerView(base, viewDefs(base))
+            marker(scoped, "CREATE VIEW", base)
+          case d: DropView =>
+            val base = nameOf(d.child)
+            require(!tables.contains(base), s"$base is a table — DROP VIEW cannot drop it")
+            if (viewDefs.remove(base).isDefined) dropViewDef(cat.root, base)
+            else require(d.ifExists || isTempView(scoped, base), s"unknown view to DROP: $base")
+            scoped.catalog.dropTempView(base)
+            marker(scoped, "DROP VIEW", base)
+          case ShowTables(_, None, _) =>
+            // Trino-shaped (one `Table` column, name-ordered); catalog
+            // views list alongside tables, as information_schema does
+            import scoped.implicits._
+            (tables.keys ++ viewDefs.keys).toSeq.sorted.toDF("Table")
+          case d: DescribeRelation =>
+            // a missing table throws, as Trino errors — maintenance.sh's
+            // gate relies on the failure
+            import scoped.implicits._
+            val base = nameOf(d.relation)
+            val sch =
+              if (tables.contains(base)) tables(base).currentSchema
+              else if (viewDefs.contains(base)) scoped.table(base).schema
+              else throw new IllegalArgumentException(s"DESCRIBE $base: table does not exist")
+            sch.fields.toSeq.map(f => (f.name, f.dataType.sql.toLowerCase, "", ""))
+              .toDF("Column", "Type", "Extra", "Comment")
+          case _: SetCommand => SqlRunner.applySetOrSql(scoped, stmt)
+          case c: CreateViewCommand =>
+            // a temp view from SQL keeps its TEXT and re-parses it on
+            // use, where `iceberg.db.t` would not resolve: register the
+            // resolved plan instead
+            GraftSqlBridge.ofRows(scoped, c.copy(originalText = None))
+          case plan =>
+            runStatement(scoped, tables, declared, cat.root, plan, staging, mains)
+        }
       }
+      if (r != null) last = r
     }
     require(last != null, "script contained only SET statements")
     // atomic publish: one fast-forward per table (atomic per table —
@@ -641,25 +372,29 @@ object DmlRunner {
     tables.getOrElse(baseName(qualified),
       throw new IllegalArgumentException(s"unknown DML target table: $qualified"))
 
+  private def resolve(tables: scala.collection.Map[String, GraftTable],
+      target: LogicalPlan): GraftTable = resolve(tables, nameOf(target))
+
   private def runStatement(spark: SparkSession,
       tables: scala.collection.mutable.Map[String, GraftTable],
-      declared: Set[String], root: String, stmt: String,
-      staging: Option[String] = None,
-      mains: scala.collection.mutable.Map[String, GraftTable] =
-        scala.collection.mutable.Map.empty): DataFrame = stmt match {
-    case CtasRe(ifNotExists, name, select) =>
+      declared: Set[String], root: String, plan: LogicalPlan,
+      staging: Option[String],
+      mains: scala.collection.mutable.Map[String, GraftTable]): DataFrame = plan match {
+    case c: CreateTableAsSelect =>
       // M1 as SQL text (scripts/materialize.sh:84 opens every mat table
       // with `CREATE TABLE iceberg.db.<t> AS SELECT * FROM ...`): the
       // result materializes as an `overwrite` commit of a NEW
       // runner-scoped table under the same warehouse root
-      val base = baseName(name)
+      val base = nameOf(c.name)
       if (tables.contains(base)) {
-        require(ifNotExists != null,
+        require(c.ignoreIfExists,
           s"table $base already exists — CREATE TABLE ... AS refuses " +
             "(use IF NOT EXISTS for the materializer's table-exists skip)")
         marker(spark, "CREATE TABLE (exists)", base)
       } else {
-        val df = spark.sql(select)
+        require(c.partitioning.isEmpty,
+          s"$base: CREATE TABLE ... PARTITIONED BY ... AS is not supported")
+        val df = GraftSqlBridge.ofRows(spark, c.query)
         val t = new GraftTable(spark, TableDef(base, df.schema), root)
         // schema sidecar: a later run (new DmlRunner.run) re-opens this
         // table by reading it back — CTAS tables have no declared def
@@ -679,14 +414,14 @@ object DmlRunner {
         }
         marker(spark, "CREATE TABLE AS", base)
       }
-    case DropTableRe(ifExists, name) =>
+    case d: DropTable =>
       require(staging.isEmpty,
         "DROP TABLE is not stageable — directory deletion cannot be " +
           "published atomically; run it outside atomic mode")
-      val base = baseName(name)
+      val base = nameOf(d.child)
       tables.get(base) match {
         case None =>
-          require(ifExists != null, s"unknown table to DROP: $base")
+          require(d.ifExists, s"unknown table to DROP: $base")
           marker(spark, "DROP TABLE (absent)", base)
         case Some(_) =>
           // only runner-created (CTAS) tables drop; catalog-declared
@@ -700,144 +435,114 @@ object DmlRunner {
           graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(root, base))
           marker(spark, "DROP TABLE", base)
       }
-    case DeleteRe(name, whereOrNull) =>
-      val t = resolve(tables, name)
-      val cond = Option(whereOrNull).map(expr).getOrElse(lit(true))
-      t.deleteWhere(cond)
+    case d: DeleteFromTable =>
+      val t = resolve(tables, d.table)
+      t.deleteWhere(GraftSqlBridge.column(d.condition))
       marker(spark, "DELETE", t.defn.name)
-    case UpdateRe(name, setList, whereOrNull) =>
-      val t = resolve(tables, name)
-      runUpdate(spark, t, setList, Option(whereOrNull))
+    case u: UpdateTable =>
+      val t = resolve(tables, u.table)
+      runUpdate(t, u.assignments, u.condition)
       marker(spark, "UPDATE", t.defn.name)
-    case InsertRe(name, colsOrNull, query) =>
-      val t = resolve(tables, name)
-      t.append(alignInsert(spark, t, Option(colsOrNull), query))
-      marker(spark, "INSERT", t.defn.name)
-    case InsertOverwriteRe(name, colsOrNull, query) =>
-      val t = resolve(tables, name)
-      t.overwrite(alignInsert(spark, t, Option(colsOrNull), query))
-      marker(spark, "INSERT OVERWRITE", t.defn.name)
-    case AlterExecRe(name, proc, args) =>
-      require(staging.isEmpty,
-        s"ALTER TABLE EXECUTE $proc is maintenance, not stageable DML — " +
-          "run it outside atomic mode")
-      val t = resolve(tables, name)
-      proc.toLowerCase match {
-        case "optimize" =>
-          // Trino: ALTER TABLE t EXECUTE optimize(file_size_threshold => '128MB')
-          val target = namedArg(args, "file_size_threshold")
-            .map(parseBytes).getOrElse(128L * 1024 * 1024)
-          t.compact(targetBytes = target)
-        case "expire_snapshots" =>
-          val retention = namedArg(args, "retention_threshold")
-            .map(parseDurationMs).getOrElse(7L * 86400000)
-          t.expireSnapshots(retention)
-        case "remove_orphan_files" =>
-          // the engine's orphan sweep reclaims files referenced by NO
-          // surviving snapshot; retention_threshold is the concurrency
-          // guard (a racing writer's files sit unreferenced between
-          // its staging move and its publish CAS) — honored, Iceberg's
-          // 3d default when the script omits it
-          t.removeOrphans(minAgeMs = namedArg(args, "retention_threshold")
-            .map(parseDurationMs).getOrElse(3L * 86400000))
-        case other => throw new IllegalArgumentException(
-          s"${t.defn.name}: unknown table procedure '$other' — " +
-            "optimize / expire_snapshots / remove_orphan_files")
-      }
-      marker(spark, s"EXECUTE $proc", baseName(name))
-    case CallRe(proc, args) =>
-      require(staging.isEmpty,
-        s"CALL system.$proc is maintenance, not stageable DML — " +
-          "run it outside atomic mode")
-      // positional-or-named args; the table is the first 'db.t' literal
-      val argList = splitTopLevel(args).map(_.trim)
-      def tableArg: GraftTable = {
-        val named = namedArg(args, "table").orElse(namedArg(args, "schema_table"))
-        val raw = named.orElse(argList.headOption).getOrElse(
-          throw new IllegalArgumentException(s"CALL $proc: missing table argument"))
-        resolve(tables, raw.stripPrefix("'").stripSuffix("'"))
-      }
-      proc.toLowerCase match {
-        case "rollback_to_snapshot" =>
-          // CALL iceberg.system.rollback_to_snapshot('db.t', <version>)
-          val t = tableArg
-          val v = namedArg(args, "snapshot_id").orElse(argList.lift(1)).getOrElse(
-            throw new IllegalArgumentException(
-              s"CALL rollback_to_snapshot: missing snapshot id")).trim.toInt
-          t.rollback(v)
-          marker(spark, "ROLLBACK", t.defn.name)
-        case "fast_forward" =>
-          // CALL iceberg.system.fast_forward('db.t', 'main', 'audit'):
-          // publish the staged branch onto main (the WAP publish leg)
-          val t = tableArg
-          val to = namedArg(args, "to").orElse(argList.lift(2)).getOrElse(
-            throw new IllegalArgumentException(
-              s"CALL fast_forward: missing source branch")).trim
-              .stripPrefix("'").stripSuffix("'")
-          t.fastForward(to)
-          marker(spark, "FAST_FORWARD", t.defn.name)
-        case "expire_snapshots" =>
-          val t = tableArg
-          val retention = namedArg(args, "retention_threshold")
-            .map(parseDurationMs).getOrElse(7L * 86400000)
-          t.expireSnapshots(retention)
-          marker(spark, "EXPIRE_SNAPSHOTS", t.defn.name)
-        case "remove_orphan_files" =>
-          val t = tableArg
-          // retention honored as the concurrency guard (see the ALTER
-          // EXECUTE route); Iceberg's 3d default when omitted
-          t.removeOrphans(minAgeMs = namedArg(args, "retention_threshold")
-            .map(parseDurationMs).getOrElse(3L * 86400000))
-          marker(spark, "REMOVE_ORPHAN_FILES", t.defn.name)
-        case other => throw new IllegalArgumentException(
-          s"unknown procedure 'system.$other' — rollback_to_snapshot / " +
-            "fast_forward / expire_snapshots / remove_orphan_files")
-      }
-    case AlterRenameRe(name, from, to) =>
-      val t = resolve(tables, name)
-      t.renameColumn(from, to)
-      marker(spark, "RENAME COLUMN", t.defn.name)
-    case AlterAddRe(name, colList) =>
-      val t = resolve(tables, name)
-      t.addColumns(org.apache.spark.sql.types.StructType.fromDDL(colList).fields: _*)
+    case i: InsertIntoStatement =>
+      val t = resolve(tables, i.table)
+      require(i.partitionSpec.isEmpty && !i.byName,
+        s"${t.defn.name}: INSERT ... PARTITION / BY NAME is not supported")
+      val src = alignInsert(t, i.userSpecifiedCols, GraftSqlBridge.ofRows(spark, i.query))
+      if (i.overwrite) t.overwrite(src) else t.append(src)
+      marker(spark, if (i.overwrite) "INSERT OVERWRITE" else "INSERT", t.defn.name)
+    case Call(UnresolvedProcedure(parts), args, _) =>
+      runProcedure(spark, tables, staging, parts.last, args)
+    case a: AddColumns =>
+      val t = resolve(tables, a.table)
+      t.addColumns(a.columnsToAdd.map { c =>
+        require(c.path.isEmpty, s"${t.defn.name}: nested ADD COLUMNS is not supported")
+        StructField(c.colName, c.dataType, c.nullable)
+      }: _*)
       marker(spark, "ADD COLUMNS", t.defn.name)
-    case AlterDropRe(name, colList) =>
-      val t = resolve(tables, name)
-      t.dropColumns(colList.split(',').map(_.trim).toIndexedSeq: _*)
+    case d: DropColumns =>
+      val t = resolve(tables, d.table)
+      t.dropColumns(d.columnsToDrop.map(fieldName): _*)
       marker(spark, "DROP COLUMNS", t.defn.name)
-    case merge if merge.trim.toUpperCase.startsWith("MERGE") =>
-      parseMerge(merge.trim) match {
-        case Some(ms) =>
-          val t = resolve(tables, ms.target)
-          runMerge(spark, t, ms)
-          marker(spark, "MERGE", t.defn.name)
-        case None =>
-          throw new IllegalArgumentException(s"unparseable MERGE statement: $merge")
-      }
+    case r: RenameColumn =>
+      val t = resolve(tables, r.table)
+      t.renameColumn(fieldName(r.column), r.newName)
+      marker(spark, "RENAME COLUMN", t.defn.name)
+    case m: MergeIntoTable =>
+      val t = resolve(tables, m.targetTable)
+      runMerge(spark, t, m)
+      marker(spark, "MERGE", t.defn.name)
     case other =>
-      SqlRunner.applySetOrSql(spark, other)
+      GraftSqlBridge.ofRows(spark, other)
+  }
+
+  private def fieldName(f: FieldName): String = f.name.mkString(".")
+
+  /** A table procedure — `CALL <catalog>.system.<proc>(args)` or Trino's
+    * `ALTER TABLE t EXECUTE <proc>(args)`, whose target arrives as the
+    * first positional argument. Arguments are literals, named
+    * (`retention_threshold => '7d'`) or positional (table, then
+    * snapshot id / branch as Iceberg's procedures order them).
+    */
+  private def runProcedure(spark: SparkSession,
+      tables: scala.collection.Map[String, GraftTable], staging: Option[String],
+      proc: String, args: Seq[Expression]): DataFrame = {
+    require(staging.isEmpty,
+      s"$proc is maintenance, not stageable DML — run it outside atomic mode")
+    val named = args.collect { case NamedArgumentExpression(k, v) => k.toLowerCase -> v }.toMap
+    val positional = args.filterNot(_.isInstanceOf[NamedArgumentExpression])
+    def arg(name: String, pos: Int = -1): Option[String] =
+      named.get(name).orElse(positional.lift(pos)).map {
+        case Literal(v, _) if v != null => v.toString
+        case e => throw new IllegalArgumentException(
+          s"$proc: argument '$name' must be a literal, got $e")
+      }
+    val t = resolve(tables, arg("table", 0).orElse(arg("schema_table")).getOrElse(
+      throw new IllegalArgumentException(s"$proc: missing table argument")))
+    proc.toLowerCase match {
+      case "optimize" =>
+        t.compact(targetBytes =
+          arg("file_size_threshold").map(parseBytes).getOrElse(128L * 1024 * 1024))
+      case "expire_snapshots" =>
+        t.expireSnapshots(arg("retention_threshold").map(parseDurationMs).getOrElse(7L * 86400000))
+      case "remove_orphan_files" =>
+        // the engine's orphan sweep reclaims files referenced by NO
+        // surviving snapshot; retention_threshold is the concurrency
+        // guard (a racing writer's files sit unreferenced between its
+        // staging move and its publish CAS), Iceberg's 3d default
+        t.removeOrphans(minAgeMs =
+          arg("retention_threshold").map(parseDurationMs).getOrElse(3L * 86400000))
+      case "rollback_to_snapshot" =>
+        t.rollback(arg("snapshot_id", 1).getOrElse(throw new IllegalArgumentException(
+          s"$proc: missing snapshot id")).trim.toInt)
+      case "fast_forward" =>
+        // fast_forward('db.t', 'main', 'audit'): publish the staged
+        // branch onto main (the WAP publish leg)
+        t.fastForward(arg("to", 2).getOrElse(throw new IllegalArgumentException(
+          s"$proc: missing source branch")))
+      case other => throw new IllegalArgumentException(
+        s"unknown procedure '$other' — optimize / expire_snapshots / " +
+          "remove_orphan_files / rollback_to_snapshot / fast_forward")
+    }
+    marker(spark, proc.toUpperCase, t.defn.name)
   }
 
   /** Align an INSERT source to the table schema: column-list mapping
     * when given (must cover the schema), positional otherwise — SQL's
     * rules — then the implicit write-side cast.
     */
-  private def alignInsert(spark: SparkSession, t: GraftTable,
-      colsOrNull: Option[String], query: String): DataFrame = {
-    val src = spark.sql(query)
+  private def alignInsert(t: GraftTable, cols: Seq[String], src: DataFrame): DataFrame = {
     val want = t.currentSchema.fieldNames
-    val aligned = colsOrNull match {
-      case Some(colList) =>
-        val names = colList.split(',').map(_.trim)
-        require(names.sorted.sameElements(want.sorted.toArray[String]),
+    val aligned =
+      if (cols.nonEmpty) {
+        require(cols.sorted.sameElements(want.sorted),
           s"${t.defn.name}: INSERT column list must cover the schema " +
             s"(${want.mkString(", ")}) — partial inserts are not supported")
-        src.toDF(names.toIndexedSeq: _*)
-      case None =>
+        src.toDF(cols: _*)
+      } else {
         require(src.columns.length == want.length,
           s"${t.defn.name}: INSERT arity ${src.columns.length} != ${want.length}")
         src.toDF(want.toIndexedSeq: _*) // positional, like SQL
-    }
+      }
     castTo(aligned, t)
   }
 
@@ -852,25 +557,38 @@ object DmlRunner {
       .toIndexedSeq: _*)
   }
 
-  private def runUpdate(spark: SparkSession, t: GraftTable,
-      setList: String, where: Option[String]): Unit = {
-    val cond: Column = where.map(expr).getOrElse(lit(true))
-    val assignments = splitTopLevel(setList).map { a =>
-      val i = a.indexOf('=')
-      require(i > 0, s"${t.defn.name}: bad SET assignment '$a'")
-      val name = a.substring(0, i).trim
+  /** The column an assignment's key names, optionally `qualifier.`-prefixed. */
+  private def assignedColumn(key: Expression, qualifier: String): String = key match {
+    case UnresolvedAttribute(Seq(q, c)) if q.equalsIgnoreCase(qualifier) => c
+    case UnresolvedAttribute(Seq(c)) => c
+    case other => other.toString
+  }
+
+  /** A `SET` list as lower-cased column → value: each a known non-key
+    * column of `t`, at most once.
+    */
+  private def assignments(t: GraftTable, qualifier: String,
+      as: Seq[Assignment]): Map[String, Column] = {
+    val pairs = as.map { a =>
+      val name = assignedColumn(a.key, qualifier)
       require(t.currentSchema.fieldNames.exists(_.equalsIgnoreCase(name)),
         s"${t.defn.name}: SET names unknown column '$name'")
       require(!t.defn.keys.exists(_.equalsIgnoreCase(name)),
-        s"${t.defn.name}: cannot UPDATE identifier key '$name'")
-      name -> expr(a.substring(i + 1).trim)
+        s"${t.defn.name}: cannot SET identifier key '$name'")
+      name.toLowerCase -> GraftSqlBridge.column(a.value)
     }
-    require(assignments.map(_._1.toLowerCase).distinct.size == assignments.size,
+    require(pairs.map(_._1).distinct.size == pairs.size,
       s"${t.defn.name}: duplicate column in SET list")
+    pairs.toMap
+  }
+
+  private def runUpdate(t: GraftTable, as: Seq[Assignment],
+      where: Option[Expression]): Unit = {
+    val cond: Column = where.map(GraftSqlBridge.column).getOrElse(lit(true))
+    val byName = assignments(t, t.defn.name, as)
     // SQL evaluates every SET RHS against the OLD row — a single select
     // substituting the assigned columns, never a sequential withColumn
     // fold (there, `SET a = 1, b = a + 1` would see the NEW a)
-    val byName = assignments.map { case (n, e) => n.toLowerCase -> e }.toMap
     val updated = castTo(t.readLogical().filter(cond).select(
       t.currentSchema.fieldNames.map(f =>
         byName.get(f.toLowerCase).map(_.as(f)).getOrElse(col(f))).toIndexedSeq: _*),
@@ -889,24 +607,29 @@ object DmlRunner {
     }
   }
 
-  private def runMerge(spark: SparkSession, t: GraftTable, ms: MergeStmt): Unit = {
+  private def runMerge(spark: SparkSession, t: GraftTable, m: MergeIntoTable): Unit = {
     require(t.defn.isUpsert,
       s"${t.defn.name}: MERGE INTO needs a keyed (upsert) table")
-    // the source: a parenthesized subquery or a view name
-    val src =
-      if (ms.using.startsWith("("))
-        spark.sql(ms.using.stripPrefix("(").stripSuffix(")"))
-      else spark.table(ms.using)
+    require(m.notMatchedBySourceActions.isEmpty,
+      s"${t.defn.name}: WHEN NOT MATCHED BY SOURCE is not supported — " +
+        "[NOT] MATCHED [AND <cond>] THEN UPDATE / DELETE / INSERT only")
+    val (src, sA) = m.sourceTable match {
+      case a: SubqueryAlias => (GraftSqlBridge.ofRows(spark, a.child), a.alias)
+      case p => (GraftSqlBridge.ofRows(spark, p), "__merge_src")
+    }
     // the ON clause must be exactly the identifier-key equalities — the
     // one MERGE join with per-key semantics; anything else (partial
     // keys, extra predicates) would NOT be latest-wins-per-key and
     // refuses rather than approximating
-    val eqRe = """(?i)\s*(?:\w+\.)?(\w+)\s*=\s*(?:\w+\.)?(\w+)\s*""".r
-    val onCols = ms.on.split("(?i)\\bAND\\b").toSeq.map {
-      case eqRe(a, b) =>
-        require(a.equalsIgnoreCase(b),
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val onCols = conjuncts(m.mergeCondition).map {
+      case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute) =>
+        require(a.nameParts.last.equalsIgnoreCase(b.nameParts.last),
           s"${t.defn.name}: MERGE ON must equate same-named key columns, got '$a = $b'")
-        a.toLowerCase
+        a.nameParts.last.toLowerCase
       case other =>
         throw new IllegalArgumentException(
           s"${t.defn.name}: unsupported MERGE ON term '$other' — key equalities only")
@@ -926,9 +649,8 @@ object DmlRunner {
     // routing (first-match-wins per matched PAIR) genuinely corrupts
     // under multiple matches; the upsert shape has no per-pair routing
     // to corrupt.
-    val upsertShaped = ms.clauses.map(c => (c.matched, c.cond, c.verb, c.set)) ==
-      Seq((true, None, "update", "*"), (false, None, "insert", null))
-    if (upsertShaped) {
+    if (m.matchedActions == Seq(UpdateStarAction(None)) &&
+        m.notMatchedActions == Seq(InsertStarAction(None))) {
       require(src.columns.map(_.toLowerCase).sorted.sameElements(
           want.map(_.toLowerCase).sorted.toArray[String]),
         s"${t.defn.name}: MERGE source columns must match the schema for SET */INSERT *")
@@ -936,14 +658,18 @@ object DmlRunner {
       return
     }
     // general path — conditional UPDATE with explicit assignments,
-    // MATCHED DELETE, conditional INSERT *: one keyed replace commit
-    // over EXACTLY the touched keys (replaceKeys), never a table
-    // rewrite. WHEN clauses apply first-match-wins per matched pair,
-    // SQL MERGE's clause-order semantics; every SET RHS (and clause
-    // cond) sees the OLD target row joined with its source row, both
-    // addressable by alias.
-    val tA = ms.targetAlias.getOrElse(t.defn.name)
-    val sA = ms.srcAlias.getOrElse("__merge_src")
+    // MATCHED DELETE, conditional INSERT: one keyed replace commit over
+    // EXACTLY the touched keys (replaceKeys), never a table rewrite.
+    // WHEN clauses apply first-match-wins per matched pair, SQL MERGE's
+    // clause-order semantics; every SET RHS (and clause cond) sees the
+    // OLD target row joined with its source row, both addressable by
+    // alias.
+    val tA = m.targetTable match {
+      case a: SubqueryAlias => a.alias
+      case _ => t.defn.name
+    }
+    def cond(c: Option[Expression]): Column =
+      c.map(GraftSqlBridge.column).getOrElse(lit(true))
     val tgt = t.readLogical().as(tA)
     // persisted: the source subquery feeds the matched inner join, the
     // NOT MATCHED anti join, AND the duplicate-key guard — unpersisted
@@ -951,72 +677,48 @@ object DmlRunner {
     val srcP = src.persist()
     val srcA = srcP.as(sA)
     val keyCond = onCols.map(k => col(s"$tA.$k") === col(s"$sA.$k")).reduce(_ && _)
-    val matchedClauses = ms.clauses.filter(_.matched)
-    val insertClauses = ms.clauses.filterNot(_.matched)
-    require(insertClauses.size <= 1,
+    require(m.notMatchedActions.size <= 1,
       s"${t.defn.name}: at most one WHEN NOT MATCHED clause is supported")
     val joined = tgt.join(srcA, keyCond, "inner")
-    val action = matchedClauses.zipWithIndex
+    val action = m.matchedActions.zipWithIndex
       .foldLeft(when(lit(false), lit(-1))) { case (acc, (c, i)) =>
-        acc.when(c.cond.map(expr).getOrElse(lit(true)), lit(i))
+        acc.when(cond(c.condition), lit(i))
       }.otherwise(lit(-1))
     // persisted: the matched join feeds one select per UPDATE clause
     // plus the stale-key projection — recomputing it per consumer would
     // re-run the join 2-3 times (the CdcAggConsumer split discipline)
     val acted = joined.withColumn("__action", action).persist()
     try {
-    def updateProjection(set: String): Seq[org.apache.spark.sql.Column] =
-      if (set.trim == "*") want.toSeq.map(c => col(s"$sA.$c").as(c))
-      else {
-        val assigns = splitTopLevel(set).map { a =>
-          val i = a.indexOf('=')
-          require(i > 0, s"${t.defn.name}: bad MERGE SET assignment '$a'")
-          val raw = a.substring(0, i).trim
-          val name = // an assignment may target-qualify its column
-            if (raw.toLowerCase.startsWith(tA.toLowerCase + "."))
-              raw.substring(tA.length + 1)
-            else raw
-          require(want.exists(_.equalsIgnoreCase(name)),
-            s"${t.defn.name}: MERGE SET names unknown column '$name'")
-          require(!t.defn.keys.exists(_.equalsIgnoreCase(name)),
-            s"${t.defn.name}: cannot MERGE-update identifier key '$name'")
-          name.toLowerCase -> expr(a.substring(i + 1).trim)
-        }
-        require(assigns.map(_._1).distinct.size == assigns.size,
-          s"${t.defn.name}: duplicate column in MERGE SET list")
-        val byName = assigns.toMap
-        want.toSeq.map(c =>
-          byName.get(c.toLowerCase).map(_.as(c)).getOrElse(col(s"$tA.$c").as(c)))
-      }
-    val updates = matchedClauses.zipWithIndex.collect {
-      case (c, i) if c.verb == "update" =>
-        acted.filter(col("__action") === i).select(updateProjection(c.set): _*)
+    val updates = m.matchedActions.zipWithIndex.collect {
+      case (_: UpdateStarAction, i) =>
+        acted.filter(col("__action") === i).select(want.toSeq.map(c => col(s"$sA.$c").as(c)): _*)
+      case (u: UpdateAction, i) =>
+        val byName = assignments(t, tA, u.assignments)
+        acted.filter(col("__action") === i).select(want.toSeq.map(c =>
+          byName.get(c.toLowerCase).map(_.as(c)).getOrElse(col(s"$tA.$c").as(c))): _*)
     }
-    val inserts = insertClauses.map { c =>
-      val anti = srcA.join(tgt, keyCond, "left_anti")
-      val filtered = c.cond.map(x => anti.filter(expr(x))).getOrElse(anti)
-      if (c.insertCols.isEmpty) {
-        require(want.forall(cn => src.columns.exists(_.equalsIgnoreCase(cn))),
-          s"${t.defn.name}: MERGE source must carry every table column for INSERT *")
-        filtered.select(want.toSeq.map(cn => col(cn)): _*)
-      } else {
-        // INSERT (cols) VALUES (exprs): exprs evaluate against the
-        // source row; unlisted columns null-fill (SQL), keys must be
-        // listed (an unkeyed insert row is unaddressable)
-        require(c.insertCols.size == c.insertValues.size,
-          s"${t.defn.name}: MERGE INSERT arity ${c.insertValues.size} != " +
-            s"column list ${c.insertCols.size}")
-        val byName = c.insertCols.map(_.toLowerCase)
-          .zip(c.insertValues.map(v => expr(v))).toMap
-        require(byName.size == c.insertCols.size,
-          s"${t.defn.name}: duplicate column in MERGE INSERT list")
-        c.insertCols.foreach(cn => require(want.exists(_.equalsIgnoreCase(cn)),
-          s"${t.defn.name}: MERGE INSERT names unknown column '$cn'"))
-        t.defn.keys.foreach(k => require(byName.contains(k.toLowerCase),
-          s"${t.defn.name}: MERGE INSERT must list identifier key '$k'"))
-        filtered.select(want.toSeq.map(cn => byName.get(cn.toLowerCase)
-          .map(_.as(cn)).getOrElse(lit(null).cast(
-            t.currentSchema(cn).dataType).as(cn))): _*)
+    val inserts = m.notMatchedActions.map { c =>
+      val filtered = srcA.join(tgt, keyCond, "left_anti").filter(cond(c.condition))
+      c match {
+        case a: InsertAction =>
+          // INSERT (cols) VALUES (exprs): exprs evaluate against the
+          // source row; unlisted columns null-fill (SQL), keys must be
+          // listed (an unkeyed insert row is unaddressable)
+          val byName = a.assignments.map(x =>
+            assignedColumn(x.key, tA).toLowerCase -> GraftSqlBridge.column(x.value)).toMap
+          require(byName.size == a.assignments.size,
+            s"${t.defn.name}: duplicate column in MERGE INSERT list")
+          byName.keys.foreach(cn => require(want.exists(_.equalsIgnoreCase(cn)),
+            s"${t.defn.name}: MERGE INSERT names unknown column '$cn'"))
+          t.defn.keys.foreach(k => require(byName.contains(k.toLowerCase),
+            s"${t.defn.name}: MERGE INSERT must list identifier key '$k'"))
+          filtered.select(want.toSeq.map(cn => byName.get(cn.toLowerCase)
+            .map(_.as(cn)).getOrElse(lit(null).cast(
+              t.currentSchema(cn).dataType).as(cn))): _*)
+        case _ =>
+          require(want.forall(cn => src.columns.exists(_.equalsIgnoreCase(cn))),
+            s"${t.defn.name}: MERGE source must carry every table column for INSERT *")
+          filtered.select(want.toSeq.map(cn => col(cn)): _*)
       }
     }
     // SQL MERGE errors when several source rows hit one target row — a

@@ -403,10 +403,23 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     if (memo._1 == version && memo._2 == key) memo._3
     else {
       val c = resolveManifests(parseCommit(s"commit-$version.json", bytes))
-      if (remember) headMemo = (version, key, c)
+      if (remember) memoize(version, key, c)
       c
     }
   }
+
+  /** Make `c` the [[headMemo]] and bound the chunk-parse cache to its
+    * chunks — on a handle that only reads as on one that writes, so a
+    * long-lived reader does not keep every chunk it ever resolved (see
+    * ManifestStore.prune).
+    */
+  private def memoize(version: Int, key: Long, c: CommitMeta): Unit = {
+    headMemo = (version, key, c)
+    manifestStore.prune(c.manifests.toSet)
+  }
+
+  /** Chunks held by this handle's parse cache (test/diagnostic). */
+  private[graft] def cachedChunkCount: Int = manifestStore.cachedChunkCount
 
   /** Every snapshot, oldest first; parses every commit json. */
   def commits: Seq[CommitMeta] = logVersions.sorted.map(load(_, remember = false))
@@ -537,7 +550,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       // handle's next head() serves its own commit without re-resolving
       // manifest chunks — the carry that keeps a long-lived writer's
       // assembly O(delta) end to end
-      headMemo = (meta.version, contentKey(bytes), meta)
+      memoize(meta.version, contentKey(bytes), meta)
       true
     }
     catch { case _: java.nio.file.FileAlreadyExistsException => false }
@@ -653,13 +666,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         version = prev.version + 1, tsMs = System.currentTimeMillis(), op = op,
         sinkBatches = prev.sinkBatches ++ pendingSinkMark.get(),
         changeFiles = Nil, deleteFiles = Nil))
-      if (publish(meta)) {
-        // bound the chunk-parse cache: a long-lived poll/cron writer
-        // otherwise accumulates one parsed chunk per chunk ever
-        // rewritten (see ManifestStore.prune)
-        manifestStore.prune(meta.manifests.toSet)
-        meta
-      } else {
+      if (publish(meta)) meta
+      else {
         GraftTable.commitRetryCount.incrementAndGet()
         if (lost + 1 == GraftTable.MaxCommitRetries) throw new CommitConflictException(
           s"${defn.name}: $op lost the commit race ${GraftTable.MaxCommitRetries} " +

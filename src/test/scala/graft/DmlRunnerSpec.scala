@@ -470,15 +470,76 @@ class DmlRunnerSpec extends AnyFunSuite {
     assert(e2.getMessage.toLowerCase.contains("v_t9"))
   }
 
-  test("view-DDL inventory refresh is head-anchored: a 'CREATE VIEW' string literal is data") {
-    assert(DmlRunner.ViewDdlRe.pattern.matcher(
-      "CREATE OR REPLACE TEMPORARY VIEW x AS SELECT 1").matches())
-    assert(DmlRunner.ViewDdlRe.pattern.matcher("  drop view if exists y").matches())
-    assert(!DmlRunner.ViewDdlRe.pattern.matcher(
-      "INSERT INTO t VALUES ('CREATE VIEW v AS SELECT 1')").matches(),
-      "a statement merely CARRYING view-DDL words must not refresh the inventory")
-    assert(!DmlRunner.ViewDdlRe.pattern.matcher(
-      "SELECT 'DROP VIEW' AS label FROM t").matches())
+  test("a 'CREATE VIEW' string literal is data: INSERTed verbatim, no view created") {
+    val root = freshRoot("d16")
+    val cat = new TableCatalog(spark, root, Seq(
+      TableDef("t", StructType(Seq(StructField("sql_text", StringType))))))
+    val out = DmlRunner.run(spark, cat,
+      """INSERT INTO t VALUES ('CREATE VIEW v AS SELECT 1');
+        |SELECT sql_text FROM t""".stripMargin)
+    assert(out.collect().map(_.getString(0)).toSeq == Seq("CREATE VIEW v AS SELECT 1"))
+    assert(!Files.exists(Paths.get(root, "_views")), "a literal defined a catalog view")
+    val e = intercept[Exception](DmlRunner.run(spark, cat, "SELECT * FROM v"))
+    assert(e.getMessage.contains("`v`"), e.getMessage)
+  }
+
+  test("Trino size and duration literals read whole, decimals included; others refuse") {
+    assert(DmlRunner.parseDurationMs("'30ms'") == 30L)
+    assert(DmlRunner.parseDurationMs("'1.5d'") == 36L * 3600000)
+    assert(DmlRunner.parseDurationMs("'7d'") == 7L * 86400000)
+    assert(DmlRunner.parseDurationMs("'30m'") == 30L * 60000)
+    assert(DmlRunner.parseDurationMs("0s") == 0L)
+    assert(DmlRunner.parseBytes("'1.5GB'") == 3L << 29)
+    assert(DmlRunner.parseBytes("'1TB'") == 1L << 40)
+    assert(DmlRunner.parseBytes("'64kB'") == 64L << 10)
+    assert(DmlRunner.parseBytes("128MB") == 128L << 20)
+    for (bad <- Seq("'30x'", "'12'", "'MB'", "'1.5.2GB'", "'1GB 2MB'", "''"))
+      intercept[IllegalArgumentException](DmlRunner.parseBytes(bad))
+    for (bad <- Seq("'30ms5'", "'1.5'", "'d'", "'1w'", "'-1d'"))
+      intercept[IllegalArgumentException](DmlRunner.parseDurationMs(bad))
+  }
+
+  test("names resolve on the plan: CTE bodies, MERGE sources, AS OF subqueries, CALL") {
+    val cat = new TableCatalog(spark, freshRoot("d17"), Seq(
+      TableDef("t", schema), TableDef("k", schema, keys = Seq("id"))))
+    DmlRunner.run(spark, cat,
+      """INSERT INTO t VALUES (1, 'a', 1.0), (2, 'b', 2.0), (3, 'a', 3.0);
+        |INSERT INTO t VALUES (4, 'c', 4.0)""".stripMargin)
+    val out = DmlRunner.run(spark, cat,
+      """-- a CTE body naming the qualified table, inside an IN-subquery
+        |DELETE FROM iceberg.db.t WHERE id IN (
+        |  WITH big AS (SELECT id FROM iceberg.db.t WHERE v >= 3.0)
+        |  SELECT id FROM big);
+        |-- a MERGE source subquery over the qualified table
+        |MERGE INTO iceberg.db.k USING (
+        |  SELECT id, typ, v * 10 AS v FROM iceberg.db.t) s
+        |ON k.id = s.id
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *;
+        |-- an unkeyed UPDATE whose condition is an IN-subquery
+        |UPDATE iceberg.db.t SET v = v + 100
+        |WHERE id IN (SELECT id FROM iceberg.db.k WHERE v > 15.0);
+        |-- a temp view over a qualified name registers from its plan
+        |CREATE TEMPORARY VIEW tv AS SELECT id, v FROM iceberg.db.t;
+        |SELECT id, v FROM tv
+        |""".stripMargin)
+    assert(out.orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
+      Seq((1L, 1.0), (2L, 102.0)))
+    assert(cat.table("k").readLogical().orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getDouble(2))).toSeq == Seq((1L, 10.0), (2L, 20.0)))
+    // FOR VERSION AS OF inside an IN-subquery: v1 holds ids 1-3, the
+    // head 1-2, v2 1-4 — only v1 answers exactly {3}
+    val asOf = DmlRunner.run(spark, cat,
+      """SELECT id FROM (SELECT 3 AS id UNION ALL SELECT 4)
+        |WHERE id IN (SELECT id FROM iceberg.db.t FOR VERSION AS OF 1)""".stripMargin)
+    assert(asOf.collect().map(_.getInt(0)).toSeq == Seq(3))
+    // CALL with named arguments only
+    Thread.sleep(2)
+    DmlRunner.run(spark, cat,
+      "CALL iceberg.system.expire_snapshots(table => 'db.t', retention_threshold => '0s')")
+    val t = cat.table("t")
+    assert(t.commits.size == 1, "expire_snapshots must retire every commit but the head")
+    assert(t.readLogical().count() == 2)
   }
 
   test("FOR TIMESTAMP AS OF parses in the SESSION timezone, not the JVM default") {

@@ -212,4 +212,16 @@ class ManifestSpec extends AnyFunSuite {
     assert(store.read(names.head).head.p == "f0.parquet")
     assert(store.read(names.head).head.r == 0L)
   }
+
+  test("a read-only handle's chunk-parse cache stays bounded as the log grows") {
+    val root = freshRoot("m10")
+    val writer = new GraftTable(spark, TableDef("m10", schema), root)
+    val reader = new GraftTable(spark, TableDef("m10", schema), root)
+    for (i <- 0 until 300) {
+      writer.append(df(i until i + 1, "a", 1.0))
+      val live = reader.head.manifests.size
+      assert(reader.cachedChunkCount <= math.max(256, live),
+        s"reader caches ${reader.cachedChunkCount} chunks after ${i + 1} commits ($live live)")
+    }
+  }
 }
