@@ -2,14 +2,29 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (tools/compare_oracle.py).
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q1,q2,...]. The optional
+  * list dumps ONLY the named queries (and restricts oracle_sql.json to
+  * them), so tools/compare_oracle.py checks just those — a full run
+  * takes minutes, the wrong inner loop when developing one operator.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val (sfDir, outDir) = (args(0), args(1))
+    val only = args.lift(2).map(_.split(",").toSet)
+    val unknown = only.getOrElse(Set.empty).filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown query: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
+    def kept[V](m: Map[String, V]) = m.toSeq.filter { case (name, _) => only.forall(_(name)) }
+    val queries = kept(SparkEntry.queries)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.get(cpus)
     new java.io.File(outDir).mkdirs()
-    val failed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+    val failed = queries.flatMap { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -25,14 +40,14 @@ object Verify {
       }
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      oracleJson(SparkEntry.oracleSql))
+      oracleJson(kept(SparkEntry.oracleSql).toMap))
     spark.stop()
     // a query that fails to dump would otherwise just VANISH from the
     // round's correctness record (round 6 lost 24 rows with no err entry)
     // — exit nonzero and name them so the shrink is loud
     if (failed.nonEmpty) {
       System.err.println(
-        s"[verify] ${failed.size} of ${SparkEntry.queries.size} queries failed to dump: ${failed.sorted.mkString(", ")}")
+        s"[verify] ${failed.size} of ${queries.size} queries failed to dump: ${failed.sorted.mkString(", ")}")
       sys.exit(1)
     }
   }
@@ -52,30 +67,4 @@ object Verify {
 
   private[graft] def oracleJson(m: Map[String, String]): String =
     m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-}
-
-/** Single-query iteration loop: dump ONLY the named queries (plus an
-  * oracle_sql.json restricted to them) so tools/compare_oracle.py checks
-  * just those — a full Verify over all registered queries takes minutes,
-  * which is the wrong inner loop when developing one operator.
-  *
-  * Usage: runMain graft.DevVerify <sfDir> <outDir> <q1,q2,...>
-  */
-object DevVerify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir, qlist) = args
-    val names = qlist.split(",").toSeq
-    val defs = names.map(n => SparkEntry.registry.find(_.name == n)
-      .getOrElse(sys.error(s"unknown query: $n")))
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    spark.sparkContext.setLogLevel("ERROR")
-    new java.io.File(outDir).mkdirs()
-    defs.foreach { d =>
-      d.run(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/${d.name}")
-    }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      Verify.oracleJson(defs.flatMap(d => d.oracle.map(d.name -> _)).toMap))
-    spark.stop()
-  }
 }

@@ -88,14 +88,15 @@ final class CdcAggConsumer(
     // upsert's change rows lack the superseded values, so a keyed
     // source needs the producer to change-track (replace-cdc) instead.
     // Metadata-only check over the polled range's commit jsons — no
-    // data read; a gap throws here, before any fold.
-    val bad = source.commitsIn(from, to).fold(throw _, identity)
-      .filter(c => !Set("append", "replace-cdc", "delete-pos", "compact", "zorder",
-        "evolve-schema", "evolve-partition").contains(c.op))
+    // data read; a gap throws here, before any fold. The change rows
+    // read the same parsed range.
+    val range = source.commitsIn(from, to).fold(throw _, identity)
+    val bad = range.filter(c => !Set("append", "replace-cdc", "delete-pos", "compact", "zorder",
+      "evolve-schema", "evolve-partition").contains(c.op))
     require(bad.isEmpty,
       s"${source.defn.name}: commit(s) ${bad.map(c => s"v${c.version}='${c.op}'").mkString(", ")} " +
         "are not incrementally foldable — rebuild() or use the Materializer")
-    val ch = source.readChanges(from, to)
+    val ch = source.readChanges(range, to)
     val isDel = col("_change_type") === "delete"
     val sign = when(isDel, lit(-1L)).otherwise(lit(1L))
     val cents = centsOf(col(valueCol))

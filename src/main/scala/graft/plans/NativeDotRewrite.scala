@@ -22,8 +22,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType
   * with the exact fold shape — any other element type, zero value, or
   * lambda keeps the interpreted form.
   *
-  * Disable with `spark.graft.nativeDotRewrite=false` (checked per query
-  * compilation, so one session can A/B both plans).
+  * Disable with Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.NativeDotRewrite`
+  * (read per query optimization, so one session can A/B both plans).
   */
 object NativeDotRewrite extends Rule[LogicalPlan] {
 
@@ -61,8 +62,7 @@ object NativeDotRewrite extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString("spark.graft.nativeDotRewrite", "true").toBoolean) plan
-    else plan.transformAllExpressions {
+    plan.transformAllExpressions {
       case ArrayAggregate(
             ZipWith(a, b,
               LambdaFunction(prod, Seq(xv: NamedLambdaVariable, yv: NamedLambdaVariable), _)),

@@ -326,18 +326,21 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       log: Seq[(Int, String, String)]): Map[String, Option[String]] =
     logical.fieldNames.map(c => c -> storedNameOf(c, fileVersion, log)).toMap
 
-  /** Every column name (lower-cased) that ever existed: any committed
-    * schema, the declared one, or either side of `base`'s log entries.
+  /** Every column name (lower-cased) a live file of `snap` may store:
+    * either side of its log entries, the declared schema and its own.
     * Adding one of these could RESURRECT dead data — a live file may
     * physically store an identically-named dead column — so such adds
-    * get a log entry; ordinary adds (the overwhelmingly common case)
-    * record nothing. Reads the whole log, as the answer is a property
-    * of the log.
+    * get a log entry ([[addColumns]]); ordinary adds (the overwhelmingly
+    * common case) record nothing. The drift check ([[TableCatalog]])
+    * accepts these names in live files. One snapshot is enough: a drop
+    * leaves a permanent `v|name|` entry that survives expiry, a rename
+    * logs both names, and a rollback restores its target's log together
+    * with its target's files — so a name no entry, declaration or
+    * current schema carries is stored by no live file.
     */
-  private def everNamed(base: CommitMeta): Set[String] =
-    (renameLogOf(base).flatMap(e => Seq(e._2, e._3)) ++ defn.schema.fieldNames ++
-      commits.flatMap(_.schemaDdl).flatMap(StructType.fromDDL(_).fieldNames))
-      .filter(_.nonEmpty).map(_.toLowerCase).toSet
+  private[tables] def everNamed(snap: CommitMeta): Set[String] =
+    (renameLogOf(snap).flatMap(e => Seq(e._2, e._3)) ++ defn.schema.fieldNames ++
+      schemaOf(snap).fieldNames).filter(_.nonEmpty).map(_.toLowerCase).toSet
 
   // ---- commit log ----
 
@@ -2415,8 +2418,15 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * scan refuses non-append snapshots. Changelog consumers pair with
     * merge-on-read tables, where every commit's delta IS its batch.
     */
-  def readChanges(fromVersion: Int, toVersion: Int): DataFrame = {
-    val deltas = fileDeltasSince(fromVersion, toVersion).fold(throw _, identity)
+  def readChanges(fromVersion: Int, toVersion: Int): DataFrame =
+    readChanges(commitsIn(fromVersion, toVersion).fold(throw _, identity), toVersion)
+
+  /** [[readChanges]] over `range`, the commits [[commitsIn]] read for
+    * `(from, toVersion]`: a caller that inspects those commits first
+    * (CdcAggConsumer's op check) parses each json once.
+    */
+  private[graft] def readChanges(range: Seq[CommitMeta], toVersion: Int): DataFrame = {
+    val deltas = fileDeltas(range).fold(throw _, identity)
     // one schema for the whole range — the range END's schema, the same
     // contract as Iceberg's changelog scan (pre-evolution change rows
     // null-fill later-added columns) — and the END's rename log: a
@@ -2520,9 +2530,13 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * silently. Refuse; the consumer re-syncs from a full snapshot read.
     */
   private[graft] def fileDeltasSince(fromVersion: Int, toVersion: Int)
+      : Either[RuntimeException, Seq[(CommitMeta, Seq[String], Seq[String])]] =
+    commitsIn(fromVersion, toVersion).flatMap(fileDeltas)
+
+  /** The per-commit deltas of `range`, commits read by [[commitsIn]]. */
+  private def fileDeltas(range: Seq[CommitMeta])
       : Either[RuntimeException, Seq[(CommitMeta, Seq[String], Seq[String])]] = {
-    val cs = commitsIn(fromVersion, toVersion).fold(e => return Left(e), identity)
-    val deltas = cs.map { c =>
+    val deltas = range.map { c =>
       def stamped(tombs: Map[String, Int]) = tombs.filter(_._2 == c.version).keys.toSeq.sorted
       c.op match {
         case "append" | "upsert-mor" =>

@@ -1,18 +1,19 @@
 package graft.tables
 
+import java.nio.file.{Files, Paths}
+import java.time.Instant
 import java.util
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability, TableChange, TableCatalog => V2TableCatalog}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{LocalScan, ScanBuilder}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Read-only Spark V2 catalog serving Iceberg-style METADATA tables
   * (`<table>$snapshots`) from GraftTable commit logs.
@@ -52,18 +53,11 @@ final class MetaCatalog extends V2TableCatalog {
     if (!ident.namespace().sameElements(Array("db")) || dollar < 1) refuse()
     val (base, meta) = (ident.name().substring(0, dollar),
       ident.name().substring(dollar + 1))
-    if (!java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(s"$warehouse/$base/_commits"))) refuse()
-    meta match {
-      case "snapshots" => new MetaCatalog.SnapshotsTable(base, warehouse)
-      case "history" => new MetaCatalog.HistoryTable(base, warehouse)
-      case "files" => new MetaCatalog.FilesTable(base, warehouse)
-      case "refs" => new MetaCatalog.RefsTable(base, warehouse)
-      case "partitions" => new MetaCatalog.PartitionsTable(base, warehouse)
-      case "manifests" => new MetaCatalog.ManifestsTable(base, warehouse)
-      case "entries" => new MetaCatalog.EntriesTable(base, warehouse)
-      case _ => refuse()
-    }
+    if (!Files.isDirectory(Paths.get(s"$warehouse/$base/_commits"))) refuse()
+    val (schema, rowsOf) = MetaCatalog.Tables.getOrElse(meta, refuse())
+    // a metadata read needs no schema
+    new MetaCatalog.MetaTable(ident.name(), schema, () =>
+      rowsOf(new GraftTable(SparkSession.active, TableDef(base, StructType(Nil)), warehouse)))
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -87,310 +81,183 @@ object MetaCatalog {
     */
   val DefaultWarehouse: String = s"${sys.props("java.io.tmpdir")}/graft_sql_surface_wh"
 
-  /** A handle for a metadata read, which needs no schema. */
-  private def handle(base: String, warehouse: String): GraftTable =
-    new GraftTable(SparkSession.active, TableDef(base, StructType(Nil)), warehouse)
-
-  val SnapshotsSchema: StructType = StructType(Seq(
-    StructField("snapshot_id", LongType, nullable = false),
-    StructField("parent_id", LongType, nullable = true),
-    StructField("committed_at", TimestampType, nullable = false),
-    StructField("operation", StringType, nullable = false),
-    StructField("summary", MapType(StringType, StringType), nullable = false)))
-
-  private final class SnapshotsTable(base: String, warehouse: String)
-      extends Table with SupportsRead {
-    override def name(): String = s"$base$$snapshots"
-    override def schema(): StructType = SnapshotsSchema
-    override def capabilities(): util.Set[TableCapability] =
-      util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      new ScanBuilder {
-        override def build(): Scan = new SnapshotsScan(base, warehouse)
-      }
-  }
-
-  private final class SnapshotsScan(base: String, warehouse: String)
-      extends Scan with LocalScan {
-    override def readSchema(): StructType = SnapshotsSchema
-    override def rows(): Array[InternalRow] = {
-      val commits = handle(base, warehouse).commits
-      val byVersion = commits.map(c => c.version -> c).toMap
-      commits.map { c =>
-        // Iceberg's `added-records` is the PER-SNAPSHOT delta; commit
-        // rowCount is the cumulative live total (served separately as
-        // total-records, the snapshots table's row_count analog).
-        // version 1 has a genuinely-empty predecessor; for version>1 a
-        // MISSING predecessor json means the parent was expired — the
-        // delta is then unknowable and the key is OMITTED (mirroring
-        // readChanges' changelog-gap refusal) rather than silently
-        // over-reported against an empty file set.
-        val prevFiles: Option[Set[String]] =
-          if (c.version == 1) Some(Set.empty[String])
-          else byVersion.get(c.version - 1).map(_.files.toSet)
-        val addedRecords = prevFiles.map { pf =>
-          c.fileRows.filter { case (f, _) => !pf.contains(f) }.values.sum
-        }
-        val pairs =
-          addedRecords.map(a => "added-records" -> a.toString).toSeq ++ Seq(
-            "total-records" -> c.rowCount.toString,
-            "total-data-files" -> c.files.size.toString)
-        val keys = new GenericArrayData(
-          pairs.map(p => UTF8String.fromString(p._1): Any).toArray)
-        val vals = new GenericArrayData(
-          pairs.map(p => UTF8String.fromString(p._2): Any).toArray)
-        new GenericInternalRow(Array[Any](
-          c.version.toLong,
-          if (c.version > 1) java.lang.Long.valueOf((c.version - 1).toLong) else null,
-          c.tsMs * 1000L,
-          UTF8String.fromString(c.op),
-          new ArrayBasedMapData(keys, vals))): InternalRow
-      }.toArray
-    }
-  }
-
-  /** Iceberg's `$history` metadata table: when each snapshot became
-    * current. The commit log is linear (the version CAS serializes
-    * concurrent writers into one history), so every surviving snapshot
-    * is an ancestor of the current one.
+  /** One metadata table. `read` gives its rows as plain Scala values —
+    * strings, numbers, `Instant`s, `ListMap`s (ordered maps) and `Seq`s,
+    * null where the schema allows it — and Spark's own converter encodes
+    * them against `tableSchema`. The rows are read per scan, so every
+    * query sees the log as it is then.
     */
-  val HistorySchema: StructType = StructType(Seq(
-    StructField("made_current_at", TimestampType, nullable = false),
-    StructField("snapshot_id", LongType, nullable = false),
-    StructField("parent_id", LongType, nullable = true),
-    StructField("is_current_ancestor", BooleanType, nullable = false)))
-
-  private final class HistoryTable(base: String, warehouse: String)
-      extends Table with SupportsRead {
-    override def name(): String = s"$base$$history"
-    override def schema(): StructType = HistorySchema
+  private final class MetaTable(tableName: String, tableSchema: StructType,
+      read: () => Seq[Row]) extends Table with SupportsRead {
+    override def name(): String = tableName
+    override def schema(): StructType = tableSchema
     override def capabilities(): util.Set[TableCapability] =
       util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      new ScanBuilder {
-        override def build(): Scan = new Scan with LocalScan {
-          override def readSchema(): StructType = HistorySchema
-          override def rows(): Array[InternalRow] = {
-            handle(base, warehouse).commits.map { c =>
-              new GenericInternalRow(Array[Any](
-                c.tsMs * 1000L,
-                c.version.toLong,
-                if (c.version > 1) java.lang.Long.valueOf((c.version - 1).toLong)
-                else null,
-                true)): InternalRow
-            }.toArray
-          }
+    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = () =>
+      new LocalScan {
+        override def readSchema(): StructType = tableSchema
+        override def rows(): Array[InternalRow] = {
+          val toCatalyst = CatalystTypeConverters.createToCatalystConverter(tableSchema)
+          read().map(toCatalyst(_).asInstanceOf[InternalRow]).toArray
         }
       }
   }
 
-  /** Iceberg's `$refs` metadata table (core columns): every named ref —
-    * `main`, tags, and live audit branches — with the snapshot it
-    * points to (a branch points at its staged HEAD, exactly what an
-    * auditor queries before a fast-forward publish).
+  /** A snapshot's parent: the commit log is linear, so it is the
+    * previous version; version 1 has none.
     */
-  val RefsSchema: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("type", StringType, nullable = false),
-    StructField("snapshot_id", LongType, nullable = false)))
+  private def parentId(c: CommitMeta): Any =
+    if (c.version > 1) (c.version - 1).toLong else null
 
-  private final class RefsTable(base: String, warehouse: String)
-      extends Table with SupportsRead {
-    override def name(): String = s"$base$$refs"
-    override def schema(): StructType = RefsSchema
-    override def capabilities(): util.Set[TableCapability] =
-      util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      new ScanBuilder {
-        override def build(): Scan = new Scan with LocalScan {
-          override def readSchema(): StructType = RefsSchema
-          override def rows(): Array[InternalRow] = {
-            val tbl = handle(base, warehouse)
-            def row(n: String, ty: String, v: Long) =
-              new GenericInternalRow(Array[Any](
-                UTF8String.fromString(n), UTF8String.fromString(ty), v)): InternalRow
-            val main = Seq(row("main", "BRANCH", tbl.currentVersion.toLong))
-            val tags = tbl.tags.toSeq.sortBy(_._1)
-              .map { case (n, v) => row(n, "TAG", v.toLong) }
-            val branches = tbl.branches
-              .map(b => row(b, "BRANCH", tbl.branchView(b).currentVersion.toLong))
-            (main ++ tags ++ branches).toArray
+  /** Each served `$suffix`: its schema and its rows from a handle. */
+  private val Tables: Map[String, (StructType, GraftTable => Seq[Row])] = Map(
+    "snapshots" -> (StructType(Seq(
+      StructField("snapshot_id", LongType, nullable = false),
+      StructField("parent_id", LongType, nullable = true),
+      StructField("committed_at", TimestampType, nullable = false),
+      StructField("operation", StringType, nullable = false),
+      StructField("summary", MapType(StringType, StringType), nullable = false))),
+      t => {
+        val commits = t.commits
+        val byVersion = commits.map(c => c.version -> c).toMap
+        commits.map { c =>
+          // Iceberg's `added-records` is the PER-SNAPSHOT delta; commit
+          // rowCount is the cumulative live total (served separately as
+          // total-records, the snapshots table's row_count analog).
+          // version 1 has a genuinely-empty predecessor; for version>1 a
+          // MISSING predecessor json means the parent was expired — the
+          // delta is then unknowable and the key is OMITTED (mirroring
+          // readChanges' changelog-gap refusal) rather than silently
+          // over-reported against an empty file set.
+          val prevFiles: Option[Set[String]] =
+            if (c.version == 1) Some(Set.empty[String])
+            else byVersion.get(c.version - 1).map(_.files.toSet)
+          val addedRecords = prevFiles.map { pf =>
+            c.fileRows.filter { case (f, _) => !pf.contains(f) }.values.sum
           }
+          val summary = ListMap.from(
+            addedRecords.map(a => "added-records" -> a.toString).toSeq ++ Seq(
+              "total-records" -> c.rowCount.toString,
+              "total-data-files" -> c.files.size.toString))
+          Row(c.version.toLong, parentId(c), Instant.ofEpochMilli(c.tsMs), c.op, summary)
         }
-      }
-  }
+      }),
 
-  /** Iceberg's `$partitions` metadata table (core columns): the CURRENT
-    * snapshot's per-partition record/file counts, computed entirely
-    * from commit metadata — partition values are read from the
-    * path-embedded `k=v` directory segments and row counts from the
-    * carried per-file map, so the scan opens zero data files. After a
-    * partition-spec evolution, rows from different layout generations
-    * simply render different `partition` strings (Iceberg surfaces the
-    * same via spec ids). Unpartitioned files render as the empty
-    * string.
-    */
-  val PartitionsSchema: StructType = StructType(Seq(
-    StructField("partition", StringType, nullable = false),
-    StructField("record_count", LongType, nullable = false),
-    StructField("file_count", IntegerType, nullable = false)))
+    /* Iceberg's `$history` metadata table: when each snapshot became
+     * current. The commit log is linear (the version CAS serializes
+     * concurrent writers into one history), so every surviving snapshot
+     * is an ancestor of the current one.
+     */
+    "history" -> (StructType(Seq(
+      StructField("made_current_at", TimestampType, nullable = false),
+      StructField("snapshot_id", LongType, nullable = false),
+      StructField("parent_id", LongType, nullable = true),
+      StructField("is_current_ancestor", BooleanType, nullable = false))),
+      t => t.commits.map(c =>
+        Row(Instant.ofEpochMilli(c.tsMs), c.version.toLong, parentId(c), true))),
 
-  private final class PartitionsTable(base: String, warehouse: String)
-      extends Table with SupportsRead {
-    override def name(): String = s"$base$$partitions"
-    override def schema(): StructType = PartitionsSchema
-    override def capabilities(): util.Set[TableCapability] =
-      util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      new ScanBuilder {
-        override def build(): Scan = new Scan with LocalScan {
-          override def readSchema(): StructType = PartitionsSchema
-          override def rows(): Array[InternalRow] = {
-            val cur = handle(base, warehouse).head
-            def partOf(relPath: String): String = {
-              val segs = relPath.split('/').dropRight(1).filter(_.contains("="))
-              segs.mkString("/")
-            }
-            cur.files.groupBy(partOf).toSeq.sortBy(_._1)
-              .map { case (p, fs) =>
-                new GenericInternalRow(Array[Any](
-                  UTF8String.fromString(p),
-                  fs.map(f => cur.fileRows.getOrElse(f, 0L)).sum,
-                  fs.size)): InternalRow
-              }.toArray
-          }
+    /* Iceberg's `$refs` metadata table (core columns): every named ref —
+     * `main`, tags, and live audit branches — with the snapshot it
+     * points to (a branch points at its staged HEAD, exactly what an
+     * auditor queries before a fast-forward publish).
+     */
+    "refs" -> (StructType(Seq(
+      StructField("name", StringType, nullable = false),
+      StructField("type", StringType, nullable = false),
+      StructField("snapshot_id", LongType, nullable = false))),
+      t => Row("main", "BRANCH", t.currentVersion.toLong) +:
+        (t.tags.toSeq.sortBy(_._1).map { case (n, v) => Row(n, "TAG", v.toLong) } ++
+          t.branches.map(b => Row(b, "BRANCH", t.branchView(b).currentVersion.toLong)))),
+
+    /* Iceberg's `$partitions` metadata table (core columns): the CURRENT
+     * snapshot's per-partition record/file counts, computed entirely
+     * from commit metadata — partition values are read from the
+     * path-embedded `k=v` directory segments and row counts from the
+     * carried per-file map, so the scan opens zero data files. After a
+     * partition-spec evolution, rows from different layout generations
+     * simply render different `partition` strings (Iceberg surfaces the
+     * same via spec ids). Unpartitioned files render as the empty
+     * string.
+     */
+    "partitions" -> (StructType(Seq(
+      StructField("partition", StringType, nullable = false),
+      StructField("record_count", LongType, nullable = false),
+      StructField("file_count", IntegerType, nullable = false))),
+      t => {
+        val cur = t.head
+        def partOf(relPath: String): String =
+          relPath.split('/').dropRight(1).filter(_.contains("=")).mkString("/")
+        cur.files.groupBy(partOf).toSeq.sortBy(_._1).map { case (p, fs) =>
+          Row(p, fs.map(f => cur.fileRows.getOrElse(f, 0L)).sum, fs.size)
         }
-      }
-  }
+      }),
 
-  /** Iceberg's `$files` metadata table (core columns): the CURRENT
-    * snapshot's data files with per-file row counts (the commit log's
-    * manifest `record_count` analog) and on-disk sizes, plus any
-    * PENDING delete files under Iceberg's content enum — 1 = position
-    * deletes, 2 = equality deletes — so an operator can see exactly the
-    * tombstone debt the next compaction will materialize. File lists
-    * are driver-small by the same construction as the commit log, so
-    * the scan stays local; at manifest scale this becomes a distributed
-    * scan over manifest files, which is what Iceberg itself does.
-    */
-  val FilesSchema: StructType = StructType(Seq(
-    StructField("content", IntegerType, nullable = false),
-    StructField("file_path", StringType, nullable = false),
-    StructField("file_format", StringType, nullable = false),
-    StructField("record_count", LongType, nullable = false),
-    StructField("file_size_in_bytes", LongType, nullable = false)))
-
-  /** Iceberg's `$manifests` metadata table (core columns): the CURRENT
-    * snapshot's manifest chunk files — path, on-disk length, the
-    * snapshot that added the chunk (chunks are immutable, so first
-    * reference = writer), data file count, and record count. This is
-    * the operator's view of commit-metadata health: chunk count bounded
-    * by the fold-smallest merge, per-chunk entry counts near the chunk
-    * target, record counts summing to the snapshot's row count.
-    */
-  val ManifestsSchema: StructType = StructType(Seq(
-    StructField("path", StringType, nullable = false),
-    StructField("length", LongType, nullable = false),
-    StructField("added_snapshot_id", LongType, nullable = false),
-    StructField("added_data_files_count", IntegerType, nullable = false),
-    StructField("record_count", LongType, nullable = false)))
-
-  private final class ManifestsTable(base: String, warehouse: String)
-      extends Table with SupportsRead {
-    override def name(): String = s"$base$$manifests"
-    override def schema(): StructType = ManifestsSchema
-    override def capabilities(): util.Set[TableCapability] =
-      util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      new ScanBuilder {
-        override def build(): Scan = new Scan with LocalScan {
-          override def readSchema(): StructType = ManifestsSchema
-          override def rows(): Array[InternalRow] = {
-            handle(base, warehouse).manifestInfo.map { case (path, len, added, nFiles, recs) =>
-              new GenericInternalRow(Array[Any](
-                UTF8String.fromString(path), len, added.toLong, nFiles, recs)
-              ): InternalRow
-            }.toArray
-          }
+    /* Iceberg's `$files` metadata table (core columns): the CURRENT
+     * snapshot's data files with per-file row counts (the commit log's
+     * manifest `record_count` analog) and on-disk sizes, plus any
+     * PENDING delete files under Iceberg's content enum — 1 = position
+     * deletes, 2 = equality deletes — so an operator can see exactly the
+     * tombstone debt the next compaction will materialize. File lists
+     * are small enough for one JVM by the same construction as the
+     * commit log, so the scan stays local; at manifest scale this
+     * becomes a distributed scan over manifest files, which is what
+     * Iceberg itself does.
+     */
+    "files" -> (StructType(Seq(
+      StructField("content", IntegerType, nullable = false),
+      StructField("file_path", StringType, nullable = false),
+      StructField("file_format", StringType, nullable = false),
+      StructField("record_count", LongType, nullable = false),
+      StructField("file_size_in_bytes", LongType, nullable = false))),
+      t => {
+        val cur = t.head
+        // content per Iceberg's enum: 0 = data, 1 = position deletes,
+        // 2 = equality deletes (the two pending-tombstone kinds)
+        val entries = cur.files.map(f => (0, f)) ++
+          cur.posDeleteFiles.keys.toSeq.sorted.map(f => (1, f)) ++
+          cur.morDeleteFiles.keys.toSeq.sorted.map(f => (2, f))
+        entries.map { case (content, f) =>
+          val p = Paths.get(s"${t.dataPath}/$f")
+          val size = try Files.size(p) catch { case _: Throwable => 0L }
+          Row(content, p.toString, "PARQUET", cur.fileRows.getOrElse(f, 0L), size)
         }
-      }
-  }
+      }),
 
-  /** Iceberg's `$entries` metadata table (flattened): one row per data
-    * file per manifest chunk of the CURRENT snapshot, carrying the
-    * write-time stats the planner actually uses — record count, the
-    * partition spec the file was written under (null = the declared
-    * spec), and the per-column INT64 `[min, max]` bounds range pruning
-    * resolves from (`lower_bounds`/`upper_bounds` in Iceberg; one map
-    * here since both ends are INT64). This is the observability window
-    * into WHY a pruned read skipped a file.
-    */
-  val EntriesSchema: StructType = StructType(Seq(
-    StructField("manifest_path", StringType, nullable = false),
-    StructField("file_path", StringType, nullable = false),
-    StructField("record_count", LongType, nullable = false),
-    StructField("partition_spec", StringType, nullable = true),
-    StructField("bounds", MapType(StringType, ArrayType(LongType)), nullable = true)))
+    /* Iceberg's `$manifests` metadata table (core columns): the CURRENT
+     * snapshot's manifest chunk files — path, on-disk length, the
+     * snapshot that added the chunk (chunks are immutable, so first
+     * reference = writer), data file count, and record count. This is
+     * the operator's view of commit-metadata health: chunk count bounded
+     * by the fold-smallest merge, per-chunk entry counts near the chunk
+     * target, record counts summing to the snapshot's row count.
+     */
+    "manifests" -> (StructType(Seq(
+      StructField("path", StringType, nullable = false),
+      StructField("length", LongType, nullable = false),
+      StructField("added_snapshot_id", LongType, nullable = false),
+      StructField("added_data_files_count", IntegerType, nullable = false),
+      StructField("record_count", LongType, nullable = false))),
+      t => t.manifestInfo.map { case (path, len, added, nFiles, recs) =>
+        Row(path, len, added.toLong, nFiles, recs)
+      }),
 
-  private final class EntriesTable(base: String, warehouse: String)
-      extends Table with SupportsRead {
-    override def name(): String = s"$base$$entries"
-    override def schema(): StructType = EntriesSchema
-    override def capabilities(): util.Set[TableCapability] =
-      util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      new ScanBuilder {
-        override def build(): Scan = new Scan with LocalScan {
-          override def readSchema(): StructType = EntriesSchema
-          override def rows(): Array[InternalRow] = {
-            handle(base, warehouse).manifestEntries.map { case (chunk, e) =>
-              val bounds = new ArrayBasedMapData(
-                new GenericArrayData(e.b.map(cb => UTF8String.fromString(cb.c)).toArray[Any]),
-                new GenericArrayData(e.b.map(cb =>
-                  new GenericArrayData(Array[Any](cb.lo, cb.hi))).toArray[Any]))
-              new GenericInternalRow(Array[Any](
-                UTF8String.fromString(chunk),
-                UTF8String.fromString(e.p),
-                e.r,
-                e.s.map(UTF8String.fromString).orNull,
-                bounds)): InternalRow
-            }.toArray
-          }
-        }
-      }
-  }
-
-  private final class FilesTable(base: String, warehouse: String)
-      extends Table with SupportsRead {
-    override def name(): String = s"$base$$files"
-    override def schema(): StructType = FilesSchema
-    override def capabilities(): util.Set[TableCapability] =
-      util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      new ScanBuilder {
-        override def build(): Scan = new Scan with LocalScan {
-          override def readSchema(): StructType = FilesSchema
-          override def rows(): Array[InternalRow] = {
-            val tbl = handle(base, warehouse)
-            val cur = tbl.head
-            // content per Iceberg's enum: 0 = data, 1 = position deletes,
-            // 2 = equality deletes (the two pending-tombstone kinds)
-            val entries = cur.files.map(f => (0, f)) ++
-              cur.posDeleteFiles.keys.toSeq.sorted.map(f => (1, f)) ++
-              cur.morDeleteFiles.keys.toSeq.sorted.map(f => (2, f))
-            entries.map { case (content, f) =>
-              val p = java.nio.file.Paths.get(s"${tbl.dataPath}/$f")
-              val size =
-                try java.nio.file.Files.size(p) catch { case _: Throwable => 0L }
-              new GenericInternalRow(Array[Any](
-                content,
-                UTF8String.fromString(p.toString),
-                UTF8String.fromString("PARQUET"),
-                cur.fileRows.getOrElse(f, 0L),
-                size)): InternalRow
-            }.toArray
-          }
-        }
-      }
-  }
+    /* Iceberg's `$entries` metadata table (flattened): one row per data
+     * file per manifest chunk of the CURRENT snapshot, carrying the
+     * write-time stats the planner actually uses — record count, the
+     * partition spec the file was written under (null = the declared
+     * spec), and the per-column INT64 `[min, max]` bounds range pruning
+     * resolves from (`lower_bounds`/`upper_bounds` in Iceberg; one map
+     * here since both ends are INT64). This is the observability window
+     * into WHY a pruned read skipped a file.
+     */
+    "entries" -> (StructType(Seq(
+      StructField("manifest_path", StringType, nullable = false),
+      StructField("file_path", StringType, nullable = false),
+      StructField("record_count", LongType, nullable = false),
+      StructField("partition_spec", StringType, nullable = true),
+      StructField("bounds", MapType(StringType, ArrayType(LongType)), nullable = true))),
+      t => t.manifestEntries.map { case (chunk, e) =>
+        Row(chunk, e.p, e.r, e.s.orNull,
+          ListMap.from(e.b.map(cb => cb.c -> Seq(cb.lo, cb.hi))))
+      }))
 }

@@ -40,23 +40,21 @@ final class TableCatalog(spark: SparkSession, val root: String, defs: Seq[TableD
       case Some(live) =>
         // the sanctioned declaration is the CURRENT schema (declared +
         // applied evolutions); a column dropped by evolution still sits
-        // in pre-drop files legitimately, so any name that appeared in
-        // SOME committed schema is not drift either
-        val historical = t.commits.flatMap(_.schemaDdl)
-          .flatMap(ddl => StructType.fromDDL(ddl).fieldNames)
-          .toSet ++ defn(name).schema.fieldNames
-        diffSchemas(t.currentSchema, live, historical).map(s"table $name: " + _)
+        // in pre-drop files legitimately, so any name that ever existed
+        // is not drift either
+        diffSchemas(t.currentSchema, live, t.everNamed(t.head)).map(s"table $name: " + _)
     }
   }
 
+  /** `everNamed` is lower-cased, as GraftTable compares names. */
   private def diffSchemas(declared: StructType, live: StructType,
-      everDeclared: Set[String]): Seq[String] = {
+      everNamed: Set[String]): Seq[String] = {
     val dm = declared.fields.map(f => f.name -> f).toMap
     val lm = live.fields.map(f => f.name -> f).toMap
     // a declared column absent from live files is ADDITIVE evolution,
     // not drift: reads null-fill it (Iceberg's add-optional-column is
     // the same compatible change)
-    val extra = live.fieldNames.filterNot(c => dm.contains(c) || everDeclared.contains(c))
+    val extra = live.fieldNames.filterNot(c => dm.contains(c) || everNamed(c.toLowerCase))
       .map(c => s"live column '$c' not declared")
     val typeDrift = declared.fields.flatMap { f =>
       lm.get(f.name).collect {

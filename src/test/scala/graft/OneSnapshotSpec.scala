@@ -26,9 +26,9 @@ class OneSnapshotSpec extends AnyFunSuite {
     "commits",
     // answers that are a property of the whole log, not of one
     // snapshot: metadata tables, time travel by timestamp, expiry,
-    // orphans, branches and the set of names that ever existed
+    // orphans and branches
     "snapshots", "manifestInfo", "versionAsOf", "expireSnapshots", "removeOrphans",
-    "createBranch", "fastForward", "everNamed")
+    "createBranch", "fastForward")
 
   private val memberDef = """^  (?:private(?:\[\w+\])? )?(?:override )?def (\w+)""".r.unanchored
   private val logRead = """\bcommits\b""".r

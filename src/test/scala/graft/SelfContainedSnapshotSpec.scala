@@ -124,4 +124,25 @@ class SelfContainedSnapshotSpec extends AnyFunSuite {
     assert(fresh.head.version == 16)
     assert(new GraftTable(spark, defn, root).readLogical().count() == 125)
   }
+
+  test("a dropped column's re-add is detected from the head json alone") {
+    val root = freshRoot("readd")
+    val defn = TableDef("sc_readd", schema)
+    val t = new TableCatalog(spark, root, Seq(defn)).table("sc_readd")
+    t.append(df(0 until 4, 1, 1.0)) // v1
+    t.addColumns(StructField("c", LongType)) // v2
+    t.append(df(4 until 6, 2, 2.0).withColumn("c", lit(7L))) // v3: its file stores c
+    t.dropColumns("c") // v4: the permanent `4|c|` entry
+    assert(corruptAllButHead(root, "sc_readd", 4) == 3)
+    val cat = new TableCatalog(spark, root, Seq(defn))
+    val fresh = cat.table("sc_readd")
+    fresh.addColumns(StructField("c", LongType)) // v5
+    assert(fresh.head.renames.contains("5||c"),
+      s"the re-add must record its add entry: ${fresh.head.renames}")
+    val out = fresh.readLogical()
+    assert(out.count() == 6)
+    assert(out.filter(col("c").isNotNull).count() == 0,
+      "files written before the re-add must read c as null, not their dead values")
+    cat.checkDrift() // v3's file still stores c: a name that existed, not drift
+  }
 }

@@ -24,14 +24,14 @@ class NativeDotRewriteSpec extends AnyFunSuite {
     val df = e.select(fold(col("embedding"), col("embedding")).as("d"))
     assert(hasNativeDot(df), "optimized plan should contain DotProduct")
     // and the rewritten plan computes the same values as the explicit fold
-    spark.conf.set("spark.graft.nativeDotRewrite", "false")
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.NativeDotRewrite")
     try {
       val off = e.select(fold(col("embedding"), col("embedding")).as("d"))
       assert(!hasNativeDot(off), "rule must respect the disable conf")
       val rewritten = df.collect().map(_.getDouble(0))
       val interpreted = off.collect().map(_.getDouble(0))
       assert(rewritten.sameElements(interpreted))
-    } finally spark.conf.unset("spark.graft.nativeDotRewrite")
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   test("non-dot folds are left alone") {
